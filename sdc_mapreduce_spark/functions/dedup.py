@@ -201,27 +201,31 @@ def shingle_sets(
     its 64-bit hash: (id, shingles array<long>). Documents shorter than n
     tokens get a single whole-text shingle so they still participate.
 
-    r14 (guide §1.2 — fix the per-task work): this formerly BUILT every
-    shingle as a string (an interpreted array_join over a slice per
-    position, then array_distinct over strings) and every consumer then
-    re-hashed those strings with xxhash64. At the 100x corpus that
-    build+re-hash pass was the single largest stage of every token-dedup
-    operator (202 of dedup_jaccard_prefix's 317 core-seconds). Tokens come
-    from a whitespace split, so no token contains whitespace and the
-    ' '-join of a token n-gram is INJECTIVE over token tuples — hashing
-    the tuple directly (one n-ary xxhash64 per position: no string
-    allocation, no join, no second hashing pass, distinct over longs)
-    identifies exactly the same shingle universe, up to 64-bit hash
-    collisions, which the old string-hash representation was equally
-    subject to. The whole-text branch (< n tokens) cannot alias an n-gram
-    either way: both are whitespace-joins of token tuples of different
-    arity. Every consumer is a function of hash-set equality only
+    Why hashes, not strings: building every shingle as a string (an
+    interpreted array_join over a slice per position, then array_distinct
+    over strings) and re-hashing it in every consumer was the single
+    largest stage of every token-dedup operator at the 100x corpus (202 of
+    dedup_jaccard_prefix's 317 core-seconds). Tokens come from a whitespace
+    split, so no token contains whitespace and a token n-gram is fully
+    determined by its token tuple — hashing the tuple directly (one n-ary
+    xxhash64 per position: no string allocation, no join, distinct over
+    longs) identifies the same shingle universe up to 64-bit hash
+    collisions.
+
+    Collisions are a real, if negligible (~m²/2^65 for m distinct
+    shingles), channel that the string form did not have everywhere: the
+    exact-Jaccard verifies of minhash_lsh_pairs and
+    incremental_minhash_dedup used to intersect STRING shingle arrays and
+    were collision-free; they now intersect hash arrays. Likewise the
+    whole-text branch (< n tokens, the xxhash64 of the ' '-joined tokens)
+    and the n-gram branch (an n-ary hash of the token tuple, not of a
+    joined string) are different hash constructions, so a whole-text
+    shingle is distinct from every n-gram shingle only up to the same
+    collision odds. Every consumer is a function of hash-set equality only
     (Jaccard/containment intersections and sizes, MinHash signature bases,
     prefix-filter df ranks), and every oracle replays STRING shingles in
-    DuckDB, so declared outputs are unchanged; MinHash signature VALUES
-    change (a different base family with the same collision statistics) —
-    banding recall is re-verified against the exhaustive-Jaccard oracles
-    at every fixture SF and the replica corpora."""
+    DuckDB, so declared outputs match the oracles; banding recall is
+    verified against the exhaustive-Jaccard oracles at every fixture SF."""
     # Materialize the token array in its own projection first: higher-order
     # lambdas are interpreted (not codegen'd), so referencing the split()
     # expression inside the gram lambda would re-tokenize the document for
@@ -325,105 +329,6 @@ def jaccard_pairs(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 64,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signatures: K = num_hashes values of ``min(xxhash64(seed_i ||
-    shingle))`` per document, computed as ``array_min(transform(shingles,
-    ...))`` over the per-doc shingle array — a narrow map-side projection
-    with ZERO shuffle (the explode + 64-way-min-aggregate formulation costs
-    a docs x shingles shuffle that this avoids entirely; at 100 TB the
-    signature stage is then pure scan throughput)."""
-    sets = shingle_sets(df, n=n, text_col=text_col, id_col=id_col)
-    return _signatures_from_sets(sets, num_hashes=num_hashes, id_col=id_col).drop(
-        "shingles"
-    )
-
-
-def _signatures_from_sets(
-    sets: DataFrame, num_hashes: int = 64, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, shingles) → (id, shingles, mh_0..mh_{K-1}), map-side only.
-
-    Each shingle IS an 8-byte base hash (shingle_sets, r14); the K seeded
-    hashes derive from it via xxhash64(seed, base) — fixed-width rehashing
-    is ~an order of magnitude cheaper than re-hashing a string K times, and
-    the family is still pairwise-independent enough for MinHash collision
-    estimates."""
-    based = sets.select(
-        id_col,
-        "shingles",
-        F.col("shingles").alias("__base"),
-    )
-
-    # NOTE: the lambda must take exactly ONE argument — a two-arg lambda is
-    # interpreted by F.transform as the (element, index) form, which would
-    # silently bind the seed to the array index instead.
-    def seeded_min(i: int):
-        return F.array_min(
-            F.transform("__base", lambda h: F.xxhash64(F.lit(i), h))
-        ).alias(f"mh_{i}")
-
-    return based.select(
-        id_col, "shingles", *[seeded_min(i) for i in range(num_hashes)]
-    )
-
-
-def _signatures_from_sets_arrow(
-    sets: DataFrame, num_hashes: int = 64, id_col: str = "doc_id"
-) -> DataFrame:
-    """Arrow/numpy twin of ``_signatures_from_sets``: the per-shingle base
-    hash stays JVM-side (one xxhash64 pass), the K seeded minima are
-    computed as a vectorized universal-hash family
-    ``min((a_i * h + b_i) mod 2^61-1)`` per document in numpy.
-
-    The JVM path evaluates K x |shingles| interpreted higher-order-function
-    expressions per document (transform/array_min are not codegen'd); this
-    path does the same work as one numpy outer product per Arrow batch —
-    wall-clock is several times lower at bench scale. Signature VALUES
-    differ from the JVM family (different hash family, same collision
-    statistics), so pick one path per pipeline."""
-    import numpy as np
-    import pandas as pd
-
-    MERSENNE = (1 << 61) - 1
-    rng = np.random.RandomState(RNG_SEED_MINHASH)
-    a = rng.randint(1, MERSENNE, size=num_hashes, dtype=np.int64)
-    b = rng.randint(0, MERSENNE, size=num_hashes, dtype=np.int64)
-
-    based = sets.select(
-        id_col,
-        "shingles",
-        F.col("shingles").alias("__base"),
-    )
-    out_schema = ", ".join(
-        [f"{id_col} long", "shingles array<long>"]
-        + [f"mh_{i} long" for i in range(num_hashes)]
-    )
-
-    def kernel(batches):
-        au = a.astype(np.uint64)
-        bu = b.astype(np.uint64)
-        for pdf in batches:
-            sig_rows = np.empty((len(pdf), num_hashes), dtype=np.int64)
-            for r, hs in enumerate(pdf["__base"]):
-                h = np.asarray(hs, dtype=np.int64).astype(np.uint64)
-                # (a*h + b) mod M in uint64 wraparound then fold to 61 bits;
-                # uniform enough for MinHash collision estimates
-                mixed = (au[:, None] * h[None, :] + bu[:, None]) % MERSENNE
-                sig_rows[r] = mixed.min(axis=1).astype(np.int64)
-            out = {id_col: pdf[id_col], "shingles": pdf["shingles"]}
-            for i in range(num_hashes):
-                out[f"mh_{i}"] = sig_rows[:, i]
-            yield pd.DataFrame(out)
-
-    return based.mapInPandas(kernel, schema=out_schema)
-
-
 def _band_rows_arrow(
     sets: DataFrame, num_hashes: int, bands: int, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -452,7 +357,7 @@ def _band_rows_arrow(
     based = sets.select(id_col, F.col("shingles").alias("__base"))
 
     def kernel(batches):
-        # NOTE (r14): a slab-vectorized rewrite of this loop (whole-doc
+        # NOTE: a slab-vectorized rewrite of this loop (whole-doc
         # groups flattened into preallocated buffers, minimum.reduceat per
         # doc, Mersenne shift-add fold instead of %) was built, verified
         # bit-identical, and A/B-measured 1.5-1.8x SLOWER single-threaded
@@ -491,13 +396,12 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    signature_impl: str = "arrow",
     max_bucket: int | None = 1000,
     broadcast_max_candidates: int = 10_000_000,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup candidates, verified with exact
-    Jaccard. ``signature_impl``: 'arrow' (vectorized numpy minima — the
-    fast path) or 'jvm' (pure higher-order functions, zero Python).
+    Jaccard. Signatures and band hashes come from one vectorized numpy
+    kernel (:func:`_band_rows_arrow`).
 
     With K=64, b=16 bands of r=4 rows the collision curve
     P(candidate) = 1-(1-j^r)^b puts ~0.99+ recall at j ≥ 0.8. Candidates
@@ -509,16 +413,14 @@ def minhash_lsh_pairs(
     (band, bhash) bucket holding d docs yields d² candidate pairs, so an
     adversarial/templated corpus where one bucket goes quadratic would
     dominate candidate generation. ``max_bucket`` drops whole over-cap
-    buckets as a size filter on the aggregated bucket list (r14 — same
-    semantics as the r13 anti-join form: no pairs from that bucket, but
-    members still collide in their other bands; recall only degrades for
-    pairs whose every matching band is corpus-hot, the same trade-off as
-    ``jaccard_pairs(max_df=...)``). The verify-side broadcast is gated by
-    a bounded ``limit(N+1).count()`` probe over the candidate set; past
-    ``broadcast_max_candidates`` the verify joins fall back to plain
-    shuffle joins instead of an unbounded driver broadcast.
+    buckets as a size filter on the aggregated bucket list (no pairs from
+    that bucket, but members still collide in their other bands; recall
+    only degrades for pairs whose every matching band is corpus-hot, the
+    same trade-off as ``jaccard_pairs(max_df=...)``). The verify-side
+    broadcast is gated by a bounded ``limit(N+1).count()`` probe over the
+    candidate set; past ``broadcast_max_candidates`` the verify joins fall
+    back to plain shuffle joins instead of an unbounded driver broadcast.
     """
-    rows_per_band = num_hashes // bands
     # The shingle arrays feed three consumers (banding, and both sides of
     # the verify join); persist so the tokenize+gram pass runs once. At
     # scale this is the materialized "shingle table" stage of a dedup
@@ -529,48 +431,23 @@ def minhash_lsh_pairs(
         shingle_sets(df, n=n, text_col=text_col, id_col=id_col),
         StorageLevel.MEMORY_AND_DISK,
     )
-    if signature_impl == "arrow":
-        # minima AND band mixing fused in one Arrow kernel — no K-column
-        # signature frame, no wide codegen
-        band_rows = _band_rows_arrow(
-            sets, num_hashes=num_hashes, bands=bands, id_col=id_col
-        ).withColumnRenamed(id_col, "__id")
-    else:
-        sigs = _signatures_from_sets(sets, num_hashes=num_hashes, id_col=id_col)
-        band_rows = sigs.select(
-            F.col(id_col).alias("__id"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.col(f"mh_{bi * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ]
-                            ).alias("bhash"),
-                        )
-                        for bi in range(bands)
-                    ]
-                )
-            ).alias("b"),
-        ).select("__id", "b.band", "b.bhash")
-    # Candidate generation as ONE grouped aggregation (r14, guide §2.4):
-    # the r12-r13 shape self-joined the band rows on (band, bhash) — the
-    # same 16M-row frame (at the 100x corpus) shuffled and SMJ-sorted TWICE
-    # (once per join side; the reason the frame had to be pinned at all) —
-    # plus a THIRD pass for the hot-bucket count feeding the broadcast
-    # anti-join cap. Collecting each bucket's sorted member list instead
-    # shuffles the band rows ONCE, folds the cap into a size filter on the
-    # aggregated bucket (identical semantics: members of an over-cap bucket
-    # contribute no pairs from that bucket but still collide in their other
-    # bands), and emits each unordered pair exactly once by pairing every
-    # member with the tail of the sorted list (ids are unique, so ascending
-    # order IS id_a < id_b; no quadratic emit-then-filter). Measured at the
-    # 100x corpus: the candidate stage (cap count + anti-join + self-join +
-    # distinct) went from ~26 s to ~8 s; plan Exchanges on the band-row
-    # path 3 -> 1 and the band-row pin is gone (single consumer now).
+    # minima AND band mixing fused in one Arrow kernel — no K-column
+    # signature frame, no wide codegen
+    band_rows = _band_rows_arrow(
+        sets, num_hashes=num_hashes, bands=bands, id_col=id_col
+    ).withColumnRenamed(id_col, "__id")
+    # Candidate generation as ONE grouped aggregation. A self-join of the
+    # band rows on (band, bhash) would shuffle and sort the same frame
+    # (16M rows at the 100x corpus) once per join side, plus a third pass
+    # for a hot-bucket count feeding a broadcast anti-join cap.
+    # Collecting each bucket's sorted member list instead shuffles the band
+    # rows ONCE, folds the cap into a size filter on the aggregated bucket
+    # (members of an over-cap bucket contribute no pairs from that bucket
+    # but still collide in their other bands), and emits each unordered
+    # pair exactly once by pairing every member with the tail of the
+    # sorted list (ids are unique, so ascending order IS id_a < id_b; no
+    # quadratic emit-then-filter). Measured at the 100x corpus, the
+    # candidate stage costs ~8 s this way against ~26 s for the self-join.
     buckets = band_rows.groupBy("band", "bhash").agg(
         F.sort_array(F.collect_list("__id")).alias("__ids")
     )
@@ -600,14 +477,14 @@ def minhash_lsh_pairs(
     sa = sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("__sh_a"))
     sb = sets.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("__sh_b"))
     if probe <= broadcast_max_candidates:
-        # r14 (guide §2.4): the planner cannot know the first verify
-        # join's output (candidates + arrays) is small, so it planned the
-        # second join as SMJ and AQE's late BHJ conversion still
-        # materialized the probe-side exchange — the ENTIRE corpus shingle
-        # table reshuffled (219 MiB at the 100x corpus) to serve 26k
-        # candidate rows. Semi-filtering the b-side to candidate ids first
-        # (ids broadcast; same inner-join semantics) makes that exchange
-        # carry only the docs that appear in some pair.
+        # The planner cannot know the first verify join's output
+        # (candidates + arrays) is small, so it plans the second join as
+        # SMJ, and AQE's late BHJ conversion still materializes the
+        # probe-side exchange — the ENTIRE corpus shingle table reshuffled
+        # (219 MiB at the 100x corpus) to serve 26k candidate rows.
+        # Semi-filtering the b-side to candidate ids first (ids broadcast;
+        # same inner-join semantics) makes that exchange carry only the
+        # docs that appear in some pair.
         sb = sb.join(
             F.broadcast(cand.select("id_b").distinct()), "id_b", "semi"
         )
@@ -1241,7 +1118,6 @@ def jaccard_prefix_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    pin_prefix: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via AllPairs/PPJoin prefix filtering —
     a LOSSLESS alternative to the full inverted-index self-join of
@@ -1272,9 +1148,10 @@ def jaccard_prefix_pairs(
       2. document frequency per shingle (map-side-combinable agg);
       3. rank shingles within each doc by (df, hash) — window partitioned
          by doc, bounded by doc length — and keep the prefix;
-      4. prefix self-join on shingle hash with the size filter
-         |B| >= t·|A| (a pair with J >= t cannot differ in size by more
-         than t); distinct candidate pairs;
+      4. group the prefix rows by shingle hash and pair the members of
+         each posting list, with the size filter |B| >= t·|A| (a pair
+         with J >= t cannot differ in size by more than t) and the
+         positional filter below; distinct candidate pairs;
       5. exact verify: join the two full hashed-shingle arrays back by id
          and compute |A∩B| via array_intersect — arrays travel only for
          candidates, never for the corpus cross-product.
@@ -1283,20 +1160,29 @@ def jaccard_prefix_pairs(
     sits on a float boundary — more candidates, never a missed pair; the
     exact verify step makes over-generation harmless.
 
-    r14 (guide §2.3, VERDICT r13 ask #4): the candidate stage additionally
-    applies PPJoin's POSITIONAL filter (Xiao et al. WWW'08 §3.2) before
-    any token array travels. Ranks are a strict total order ((df, xxhash64)
-    — shingles are identified by their hash everywhere, including the
-    verify, so equal hash IS the same element), hence the globally
-    smallest token shared by a pair attains the minimum matched rank on
-    BOTH sides simultaneously, and no common token precedes it. Therefore
-    |A∩B| <= 1 + min(|A| - i, |B| - j) with i = min matched rank in A,
-    j = min matched rank in B; J >= t further requires
-    |A∩B| >= t/(1+t)·(|A|+|B|). Candidates whose bound falls below that
-    are provably sub-threshold and are dropped BEFORE the verify join —
-    the exact verify is unchanged, so results are bit-identical; the
-    filter only shrinks the pair set whose token arrays get shipped and
+    The candidate stage additionally applies PPJoin's POSITIONAL filter
+    (Xiao et al. WWW'08 §3.2) before any token array travels. Ranks are a
+    strict total order ((df, xxhash64) — shingles are identified by their
+    hash everywhere, including the verify, so equal hash IS the same
+    element), hence the globally smallest token shared by a pair attains
+    the minimum matched rank on BOTH sides simultaneously, and no common
+    token precedes it. Therefore |A∩B| <= 1 + min(|A| - i, |B| - j) with
+    i = min matched rank in A, j = min matched rank in B; J >= t further
+    requires |A∩B| >= t/(1+t)·(|A|+|B|). Candidates whose bound falls
+    below that are provably sub-threshold and are dropped BEFORE the
+    verify join — the exact verify is unchanged, so results are
+    bit-identical; the filter only shrinks the pair set whose token
+    arrays get shipped and
     intersected (the dominant verify-stage cost at the 100x corpus).
+
+    Memory shape: stage 4 collects each prefix token's whole posting list
+    into ONE ``collect_list`` aggregation buffer, with no cap — losslessness
+    forbids dropping a hot token the way ``minhash_lsh_pairs(max_bucket=)``
+    drops a hot bucket. A token in the prefix of d documents therefore
+    costs one O(d) struct array in a single task's executor memory (e.g.
+    thousands of identical documents all share their prefix tokens),
+    before the O(d²) pair emission. Rare-first ordering keeps d small on
+    natural corpora, but nothing bounds it on adversarial ones.
     """
     from pyspark import StorageLevel
     from pyspark.sql import Window
@@ -1306,7 +1192,7 @@ def jaccard_prefix_pairs(
     hashed = pin(
         sets.select(
             F.col(id_col).alias("__id"),
-            # shingles are already hashes (shingle_sets, r14)
+            # shingles are already hashes (shingle_sets)
             F.col("shingles").alias("__sh"),
             F.size("shingles").alias("__sz"),
         ),
@@ -1321,30 +1207,24 @@ def jaccard_prefix_pairs(
         F.lit(1),
         F.col("__sz") - F.ceil(F.col("__sz") * threshold - eps) + 1,
     )
-    # pin_prefix: under the r13 self-join shape the prefix frame was
-    # consumed twice and the pin won its committed A/B
-    # (CHECKS_r13/pin_ab_10x.md). The r14 grouped candidate generation
-    # below reads the frame ONCE, so the pin now only costs storage —
-    # default flipped to False; the toggle stays for A/B evidence.
     prefix = (
         inv.join(dfreq, "__h")
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= prefix_len)
         .select("__id", "__sz", "__h", "__rn")
     )
-    if pin_prefix:
-        prefix = pin(prefix, StorageLevel.MEMORY_AND_DISK)
-    # Candidate generation as ONE grouped pass (r14, guide §2.4 — the
-    # minhash_lsh_pairs bucket shape): the r13 form self-joined the prefix
-    # frame on __h, which at the 100x corpus meant a 384 MiB broadcast
-    # build of one side plus a second full walk of the pinned frame for
-    # the probe side. Collecting each prefix token's posting list instead
-    # shuffles the prefix rows ONCE; sort_array orders the (id, sz, rn)
-    # structs by id first, so pairing each member with the tail of the
-    # list emits every unordered pair exactly once with id_a < id_b.
-    # The pair filters are unchanged: the size filter, then the groupBy
-    # over the same (id_a, id_b) key the former .distinct() used, now
-    # additionally aggregating the MIN matched rank per side for PPJoin's
+    # Candidate generation as ONE grouped pass (the minhash_lsh_pairs
+    # bucket shape): a self-join of the prefix frame on __h would, at the
+    # 100x corpus, build a 384 MiB broadcast of one side and walk the
+    # frame a second time for the probe side. Collecting each prefix
+    # token's posting list instead reads the frame once and shuffles the
+    # prefix rows ONCE, so the frame needs no pin; sort_array orders the
+    # (id, sz, rn) structs by id first, so pairing each member with the
+    # tail of the list emits every unordered pair exactly once per shared
+    # token with id_a < id_b.
+    # The pair filters: the size filter, then a groupBy over (id_a, id_b)
+    # (a pair sharing several prefix tokens is emitted once per token)
+    # that also aggregates the MIN matched rank per side for PPJoin's
     # positional filter (docstring): the globally smallest shared token
     # attains both minima at once, so 1 + min(|A| - i, |B| - j) bounds the
     # overlap and J >= t needs |A∩B| >= t/(1+t)·(|A|+|B|) — pairs below
@@ -1424,7 +1304,6 @@ def sorted_neighborhood_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_partitions: int = 32,
-    checkpoint_ranked: bool = True,
 ) -> DataFrame:
     """Sorted-neighborhood (SNM) near-dup blocking: sort the corpus by a
     blocking key, slide a window of ``window`` ranks, and exactly verify
@@ -1465,37 +1344,32 @@ def sorted_neighborhood_pairs(
         F.lit("#"),
         F.lpad(F.col(id_col).cast("string"), 12, "0"),
     )
-    # r13 (guide §2.3, narrower shuffles): rank ONLY the 40-byte
-    # (__id, __k, __one) projection. global_running_sum internally
-    # localCheckpoints its range-partitioned input (relational.py), so
-    # whatever enters the rank pipeline is serialized to executor disk —
-    # the previous shape fed the token arrays through it, paying a
-    # heavy-column range shuffle + checkpoint that the rank math never
-    # needed, and checkpoint_ranked=True then serialized the same arrays
-    # a SECOND time (measured loser at 10x: 10.2 s vs 7.1 s off —
-    # CHECKS_r13/pin_ab_10x.md). Token arrays now come straight from the
-    # scan, per verify side, and never enter a shuffle at all (the
-    # verify joins stream them against the broadcast candidate set).
+    # Rank ONLY the 40-byte (__id, __k, __one) projection.
+    # global_running_sum internally localCheckpoints its range-partitioned
+    # input (relational.py), so whatever enters the rank pipeline is
+    # serialized to executor disk; token arrays fed through it would pay a
+    # heavy-column range shuffle plus checkpoint that the rank math never
+    # needs. Token arrays instead come straight from the scan, per verify
+    # side, and never enter a shuffle at all (the verify joins stream them
+    # against the candidate set).
     narrow = df.select(F.col(id_col).alias("__id"), key.alias("__k")).withColumn(
         "__one", F.lit(1)
     )
+    # 16-byte rows, checkpointed so the two consumers below (the probe
+    # explode and the rank lookup) share one cumsum instead of each
+    # recomputing it
     ranked = global_running_sum(
         narrow, order_col="__k", value_col="__one", out_col="__r",
         num_partitions=num_partitions,
-    ).select("__id", "__r")
-    if checkpoint_ranked:
-        # now 16-byte rows — cheap; saves the cumsum recompute for the
-        # second consumer below
-        ranked = ranked.localCheckpoint(eager=True)
-    slim = ranked
-    probes = slim.select(
+    ).select("__id", "__r").localCheckpoint(eager=True)
+    probes = ranked.select(
         F.col("__id").alias("__id_x"),
         F.explode(
             F.sequence(F.col("__r") + 1, F.col("__r") + window - 1)
         ).alias("__r2"),
     )
     cand = probes.join(
-        slim.select(F.col("__id").alias("__id_y"), F.col("__r").alias("__r2")),
+        ranked.select(F.col("__id").alias("__id_y"), F.col("__r").alias("__r2")),
         "__r2",
     ).select("__id_x", "__id_y")
     toks = df.select(

@@ -151,13 +151,13 @@ def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-# Fold-order-exact threshold decisions from a BLAS score (r13, guide §4.2).
+# Fold-order-exact threshold decisions from a BLAS score.
 #
 # The verify kernels must decide cosine >= threshold with the SAME result
 # as the JVM left-fold ``dot()`` and DuckDB's list_inner_product — the
-# cross-engine hash contract. The old kernels reproduced the fold's IEEE
-# add order directly (one ``acc += a[:, d] * b[:, d]`` pass per dimension),
-# which is memory-bandwidth-bound: dim full passes over the score matrix.
+# cross-engine hash contract. Reproducing the fold's IEEE add order for
+# every pair (one ``acc += a[:, d] * b[:, d]`` pass per dimension) is
+# memory-bandwidth-bound: dim full passes over the score matrix.
 # Instead: score with one BLAS matmul (any summation order), and recompute
 # the exact fold order ONLY for pairs inside an eps-band of the threshold,
 # where the two orders could disagree.
@@ -170,7 +170,7 @@ def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
 # (inputs are unit-normalized in every caller; norms are 1 +/- O(u)).
 _FOLD_EPS = 1e-9
 
-# The float32-prefilter analog (r14, _near_pairs_bucket_verify): when the
+# The float32-prefilter analog (embedding_near_pairs_blocked): when the
 # block score is computed by SGEMM over float32-cast unit vectors, the
 # conversion adds <= 2*2^-24 relative error per product and the f32
 # accumulation <= dim*2^-24 * sum|a_d*b_d| <= dim*2^-24 (Cauchy-Schwarz,
@@ -189,7 +189,7 @@ def _fold_refine_matrix(
     BLAS decides everything outside the +/- _FOLD_EPS band; band pairs are
     re-scored in exact fold order (ascending d, one add per dim).
 
-    Precondition (ADVICE r13): rows of V and H must be unit-normalized —
+    Precondition: rows of V and H must be unit-normalized —
     the _FOLD_EPS band's correctness bound is Cauchy-Schwarz on unit
     vectors (sum|a_d*b_d| <= 1); unnormalized inputs would need a band
     scaled by max||V_i||*max||H_j||. Every current caller normalizes."""
@@ -202,24 +202,6 @@ def _fold_refine_matrix(
             acc += V[vi, d] * H[hi, d]
         ok = acc >= threshold
         keep[vi[ok], hi[ok]] = True
-    return keep
-
-
-def _fold_refine_rows(
-    S: "np.ndarray", A: "np.ndarray", B: "np.ndarray", threshold: float
-) -> "np.ndarray":
-    """Row-wise variant of :func:`_fold_refine_matrix` for paired rows:
-    ``S[i]`` approximates ``dot(A[i], B[i])``; returns the keep mask the
-    exact left-fold would produce. Same unit-norm precondition on the
-    rows of A and B (see :func:`_fold_refine_matrix`)."""
-    keep = S >= threshold + _FOLD_EPS
-    band = (S >= threshold - _FOLD_EPS) & ~keep
-    if band.any():
-        idx = np.nonzero(band)[0]
-        acc = np.zeros(len(idx), dtype=np.float64)
-        for d in range(A.shape[1]):
-            acc += A[idx, d] * B[idx, d]
-        keep[idx[acc >= threshold]] = True
     return keep
 
 
@@ -873,80 +855,79 @@ def _index_scored(
     )
 
 
-def _near_pairs_bucket_verify(
+def embedding_near_pairs_blocked(
     corpus: DataFrame,
-    threshold: float,
-    n_planes: int,
-    multi_probe_bits: int,
-    id_col: str,
-    vec_col: str,
-    dim: int,
+    threshold: float = 0.4,
+    n_planes: int = 4,
+    multi_probe_bits: int = 1,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int = 64,
     chunk: int = 2048,
-    n_salts: int | None = None,
 ) -> DataFrame:
-    """Dense-bucket scale path for ``embedding_near_pairs_blocked``: the
-    exact-cosine verify runs INSIDE each SRP bucket group (applyInPandas)
-    instead of materializing (id_a, id_b) candidate rows and joining the
-    unit vectors back on. The only shuffle is the group-by over a handful
-    of narrow rows per vector — LINEAR in the corpus — while the quadratic
-    visitors x homes scoring happens as BLAS matmuls inside the kernel.
+    """SRP-blocked approximate near-pair detection — the scale path that
+    replaces ``embedding_near_pairs``'s O(n²) self-join: vectors pair only
+    within the same (or, with multi-probe, 1-bit-adjacent) SRP bucket, then
+    exact cosine filters the candidates. Expected candidate volume is
+    n²·(collision probability) ≈ n²·(1 - θ/π)^planes — tune n_planes so
+    per-bucket populations fit a shuffle partition. Approximate by nature
+    (pairs crossing > multi_probe_bits sign flips are missed); the result
+    is exactly the exhaustive operator's pairs restricted to that probe
+    radius, asserted in unit tests.
 
-    r14 shape (the r13 version was the #1 query at the 100x corpus, 30.4 s,
-    5.7x slope per 3.33x data; the changes below brought it to ~7 s):
+    The exact-cosine verify runs INSIDE each SRP bucket group
+    (applyInPandas) instead of materializing (id_a, id_b) candidate rows
+    and joining the vectors back on. The only shuffle is the group-by over
+    a handful of narrow rows per vector — LINEAR in the corpus — while the
+    quadratic visitors x homes scoring happens as BLAS matmuls inside the
+    kernel:
 
-    - **Shuffle raw float32 rows** (guide §2.3 narrower types): group rows
-      carry the source ``array<float>`` embedding (256 B) instead of the
-      r13 float64 unit vector (512 B); the kernel casts to float64 (exact)
-      and unit-normalizes with the same IEEE ops as the JVM expression
+    - **Shuffle raw float32 rows**: group rows carry the source
+      ``array<float>`` embedding (256 B at dim=64) rather than a float64
+      unit vector (512 B); the kernel casts to float64 (exact) and
+      unit-normalizes with the same IEEE ops as the JVM expression
       (left-fold sum of squares from 0.0, correctly-rounded sqrt,
       elementwise divide), so every downstream double is bit-identical.
-    - **Up-probes only, triangle in-kernel** (guide §2.3/§2.4): a vector's
-      shuffled rows are its home row plus — with multi-probe — one visitor
-      row per flip ABOVE its bucket (``probe > bucket``; expected
-      planes/2). The r13 shape shipped 1 + planes visitor rows per vector
-      and scored every cross-bucket pair in BOTH directions, discarding
-      half through the ``id_a < id_b`` filter; now a cross pair is scored
-      once (id order normalized after extraction) and same-bucket pairs
-      come from the home block scored against itself with the ascending-id
-      half kept. ~2.6 rows per vector instead of 8, ~55% of the BLAS.
-    - **float32 prefilter, float64 left-fold decision** (guide §4.2): each
-      block is scored by one SGEMM; only pairs with ``S32 >= threshold -
-      _F32_EPS`` are extracted, and every extracted pair is re-scored with
-      the exact IEEE left-fold add order of ``dot()`` / DuckDB
-      list_inner_product — the fold IS the keep decision, so results are
-      bitwise identical to the 'jvm' and 'arrow' verifies by construction.
-      Soundness of the drop side: for unit vectors Cauchy-Schwarz bounds
+    - **Up-probes only, triangle in-kernel**: a vector's shuffled rows are
+      its home row plus — with multi-probe — one visitor row per flip
+      ABOVE its bucket (``probe > bucket``; expected planes/2), so a
+      cross-bucket pair is scored once (id order normalized after
+      extraction), and same-bucket pairs come from the home block scored
+      against itself with the ascending-id half kept.
+    - **float32 prefilter, float64 left-fold decision**: each block is
+      scored by one SGEMM; only pairs with ``S32 >= threshold - _F32_EPS``
+      are extracted, and every extracted pair is re-scored with the exact
+      IEEE left-fold add order of ``dot()`` / DuckDB list_inner_product —
+      the fold IS the keep decision, so results are bitwise identical to
+      the exhaustive operator and the oracle by construction. Soundness
+      of the drop side: for unit vectors Cauchy-Schwarz bounds
       sum|a_d*b_d| by 1, so the f32 score differs from the exact dot by at
       most ~(dim+2)*2^-24 ~= 4e-6 at dim=64 — 25x inside the 1e-4 band.
-      This also kills the r13 kernel's full-matrix band/id masks (two
-      extra G-scale boolean passes at the 100x corpus).
     - **JVM prep, norm as a column** (the shingle_sets lesson, dedup.py):
       ``transform(v, x -> x / l2_norm(v))`` inlines the fold-norm per
-      ELEMENT — 64 norms per row, measured 30 s for the unit projection
-      alone at the 100x corpus; materializing ``__n`` in its own
+      ELEMENT — 64 norms per row; materializing ``__n`` in its own
       projection first makes it once per row. The (id, raw, bucket) frame
       is pinned so the home and visitor branches share one build.
-    - **Salted sub-groups only past 2^planes cores** (guide §2.5):
-      ``n_salts`` defaults to ``max(1, cores // 2^planes)`` — visitors
-      salt by ``xxhash64(id) % n_salts`` (deterministic), homes replicate
-      per salt, and the same-bucket triangle runs in salt 0 only, so each
-      pair still lives in exactly one (bucket, salt) group. Measured at
-      the 100x corpus on 32 cores: byte volume dominates balance
-      (n_salts=2 cost +50% over n_salts=1), so salting stays OFF until
-      the executor count exceeds the group count; on a 1000-core cluster
-      the default becomes 15 and group grains follow the hardware.
+    - **Salted sub-groups only past 2^planes cores**: the salt count is
+      ``max(1, cores // 2^planes)`` — visitors salt by
+      ``xxhash64(id) % n_salts`` (deterministic), homes replicate per
+      salt, and the same-bucket triangle runs in salt 0 only, so each pair
+      still lives in exactly one (bucket, salt) group. Byte volume
+      dominates balance (measured at the 100x corpus on 32 cores, two
+      salts cost +50% over one), so salting stays OFF until the executor
+      count exceeds the group count.
 
     Pair-meets-once argument: a same-bucket pair is scored once in its
     bucket's salt-0 triangle (ascending-id half); a cross-bucket pair
     (buckets x < y, differing in exactly one probed bit) is generated only
     by the x-side vector's up-probe into y's group. Per-group memory is
     bounded by ``chunk`` x |homes| floats (visitors are processed in
-    blocks); hot buckets degrade to longer — not wider — loops."""
+    blocks of ``chunk`` rows); hot buckets degrade to longer — not
+    wider — loops."""
     from pyspark import StorageLevel
 
-    if n_salts is None:
-        cores = corpus.sparkSession.sparkContext.defaultParallelism
-        n_salts = max(1, cores // (1 << n_planes))
+    cores = corpus.sparkSession.sparkContext.defaultParallelism
+    n_salts = max(1, cores // (1 << n_planes))
     v = _as_double(F.col(vec_col))
     base = corpus.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__e"), v.alias("__v")
@@ -1073,136 +1054,6 @@ def _near_pairs_bucket_verify(
     )
 
 
-def embedding_near_pairs_blocked(
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    n_planes: int = 4,
-    multi_probe_bits: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    verify_impl: str = "jvm",
-    broadcast_max_candidates: int = 10_000_000,
-) -> DataFrame:
-    """SRP-blocked approximate near-pair detection — the scale path that
-    replaces ``embedding_near_pairs``'s O(n²) self-join: vectors pair only
-    within the same (or, with multi-probe, 1-bit-adjacent) SRP bucket, then
-    exact cosine filters the candidates. Expected candidate volume is
-    n²·(collision probability) ≈ n²·(1 - θ/π)^planes — tune n_planes so
-    per-bucket populations fit a shuffle partition. Approximate by nature
-    (pairs crossing > multi_probe_bits sign flips are missed); recall vs
-    the exact operator is asserted in unit tests.
-
-    Plan shape (the minhash_lsh_pairs discipline): the bucket self-join
-    runs on NARROW (id, bucket) rows — the 64-double unit vectors never
-    ride the exploded shuffle — and the surviving (id_a, id_b) candidates
-    are size-probed and broadcast back onto the unit table for the verify
-    (shuffle-join fallback past ``broadcast_max_candidates``).
-
-    ``verify_impl``: 'jvm' scores candidates with the declarative left-fold
-    ``dot()``; 'arrow' runs the same verify in a vectorized mapInPandas
-    kernel that decides thresholds BITWISE like the fold (BLAS score +
-    fold-order refine of the eps-band — see :func:`_fold_refine_rows`), so
-    both paths — and the DuckDB oracle — agree on every threshold-boundary
-    pair; 'bucket' skips the candidate materialization entirely and
-    verifies INSIDE each bucket group (applyInPandas), which is the
-    dense-bucket scale path — see :func:`_near_pairs_bucket_verify`. All
-    three are result-identical bitwise. Measured on the 10x replica corpus
-    (20k vectors, 64 buckets, 23.1M candidates): jvm 162 s — the two
-    candidate-side shuffle joins ship 64-double arrays per pair and the
-    fold is per-row — vs bucket ~its candidate-gen cost: the shuffle stays
-    linear in the corpus ((1 + planes + 1) rows x 512 B per vector) and
-    the quadratic part runs as one BLAS matmul per visitor chunk."""
-    from pyspark import StorageLevel
-
-    if verify_impl == "bucket":
-        return _near_pairs_bucket_verify(
-            corpus,
-            threshold=threshold,
-            n_planes=n_planes,
-            multi_probe_bits=multi_probe_bits,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-        )
-
-    v = _as_double(F.col(vec_col))
-    n = l2_norm(v)
-    # pinned: feeds the narrow band rows AND both verify sides, so the
-    # unit-normalization pass runs once
-    prepared = pin(
-        corpus.select(F.col(id_col), F.transform(v, lambda x: x / n).alias("__unit"))
-        .withColumn("__bucket", srp_bucket(F.col("__unit"), _hyperplanes(dim, n_planes))),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    # multi-probe on ONE side only: each left row visits its own bucket plus
-    # every 1-bit flip, so adjacent-bucket pairs meet exactly once
-    probes = [F.col("__bucket")]
-    if multi_probe_bits >= 1:
-        probes += [
-            F.col("__bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-            for i in range(n_planes)
-        ]
-    # the bucket self-join carries ONLY (id, bucket): shipping the exploded
-    # unit arrays through the shuffle costs dim x 8 bytes x (1+planes) per
-    # vector and was the measured bottleneck of the naive formulation
-    band = prepared.select(F.col(id_col).alias("__id"), "__bucket")
-    left = band.select(
-        F.col("__id").alias("id_a"), F.explode(F.array(*probes)).alias("__bucket")
-    )
-    right = band.select(F.col("__id").alias("id_b"), "__bucket")
-    # No candidate dedup needed: the probe buckets {home, home^bit_i} are
-    # all DISTINCT values and the right side keeps its single home bucket,
-    # so a pair meets through exactly one probe (equal buckets -> the
-    # identity probe; buckets differing by bit i -> that probe alone), and
-    # the id_a < id_b filter kills the mirrored ordering. Verified at
-    # sf0.1: join rows == distinct pairs (230,484 == 230,484). A
-    # dropDuplicates here would be a pure no-op shuffle of the candidate
-    # set — the largest intermediate in the plan.
-    cand_ids = pin(
-        left.join(right, "__bucket").filter(F.col("id_a") < F.col("id_b")),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    # bounded gate on the verify-side broadcast (minhash_lsh_pairs pattern)
-    probe_n = cand_ids.select("id_a").limit(broadcast_max_candidates + 1).count()
-    cand_hinted = (
-        F.broadcast(cand_ids) if probe_n <= broadcast_max_candidates else cand_ids
-    )
-    ua = prepared.select(F.col(id_col).alias("id_a"), F.col("__unit").alias("__ua"))
-    ub = prepared.select(F.col(id_col).alias("id_b"), F.col("__unit").alias("__ub"))
-    cands = cand_hinted.join(ua, "id_a").join(ub, "id_b")
-    if verify_impl == "arrow":
-        # Vectorized verify with BIT-IDENTICAL threshold decisions: `dot()`
-        # is a left-fold (((0+p0)+p1)+...); numpy's fast reductions use
-        # pairwise/SIMD summation whose different rounding could disagree
-        # on threshold-boundary pairs — so pairs inside the _FOLD_EPS band
-        # are re-scored in exact fold order (_fold_refine_rows).
-        import pandas as pd
-
-        def kernel(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                a = np.asarray(list(pdf["__ua"]), dtype=np.float64)
-                b = np.asarray(list(pdf["__ub"]), dtype=np.float64)
-                # r13: vectorized row-dot + fold-order refine of the
-                # threshold band only (see _fold_refine_rows) — replaces
-                # the dim-pass accumulation loop, same bitwise decisions
-                keep = _fold_refine_rows(
-                    np.einsum("ij,ij->i", a, b), a, b, threshold
-                )
-                yield pd.DataFrame(
-                    {"id_a": pdf["id_a"][keep], "id_b": pdf["id_b"][keep]}
-                )
-
-        return cands.select("id_a", "id_b", "__ua", "__ub").mapInPandas(
-            kernel, schema="id_a long, id_b long"
-        )
-    return (
-        cands.select("id_a", "id_b", dot("__ua", "__ub").alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b")
-    )
 
 
 def incremental_embedding_dedup(

@@ -779,10 +779,6 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.4,
         n_planes=6,
         multi_probe_bits=1,
-        # 'bucket': verify inside each SRP bucket group — candidates never
-        # materialize as shuffle rows. Result-identical bitwise to 'jvm';
-        # 162 s -> 14 s on the 10x replica corpus (CHECKS_r08).
-        verify_impl="bucket",
     )
     # persist BEFORE the output sort: the verify stage has no shuffle
     # barrier, so the range-sort's boundary-sampling job would otherwise
@@ -988,9 +984,7 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sdc_mapreduce_spark.functions.simsearch import embedding_near_pairs_blocked
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = embedding_near_pairs_blocked(
-        emb, threshold=0.4, n_planes=6, verify_impl="bucket"
-    )
+    pairs = embedding_near_pairs_blocked(emb, threshold=0.4, n_planes=6)
     return min_label_propagation(
         emb.select("vec_id"), pairs, id_col="vec_id"
     ).orderBy("vec_id")

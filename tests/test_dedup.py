@@ -17,6 +17,29 @@ def _python_shingles(text: str, n: int = 3) -> set[str]:
     return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
 
 
+def _numpy_minhash(shingles, num_hashes: int, bands: int = 1):
+    """Reference MinHash of one shingle-hash array, computed per document
+    in numpy: the minima of the universal family
+    min((a_i * h + b_i) mod 2^61-1) and the per-band mix of those minima,
+    with (a, b, mix) drawn from RNG_SEED_MINHASH in the order the Arrow
+    band kernel draws them. Returns (minima, band hashes)."""
+    import numpy as np
+
+    MERSENNE = (1 << 61) - 1
+    rows_per_band = num_hashes // bands
+    rng = np.random.RandomState(D.RNG_SEED_MINHASH)
+    a = rng.randint(1, MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
+    b = rng.randint(0, MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
+    mix = (
+        rng.randint(1, MERSENNE, size=rows_per_band, dtype=np.int64).astype(np.uint64)
+        | np.uint64(1)
+    )
+    h = np.asarray(shingles, dtype=np.int64).astype(np.uint64)
+    mins = ((a[:, None] * h[None, :] + b[:, None]) % MERSENNE).min(axis=1)
+    per_band = mins.reshape(bands, rows_per_band)
+    return mins, (per_band * mix[None, :]).sum(axis=1).astype(np.int64)
+
+
 def _python_jaccard_pairs(rows, n=3, threshold=0.8):
     sets = {r[0]: _python_shingles(r[1], n) for r in rows}
     out = set()
@@ -42,8 +65,10 @@ def test_jaccard_pairs_vs_python(spark, sf_dir):
 
 
 def test_minhash_estimate_tracks_exact_jaccard(spark, sf_dir):
-    """The Arrow universal-hash family must be a valid MinHash estimator:
-    for true near-dup pairs, the fraction of agreeing minima estimates the
+    """The band kernel's universal-hash family (through its numpy
+    reference, which test_band_rows_arrow_vectorization_is_bitwise pins to
+    the kernel bit-for-bit) must be a valid MinHash estimator: for true
+    near-dup pairs, the fraction of agreeing minima estimates the
     exact Jaccard within ~4 standard errors (sqrt(j(1-j)/K) ≈ 0.035 at
     K=128) — catches any bias bug in the (a*h+b) mod M permutations."""
     docs = load_table(spark, sf_dir, "documents")
@@ -53,15 +78,15 @@ def test_minhash_estimate_tracks_exact_jaccard(spark, sf_dir):
     }
     assert exact
     K = 128
-    sets = D.shingle_sets(docs, n=3)
+    ids = {i for pair in exact for i in pair}
     sigs = {
-        r["doc_id"]: [r[f"mh_{i}"] for i in range(K)]
-        for r in D._signatures_from_sets_arrow(sets, num_hashes=K)
-        .drop("shingles")
+        r["doc_id"]: _numpy_minhash(r["shingles"], K)[0]
+        for r in D.shingle_sets(docs, n=3)
+        .filter(F.col("doc_id").isin(list(ids)))
         .collect()
     }
     for (a, b), j in exact.items():
-        est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / K
+        est = float((sigs[a] == sigs[b]).sum()) / K
         assert abs(est - j) <= 0.15, (a, b, j, est)
 
 
@@ -848,36 +873,16 @@ def test_sorted_neighborhood_rejects_degenerate_window(spark, sf_dir):
 
 
 def test_band_rows_arrow_vectorization_is_bitwise(spark, sf_dir):
-    """The r14 slab-vectorized band kernel (flat concat + minimum.reduceat)
-    must reproduce the per-document formulation BIT-FOR-BIT: min is exact
-    and the (a*h+b) % M / band-mix arithmetic is elementwise uint64, so any
-    divergence is a bug (wrong reduceat boundaries, dtype drift)."""
-    import numpy as np
-
-    from sdc_mapreduce_spark.functions.dedup import (
-        RNG_SEED_MINHASH,
-        shingle_sets,
-    )
-
+    """The Arrow band kernel must reproduce the per-document numpy
+    formulation BIT-FOR-BIT: min is exact and the (a*h+b) % M / band-mix
+    arithmetic is elementwise uint64, so any divergence is a bug (batch
+    boundaries, dtype drift, band/row layout)."""
     num_hashes, bands = 128, 32
-    rows_per_band = num_hashes // bands
-    MERSENNE = (1 << 61) - 1
-    rng = np.random.RandomState(RNG_SEED_MINHASH)
-    a = rng.randint(1, MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
-    b = rng.randint(0, MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
-    mix = (
-        rng.randint(1, MERSENNE, size=rows_per_band, dtype=np.int64).astype(np.uint64)
-        | np.uint64(1)
-    )
-
     docs = load_table(spark, sf_dir, "documents").limit(200)
-    sets = shingle_sets(docs, n=3)
+    sets = D.shingle_sets(docs, n=3)
     expected = {}
     for r in sets.collect():
-        h = np.asarray(r["shingles"], dtype=np.int64).astype(np.uint64)
-        mins = ((a[:, None] * h[None, :] + b[:, None]) % MERSENNE).min(axis=1)
-        per_band = mins.reshape(bands, rows_per_band)
-        bh = (per_band * mix[None, :]).sum(axis=1).astype(np.int64)
+        _, bh = _numpy_minhash(r["shingles"], num_hashes, bands)
         for band in range(bands):
             expected[(r["doc_id"], band)] = int(bh[band])
 

@@ -44,11 +44,11 @@ def test_global_topk_is_take_ordered(spark, sf_dir):
     assert "Exchange rangepartitioning" not in plan  # the global-sort shape
 
 
-def test_minhash_signatures_are_shuffle_free(spark, sf_dir):
-    from sdc_mapreduce_spark.functions.dedup import minhash_signatures
+def test_minhash_band_rows_are_shuffle_free(spark, sf_dir):
+    from sdc_mapreduce_spark.functions.dedup import _band_rows_arrow, shingle_sets
 
     docs = load_table(spark, sf_dir, "documents")
-    plan = _plan(minhash_signatures(docs, num_hashes=16))
+    plan = _plan(_band_rows_arrow(shingle_sets(docs), num_hashes=16, bands=4))
     assert "Exchange" not in plan, f"signature stage shuffles:\n{plan}"
 
 
@@ -333,22 +333,25 @@ def test_interval_overlap_never_nested_loop(spark, sf_dir):
 
 
 def test_blocked_pairs_bucket_join_is_narrow(spark, sf_dir):
-    """The SRP bucket self-join must carry ONLY (id, bucket): the 64-double
-    unit arrays riding the exploded shuffle was the measured bottleneck of
-    the naive formulation (r6). The verify joins re-attach units AFTER the
-    candidate set exists, with the candidate side broadcast."""
+    """The SRP verify runs inside each (bucket, salt) group, so the plan's
+    ONLY shuffle is the group-by on (__g, __salt), and the rows it moves
+    carry the raw float32 embedding — never a float64 vector (__v) or a
+    unit vector (__unit): float64 rows would double the shuffle bytes, and
+    unit vectors are built inside the kernel."""
+    import re
+
     from sdc_mapreduce_spark.functions.simsearch import embedding_near_pairs_blocked
 
     emb = load_table(spark, sf_dir, "embeddings")
-    plan = _plan(embedding_near_pairs_blocked(emb, n_planes=6))
-    # every hash-partitioned exchange in this plan must be unit-free: the
-    # only shuffle is the narrow band join (units travel only through
-    # broadcast/persisted scans; candidate pairs are unique by probe-set
-    # construction, so there is no distinct stage)
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "__unit" not in line and "__ua" not in line and "__ub" not in line, line
-    assert "BroadcastHashJoin" in plan  # candidate ids broadcast into verify
+    lines = _plan(embedding_near_pairs_blocked(emb, n_planes=6)).splitlines()
+    exchanges = [i for i, line in enumerate(lines) if "Exchange" in line]
+    assert len(exchanges) == 1, "\n".join(lines)
+    (i,) = exchanges
+    group_key = r"Exchange hashpartitioning\(__g#\d+L, __salt#\d+,"
+    assert re.search(group_key, lines[i]), lines[i]
+    shuffled = lines[i + 1]  # the projection feeding the exchange
+    assert "__e#" in shuffled, shuffled
+    assert "__v#" not in shuffled and "__unit" not in shuffled, shuffled
 
 
 def test_incremental_embedding_batch_side_broadcast(spark, sf_dir):

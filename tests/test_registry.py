@@ -39,51 +39,83 @@ def test_import_quarantine_is_empty():
     assert q.IMPORT_QUARANTINE == {}, list(q.IMPORT_QUARANTINE)
 
 
-def test_every_registered_query_is_prioritized():
-    """The rotation plan must stay total: every registry entry appears in
-    the priority tuples exactly once, so window re-sequencing can never
-    silently drop or duplicate a query."""
+# Operators whose code changed since their consumers were last certified;
+# every query whose builder reaches one of them must sit in CERT_HEAD.
+_CHANGED_OPERATORS = frozenset(
+    {
+        "minhash_lsh_pairs",
+        "embedding_near_pairs_blocked",
+        "jaccard_prefix_pairs",
+        "sorted_neighborhood_pairs",
+    }
+)
+
+
+def _package_call_graph() -> dict[str, set[str]]:
+    """Top-level function name -> every name it references (calls,
+    attribute accesses, bare names), over the whole package. Keyed by bare
+    name, so the graph over-approximates reachability — never under."""
+    import ast
+    import pathlib
+
+    import sdc_mapreduce_spark
+
+    graph: dict[str, set[str]] = {}
+    for path in pathlib.Path(sdc_mapreduce_spark.__file__).parent.rglob("*.py"):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef):
+                refs = graph.setdefault(node.name, set())
+                for sub in ast.walk(node):
+                    if isinstance(sub, ast.Name):
+                        refs.add(sub.id)
+                    elif isinstance(sub, ast.Attribute):
+                        refs.add(sub.attr)
+    return graph
+
+
+def _reaches(graph: dict[str, set[str]], start: str, targets) -> bool:
+    seen, stack = set(), [start]
+    while stack:
+        name = stack.pop()
+        if name in targets:
+            return True
+        if name not in seen:
+            seen.add(name)
+            stack.extend(graph.get(name, ()))
+    return False
+
+
+def test_cert_head_leads_registry_and_covers_changed_operators():
+    """The driver certifies the first 50 registry entries. CERT_HEAD must
+    fit that window, be duplicate-free and fully registered, and lead the
+    registry; everything after it keeps module (_MODULE_ORDER / QUERIES)
+    order. Every query whose builder reaches a changed operator must be in
+    CERT_HEAD, so the driver's window covers the changed code."""
+    import importlib
+
     import sdc_mapreduce_spark.queries as q
 
-    planned = list(q._PRIORITY)
-    assert len(planned) == len(set(planned)), "duplicate names in plan"
-    assert set(planned) == set(q.REGISTRY), (
-        set(planned) ^ set(q.REGISTRY)
-    )
+    head = list(q.CERT_HEAD)
+    assert len(head) == len(set(head)), "duplicate names in CERT_HEAD"
+    assert len(head) <= 50
+    assert set(head) <= set(q.REGISTRY), set(head) - set(q.REGISTRY)
+    names = list(q.REGISTRY)
+    assert names[: len(head)] == head
+    module_order = [
+        name
+        for mod in q._MODULE_ORDER
+        for name in importlib.import_module(f"{q.__name__}.{mod}").QUERIES
+    ]
+    assert names[len(head) :] == [n for n in module_order if n not in head]
 
-
-def test_window_head_is_the_r14_plan():
-    """First 50 registry entries are the driver's certification sample —
-    pin the r14 head so an accidental reorder is caught before the round
-    ends. VERDICT r13 ask #2: every query whose operator changed in r13
-    or r14 must sit inside the head; the r13 window missed 5 of the 6
-    r13 rewrites, so the r14 plan leads with the full changed-operator
-    set (SRP verify family, minhash candidate family, jaccard_prefix,
-    plus the uncertified r13 rewrites), then fills with the stalest
-    rotation entries (everything the r13 window did not certify)."""
-    import sdc_mapreduce_spark.queries as q
-
-    head = list(q.REGISTRY)[:50]
-    # plan item 0/1: the full r14 window leads, in order
-    assert head[: len(q._WINDOW_R14)] == list(q._WINDOW_R14)
-    # every r13/r14 operator-changed query is inside the certified head
-    for name in (
-        "dedup_embedding_ann",
-        "dedup_embedding_clusters",
-        "dedup_minhash_lsh",
-        "dedup_jaccard_prefix",
-        "dedup_exact_substring",
-        "dedup_sorted_neighborhood",
-        "multimodal_encoder_topk",
-    ):
-        assert name in head[: len(q._WINDOW_R14)], name
-    # plan item 2: stalest rotation entries (never certified in r13) fill
-    # the remainder — spot-pin the boundary so the assembly stays honest
-    tail = head[len(q._WINDOW_R14) :]
-    assert set(tail) & set(q._R13_CERT_HEAD) == set(), (
-        "r13-certified entries must not displace stale ones in the head"
-    )
-    assert len(head) == 50
+    graph = _package_call_graph()
+    reaching = {
+        name
+        for name, spec in q.REGISTRY.items()
+        if _reaches(graph, spec.fn.__name__, _CHANGED_OPERATORS)
+    }
+    assert reaching, "call graph found no consumer of the changed operators"
+    assert reaching <= set(head), sorted(reaching - set(head))
 
 
 def test_entrypoint_contract():

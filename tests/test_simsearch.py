@@ -127,11 +127,11 @@ def test_blocked_near_pairs_subset_with_recall(spark, sf_dir):
 
 
 def test_blocked_pairs_unique_without_dedup(spark, sf_dir):
-    """The one-sided multi-probe construction produces each candidate pair
-    exactly once — equal buckets meet through the identity probe, buckets
-    differing by bit i through that probe alone, and id_a < id_b kills the
-    mirror — so the operator carries NO dropDuplicates. This pins the
-    invariant the removal relies on: emitted pairs must be unique."""
+    """The up-probe construction produces each pair exactly once — a
+    same-bucket pair in its bucket's ascending-id triangle, a cross-bucket
+    pair only through the lower bucket's up-probe — so the operator
+    carries NO dropDuplicates. This pins the invariant that relies on:
+    emitted pairs must be unique."""
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = [
         (r["id_a"], r["id_b"])
@@ -355,81 +355,44 @@ def test_incremental_embedding_dedup_flags_planted_near_dup(spark, sf_dir):
     assert ortho_id not in out  # nothing in the corpus at cosine >= 0.95
 
 
-def test_blocked_pairs_arrow_verify_bitwise_equals_jvm(spark, sf_dir):
-    """The Arrow verify kernel must reproduce the JVM fold's results
-    EXACTLY (same pairs, including any threshold-boundary ones): its
-    per-dimension accumulation is the same IEEE add sequence per pair."""
-    from sdc_mapreduce_spark.catalog import load_table
-    from sdc_mapreduce_spark.functions.simsearch import embedding_near_pairs_blocked
+def test_blocked_pairs_equal_exact_pairs_within_probe_radius(spark, sf_dir):
+    """The blocked operator decides every pair with the same left-fold
+    ``dot()`` as the exhaustive one, so its result must be EXACTLY the
+    exhaustive pairs whose SRP buckets differ in at most
+    min(multi_probe_bits, 1) bits — no pair lost inside the probe radius,
+    none gained outside it, none emitted twice. Run with and without
+    multi-probe, and with a chunk small enough to force the
+    visitor-blocking loop."""
+    from sdc_mapreduce_spark.functions.simsearch import _hyperplanes, _srp_prep
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    jvm = sorted(
-        map(tuple, embedding_near_pairs_blocked(emb, n_planes=6).collect())
-    )
-    arrow = sorted(
-        map(
-            tuple,
-            embedding_near_pairs_blocked(
-                emb, n_planes=6, verify_impl="arrow"
-            ).collect(),
-        )
-    )
-    assert jvm == arrow and len(jvm) > 0
-
-
-def test_blocked_pairs_bucket_verify_bitwise_equals_jvm(spark, sf_dir):
-    """The grouped per-bucket verify (the dense-bucket scale path — no
-    candidate shuffle) must also be bitwise-identical to the JVM fold,
-    with and without multi-probe, and with a chunk size small enough to
-    force the visitor-blocking loop."""
-    from sdc_mapreduce_spark.catalog import load_table
-    from sdc_mapreduce_spark.functions.simsearch import (
-        _near_pairs_bucket_verify,
-        embedding_near_pairs_blocked,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
+    n_planes = 6
+    emb = load_table(spark, sf_dir, "embeddings").cache()
+    bucket = {
+        r["vec_id"]: r["__bucket"]
+        for r in _srp_prep(emb, _hyperplanes(64, n_planes), "vec_id", "embedding")
+        .select("vec_id", "__bucket")
+        .collect()
+    }
+    exact = [
+        (r["id_a"], r["id_b"])
+        for r in S.embedding_near_pairs(emb, threshold=0.4).collect()
+    ]
     for mpb in (0, 1):
-        jvm = sorted(
-            map(
-                tuple,
-                embedding_near_pairs_blocked(
-                    emb, n_planes=6, multi_probe_bits=mpb
-                ).collect(),
-            )
-        )
-        bucket = sorted(
-            map(
-                tuple,
-                embedding_near_pairs_blocked(
-                    emb, n_planes=6, multi_probe_bits=mpb, verify_impl="bucket"
-                ).collect(),
-            )
-        )
-        assert jvm == bucket and len(jvm) > 0, f"multi_probe_bits={mpb}"
-    chunked = sorted(
-        map(
-            tuple,
-            _near_pairs_bucket_verify(
-                emb,
-                threshold=0.4,
-                n_planes=6,
-                multi_probe_bits=1,
-                id_col="vec_id",
-                vec_col="embedding",
-                dim=64,
-                chunk=7,
-            ).collect(),
-        )
-    )
-    assert chunked == sorted(
-        map(
-            tuple,
-            embedding_near_pairs_blocked(
-                emb, n_planes=6, multi_probe_bits=1
-            ).collect(),
-        )
-    )
+        radius = min(mpb, 1)
+        expected = {
+            (a, b) for a, b in exact if bin(bucket[a] ^ bucket[b]).count("1") <= radius
+        }
+        assert expected, f"multi_probe_bits={mpb}: empty expectation"
+        for chunk_kw in ({}, {"chunk": 7}):
+            got = [
+                (r["id_a"], r["id_b"])
+                for r in S.embedding_near_pairs_blocked(
+                    emb, threshold=0.4, n_planes=n_planes, multi_probe_bits=mpb,
+                    **chunk_kw,
+                ).collect()
+            ]
+            assert len(got) == len(set(got)), (mpb, chunk_kw)
+            assert set(got) == expected, (mpb, chunk_kw)
 
 
 def test_label_silhouette_separable_clusters(spark):
@@ -647,17 +610,14 @@ def test_mmr_indexed_pool_recall_floor(spark, sf_dir, tmp_path):
 
 
 def test_fold_refine_band_matches_exact_fold_order():
-    """r13 BLAS+refine verify: pairs INSIDE the _FOLD_EPS threshold band
+    """BLAS+refine threshold decision: pairs INSIDE the _FOLD_EPS threshold band
     must be decided by the exact left-fold recompute, not the BLAS score —
     engineered boundary pairs (fold-order dot exactly ==, 1-ulp-below, and
     1-ulp-above the threshold) plus a random sweep asserting the refine
     keep-mask equals a brute-force left-fold decision elementwise."""
     import numpy as np
 
-    from sdc_mapreduce_spark.functions.simsearch import (
-        _fold_refine_matrix,
-        _fold_refine_rows,
-    )
+    from sdc_mapreduce_spark.functions.simsearch import _fold_refine_matrix
 
     thr = 0.5
     # dot([1,0,0,0], [x,y,0,0]) left-fold = ((((0 + x) + 0) + 0) + 0) = x,
@@ -674,13 +634,6 @@ def test_fold_refine_band_matches_exact_fold_order():
     )
     keep = _fold_refine_matrix(V @ H.T, V, H, thr)
     assert keep.tolist() == [[True, False, True]]
-    keep_r = _fold_refine_rows(
-        np.einsum("ij,ij->i", np.repeat(V, 3, axis=0), H),
-        np.repeat(V, 3, axis=0),
-        H,
-        thr,
-    )
-    assert keep_r.tolist() == [True, False, True]
 
     # random sweep: refine decisions == brute left-fold decisions
     rng = np.random.RandomState(7)
