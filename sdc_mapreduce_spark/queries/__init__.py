@@ -48,12 +48,13 @@ for _name in _MODULE_ORDER:
         raise RuntimeError(f"duplicate query names: {overlap}")
     _ALL.update(mod.QUERIES)
 
-# Registration order is the driver's check order, and the driver certifies
-# only the first 50 entries. CERT_HEAD therefore leads the registry: it
-# lists every query whose operator code changed since that query's last
-# certification, so the driver's window always covers changed code. The
-# rest follows in _MODULE_ORDER / QUERIES order. When operator code
-# changes, replace CERT_HEAD with the queries whose builders reach it
+# Registration order is the oracle check's order, and its certification
+# window (tools/check_oracle.py --head 50) covers only the first 50
+# entries. CERT_HEAD therefore leads the registry: it lists every query
+# whose operator code changed since that query's last certification, so
+# the certification window always covers changed code. The rest follows
+# in _MODULE_ORDER / QUERIES order. When operator code changes, replace
+# CERT_HEAD with the queries whose query functions reach it
 # (tests/test_registry.py computes that set from the call graph).
 CERT_HEAD: tuple[str, ...] = (
     # embedding_near_pairs_blocked

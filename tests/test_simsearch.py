@@ -4,6 +4,7 @@ SRP ANN recall bound."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.catalog import load_table
@@ -355,21 +356,23 @@ def test_incremental_embedding_dedup_flags_planted_near_dup(spark, sf_dir):
     assert ortho_id not in out  # nothing in the corpus at cosine >= 0.95
 
 
-def test_blocked_pairs_equal_exact_pairs_within_probe_radius(spark, sf_dir):
-    """The blocked operator decides every pair with the same left-fold
-    ``dot()`` as the exhaustive one, so its result must be EXACTLY the
-    exhaustive pairs whose SRP buckets differ in at most
-    min(multi_probe_bits, 1) bits — no pair lost inside the probe radius,
-    none gained outside it, none emitted twice. Run with and without
-    multi-probe, and with a chunk small enough to force the
-    visitor-blocking loop."""
+_BLOCKED_PLANES = 6
+
+
+@pytest.fixture(scope="module")
+def blocked_case(spark, sf_dir):
+    """(embeddings, {multi_probe_bits: expected pairs}). The blocked
+    operator decides every pair with the same left-fold ``dot()`` as the
+    exhaustive JVM one, so its result must be EXACTLY the exhaustive pairs
+    whose SRP buckets differ in at most min(multi_probe_bits, 1) bits."""
     from sdc_mapreduce_spark.functions.simsearch import _hyperplanes, _srp_prep
 
-    n_planes = 6
     emb = load_table(spark, sf_dir, "embeddings").cache()
     bucket = {
         r["vec_id"]: r["__bucket"]
-        for r in _srp_prep(emb, _hyperplanes(64, n_planes), "vec_id", "embedding")
+        for r in _srp_prep(
+            emb, _hyperplanes(64, _BLOCKED_PLANES), "vec_id", "embedding"
+        )
         .select("vec_id", "__bucket")
         .collect()
     }
@@ -377,22 +380,43 @@ def test_blocked_pairs_equal_exact_pairs_within_probe_radius(spark, sf_dir):
         (r["id_a"], r["id_b"])
         for r in S.embedding_near_pairs(emb, threshold=0.4).collect()
     ]
+    expected = {}
     for mpb in (0, 1):
         radius = min(mpb, 1)
-        expected = {
+        expected[mpb] = {
             (a, b) for a, b in exact if bin(bucket[a] ^ bucket[b]).count("1") <= radius
         }
-        assert expected, f"multi_probe_bits={mpb}: empty expectation"
-        for chunk_kw in ({}, {"chunk": 7}):
-            got = [
-                (r["id_a"], r["id_b"])
-                for r in S.embedding_near_pairs_blocked(
-                    emb, threshold=0.4, n_planes=n_planes, multi_probe_bits=mpb,
-                    **chunk_kw,
-                ).collect()
-            ]
-            assert len(got) == len(set(got)), (mpb, chunk_kw)
-            assert set(got) == expected, (mpb, chunk_kw)
+        assert expected[mpb], f"multi_probe_bits={mpb}: empty expectation"
+    return emb, expected
+
+
+def _blocked_pairs(emb, mpb, **kw):
+    got = [
+        (r["id_a"], r["id_b"])
+        for r in S.embedding_near_pairs_blocked(
+            emb, threshold=0.4, n_planes=_BLOCKED_PLANES, multi_probe_bits=mpb, **kw
+        ).collect()
+    ]
+    assert len(got) == len(set(got)), (mpb, kw)
+    return set(got)
+
+
+def test_blocked_pairs_arrow_verify_bitwise_equals_jvm(blocked_case):
+    """The Arrow per-bucket verify kernel reproduces the JVM fold's pairs
+    EXACTLY (threshold-boundary ones included) inside the probe radius —
+    no pair lost, none gained outside it, none emitted twice — with and
+    without multi-probe."""
+    emb, expected = blocked_case
+    for mpb, want in expected.items():
+        assert _blocked_pairs(emb, mpb) == want, mpb
+
+
+def test_blocked_pairs_bucket_verify_bitwise_equals_jvm(blocked_case):
+    """Same exact equality with a chunk small enough to force the
+    visitor-blocking loop inside each bucket group."""
+    emb, expected = blocked_case
+    for mpb, want in expected.items():
+        assert _blocked_pairs(emb, mpb, chunk=7) == want, mpb
 
 
 def test_label_silhouette_separable_clusters(spark):

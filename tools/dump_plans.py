@@ -3,7 +3,7 @@
 optimization change).
 
 Usage: python tools/dump_plans.py <out_dir> <tag> [name ...]
-    out_dir: e.g. plans/r15; created if missing.
+    out_dir: e.g. plans/minhash; created if missing.
     tag: e.g. "before" or "after"; with no names, dumps the whole bench set.
 Reads the fixture named by $SPARK_GRAFT_SF_DIR (catalog.DEFAULT_SF_DIR).
 """
