@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.cache import pin
 from sdc_mapreduce_spark.functions.text import normalized_text, token_hash60, tokens
+from sdc_mapreduce_spark.operators.relational import broadcast_if_small
 
 RNG_SEED_MINHASH = 7
 
@@ -557,10 +558,7 @@ def incremental_minhash_dedup(
         .distinct(),
         StorageLevel.MEMORY_AND_DISK,
     )
-    probe = cand.select("__new_id").limit(broadcast_max_candidates + 1).count()
-    cand_hinted = (
-        F.broadcast(cand) if probe <= broadcast_max_candidates else cand
-    )
+    cand_hinted = broadcast_if_small(cand, broadcast_max_candidates)
     sa = sets_new.select(
         F.col(id_col).alias("__new_id"), F.col("shingles").alias("__sh_a")
     )
@@ -876,8 +874,8 @@ def exact_substring_dedup(
     partial counts; only the duplicated sliver survives the >= 2 filter.
     The per-doc drop list (docs that lose at least one chunk x the ids
     they lose) is broadcast back onto the scan when it is provably small:
-    the persisted list is probed with a bounded ``limit(N+1).count()`` (the
-    same gate pattern as ``embedding_near_pairs_arrow``), and past
+    the persisted list is probed by ``broadcast_if_small`` (a bounded
+    ``limit(N+1).count()``), and past
     ``broadcast_max_docs`` rows the rebuild falls back to the same plan
     with a shuffle join on doc_id — still sliver-sized, never corpus-sized,
     and safe at an extreme duplication rate where the drop list is a
@@ -950,10 +948,7 @@ def exact_substring_dedup(
     # pinned so the size probe below and the rebuild join share one
     # materialization of the inventory aggregation
     drops = pin(drops, StorageLevel.MEMORY_AND_DISK)
-    # Bounded gate: the probe stops scanning the persisted list at N+1 rows;
-    # only a provably-small drop list earns the broadcast hint.
-    probe = drops.select("__id").limit(broadcast_max_docs + 1).count()
-    drops_hinted = F.broadcast(drops) if probe <= broadcast_max_docs else drops
+    drops_hinted = broadcast_if_small(drops, broadcast_max_docs)
     rebuilt = base.join(drops_hinted, "__id", "left")
     drop_ids = F.coalesce(F.col("__drop_ids"), F.array().cast("array<int>"))
     kept = F.flatten(

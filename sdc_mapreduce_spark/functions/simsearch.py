@@ -151,58 +151,25 @@ def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-# Fold-order-exact threshold decisions from a BLAS score.
+# Fold-order-exact threshold decisions from a float32 BLAS prefilter.
 #
 # The verify kernels must decide cosine >= threshold with the SAME result
 # as the JVM left-fold ``dot()`` and DuckDB's list_inner_product — the
 # cross-engine hash contract. Reproducing the fold's IEEE add order for
 # every pair (one ``acc += a[:, d] * b[:, d]`` pass per dimension) is
-# memory-bandwidth-bound: dim full passes over the score matrix.
-# Instead: score with one BLAS matmul (any summation order), and recompute
-# the exact fold order ONLY for pairs inside an eps-band of the threshold,
-# where the two orders could disagree.
+# memory-bandwidth-bound: dim full passes over the score matrix. Instead,
+# embedding_near_pairs_blocked scores each block with one SGEMM over
+# float32-cast unit vectors (any summation order) and recomputes the exact
+# float64 fold order only for the pairs that could reach the threshold.
 #
-# Bound: for unit vectors, sum_d |a_d * b_d| <= ||a||*||b|| = 1
-# (Cauchy-Schwarz), so the forward error of ANY summation order of the
-# dim rounded products vs the exact value is <= (dim+1) * u * 1 with
-# u = 2^-53 — about 7.2e-15 at dim=64 — and two orders differ by at most
-# ~1.5e-14. _FOLD_EPS = 1e-9 leaves 4+ orders of magnitude of margin
-# (inputs are unit-normalized in every caller; norms are 1 +/- O(u)).
-_FOLD_EPS = 1e-9
-
-# The float32-prefilter analog (embedding_near_pairs_blocked): when the
-# block score is computed by SGEMM over float32-cast unit vectors, the
-# conversion adds <= 2*2^-24 relative error per product and the f32
-# accumulation <= dim*2^-24 * sum|a_d*b_d| <= dim*2^-24 (Cauchy-Schwarz,
-# unit vectors) — total ~(dim+2)*2^-24 ~= 3.9e-6 at dim=64. _F32_EPS = 1e-4
-# leaves 25x margin; every pair at or above threshold - _F32_EPS is
-# re-decided by the exact float64 left fold, and every dropped pair is
-# provably below threshold in ANY summation order.
+# Bound: the float32 conversion adds <= 2*2^-24 relative error per
+# product and the f32 accumulation <= dim*2^-24 * sum|a_d*b_d|
+# <= dim*2^-24 (Cauchy-Schwarz, unit vectors) — total
+# ~(dim+2)*2^-24 ~= 3.9e-6 at dim=64. _F32_EPS = 1e-4 leaves 25x margin;
+# every pair at or above threshold - _F32_EPS is re-decided by the exact
+# float64 left fold, and every dropped pair is provably below threshold in
+# ANY summation order.
 _F32_EPS = 1e-4
-
-
-def _fold_refine_matrix(
-    S: "np.ndarray", V: "np.ndarray", H: "np.ndarray", threshold: float
-) -> "np.ndarray":
-    """Boolean keep-matrix for ``S = V @ H.T`` vs ``threshold``, bitwise
-    identical to deciding with the IEEE left-fold dot of each (V_i, H_j):
-    BLAS decides everything outside the +/- _FOLD_EPS band; band pairs are
-    re-scored in exact fold order (ascending d, one add per dim).
-
-    Precondition: rows of V and H must be unit-normalized —
-    the _FOLD_EPS band's correctness bound is Cauchy-Schwarz on unit
-    vectors (sum|a_d*b_d| <= 1); unnormalized inputs would need a band
-    scaled by max||V_i||*max||H_j||. Every current caller normalizes."""
-    keep = S >= threshold + _FOLD_EPS
-    band = (S >= threshold - _FOLD_EPS) & ~keep
-    if band.any():
-        vi, hi = np.nonzero(band)
-        acc = np.zeros(len(vi), dtype=np.float64)
-        for d in range(V.shape[1]):
-            acc += V[vi, d] * H[hi, d]
-        ok = acc >= threshold
-        keep[vi[ok], hi[ok]] = True
-    return keep
 
 
 def srp_bucket(vec_col, planes: list[list[float]]) -> "F.Column":

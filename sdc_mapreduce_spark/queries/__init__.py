@@ -57,23 +57,33 @@ for _name in _MODULE_ORDER:
 # CERT_HEAD with the queries whose query functions reach it
 # (tests/test_registry.py computes that set from the call graph).
 CERT_HEAD: tuple[str, ...] = (
-    # embedding_near_pairs_blocked
-    "dedup_embedding_ann",
-    "dedup_embedding_clusters",
-    # minhash_lsh_pairs, directly or via near_dup_clusters / pipeline.curate
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_cluster_labels",
-    "dedup_cluster_sizes",
-    "dedup_cluster_safe_split",
-    "dedup_keep_best",
-    "dedup_source_leakage_matrix",
-    "pipeline_curation",
-    "pipeline_embedding_stats",
-    # jaccard_prefix_pairs
-    "dedup_jaccard_prefix",
-    # sorted_neighborhood_pairs
-    "dedup_sorted_neighborhood",
+    # queries/scratch.py (scratch directories, stream runs, local results)
+    "kvtext_scan_certified",
+    "kv_sink_certified",
+    "kvtext_streaming_restart_certified",
+    "csv_malformed_audit",
+    "orc_partitioned_certified",
+    "parquet_schema_evolution_certified",
+    "compact_parquet_certified",
+    "bucketed_join_certified",
+    "events_streaming_tumbling_certified",
+    "events_streaming_sliding_certified",
+    "events_streaming_watermark_certified",
+    "events_streaming_update_certified",
+    "events_streaming_restart_certified",
+    "events_streaming_dedup_certified",
+    "events_streaming_stateful_certified",
+    "events_streaming_join_certified",
+    "events_streaming_cdc_certified",
+    "events_streaming_session_certified",
+    "dedup_incremental_embedding_index",
+    "dedup_streaming_embedding_certified",
+    "simsearch_mmr_indexed",
+    "simsearch_ann_ivf_index_recall",
+    # incremental_minhash_dedup (broadcast gate is broadcast_if_small)
+    "dedup_incremental_minhash",
+    # exact_substring_dedup (broadcast gate is broadcast_if_small)
+    "dedup_exact_substring",
 )
 if not IMPORT_QUARANTINE:
     # Only enforce completeness on a healthy import — with a module

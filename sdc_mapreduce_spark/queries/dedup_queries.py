@@ -19,6 +19,7 @@ from sdc_mapreduce_spark.functions import dedup as D
 from sdc_mapreduce_spark.functions.simsearch import embedding_near_pairs
 from sdc_mapreduce_spark.operators.relational import broadcast_if_small
 from sdc_mapreduce_spark.queries.base import QuerySpec, pin
+from sdc_mapreduce_spark.queries.scratch import scratch
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -817,11 +818,6 @@ def dedup_incremental_embedding_index(spark: SparkSession, sf_dir: str) -> DataF
     contract and the same oracle as the in-memory path; at 100 TB this is
     the layout that turns every ingestion delivery into a partial corpus
     read instead of a full one."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from sdc_mapreduce_spark.functions.simsearch import (
         incremental_embedding_dedup_from_index,
         write_srp_index,
@@ -830,21 +826,15 @@ def dedup_incremental_embedding_index(spark: SparkSession, sf_dir: str) -> DataF
     emb = load_table(spark, sf_dir, "embeddings")
     batch = emb.filter(F.col("vec_id") % 5 == 0)
     existing = emb.filter(F.col("vec_id") % 5 != 0)
-    # per-run unique dir: a fixed shared path races concurrent runs at the
-    # same SF (one deletes bucket dirs while the other reads them); the
-    # result is materialized before the finally removes the index
-    path = os.path.join(
-        tempfile.gettempdir(), f"sdcms_srp_index_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    # a per-run index dir: a fixed shared path races concurrent runs at the
+    # same SF (one deletes bucket dirs while the other reads them)
+    with scratch(spark) as s:
+        path = s.dir()
         write_srp_index(existing, path)
         result = incremental_embedding_dedup_from_index(
             spark, path, batch, threshold=0.4
         ).orderBy("vec_id")
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+        return s.local(result)
 
 
 def dedup_streaming_embedding_certified(
@@ -869,11 +859,6 @@ def dedup_streaming_embedding_certified(
     §2.2) — its per-delivery loop is a fresh full job submission
     (reference clientsdk/submit_map_reduce.py:22-34) that re-reads the
     whole corpus; this is the indexed, incremental alternative."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from sdc_mapreduce_spark.functions.simsearch import (
         incremental_embedding_dedup_from_index,
         write_srp_index,
@@ -882,12 +867,8 @@ def dedup_streaming_embedding_certified(
     emb = load_table(spark, sf_dir, "embeddings")
     batch = emb.filter(F.col("vec_id") % 5 == 0)
     existing = emb.filter(F.col("vec_id") % 5 != 0)
-    run = uuid.uuid4().hex[:8]
-    idx = os.path.join(tempfile.gettempdir(), f"sdcms_srp_sidx_{run}")
-    src = tempfile.mkdtemp(prefix="sdcms_stream_emb_src_")
-    out = tempfile.mkdtemp(prefix="sdcms_stream_emb_out_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_stream_emb_ckpt_")
-    try:
+    with scratch(spark) as s:
+        idx, src, out, ckpt = s.dir(), s.dir(), s.dir(), s.dir()
         write_srp_index(existing, idx)
         # double-cast BEFORE the json hop: float->double is exact, and
         # Jackson round-trips doubles losslessly, so the streamed vectors
@@ -909,19 +890,13 @@ def dedup_streaming_embedding_certified(
                 mb.sparkSession, idx, mb, threshold=0.4
             ).write.mode("append").parquet(out)
 
-        q = (
+        s.run(
             stream.writeStream.foreachBatch(screen)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        result = spark.read.parquet(out).orderBy("vec_id")
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        for p in (idx, src, out, ckpt):
-            shutil.rmtree(p, ignore_errors=True)
+        return s.local(spark.read.parquet(out).orderBy("vec_id"))
 
 
 def _dedup_incremental_embedding_sql() -> str:

@@ -18,6 +18,7 @@ from sdc_mapreduce_spark.operators.relational import (
     scd2_history,
 )
 from sdc_mapreduce_spark.queries.base import QuerySpec, dsum, sql_dsum
+from sdc_mapreduce_spark.queries.scratch import scratch
 
 
 def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -780,17 +781,9 @@ def events_streaming_tumbling_certified(spark: SparkSession, sf_dir: str) -> Dat
     twin; a state-management bug that batch plans can't exhibit turns this
     row red. Counts only (exact integers): streaming's double sums
     accumulate in arrival order, so the deterministic value-sum surface
-    stays with the batch twins. Scratch stream/checkpoint dirs are removed
-    before returning; the tiny result is re-materialized as a local
-    DataFrame."""
-    import shutil
-    import tempfile
-    import uuid
-
-    src = tempfile.mkdtemp(prefix="sdcms_stream_cert_src_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_stream_cert_ckpt_")
-    name = f"stream_cert_{uuid.uuid4().hex[:8]}"
-    try:
+    stays with the batch twins."""
+    with scratch(spark) as s:
+        src, ckpt = s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
         ev.select(
             "event_id",
@@ -818,21 +811,12 @@ def events_streaming_tumbling_certified(spark: SparkSession, sf_dir: str) -> Dat
             .agg(F.count(F.lit(1)).alias("cnt"))
             .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
+        result = s.memory(
+            agg.writeStream.outputMode("complete")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
-        result = spark.table(name).orderBy("window_start", "event_type")
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return result.orderBy("window_start", "event_type")
 
 
 EVENTS_STREAMING_TUMBLING_SQL = """
@@ -858,14 +842,8 @@ def events_streaming_sliding_certified(
     it. The oracle replays the expansion: window starts for event t are
     bucket5(t) and bucket5(t) − 5 minutes. Counts only, as in the
     tumbling cert (arrival-order double sums stay with batch twins)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    src = tempfile.mkdtemp(prefix="sdcms_stream_cert_src_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_stream_cert_ckpt_")
-    name = f"stream_cert_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch(spark) as s:
+        src, ckpt = s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
         ev.select(
             "event_id",
@@ -885,23 +863,12 @@ def events_streaming_sliding_certified(
             .agg(F.count(F.lit(1)).alias("cnt"))
             .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
+        result = s.memory(
+            agg.writeStream.outputMode("complete")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("sliding-window streaming cert did not finish in 300s")
-        result = spark.table(name).orderBy("window_start", "event_type")
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return result.orderBy("window_start", "event_type")
 
 
 EVENTS_STREAMING_SLIDING_SQL = """
@@ -954,14 +921,8 @@ def events_streaming_watermark_certified(
     zone-independently because every real UTC offset is a multiple of
     5 minutes, so the collected naive datetimes match the naive oracle
     (the --tz Asia/Kolkata audit exercises exactly this)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    src = tempfile.mkdtemp(prefix="sdcms_stream_wm_src_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_stream_wm_ckpt_")
-    name = f"stream_wm_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch(spark) as s:
+        src, ckpt = s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
         ev.select(
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
@@ -988,21 +949,12 @@ def events_streaming_watermark_certified(
                 "cnt",
             )
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
+        result = s.memory(
+            agg.writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
-        result = spark.table(name).orderBy("window_start", "event_type")
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return result.orderBy("window_start", "event_type")
 
 
 def events_streaming_update_certified(
@@ -1024,14 +976,8 @@ def events_streaming_update_certified(
     mode needs no watermark, which keeps the replay zone-proof and the
     state finite only because the replay is (availableNow; an unbounded
     deployment would add withWatermark, as incremental_rollup does)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    src = tempfile.mkdtemp(prefix="sdcms_stream_upd_src_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_stream_upd_ckpt_")
-    sink = tempfile.mkdtemp(prefix="sdcms_stream_upd_sink_")
-    try:
+    with scratch(spark) as s:
+        src, ckpt, sink = s.dir(), s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
         ev.select(
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
@@ -1055,14 +1001,13 @@ def events_streaming_update_certified(
                 "append"
             ).parquet(sink)
 
-        q = (
+        s.run(
             agg.writeStream.foreachBatch(land)
             .outputMode("update")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
         emitted = spark.read.parquet(sink)
         w = Window.partitionBy("window_start", "event_type").orderBy(
             F.col("__b").desc()
@@ -1073,12 +1018,7 @@ def events_streaming_update_certified(
             .select("window_start", "event_type", "cnt")
             .orderBy("window_start", "event_type")
         )
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
+        return s.local(result)
 
 
 def events_streaming_restart_certified(
@@ -1102,16 +1042,10 @@ def events_streaming_restart_certified(
     (wm1, wm2] count everything; the final open tail is withheld.
     A broken state restore, a re-emitted finalized window, a lost or
     double-processed file — each turns this row red."""
-    import os
-    import shutil
-    import tempfile
-
-    src = tempfile.mkdtemp(prefix="sdcms_stream_rst_src_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_stream_rst_ckpt_")
-    sink = tempfile.mkdtemp(prefix="sdcms_stream_rst_sink_")
     cutoff = "2024-01-21 00:00:00"
     echo_end = "2024-01-02 00:00:00"
-    try:
+    with scratch(spark) as s:
+        src, ckpt, sink = s.dir(), s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
         cols = [
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
@@ -1135,7 +1069,7 @@ def events_streaming_restart_certified(
                     "cnt",
                 )
             )
-            q = (
+            s.run(
                 agg.writeStream.format("parquet")
                 .option("path", sink)
                 .option("checkpointLocation", ckpt)
@@ -1143,43 +1077,23 @@ def events_streaming_restart_certified(
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(300)
-
-        def land_phase(df_phase: DataFrame, name: str) -> None:
-            # the file stream source lists SRC itself, so phase files are
-            # written to a scratch dir and copied in flat with unique names
-            import glob as _glob
-
-            scratch = tempfile.mkdtemp(prefix="sdcms_stream_rst_tmp_")
-            try:
-                df_phase.coalesce(2).write.mode("overwrite").json(scratch)
-                for i, part in enumerate(
-                    sorted(_glob.glob(os.path.join(scratch, "part-*.json")))
-                ):
-                    shutil.copy(part, os.path.join(src, f"{name}_{i}.json"))
-            finally:
-                shutil.rmtree(scratch, ignore_errors=True)
 
         phase1 = ev.filter(F.col("ts") < F.expr(f"timestamp_ntz'{cutoff}'"))
-        land_phase(phase1.select(*cols), "p1")
+        s.land(phase1.select(*cols).coalesce(2), "json", src, "p1")
         run()
         # restart input: the fresh tail + a LATE ECHO of day-1 rows (all
         # of whose windows the phase-1 watermark already finalized)
         tail = ev.filter(F.col("ts") >= F.expr(f"timestamp_ntz'{cutoff}'"))
         echo = ev.filter(F.col("ts") < F.expr(f"timestamp_ntz'{echo_end}'"))
-        land_phase(tail.select(*cols).unionByName(echo.select(*cols)), "p2")
+        phase2 = tail.select(*cols).unionByName(echo.select(*cols))
+        s.land(phase2.coalesce(2), "json", src, "p2")
         run()
         result = (
             spark.read.parquet(sink)
             .select("window_start", "event_type", "cnt")
             .orderBy("window_start", "event_type")
         )
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
+        return s.local(result)
 
 
 # SPARK-VERSION-PINNED ORACLE (VERDICT r9 ask #7): the two-watermark
@@ -1373,14 +1287,8 @@ def events_streaming_dedup_certified(spark: SparkSession, sf_dir: str) -> DataFr
     TTL) keeps the finite certification run deterministic; the
     watermark-TTL form and its kill/resume exactly-once behavior are
     covered in tests/test_streaming.py."""
-    import shutil
-    import tempfile
-    import uuid
-
-    src = tempfile.mkdtemp(prefix="sdcms_stream_dedup_src_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_stream_dedup_ckpt_")
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch(spark) as s:
+        src, ckpt = s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
         ev.select(
             "event_id",
@@ -1401,21 +1309,12 @@ def events_streaming_dedup_certified(spark: SparkSession, sf_dir: str) -> DataFr
             "event_type",
             F.window("ts", "10 minutes")["start"].alias("bucket_start"),
         ).dropDuplicates(["user_id", "event_type", "bucket_start"])
-        q = (
-            keys.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
+        result = s.memory(
+            keys.writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
-        result = spark.table(name).orderBy("bucket_start", "user_id", "event_type")
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return result.orderBy("bucket_start", "user_id", "event_type")
 
 
 def events_streaming_stateful_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1429,17 +1328,11 @@ def events_streaming_stateful_certified(spark: SparkSession, sf_dir: str) -> Dat
     batching-invariant). The oracle is the plain per-user aggregate; a
     state-store round-trip bug (lost/duplicated state between batches)
     changes the totals and turns the row red."""
-    import shutil
-    import tempfile
-    import uuid
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    src = tempfile.mkdtemp(prefix="sdcms_stream_state_src_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_stream_state_ckpt_")
-    name = f"stream_state_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch(spark) as s:
+        src, ckpt = s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
         ev.select(
             "event_id",
@@ -1485,18 +1378,13 @@ def events_streaming_stateful_certified(spark: SparkSession, sf_dir: str) -> Dat
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )
         )
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
+        emitted = s.memory(
+            totals.writeStream.outputMode("update")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
-        final = (
-            spark.table(name)
-            .groupBy("user_id")
+        return (
+            emitted.groupBy("user_id")
             .agg(
                 F.max(
                     F.struct("n_events", "value_micro_sum")
@@ -1509,11 +1397,6 @@ def events_streaming_stateful_certified(spark: SparkSession, sf_dir: str) -> Dat
             )
             .orderBy("user_id")
         )
-        rows = final.collect()
-        return spark.createDataFrame(rows, schema=final.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 EVENTS_STREAMING_STATEFUL_SQL = """
@@ -1538,14 +1421,8 @@ def events_streaming_join_certified(spark: SparkSession, sf_dir: str) -> DataFra
     instants — and therefore the matched pair set — are identical in any
     session zone, and the output is ids only. Oracle = the batch interval
     predicate."""
-    import shutil
-    import tempfile
-    import uuid
-
-    src = tempfile.mkdtemp(prefix="sdcms_stream_join_src_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_stream_join_ckpt_")
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch(spark) as s:
+        src, ckpt = s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
         ev.select(
             "event_id",
@@ -1591,23 +1468,12 @@ def events_streaming_join_certified(spark: SparkSession, sf_dir: str) -> DataFra
                 <= F.col("error_ts") + F.expr("INTERVAL 1 HOUR")
             ),
         ).select("error_event_id", "purchase_event_id", "user_id")
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
+        result = s.memory(
+            joined.writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
-        result = spark.table(name).orderBy(
-            "error_event_id", "purchase_event_id"
-        )
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return result.orderBy("error_event_id", "purchase_event_id")
 
 
 EVENTS_STREAMING_JOIN_SQL = """
@@ -2400,18 +2266,13 @@ def events_streaming_cdc_certified(spark: SparkSession, sf_dir: str) -> DataFram
     in cross-batch upsert semantics (a later batch failing to supersede an
     earlier version, tombstone mishandling, double-counted replays) turns
     this row red in a way no batch plan can."""
-    import shutil
-    import tempfile
-
     from sdc_mapreduce_spark.streaming.events import (
         cdc_upsert_stream,
         read_cdc_snapshot,
     )
 
-    src_dir = tempfile.mkdtemp(prefix="sdcms_cdc_src_")
-    snap = tempfile.mkdtemp(prefix="sdcms_cdc_snap_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_cdc_ckpt_")
-    try:
+    with scratch(spark) as s:
+        src_dir, snap, ckpt = s.dir(), s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
         ev.select(
             "event_id",
@@ -2431,15 +2292,9 @@ def events_streaming_cdc_certified(spark: SparkSession, sf_dir: str) -> DataFram
             .option("maxFilesPerTrigger", 2)
             .load(src_dir)
         )
-        q = cdc_upsert_stream(stream, snap, ckpt)
-        q.awaitTermination(300)
-        result = read_cdc_snapshot(spark, snap).orderBy("user_id")
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(snap, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        s.run(cdc_upsert_stream(stream, snap, ckpt))
+        return s.local(read_cdc_snapshot(spark, snap).orderBy("user_id"))
+
 
 def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline CUSUM changepoint estimation per event_type — the
@@ -2545,14 +2400,8 @@ def events_streaming_session_certified(
     discipline); a production deployment bounds state with
     ``withWatermark`` + append mode instead — the trade is documented, not
     hidden."""
-    import shutil
-    import tempfile
-    import uuid
-
-    src = tempfile.mkdtemp(prefix="sdcms_stream_sess_src_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_stream_sess_ckpt_")
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch(spark) as s:
+        src, ckpt = s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
         ev.select(
             "event_id",
@@ -2573,23 +2422,14 @@ def events_streaming_session_certified(
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
+        result = s.memory(
+            agg.writeStream.outputMode("complete")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
-        result = spark.table(name).select(
+        return result.select(
             "user_id", "session_start", "session_end", "n_events"
         ).orderBy("user_id", "session_start")
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 EVENTS_STREAMING_SESSION_SQL = """

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from sdc_mapreduce_spark import mapreduce as mr
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.queries.base import QuerySpec
+from sdc_mapreduce_spark.queries.scratch import AWAIT_S, scratch
 
 _USERCODE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "usercode")
 
@@ -92,11 +93,7 @@ def kvtext_scan_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     many byte-range shards and cross-file packing, grouped-sum the parsed
     pairs, and hash against the oracle computed straight from the parquet
     table. A boundary-alignment or malformed-drop bug in the DataSource
-    turns this row red. The small result is materialized eagerly so the
-    scratch files can be removed before returning."""
-    import shutil
-    import tempfile
-
+    turns this row red."""
     from sdc_mapreduce_spark.datasource import register_kvtext
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -106,8 +103,8 @@ def kvtext_scan_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     malformed = spark.createDataFrame(
         [("toofew",), ("way too many tokens here",), ("badint xyz",)], ["value"]
     )
-    out = tempfile.mkdtemp(prefix="sdcms_kvtext_cert_")
-    try:
+    with scratch(spark) as s:
+        out = s.dir()
         lines.unionByName(malformed).repartition(4).write.mode("overwrite").text(out)
         register_kvtext(spark)
         parsed = (
@@ -121,10 +118,7 @@ def kvtext_scan_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("key"), F.col("value").alias("total"))
             .orderBy("key")
         )
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        return s.local(result)
 
 
 KVTEXT_SCAN_SQL = """
@@ -148,8 +142,6 @@ def kv_sink_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches. File inspection is driver-side over 3 small files
     (O(distinct keys) — the contract's own output size)."""
     import glob
-    import shutil
-    import tempfile
 
     li = load_table(spark, sf_dir, "lineitem")
     sums = mr.group_reduce_sum(
@@ -158,8 +150,8 @@ def kv_sink_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_linenumber").alias("value"),
         ),
     )
-    out = tempfile.mkdtemp(prefix="sdcms_kvsink_cert_")
-    try:
+    with scratch(spark) as s:
+        out = s.dir()
         mr.write_kv_text(sums, out, num_partitions=3)
         files = sorted(glob.glob(f"{out}/part-*"))
         parsed: list[tuple[str, int]] = []
@@ -187,8 +179,6 @@ def kv_sink_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             rows, "key string, total bigint, files_ok boolean, layout_ok boolean"
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 KV_SINK_CERT_SQL = """
@@ -221,20 +211,15 @@ def kvtext_streaming_restart_certified(spark: SparkSession, sf_dir: str) -> Data
     undershoots, and either hash-mismatches. ``multi_batch_ok`` certifies
     that BOTH runs drained >= 2 data-carrying micro-batches (the oracle
     pins it TRUE). Malformed lines interleave in BOTH phases and must be
-    dropped by the shard reader (O15 under streaming). Scratch dirs are
-    removed after the small result is materialized eagerly."""
+    dropped by the shard reader (O15 under streaming)."""
     import glob
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
     from sdc_mapreduce_spark.datasource import drain_available_now, register_kvtext
 
-    src = tempfile.mkdtemp(prefix="sdcms_kvstream_src_")
-    ckpt = tempfile.mkdtemp(prefix="sdcms_kvstream_ckpt_")
-    sink = tempfile.mkdtemp(prefix="sdcms_kvstream_sink_")
-    try:
+    with scratch(spark) as s:
+        src, ckpt, sink = s.dir(), s.dir(), s.dir()
         li = load_table(spark, sf_dir, "lineitem")
         lines = li.select(
             F.concat_ws(" ", F.col("l_returnflag"), F.col("l_linenumber")).alias(
@@ -248,24 +233,11 @@ def kvtext_streaming_restart_certified(spark: SparkSession, sf_dir: str) -> Data
         )
         lines = lines.unionByName(malformed)
 
-        def land_phase(phase_df: DataFrame, name: str) -> None:
-            # the streaming source lists SRC itself, so phase files are
-            # written to scratch and copied in flat with unique names.
-            # repartition (NOT coalesce: a 1-partition scan coalesces to 1
-            # file, and the leftover file would hold only malformed lines —
-            # 0 valid rows — defeating the multi-batch data certification)
-            scratch = tempfile.mkdtemp(prefix="sdcms_kvstream_tmp_")
-            try:
-                phase_df.select("value").repartition(2).write.mode(
-                    "overwrite"
-                ).text(scratch)
-                for i, part in enumerate(
-                    sorted(glob.glob(os.path.join(scratch, "part-*")))
-                ):
-                    shutil.copy(part, os.path.join(src, f"{name}_{i}.txt"))
-            finally:
-                shutil.rmtree(scratch, ignore_errors=True)
-
+        # repartition (NOT coalesce: a 1-partition scan coalesces to 1
+        # file, and the leftover file would hold only malformed lines — 0
+        # valid rows — defeating the multi-batch data certification)
+        phase1 = lines.filter(F.col("__p1")).select("value").repartition(2)
+        phase2 = lines.filter(~F.col("__p1")).select("value").repartition(2)
         register_kvtext(spark)
 
         def run() -> int:
@@ -305,11 +277,11 @@ def kvtext_streaming_restart_certified(spark: SparkSession, sf_dir: str) -> Data
             # batch's end offset covers the goal — a timeout here means the
             # drain never caught up; proceeding would read a partial sink
             # and start a second query against the still-active checkpoint.
-            return drain_available_now(q, goal, timeout=300)
+            return drain_available_now(s.track(q), goal, timeout=AWAIT_S)
 
-        land_phase(lines.filter(F.col("__p1")), "p1")
+        s.land(phase1, "text", src, "p1")
         batches_run1 = run()
-        land_phase(lines.filter(~F.col("__p1")), "p2")
+        s.land(phase2, "text", src, "p2")
         batches_run2 = run()
         # each phase lands 2 blobs and max_batch_files=1, so a bounded
         # multi-batch drain shows >= 2 data batches per run; the restart
@@ -327,12 +299,7 @@ def kvtext_streaming_restart_certified(spark: SparkSession, sf_dir: str) -> Data
             )
             .orderBy("key")
         )
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
+        return s.local(result)
 
 
 KVTEXT_STREAMING_RESTART_SQL = """
@@ -354,11 +321,8 @@ def csv_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean table, so a parser that silently drops or mis-attributes rows
     hash-mismatches. Per-row cost is the CSV parse itself; the audit is one
     partial-agg shuffle on event_type."""
-    import shutil
-    import tempfile
-
-    scratch = tempfile.mkdtemp(prefix="sdcms_csv_audit_")
-    try:
+    with scratch(spark) as s:
+        out = s.dir()
         ev = load_table(spark, sf_dir, "events")
         value_field = F.when(
             F.col("event_id") % 97 == 0, F.lit("xx")
@@ -382,7 +346,7 @@ def csv_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 value_field,
             ).alias("value")
         )
-        lines.repartition(4).write.mode("overwrite").text(scratch)
+        lines.repartition(4).write.mode("overwrite").text(out)
         parsed = (
             spark.read.schema(
                 "event_id long, ts timestamp_ntz, user_id long, "
@@ -391,7 +355,7 @@ def csv_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", "_bad")
             .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .csv(scratch)
+            .csv(out)
         )
         audit = (
             parsed.groupBy("event_type")
@@ -406,10 +370,7 @@ def csv_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("event_type")
         )
-        rows = audit.collect()
-        return spark.createDataFrame(rows, schema=audit.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return s.local(audit)
 
 
 CSV_MALFORMED_SQL = """
@@ -432,11 +393,8 @@ def orc_partitioned_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated. The oracle computes the same slice from parquet, so a
     round-trip fidelity bug in either the ORC writer, the partition
     discovery, or the pushdown turns this row red."""
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="sdcms_orc_cert_")
-    try:
+    with scratch(spark) as s:
+        out = s.dir()
         li = load_table(spark, sf_dir, "lineitem")
         li.write.mode("overwrite").partitionBy("l_returnflag").orc(out)
         back = (
@@ -451,10 +409,7 @@ def orc_partitioned_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("l_linestatus")
         )
-        rows = back.collect()
-        return spark.createDataFrame(rows, schema=back.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        return s.local(back)
 
 
 ORC_PARTITIONED_SQL = """
@@ -479,11 +434,8 @@ def parquet_schema_evolution_certified(spark: SparkSession, sf_dir: str) -> Data
     merge bug (lost rows, misaligned columns) hash-mismatches. This is the
     append-only schema-evolution path a long-lived 100 TB dataset takes on
     every producer upgrade."""
-    import shutil
-    import tempfile
-
-    scratch = tempfile.mkdtemp(prefix="sdcms_evo_cert_")
-    try:
+    with scratch(spark) as s:
+        out = s.dir()
         ev = load_table(spark, sf_dir, "events")
         old = ev.filter(F.col("event_id") % 2 == 0).select(
             "event_id", "event_type"
@@ -491,9 +443,9 @@ def parquet_schema_evolution_certified(spark: SparkSession, sf_dir: str) -> Data
         new = ev.filter(F.col("event_id") % 2 == 1).select(
             "event_id", "event_type", "value"
         )
-        old.write.mode("overwrite").parquet(f"{scratch}/delivery=old")
-        new.write.mode("overwrite").parquet(f"{scratch}/delivery=new")
-        merged = spark.read.option("mergeSchema", "true").parquet(scratch)
+        old.write.mode("overwrite").parquet(f"{out}/delivery=old")
+        new.write.mode("overwrite").parquet(f"{out}/delivery=new")
+        merged = spark.read.option("mergeSchema", "true").parquet(out)
         audit = (
             merged.groupBy("event_type")
             .agg(
@@ -504,10 +456,7 @@ def parquet_schema_evolution_certified(spark: SparkSession, sf_dir: str) -> Data
             )
             .orderBy("event_type")
         )
-        rows = audit.collect()
-        return spark.createDataFrame(rows, schema=audit.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return s.local(audit)
 
 
 PARQUET_EVOLUTION_SQL = """
@@ -532,15 +481,12 @@ def compact_parquet_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the OPTIMIZE pass that keeps scan task counts
     proportional to bytes, not to ingest batch history."""
     import glob as _glob
-    import shutil
-    import tempfile
 
     from sdc_mapreduce_spark.queries.base import dsum
     from sdc_mapreduce_spark.sources import compact_parquet
 
-    root = tempfile.mkdtemp(prefix="sdcms_compact_cert_")
-    src, dst = root + "/debris", root + "/compacted"
-    try:
+    with scratch(spark) as s:
+        src, dst = s.dir(), s.dir()
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_shipdate"
         )
@@ -565,10 +511,7 @@ def compact_parquet_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("l_returnflag")
         )
-        rows = back.collect()
-        return spark.createDataFrame(rows, schema=back.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return s.local(back)
 
 
 COMPACT_PARQUET_SQL = """
@@ -594,7 +537,6 @@ def bucketed_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the same join + aggregate from the raw parquet, so
     bucketing must also preserve the DATA exactly, not just the plan
     shape."""
-    import shutil
     import uuid
 
     from sdc_mapreduce_spark.plans import executed_plan
@@ -604,10 +546,16 @@ def bucketed_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = uuid.uuid4().hex[:8]
     t_orders = f"sdcms_bkt_orders_{tag}"
     t_cust = f"sdcms_bkt_cust_{tag}"
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    # disable auto-broadcast so the co-located sort-merge join is what gets
+    # planned (a broadcast would ALSO avoid the shuffle, but it is not the
+    # property being certified, and at real fact-fact scale it is not
+    # available). SQL confs are per session, so this runs on a child
+    # session: the session other jobs share keeps its threshold.
+    iso = spark.newSession()
+    iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         write_bucketed_table(
-            load_table(spark, sf_dir, "orders").select(
+            load_table(iso, sf_dir, "orders").select(
                 "o_orderkey", "o_custkey", "o_totalprice"
             ),
             t_orders,
@@ -616,7 +564,7 @@ def bucketed_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
             sort_cols=["o_custkey"],
         )
         write_bucketed_table(
-            load_table(spark, sf_dir, "customer").select(
+            load_table(iso, sf_dir, "customer").select(
                 "c_custkey", "c_mktsegment"
             ),
             t_cust,
@@ -624,13 +572,8 @@ def bucketed_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_buckets=8,
             sort_cols=["c_custkey"],
         )
-        # disable auto-broadcast so the co-located sort-merge join is what
-        # gets planned (a broadcast would ALSO avoid the shuffle, but it is
-        # not the property being certified, and at real fact-fact scale it
-        # is not available)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        o = spark.table(t_orders)
-        c = spark.table(t_cust)
+        o = iso.table(t_orders)
+        c = iso.table(t_cust)
         joined = o.join(c, o["o_custkey"] == c["c_custkey"])
         plan = executed_plan(joined)
         if "Exchange" in plan:
@@ -645,14 +588,11 @@ def bucketed_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("c_mktsegment")
         )
-        rows = agg.collect()
-        return spark.createDataFrame(rows, schema=agg.schema)
+        with scratch(spark) as s:
+            return s.local(agg)
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         for t in (t_orders, t_cust):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree("spark-warehouse/" + t_orders, ignore_errors=True)
-        shutil.rmtree("spark-warehouse/" + t_cust, ignore_errors=True)
+            iso.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 BUCKETED_JOIN_SQL = """

@@ -10,6 +10,7 @@ from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.functions import simsearch as S
 from sdc_mapreduce_spark.functions.simsearch import quantization_audit
 from sdc_mapreduce_spark.queries.base import QuerySpec
+from sdc_mapreduce_spark.queries.scratch import scratch
 
 QUERY_IDS = list(range(10))
 TOP_K = 5
@@ -185,18 +186,14 @@ def simsearch_mmr_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline from the corpus (seeded centroids → cell assignment → probe
     selection → in-cell pool → pairwise sims → unrolled greedy → brute
     pool overlap) on identical fold-dot doubles, so the approximate
-    RESULT hash-matches, not just a recall floor. Index dir is fresh per
-    invocation and removed after the small result materializes."""
-    import shutil
-    import tempfile
-
+    RESULT hash-matches, not just a recall floor."""
     from sdc_mapreduce_spark.operators.relational import top_k_per_group
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = S.seeded_centroids(emb, n_cells=IVF_CELLS)
     assigned = S.assign_cells(emb, cents)
-    path = tempfile.mkdtemp(prefix="sdcms_mmr_ivf_")
-    try:
+    with scratch(spark) as s:
+        path = s.dir()
         S.write_ivf_index(assigned, cents, path)
         mmr = S.mmr_topk(
             emb,
@@ -235,10 +232,7 @@ def simsearch_mmr_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("query_id", "mmr_rank")
         )
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+        return s.local(result)
 
 
 def _mmr_indexed_sql(k: int = TOP_K, pool: int = 20, lam: int = 7) -> str:
@@ -774,29 +768,20 @@ def simsearch_ann_ivf_index_recall(spark: SparkSession, sf_dir: str) -> DataFram
     brute force. Same centroids ⇒ same answer as the in-memory IVF path, so
     it shares SIMSEARCH_ANN_IVF_RECALL_SQL — the driver hash certifies that
     the round-trip through the pruned on-disk layout loses nothing."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = S.seeded_centroids(emb, n_cells=IVF_CELLS)
     assigned = S.assign_cells(emb, cents)
-    # a FRESH directory per invocation: concurrent runs of this query (the
+    # a fresh index dir per invocation: concurrent runs of this query (the
     # job server executes registered queries on worker threads) must never
-    # overwrite each other's index mid-read; the recall result (10 rows) is
-    # then materialized EAGERLY so the index dir — a full corpus copy — can
-    # be deleted before returning instead of leaking per run
-    path = tempfile.mkdtemp(prefix="sdcms_ivf_index_")
-    try:
+    # overwrite each other's index mid-read
+    with scratch(spark) as s:
+        path = s.dir()
         S.write_ivf_index(assigned, cents, path)
         ann = S.cosine_topk_ivf_from_index(
             spark, path, QUERY_IDS, k=TOP_K, n_probe=IVF_PROBE
         )
         exact = S.cosine_topk_bruteforce(emb, QUERY_IDS, k=TOP_K)
-        result = _recall_vs_exact(ann, exact)
-        rows = result.collect()
-        return spark.createDataFrame(rows, schema=result.schema)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+        return s.local(_recall_vs_exact(ann, exact))
 
 
 ANN_PLANES = 6

@@ -43,10 +43,9 @@ def test_import_quarantine_is_empty():
 # every query whose query function reaches one of them must sit in CERT_HEAD.
 _CHANGED_OPERATORS = frozenset(
     {
-        "minhash_lsh_pairs",
-        "embedding_near_pairs_blocked",
-        "jaccard_prefix_pairs",
-        "sorted_neighborhood_pairs",
+        "scratch",
+        "incremental_minhash_dedup",
+        "exact_substring_dedup",
     }
 )
 

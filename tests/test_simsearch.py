@@ -631,44 +631,3 @@ def test_mmr_indexed_pool_recall_floor(spark, sf_dir, tmp_path):
     assert len(hits) == len(QUERY_IDS)
     avg = sum(r["count"] for r in hits) / (20 * len(QUERY_IDS))
     assert avg >= 0.5, f"indexed pool recall collapsed: {avg:.2f}"
-
-
-def test_fold_refine_band_matches_exact_fold_order():
-    """BLAS+refine threshold decision: pairs INSIDE the _FOLD_EPS threshold band
-    must be decided by the exact left-fold recompute, not the BLAS score —
-    engineered boundary pairs (fold-order dot exactly ==, 1-ulp-below, and
-    1-ulp-above the threshold) plus a random sweep asserting the refine
-    keep-mask equals a brute-force left-fold decision elementwise."""
-    import numpy as np
-
-    from sdc_mapreduce_spark.functions.simsearch import _fold_refine_matrix
-
-    thr = 0.5
-    # dot([1,0,0,0], [x,y,0,0]) left-fold = ((((0 + x) + 0) + 0) + 0) = x,
-    # so x IS the fold value exactly: at/below/above threshold by 1 ulp.
-    below = np.nextafter(thr, 0.0)
-    above = np.nextafter(thr, 1.0)
-    V = np.array([[1.0, 0.0, 0.0, 0.0]])
-    H = np.array(
-        [
-            [thr, np.sqrt(1 - thr * thr), 0.0, 0.0],
-            [below, np.sqrt(1 - below * below), 0.0, 0.0],
-            [above, np.sqrt(1 - above * above), 0.0, 0.0],
-        ]
-    )
-    keep = _fold_refine_matrix(V @ H.T, V, H, thr)
-    assert keep.tolist() == [[True, False, True]]
-
-    # random sweep: refine decisions == brute left-fold decisions
-    rng = np.random.RandomState(7)
-    A = rng.standard_normal((64, 16))
-    A /= np.linalg.norm(A, axis=1, keepdims=True)
-    B = rng.standard_normal((48, 16))
-    B /= np.linalg.norm(B, axis=1, keepdims=True)
-    fold = np.zeros((64, 48))
-    for d in range(16):
-        fold += A[:, d][:, None] * B[:, d][None, :]
-    for t in (-0.2, 0.0, 0.3):
-        np.testing.assert_array_equal(
-            _fold_refine_matrix(A @ B.T, A, B, t), fold >= t
-        )

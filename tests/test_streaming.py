@@ -671,6 +671,62 @@ def test_streaming_embedding_screen_matches_batch_index(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
+def _sdcms_temp_entries() -> set[str]:
+    import glob
+    import tempfile
+
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "sdcms_*")))
+
+
+def test_stalled_stream_times_out_and_leaves_nothing(spark, monkeypatch):
+    """A stream that never terminates (rate source, no availableNow) must
+    fail loudly, not hand back a partial sink: past the scratch deadline
+    the query is stopped and TimeoutError raised, and the scope's exit
+    leaves no active query, sink view or scratch directory behind."""
+    import sdc_mapreduce_spark.queries.scratch as scratch_mod
+
+    monkeypatch.setattr(scratch_mod, "AWAIT_S", 1)
+    views = {t.name for t in spark.catalog.listTables()}
+    dirs = []
+    with pytest.raises(TimeoutError):
+        with scratch_mod.scratch(spark) as s:
+            dirs += [s.dir(), s.dir()]
+            s.memory(
+                spark.readStream.format("rate")
+                .load()
+                .writeStream.option("checkpointLocation", dirs[0])
+            )
+    assert spark.streams.active == []
+    assert dirs and not any(os.path.exists(d) for d in dirs)
+    assert {t.name for t in spark.catalog.listTables()} == views
+
+
+def test_driver_certs_leave_no_views_queries_or_dirs(spark, sf_dir):
+    """Memory-sink, foreachBatch and batch scratch builders run on one
+    session must leave the session as they found it: no temp view holding
+    sink rows, no active stream, no sdcms_* scratch entry in the temp
+    dir."""
+    from sdc_mapreduce_spark.queries.events_queries import (
+        events_streaming_tumbling_certified,
+        events_streaming_update_certified,
+    )
+    from sdc_mapreduce_spark.queries.mapreduce_queries import (
+        kvtext_scan_certified,
+    )
+
+    views = {t.name for t in spark.catalog.listTables()}
+    entries = _sdcms_temp_entries()
+    for build in (
+        events_streaming_tumbling_certified,
+        events_streaming_update_certified,
+        kvtext_scan_certified,
+    ):
+        assert build(spark, sf_dir).count() > 0
+    assert {t.name for t in spark.catalog.listTables()} == views
+    assert spark.streams.active == []
+    assert _sdcms_temp_entries() <= entries
+
+
 def test_streaming_cert_spark_version_pin():
     """Version tripwire (VERDICT r9 ask #7): the watermark-cert oracles
     (EVENTS_STREAMING_WATERMARK_SQL / EVENTS_STREAMING_RESTART_SQL) encode
