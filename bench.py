@@ -27,7 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sdc_mapreduce_spark import queries as qreg
-from sdc_mapreduce_spark.queries.base import drain_pins
+from sdc_mapreduce_spark.cache import drain_pins
 from sdc_mapreduce_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -201,6 +201,9 @@ def shingle_sets(
     """Distinct token n-gram shingles per document, each represented by
     its 64-bit hash: (id, shingles array<long>). Documents shorter than n
     tokens get a single whole-text shingle so they still participate.
+    Null-text documents have no shingles (no row), as in the DuckDB
+    twins: hashing them would give every null document one shared
+    shingle and pair all of them at Jaccard 1.0.
 
     Why hashes, not strings: building every shingle as a string (an
     interpreted array_join over a slice per position, then array_distinct
@@ -231,7 +234,9 @@ def shingle_sets(
     # lambdas are interpreted (not codegen'd), so referencing the split()
     # expression inside the gram lambda would re-tokenize the document for
     # every gram element. With a column reference the array is built once.
-    toked = df.select(F.col(id_col), tokens(text_col).alias("__t"))
+    toked = df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col), tokens(text_col).alias("__t")
+    )
     t = F.col("__t")
     grams = F.when(
         F.size(t) >= n,

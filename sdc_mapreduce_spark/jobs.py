@@ -71,12 +71,26 @@ class Job:
         (every action the runner fires for this job is tagged with it)."""
         return f"sdc-job-{self.job_id}"
 
+    def record(self) -> dict:
+        """The job's durable fields: its state file and its HTTP status
+        body both serialize exactly this."""
+        return {
+            "job_id": self.job_id,
+            "name": self.name,
+            "status": self.status,
+            "submitted_at": self.submitted_at,
+            "started_at": self.started_at,
+            "finished_at": self.finished_at,
+            "error": self.error,
+            "result_rows": self.result_rows,
+        }
+
 
 class JobQueue:
     """Sequence-numbered FIFO with the reference's poll semantics.
 
     ``submit`` is the webclient's znode-create (reference
-    src/webclient/webclient.cpp:42-51); ``next_created`` is the master's
+    src/webclient/webclient.cpp:42-51); ``claim_next`` is the master's
     get_next_job scan — lowest sequence number with status CREATED
     (reference src/master/master.cpp:300-336, ordering
     src/util/zook.h:161-181).
@@ -159,13 +173,6 @@ class JobQueue:
             self._persist(job)
             return job.job_id
 
-    def next_created(self) -> Job | None:
-        with self._lock:
-            for jid in sorted(self._jobs):
-                if self._jobs[jid].status == CREATED:
-                    return self._jobs[jid]
-        return None
-
     def claim_next(self) -> Job | None:
         """Atomically claim the lowest-sequence CREATED job: flips it to
         RUNNING under the lock so concurrent runner workers never execute
@@ -220,18 +227,7 @@ class JobQueue:
         # record that poisons the next _recover.
         if not self._state_dir:
             return
-        payload = json.dumps(
-            {
-                "job_id": job.job_id,
-                "name": job.name,
-                "status": job.status,
-                "submitted_at": job.submitted_at,
-                "started_at": job.started_at,
-                "finished_at": job.finished_at,
-                "error": job.error,
-                "result_rows": job.result_rows,
-            }
-        )
+        payload = json.dumps(job.record())
         final = self._state_dir / f"job_{job.job_id}.json"
         tmp = final.with_suffix(".json.tmp")
         tmp.write_text(payload)

@@ -24,8 +24,8 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import Window
 
+from sdc_mapreduce_spark.cache import pin
 from sdc_mapreduce_spark.functions.dedup import near_dup_clusters
-from sdc_mapreduce_spark.queries.base import pin
 from sdc_mapreduce_spark.functions.text import (
     contamination_check,
     language_id,

@@ -57,33 +57,25 @@ for _name in _MODULE_ORDER:
 # CERT_HEAD with the queries whose query functions reach it
 # (tests/test_registry.py computes that set from the call graph).
 CERT_HEAD: tuple[str, ...] = (
-    # queries/scratch.py (scratch directories, stream runs, local results)
-    "kvtext_scan_certified",
-    "kv_sink_certified",
-    "kvtext_streaming_restart_certified",
-    "csv_malformed_audit",
-    "orc_partitioned_certified",
-    "parquet_schema_evolution_certified",
-    "compact_parquet_certified",
-    "bucketed_join_certified",
-    "events_streaming_tumbling_certified",
-    "events_streaming_sliding_certified",
-    "events_streaming_watermark_certified",
-    "events_streaming_update_certified",
-    "events_streaming_restart_certified",
-    "events_streaming_dedup_certified",
-    "events_streaming_stateful_certified",
-    "events_streaming_join_certified",
-    "events_streaming_cdc_certified",
-    "events_streaming_session_certified",
-    "dedup_incremental_embedding_index",
-    "dedup_streaming_embedding_certified",
-    "simsearch_mmr_indexed",
-    "simsearch_ann_ivf_index_recall",
-    # incremental_minhash_dedup (broadcast gate is broadcast_if_small)
+    # shingle_sets (null-text documents have no shingles), directly or via
+    # jaccard_pairs, minhash_lsh_pairs, jaccard_prefix_pairs,
+    # containment_pairs, incremental_minhash_dedup, near_dup_clusters and
+    # pipeline.curate
+    "pipeline_curation",
+    "pipeline_embedding_stats",
+    "dedup_cluster_safe_split",
+    "dedup_cluster_labels",
     "dedup_incremental_minhash",
-    # exact_substring_dedup (broadcast gate is broadcast_if_small)
-    "dedup_exact_substring",
+    "dedup_jaccard_pairs",
+    "dedup_jaccard_prefix",
+    "graph_pagerank_neardup",
+    "graph_triangle_stats",
+    "dedup_containment_pairs",
+    "dedup_minhash_lsh",
+    "dedup_clusters",
+    "dedup_keep_best",
+    "dedup_cluster_sizes",
+    "dedup_source_leakage_matrix",
 )
 if not IMPORT_QUARANTINE:
     # Only enforce completeness on a healthy import — with a module
@@ -106,7 +98,7 @@ def queries():
     # asked for the next one, and an early drain only costs recompute.
     import functools
 
-    from sdc_mapreduce_spark.queries.base import drain_pins
+    from sdc_mapreduce_spark.cache import drain_pins
 
     def _with_drain(fn):
         @functools.wraps(fn)

@@ -42,15 +42,6 @@ class QuerySpec:
     description: str = ""
 
 
-# --- per-query cache hygiene (VERDICT r9 ask #5) -------------------------
-# The pin()/drain_pins() ledger lives in sdc_mapreduce_spark.cache (so
-# library modules under functions/ can use it without importing the query
-# layer — VERDICT r10 ask #5); re-exported here for the harnesses and
-# tests that historically import it from queries.base.
-
-from sdc_mapreduce_spark.cache import drain_pins, pin, pinned_frames  # noqa: F401
-
-
 def dsum(expr: str, alias: str, scale: int = 2) -> Column:
     """Order-independent double sum via exact decimal accumulation."""
     return F.expr(
@@ -85,3 +76,72 @@ def sql_davg(expr: str, alias: str, scale: int = 2) -> str:
         f"CAST(CAST(SUM(CAST(({expr}) AS DECIMAL(28,{scale}))) AS VARCHAR)"
         f" AS DOUBLE) / COUNT(*) AS {alias}"
     )
+
+
+# --- DuckDB oracle fragments shared by more than one query module --------
+
+
+def unit_vectors_sql(materialized: bool = False) -> str:
+    """CTE ``u(vec_id, unit)``: every embedding scaled to unit L2 norm.
+    MATERIALIZED where later CTEs read ``u`` many times: DuckDB otherwise
+    re-evaluates the normalization lambda per reference."""
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""u AS{mat} (
+  SELECT vec_id,
+         list_transform(
+           embedding::DOUBLE[],
+           x -> x / sqrt(list_aggregate(
+                  list_transform(embedding::DOUBLE[], y -> y * y), 'sum'))
+         ) AS unit
+  FROM embeddings
+)"""
+
+
+def srp_buckets_sql(n_planes: int, materialized: bool = False) -> str:
+    """CTEs ``planes(pid, h)``, ``u(vec_id, unit)`` and ``b(vec_id,
+    bucket)``: the seeded SRP hyperplanes as the exact doubles Spark bakes
+    into its plan (repr round-trips float64), and each unit vector's
+    sign-bit bucket id."""
+    from sdc_mapreduce_spark.functions.simsearch import _hyperplanes
+
+    values = ",\n       ".join(
+        f"({pid}, [{', '.join(repr(float(x)) for x in h)}]::DOUBLE[])"
+        for pid, h in enumerate(_hyperplanes(64, n_planes))
+    )
+    return f"""planes(pid, h) AS (
+  VALUES {values}
+), {unit_vectors_sql(materialized)}, b AS (
+  SELECT vec_id,
+         CAST(SUM(CASE WHEN list_inner_product(u.unit, planes.h) >= 0
+                       THEN 1 << pid ELSE 0 END) AS BIGINT) AS bucket
+  FROM u CROSS JOIN planes
+  GROUP BY vec_id
+)"""
+
+
+def stop_list_sql() -> str:
+    """functions.text.STOPWORDS as a DuckDB IN-list."""
+    from sdc_mapreduce_spark.functions.text import STOPWORDS
+
+    return ", ".join(f"'{w}'" for w in STOPWORDS)
+
+
+# Columns added to t(doc_id, toks) for the quality features.
+QUALITY_CHARS_SQL = """,
+         length(text) AS n_chars,
+         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha_chars"""
+
+
+def quality_features_sql() -> str:
+    """The stopword_ratio, alpha_ratio and mean_token_len columns of
+    functions.text.quality_features, over t(toks, n_chars, alpha_chars)."""
+    return f"""len(list_filter(toks, x -> x IN ({stop_list_sql()}))) / len(toks)
+           AS stopword_ratio,
+         alpha_chars / n_chars AS alpha_ratio,
+         (n_chars - (len(toks) - 1)) / len(toks) AS mean_token_len"""
+
+
+# The quality composite over the quality_features_sql columns.
+QUALITY_SCORE_SQL = """alpha_ratio * 0.5
+         + LEAST(stopword_ratio * 4.0, 1.0) * 0.3
+         + LEAST(mean_token_len / 8.0, 1.0) * 0.2 AS quality_score"""

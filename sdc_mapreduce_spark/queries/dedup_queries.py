@@ -14,12 +14,127 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sdc_mapreduce_spark.cache import pin
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.functions import dedup as D
 from sdc_mapreduce_spark.functions.simsearch import embedding_near_pairs
 from sdc_mapreduce_spark.operators.relational import broadcast_if_small
-from sdc_mapreduce_spark.queries.base import QuerySpec, pin
+from sdc_mapreduce_spark.queries.base import (
+    QUALITY_CHARS_SQL,
+    QUALITY_SCORE_SQL,
+    QuerySpec,
+    quality_features_sql,
+    srp_buckets_sql,
+)
 from sdc_mapreduce_spark.queries.scratch import scratch
+
+
+# --- DuckDB oracle fragments ---------------------------------------------
+# The token-dedup twins replay functions.dedup.shingle_sets as STRING word
+# 3-shingles and the exact Jaccard over an inverted index, so the oracle
+# itself is O(co-occurring pairs), not O(n^2).
+
+
+def _shingles_sql(cols: str = "", t_extra: str = "") -> str:
+    """CTEs ``t(doc_id, toks)`` and ``sh(doc_id, shingles)``: each
+    document's distinct word 3-shingles (one whole-text shingle below 3
+    tokens; none for null text). ``cols`` ("source, ") carries document
+    columns through both CTEs, ``t_extra`` (", expr AS name") adds
+    columns to ``t`` only."""
+    return f"""t AS (
+  SELECT doc_id, {cols}string_split_regex(trim(text), '\\s+') AS toks{t_extra}
+  FROM documents
+), sh AS (
+  SELECT doc_id, {cols}
+         list_distinct(CASE WHEN len(toks) >= 3
+           THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                 FOR i IN range(1, len(toks) - 1)]
+           ELSE [array_to_string(toks, ' ')] END) AS shingles
+  FROM t
+)"""
+
+
+# sz(doc_id, sz): shingle-set sizes; inv(doc_id, s): the inverted index.
+_SHINGLE_INDEX = """, sz AS (
+  SELECT doc_id, len(shingles) AS sz FROM sh
+), inv AS (
+  SELECT doc_id, UNNEST(shingles) AS s FROM sh
+)"""
+
+# common(id_a, id_b, c): shared-shingle count of every co-occurring pair.
+_COMMON = """, common AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)"""
+
+# The pairs of common at exact Jaccard >= 0.8.
+_JACCARD_08 = """FROM common
+JOIN sz za ON za.doc_id = id_a
+JOIN sz zb ON zb.doc_id = id_b
+WHERE c / (za.sz + zb.sz - c) >= 0.8"""
+
+
+def _near_dup_pairs_sql(
+    name: str = "pairs", cols: str = "", t_extra: str = ""
+) -> str:
+    """The shingle CTEs through ``common``, then ``{name}(id_a, id_b)``:
+    every pair at exact Jaccard >= 0.8."""
+    return f"""{_shingles_sql(cols, t_extra)}{_SHINGLE_INDEX}{_COMMON}, {name} AS (
+  SELECT id_a, id_b {_JACCARD_08}
+)"""
+
+
+def _reach_sql(pairs: str) -> str:
+    """CTEs ``edges(s, t)``, both directions of ``{pairs}``, and
+    ``reach(s, t)``, every document's recursive closure (the query must
+    open WITH RECURSIVE); ``_REP`` reduces it to (doc_id, rep_id)."""
+    return f""", edges AS (
+  SELECT id_a AS s, id_b AS t FROM {pairs}
+  UNION ALL
+  SELECT id_b, id_a FROM {pairs}
+), reach AS (
+  SELECT doc_id AS s, doc_id AS t FROM documents
+  UNION
+  SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s
+)"""
+
+
+# Each document's component representative: the least id it reaches.
+_REP = "SELECT s AS doc_id, MIN(t) AS rep_id FROM reach GROUP BY s"
+
+# Near-dup components: reach over the Jaccard >= 0.8 pairs, and
+# comp(doc_id, rep_id) on top of it.
+_NEAR_DUP_REACH = f"WITH RECURSIVE {_near_dup_pairs_sql()}{_reach_sql('pairs')}"
+_NEAR_DUP_COMP = f"""{_NEAR_DUP_REACH}, comp AS (
+  {_REP}
+)"""
+
+
+def _srp_probes_sql(where: str = "") -> str:
+    """CTE ``probes(vec_id, probe)``: each vector's home bucket and its
+    1-bit-adjacent buckets (needs srp_buckets_sql in scope)."""
+    return f""", probes AS (
+  SELECT vec_id, bucket AS probe FROM b{where}
+  UNION ALL
+  SELECT vec_id, xor(bucket, CAST(1 << pid AS BIGINT)) AS probe
+  FROM b CROSS JOIN planes{where}
+)"""
+
+
+# cands(id_a, id_b): distinct id_a < id_b pairs sharing a probed bucket.
+_SRP_PAIR_CANDS = f"""{_srp_probes_sql()}, cands AS (
+  SELECT DISTINCT p.vec_id AS id_a, b2.vec_id AS id_b
+  FROM probes p JOIN b b2 ON b2.bucket = p.probe
+  WHERE p.vec_id < b2.vec_id
+)"""
+
+# The candidates at cosine >= 0.4 (unit vectors: the inner product).
+_SRP_VERIFY = """SELECT c.id_a, c.id_b
+FROM cands c
+JOIN u ua ON ua.vec_id = c.id_a
+JOIN u ub ON ub.vec_id = c.id_b
+WHERE list_inner_product(ua.unit, ub.unit) >= 0.4"""
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,21 +253,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_INCR_MINHASH_SQL = """
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) >= 3
-           THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                 FOR i IN range(1, len(toks) - 1)]
-           ELSE [array_to_string(toks, ' ')] END) AS shingles
-  FROM t
-), sz AS (
-  SELECT doc_id, len(shingles) AS sz FROM sh
-), inv AS (
-  SELECT doc_id, UNNEST(shingles) AS s FROM sh
-), common AS (
+DEDUP_INCR_MINHASH_SQL = f"""
+WITH {_shingles_sql()}{_SHINGLE_INDEX}, common AS (
   SELECT a.doc_id AS new_id, b.doc_id AS ex_id, COUNT(*) AS c
   FROM inv a JOIN inv b ON a.s = b.s
   WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
@@ -175,32 +277,11 @@ ORDER BY doc_id
 """
 
 
-# Shared exact-Jaccard oracle (inverted-index formulation, so the oracle
-# itself is O(co-occurring pairs), not O(n^2)).
-_JACCARD_SQL = """
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) >= 3
-           THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                 FOR i IN range(1, len(toks) - 1)]
-           ELSE [array_to_string(toks, ' ')] END) AS shingles
-  FROM t
-), sz AS (
-  SELECT doc_id, len(shingles) AS sz FROM sh
-), inv AS (
-  SELECT doc_id, UNNEST(shingles) AS s FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
+# Shared exact-Jaccard oracle.
+_JACCARD_SQL = f"""
+WITH {_shingles_sql()}{_SHINGLE_INDEX}{_COMMON}
 SELECT id_a, id_b, c / (za.sz + zb.sz - c) AS jaccard
-FROM common
-JOIN sz za ON za.doc_id = id_a
-JOIN sz zb ON zb.doc_id = id_b
-WHERE c / (za.sz + zb.sz - c) >= 0.8
+{_JACCARD_08}
 """
 
 
@@ -282,39 +363,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-DEDUP_CLUSTERS_SQL = """
-WITH RECURSIVE t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) >= 3
-           THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                 FOR i IN range(1, len(toks) - 1)]
-           ELSE [array_to_string(toks, ' ')] END) AS shingles
-  FROM t
-), sz AS (
-  SELECT doc_id, len(shingles) AS sz FROM sh
-), inv AS (
-  SELECT doc_id, UNNEST(shingles) AS s FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT id_a, id_b FROM common
-  JOIN sz za ON za.doc_id = id_a
-  JOIN sz zb ON zb.doc_id = id_b
-  WHERE c / (za.sz + zb.sz - c) >= 0.8
-), edges AS (
-  SELECT id_a AS s, id_b AS t FROM pairs
-  UNION ALL
-  SELECT id_b, id_a FROM pairs
-), reach AS (
-  SELECT doc_id AS s, doc_id AS t FROM documents
-  UNION
-  SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s
-)
-SELECT s AS doc_id, MIN(t) AS rep_id FROM reach GROUP BY s ORDER BY doc_id
+DEDUP_CLUSTERS_SQL = f"""
+{_NEAR_DUP_REACH}
+{_REP} ORDER BY doc_id
 """
 
 
@@ -348,20 +399,18 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_CLUSTER_SIZES_SQL = (
-    DEDUP_CLUSTERS_SQL.replace(
-        "SELECT s AS doc_id, MIN(t) AS rep_id FROM reach GROUP BY s ORDER BY doc_id",
-        """SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
+DEDUP_CLUSTER_SIZES_SQL = f"""
+{_NEAR_DUP_REACH}
+SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
        CAST(cluster_size * COUNT(*) AS BIGINT) AS n_docs
 FROM (
   SELECT rep_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-  FROM (SELECT s AS doc_id, MIN(t) AS rep_id FROM reach GROUP BY s)
+  FROM ({_REP})
   GROUP BY rep_id
 )
 GROUP BY cluster_size
-ORDER BY cluster_size""",
-    )
-)
+ORDER BY cluster_size
+"""
 
 
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -412,56 +461,17 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_keep_best_sql() -> str:
-    from sdc_mapreduce_spark.queries.text_queries import _stop_list_sql
-
+    pairs = _near_dup_pairs_sql("prs", t_extra=QUALITY_CHARS_SQL)
     return f"""
-WITH RECURSIVE t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks,
-         length(text) AS n_chars,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha_chars
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) >= 3
-           THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                 FOR i IN range(1, len(toks) - 1)]
-           ELSE [array_to_string(toks, ' ')] END) AS shingles
-  FROM t
-), sz AS (
-  SELECT doc_id, len(shingles) AS sz FROM sh
-), inv AS (
-  SELECT doc_id, UNNEST(shingles) AS s FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), prs AS (
-  SELECT id_a, id_b FROM common
-  JOIN sz za ON za.doc_id = id_a
-  JOIN sz zb ON zb.doc_id = id_b
-  WHERE c / (za.sz + zb.sz - c) >= 0.8
-), edges AS (
-  SELECT id_a AS s, id_b AS t FROM prs
-  UNION ALL
-  SELECT id_b, id_a FROM prs
-), reach AS (
-  SELECT doc_id AS s, doc_id AS t FROM documents
-  UNION
-  SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s
-), clusters AS (
-  SELECT s AS doc_id, MIN(t) AS rep_id FROM reach GROUP BY s
+WITH RECURSIVE {pairs}{_reach_sql("prs")}, clusters AS (
+  {_REP}
 ), feat AS (
   SELECT doc_id,
-         len(list_filter(toks, x -> x IN ({_stop_list_sql()}))) / len(toks)
-           AS stopword_ratio,
-         alpha_chars / n_chars AS alpha_ratio,
-         (n_chars - (len(toks) - 1)) / len(toks) AS mean_token_len
+         {quality_features_sql()}
   FROM t
 ), qual AS (
   SELECT doc_id,
-         alpha_ratio * 0.5
-         + LEAST(stopword_ratio * 4.0, 1.0) * 0.3
-         + LEAST(mean_token_len / 8.0, 1.0) * 0.2 AS quality_score
+         {QUALITY_SCORE_SQL}
   FROM feat
 ), best AS (
   SELECT rep_id, doc_id AS best_id FROM (
@@ -589,17 +599,8 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-DEDUP_CONTAINMENT_SQL = """
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) >= 3
-           THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                 FOR i IN range(1, len(toks) - 1)]
-           ELSE [array_to_string(toks, ' ')] END) AS shingles
-  FROM t
-), inv0 AS (
+DEDUP_CONTAINMENT_SQL = f"""
+WITH {_shingles_sql()}, inv0 AS (
   SELECT doc_id, UNNEST(shingles) AS s FROM sh
 ), keep AS (
   -- hot-shingle cap: mirror the Spark side's max_df=1000 (same pattern as
@@ -610,11 +611,7 @@ WITH t AS (
   SELECT doc_id, s FROM inv0 JOIN keep USING (s)
 ), sz AS (
   SELECT doc_id, COUNT(*) AS sz FROM inv GROUP BY doc_id
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
+){_COMMON}
 SELECT id_a, id_b, c / LEAST(za.sz, zb.sz) AS containment
 FROM common
 JOIN sz za ON za.doc_id = id_a
@@ -638,30 +635,8 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_integer(edges, iterations=3).orderBy("node")
 
 
-_PR_EDGES = """
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) >= 3
-           THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                 FOR i IN range(1, len(toks) - 1)]
-           ELSE [array_to_string(toks, ' ')] END) AS shingles
-  FROM t
-), sz AS (
-  SELECT doc_id, len(shingles) AS sz FROM sh
-), inv AS (
-  SELECT doc_id, UNNEST(shingles) AS s FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), edges AS (
-  SELECT id_a, id_b FROM common
-  JOIN sz za ON za.doc_id = id_a
-  JOIN sz zb ON zb.doc_id = id_b
-  WHERE c / (za.sz + zb.sz - c) >= 0.8
-), und AS (
+_PR_EDGES = f"""
+WITH {_near_dup_pairs_sql("edges")}, und AS (
   SELECT id_a AS src, id_b AS dst FROM edges
   UNION ALL
   SELECT id_b AS src, id_a AS dst FROM edges
@@ -900,31 +875,8 @@ def dedup_streaming_embedding_certified(
 
 
 def _dedup_incremental_embedding_sql() -> str:
-    from sdc_mapreduce_spark.queries.simsearch_queries import _planes_values_sql
-
     return f"""
-WITH planes(pid, h) AS (
-  VALUES {_planes_values_sql()}
-), u AS (
-  SELECT vec_id,
-         list_transform(
-           embedding::DOUBLE[],
-           x -> x / sqrt(list_aggregate(
-                  list_transform(embedding::DOUBLE[], y -> y * y), 'sum'))
-         ) AS unit
-  FROM embeddings
-), b AS (
-  SELECT vec_id,
-         CAST(SUM(CASE WHEN list_inner_product(u.unit, planes.h) >= 0
-                       THEN 1 << pid ELSE 0 END) AS BIGINT) AS bucket
-  FROM u CROSS JOIN planes
-  GROUP BY vec_id
-), probes AS (
-  SELECT vec_id, bucket AS probe FROM b WHERE vec_id % 5 = 0
-  UNION ALL
-  SELECT vec_id, xor(bucket, CAST(1 << pid AS BIGINT)) AS probe
-  FROM b CROSS JOIN planes WHERE vec_id % 5 = 0
-), cands AS (
+WITH {srp_buckets_sql(6)}{_srp_probes_sql(" WHERE vec_id % 5 = 0")}, cands AS (
   SELECT DISTINCT p.vec_id AS new_id, e.vec_id AS ex_id
   FROM probes p JOIN b e ON e.bucket = p.probe
   WHERE e.vec_id % 5 <> 0
@@ -1014,45 +966,14 @@ def _min_label_rounds_sql(n_rounds: int, nodes: str, edges: str) -> str:
 
 
 def _dedup_embedding_clusters_sql() -> str:
-    from sdc_mapreduce_spark.queries.simsearch_queries import _planes_values_sql
-
     # u/pairs MATERIALIZED: referenced from the label rounds below, DuckDB
     # 1.0 otherwise re-evaluates the unit-normalization lambda per
     # candidate inside the verify join (810 s / 30+ GB at the 10x corpus;
     # 38 s materialized). The old transitive-closure `reach` CTE is gone —
     # see _min_label_rounds_sql.
     return f"""
-WITH RECURSIVE planes(pid, h) AS (
-  VALUES {_planes_values_sql()}
-), u AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(
-           embedding::DOUBLE[],
-           x -> x / sqrt(list_aggregate(
-                  list_transform(embedding::DOUBLE[], y -> y * y), 'sum'))
-         ) AS unit
-  FROM embeddings
-), b AS (
-  SELECT vec_id,
-         CAST(SUM(CASE WHEN list_inner_product(u.unit, planes.h) >= 0
-                       THEN 1 << pid ELSE 0 END) AS BIGINT) AS bucket
-  FROM u CROSS JOIN planes
-  GROUP BY vec_id
-), probes AS (
-  SELECT vec_id, bucket AS probe FROM b
-  UNION ALL
-  SELECT vec_id, xor(bucket, CAST(1 << pid AS BIGINT)) AS probe
-  FROM b CROSS JOIN planes
-), cands AS (
-  SELECT DISTINCT p.vec_id AS id_a, b2.vec_id AS id_b
-  FROM probes p JOIN b b2 ON b2.bucket = p.probe
-  WHERE p.vec_id < b2.vec_id
-), pairs AS MATERIALIZED (
-  SELECT c.id_a, c.id_b
-  FROM cands c
-  JOIN u ua ON ua.vec_id = c.id_a
-  JOIN u ub ON ub.vec_id = c.id_b
-  WHERE list_inner_product(ua.unit, ub.unit) >= 0.4
+WITH RECURSIVE {srp_buckets_sql(6, materialized=True)}{_SRP_PAIR_CANDS}, pairs AS MATERIALIZED (
+  {_SRP_VERIFY}
 ), edges AS (
   SELECT id_a AS s, id_b AS t FROM pairs
   UNION ALL
@@ -1065,40 +986,9 @@ SELECT v AS vec_id, l AS rep_id FROM labfin ORDER BY vec_id
 
 
 def _dedup_embedding_ann_sql() -> str:
-    from sdc_mapreduce_spark.queries.simsearch_queries import _planes_values_sql
-
     return f"""
-WITH planes(pid, h) AS (
-  VALUES {_planes_values_sql()}
-), u AS (
-  SELECT vec_id,
-         list_transform(
-           embedding::DOUBLE[],
-           x -> x / sqrt(list_aggregate(
-                  list_transform(embedding::DOUBLE[], y -> y * y), 'sum'))
-         ) AS unit
-  FROM embeddings
-), b AS (
-  SELECT vec_id,
-         CAST(SUM(CASE WHEN list_inner_product(u.unit, planes.h) >= 0
-                       THEN 1 << pid ELSE 0 END) AS BIGINT) AS bucket
-  FROM u CROSS JOIN planes
-  GROUP BY vec_id
-), probes AS (
-  SELECT vec_id, bucket AS probe FROM b
-  UNION ALL
-  SELECT vec_id, xor(bucket, CAST(1 << pid AS BIGINT)) AS probe
-  FROM b CROSS JOIN planes
-), cands AS (
-  SELECT DISTINCT p.vec_id AS id_a, b2.vec_id AS id_b
-  FROM probes p JOIN b b2 ON b2.bucket = p.probe
-  WHERE p.vec_id < b2.vec_id
-)
-SELECT c.id_a, c.id_b
-FROM cands c
-JOIN u ua ON ua.vec_id = c.id_a
-JOIN u ub ON ub.vec_id = c.id_b
-WHERE list_inner_product(ua.unit, ub.unit) >= 0.4
+WITH {srp_buckets_sql(6)}{_SRP_PAIR_CANDS}
+{_SRP_VERIFY}
 ORDER BY id_a, id_b
 """
 
@@ -1226,31 +1116,8 @@ def dedup_source_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_SOURCE_LEAKAGE_SQL = """
-WITH t AS (
-  SELECT doc_id, source, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents
-), sh AS (
-  SELECT doc_id, source,
-         list_distinct(CASE WHEN len(toks) >= 3
-           THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                 FOR i IN range(1, len(toks) - 1)]
-           ELSE [array_to_string(toks, ' ')] END) AS shingles
-  FROM t
-), sz AS (
-  SELECT doc_id, len(shingles) AS sz FROM sh
-), inv AS (
-  SELECT doc_id, UNNEST(shingles) AS s FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT id_a, id_b FROM common
-  JOIN sz za ON za.doc_id = id_a
-  JOIN sz zb ON zb.doc_id = id_b
-  WHERE c / (za.sz + zb.sz - c) >= 0.8
-), srcd AS (
+DEDUP_SOURCE_LEAKAGE_SQL = f"""
+WITH {_near_dup_pairs_sql(cols="source, ")}, srcd AS (
   SELECT doc_id, source FROM documents
 )
 SELECT LEAST(sa.source, sb.source) AS source_a,
@@ -1264,40 +1131,8 @@ ORDER BY source_a, source_b
 """
 
 
-DEDUP_CLUSTER_LABELS_SQL = """
-WITH RECURSIVE t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) >= 3
-           THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                 FOR i IN range(1, len(toks) - 1)]
-           ELSE [array_to_string(toks, ' ')] END) AS shingles
-  FROM t
-), sz AS (
-  SELECT doc_id, len(shingles) AS sz FROM sh
-), inv AS (
-  SELECT doc_id, UNNEST(shingles) AS s FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT id_a, id_b FROM common
-  JOIN sz za ON za.doc_id = id_a
-  JOIN sz zb ON zb.doc_id = id_b
-  WHERE c / (za.sz + zb.sz - c) >= 0.8
-), edges AS (
-  SELECT id_a AS s, id_b AS t FROM pairs
-  UNION ALL
-  SELECT id_b, id_a FROM pairs
-), reach AS (
-  SELECT doc_id AS s, doc_id AS t FROM documents
-  UNION
-  SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s
-), comp AS (
-  SELECT s AS doc_id, MIN(t) AS rep_id FROM reach GROUP BY s
-), sizes AS (
+DEDUP_CLUSTER_LABELS_SQL = f"""
+{_NEAR_DUP_COMP}, sizes AS (
   SELECT rep_id, COUNT(*) AS n_docs FROM comp GROUP BY rep_id
   HAVING COUNT(*) >= 2
 ), toksx AS (
@@ -1417,39 +1252,7 @@ def _cluster_safe_split_sql() -> str:
     case_rep = split_sql_case("rep_id", fractions, salt="cluster-split-v1")
     case_doc = split_sql_case("doc_id", fractions, salt="cluster-split-v1")
     return f"""
-WITH RECURSIVE t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) >= 3
-           THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                 FOR i IN range(1, len(toks) - 1)]
-           ELSE [array_to_string(toks, ' ')] END) AS shingles
-  FROM t
-), sz AS (
-  SELECT doc_id, len(shingles) AS sz FROM sh
-), inv AS (
-  SELECT doc_id, UNNEST(shingles) AS s FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT id_a, id_b FROM common
-  JOIN sz za ON za.doc_id = id_a
-  JOIN sz zb ON zb.doc_id = id_b
-  WHERE c / (za.sz + zb.sz - c) >= 0.8
-), edges AS (
-  SELECT id_a AS s, id_b AS t FROM pairs
-  UNION ALL
-  SELECT id_b, id_a FROM pairs
-), reach AS (
-  SELECT doc_id AS s, doc_id AS t FROM documents
-  UNION
-  SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s
-), comp AS (
-  SELECT s AS doc_id, MIN(t) AS rep_id FROM reach GROUP BY s
-), tagged AS (
+{_NEAR_DUP_COMP}, tagged AS (
   SELECT doc_id, rep_id,
          {case_rep} AS split,
          {case_doc} AS naive_split

@@ -20,6 +20,73 @@ from sdc_mapreduce_spark.operators.relational import (
 from sdc_mapreduce_spark.queries.base import QuerySpec, dsum, sql_dsum
 from sdc_mapreduce_spark.queries.scratch import scratch
 
+# --- DuckDB oracle fragments ---------------------------------------------
+
+# flagged(user_id, ts, event_id, is_new): 1 where an event opens a session
+# (first of its user, or more than 30 minutes after the previous one).
+_FLAGGED = """flagged AS (
+  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
+         CASE WHEN LAG(CAST(ts AS TIMESTAMP)) OVER w IS NULL
+                OR CAST(ts AS TIMESTAMP) >
+                   LAG(CAST(ts AS TIMESTAMP)) OVER w + INTERVAL '30 minutes'
+              THEN 1 ELSE 0 END AS is_new
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) ASC, event_id ASC)
+)"""
+
+# sessions(user_id, ts, session_id): the running count of session starts.
+_SESSIONS = f"""{_FLAGGED}, sessions AS (
+  SELECT user_id, ts,
+         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+              AS BIGINT) AS session_id
+  FROM flagged
+)"""
+
+# errors(event_id, user_id, ts) and purchases(user_id, ts,
+# purchase_event_id, purchase_value): the two sides of the as-of joins.
+_ERRORS_PURCHASES = """errors AS (
+  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
+  FROM events WHERE event_type = 'error'
+), purchases AS (
+  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
+         event_id AS purchase_event_id, value AS purchase_value
+  FROM events WHERE event_type = 'purchase'
+)"""
+
+
+def _islands_sql(ts: str) -> str:
+    """CTEs ``o`` and ``i(user_id, event_type, ts, island)``: each user's
+    runs of a constant event_type (gaps and islands); ``ts`` is the
+    projected timestamp expression."""
+    return f"""o AS (
+  SELECT user_id, event_type, {ts}, event_id,
+         CASE WHEN LAG(event_type) OVER w IS NULL
+                   OR LAG(event_type) OVER w <> event_type
+              THEN 1 ELSE 0 END AS chg
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+), i AS (
+  SELECT user_id, event_type, ts,
+         SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS island
+  FROM o
+)"""
+
+
+# changes(user_id, event_type, valid_from, event_id): the events where a
+# user's event_type changes (SCD2 run starts).
+_CHANGES = """ordered AS (
+  SELECT user_id, event_type, ts, event_id,
+         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+           AS prev_type
+  FROM events
+), changes AS (
+  SELECT user_id, event_type, ts AS valid_from, event_id
+  FROM ordered WHERE prev_type IS NULL OR prev_type <> event_type
+)"""
+
 
 def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-minute tumbling-window counts per event type (batch form of
@@ -82,22 +149,8 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize_plain(load_table(spark, sf_dir, "events"), gap_minutes=30)
 
 
-EVENTS_SESSIONIZE_SQL = """
-WITH flagged AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-         CASE WHEN LAG(CAST(ts AS TIMESTAMP)) OVER w IS NULL
-                OR CAST(ts AS TIMESTAMP) >
-                   LAG(CAST(ts AS TIMESTAMP)) OVER w + INTERVAL '30 minutes'
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) ASC, event_id ASC)
-), sessions AS (
-  SELECT user_id, ts,
-         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS session_id
-  FROM flagged
-)
+EVENTS_SESSIONIZE_SQL = f"""
+WITH {_SESSIONS}
 SELECT user_id, session_id,
        COUNT(*) AS n_events,
        MIN(ts) AS session_start,
@@ -236,15 +289,8 @@ def events_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-EVENTS_ASOF_FORWARD_SQL = """
-WITH errors AS (
-  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-  FROM events WHERE event_type = 'error'
-), purchases AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-         event_id AS purchase_event_id, value AS purchase_value
-  FROM events WHERE event_type = 'purchase'
-), cand AS (
+EVENTS_ASOF_FORWARD_SQL = f"""
+WITH {_ERRORS_PURCHASES}, cand AS (
   SELECT e.event_id, e.user_id, p.purchase_event_id, p.purchase_value,
          ROW_NUMBER() OVER (PARTITION BY e.event_id
                             ORDER BY p.ts ASC, p.purchase_event_id ASC) AS rn
@@ -582,15 +628,8 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVENTS_ASOF_SQL = """
-WITH errors AS (
-  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-  FROM events WHERE event_type = 'error'
-), purchases AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-         event_id AS purchase_event_id, value AS purchase_value
-  FROM events WHERE event_type = 'purchase'
-), cand AS (
+EVENTS_ASOF_SQL = f"""
+WITH {_ERRORS_PURCHASES}, cand AS (
   -- explicit window instead of native ASOF JOIN: among purchases sharing
   -- the winning timestamp, ASOF picks an unspecified row, while the Spark
   -- operator deterministically carries the max (purchase_event_id,
@@ -1201,21 +1240,8 @@ def events_change_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVENTS_CHANGE_INTERVALS_SQL = """
-WITH o AS (
-  SELECT user_id, event_type, ts, event_id,
-         CASE WHEN LAG(event_type) OVER w IS NULL
-                   OR LAG(event_type) OVER w <> event_type
-              THEN 1 ELSE 0 END AS chg
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), i AS (
-  SELECT user_id, event_type, ts,
-         SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS island
-  FROM o
-)
+EVENTS_CHANGE_INTERVALS_SQL = f"""
+WITH {_islands_sql("ts")}
 SELECT user_id, CAST(island AS INT) AS interval_id,
        MIN(event_type) AS event_type,
        CAST(MIN(ts) AS TIMESTAMP) AS valid_from,
@@ -1559,15 +1585,8 @@ def events_cogroup_asof_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("event_id")
 
 
-EVENTS_COGROUP_ASOF_SQL = """
-WITH errors AS (
-  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-  FROM events WHERE event_type = 'error'
-), purchases AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-         event_id AS purchase_event_id, value AS purchase_value
-  FROM events WHERE event_type = 'purchase'
-), cand AS (
+EVENTS_COGROUP_ASOF_SQL = f"""
+WITH {_ERRORS_PURCHASES}, cand AS (
   SELECT e.event_id, e.user_id, p.purchase_event_id, p.purchase_value,
          ROW_NUMBER() OVER (PARTITION BY e.event_id
                             ORDER BY p.ts DESC, p.purchase_event_id DESC) AS rn
@@ -1647,17 +1666,8 @@ def events_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "session_id", "interval_id")
 
 
-EVENTS_INTERVAL_OVERLAP_SQL = """
-WITH flagged AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-         CASE WHEN LAG(CAST(ts AS TIMESTAMP)) OVER w IS NULL
-                OR CAST(ts AS TIMESTAMP) >
-                   LAG(CAST(ts AS TIMESTAMP)) OVER w + INTERVAL '30 minutes'
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) ASC,
-               event_id ASC)
-), sessions AS (
+EVENTS_INTERVAL_OVERLAP_SQL = f"""
+WITH {_FLAGGED}, sessions AS (
   SELECT user_id,
          CAST(SUM(is_new) OVER (PARTITION BY user_id
                                 ORDER BY ts ASC, event_id ASC
@@ -1669,20 +1679,7 @@ WITH flagged AS (
   SELECT user_id, session_id,
          MIN(ts) AS session_start, MAX(ts) AS session_end
   FROM sessions GROUP BY user_id, session_id
-), o AS (
-  SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts, event_id,
-         CASE WHEN LAG(event_type) OVER w IS NULL
-                   OR LAG(event_type) OVER w <> event_type
-              THEN 1 ELSE 0 END AS chg
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), i AS (
-  SELECT user_id, event_type, ts,
-         SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS island
-  FROM o
-), isl AS (
+), {_islands_sql("CAST(ts AS TIMESTAMP) AS ts")}, isl AS (
   SELECT user_id, CAST(island AS INT) AS interval_id,
          MIN(event_type) AS event_type,
          MIN(ts) AS valid_from, MAX(ts) AS valid_to
@@ -1761,16 +1758,8 @@ def events_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "version")
 
 
-EVENTS_SCD2_HISTORY_SQL = """
-WITH ordered AS (
-  SELECT user_id, event_type, ts, event_id,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_type
-  FROM events
-), changes AS (
-  SELECT user_id, event_type, ts AS valid_from, event_id
-  FROM ordered WHERE prev_type IS NULL OR prev_type <> event_type
-)
+EVENTS_SCD2_HISTORY_SQL = f"""
+WITH {_CHANGES}
 SELECT user_id, event_type, valid_from,
        lead(valid_from) OVER w AS valid_to,
        CAST(row_number() OVER w AS INT) AS version,
@@ -1822,16 +1811,8 @@ def events_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-EVENTS_PIT_ENRICHMENT_SQL = """
-WITH ordered AS (
-  SELECT user_id, event_type, ts, event_id,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_type
-  FROM events
-), changes AS (
-  SELECT user_id, event_type, ts AS valid_from, event_id
-  FROM ordered WHERE prev_type IS NULL OR prev_type <> event_type
-), hist AS (
+EVENTS_PIT_ENRICHMENT_SQL = f"""
+WITH {_CHANGES}, hist AS (
   SELECT user_id, event_type AS state, valid_from,
          lead(valid_from) OVER w AS valid_to,
          CAST(row_number() OVER w AS INT) AS version
@@ -2432,22 +2413,8 @@ def events_streaming_session_certified(
         ).orderBy("user_id", "session_start")
 
 
-EVENTS_STREAMING_SESSION_SQL = """
-WITH flagged AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-         CASE WHEN LAG(CAST(ts AS TIMESTAMP)) OVER w IS NULL
-                OR CAST(ts AS TIMESTAMP) >
-                   LAG(CAST(ts AS TIMESTAMP)) OVER w + INTERVAL '30 minutes'
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) ASC, event_id ASC)
-), sessions AS (
-  SELECT user_id, ts,
-         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS session_id
-  FROM flagged
-)
+EVENTS_STREAMING_SESSION_SQL = f"""
+WITH {_SESSIONS}
 SELECT user_id,
        MIN(ts) AS session_start,
        MAX(ts) AS session_end,

@@ -9,7 +9,11 @@ from pyspark.sql import functions as F
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.functions import simsearch as S
 from sdc_mapreduce_spark.functions.simsearch import quantization_audit
-from sdc_mapreduce_spark.queries.base import QuerySpec
+from sdc_mapreduce_spark.queries.base import (
+    QuerySpec,
+    srp_buckets_sql,
+    unit_vectors_sql,
+)
 from sdc_mapreduce_spark.queries.scratch import scratch
 
 QUERY_IDS = list(range(10))
@@ -66,35 +70,26 @@ def simsearch_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mmr_sql(k: int = TOP_K, pool: int = 20, lam: int = 7) -> str:
-    """Unrolled greedy-MMR oracle: step i picks, per query, the candidate
-    maximizing lam·rel − (10−lam)·max(sim to already-selected) over the
-    micro-quantized cosines (ties to the smaller id). Plain CTEs — no
-    recursion — because k is a compile-time literal of the query.
-
-    Cosines follow the repo's oracle-twin convention (ADVICE r11):
-    unit-normalize each vector, then the left-to-right ``_FOLD_DOT`` —
-    the exact IEEE evaluation order of the Spark side's
-    ``transform(v, x -> x / l2_norm)`` + left-fold ``dot`` — so both
-    engines quantize identical doubles before the ×1e6 half-up rounding
-    that feeds the integer greedy (no 1-ulp rank/pool-boundary flips)."""
+def _fold_unit_vectors_sql() -> str:
+    """CTE ``u(vec_id, v)`` of the MMR oracles: unit vectors normalized by
+    the left-to-right ``_FOLD_DOT`` norm (see _mmr_sql)."""
     unit_norm = _FOLD_DOT.format(
         a="(embedding::DOUBLE[])", b="(embedding::DOUBLE[])"
     )
-    parts = [
-        f"""
-WITH u AS MATERIALIZED (
+    return f"""u AS MATERIALIZED (
   SELECT vec_id,
          list_transform(embedding::DOUBLE[],
                         x -> x / sqrt({unit_norm})) AS v
   FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, v AS qv FROM u WHERE vec_id < 10
-), sc AS (
-  SELECT q.query_id, u.vec_id AS cand,
-         {_FOLD_DOT.format(a="q.qv", b="u.v")} AS cosine
-  FROM q JOIN u ON u.vec_id <> q.query_id
-), pool AS MATERIALIZED (
+)"""
+
+
+def _mmr_pool_sql(pool: int) -> str:
+    """CTEs ``pool(query_id, cand, rel)``, each query's top-``pool``
+    candidates of ``sc(query_id, cand, cosine)`` with micro-quantized
+    relevance, and ``psim(query_id, ca, cb, sim)``, their pairwise
+    micro-quantized similarities."""
+    return f""", pool AS MATERIALIZED (
   SELECT query_id, cand,
          CAST(ROUND(1000000.0 * cosine) AS BIGINT) AS rel
   FROM (
@@ -111,15 +106,31 @@ WITH u AS MATERIALIZED (
   JOIN u v1 ON v1.vec_id = p1.cand
   JOIN u v2 ON v2.vec_id = p2.cand
 )"""
-    ]
-    parts.append(_mmr_greedy_sql(k, lam))
-    parts.append(
-        f"""
+
+
+def _mmr_sql(k: int = TOP_K, pool: int = 20, lam: int = 7) -> str:
+    """Unrolled greedy-MMR oracle: step i picks, per query, the candidate
+    maximizing lam·rel − (10−lam)·max(sim to already-selected) over the
+    micro-quantized cosines (ties to the smaller id). Plain CTEs — no
+    recursion — because k is a compile-time literal of the query.
+
+    Cosines follow the repo's oracle-twin convention (ADVICE r11):
+    unit-normalize each vector, then the left-to-right ``_FOLD_DOT`` —
+    the exact IEEE evaluation order of the Spark side's
+    ``transform(v, x -> x / l2_norm)`` + left-fold ``dot`` — so both
+    engines quantize identical doubles before the ×1e6 half-up rounding
+    that feeds the integer greedy (no 1-ulp rank/pool-boundary flips)."""
+    return f"""
+WITH {_fold_unit_vectors_sql()}, q AS (
+  SELECT vec_id AS query_id, v AS qv FROM u WHERE vec_id < 10
+), sc AS (
+  SELECT q.query_id, u.vec_id AS cand,
+         {_FOLD_DOT.format(a="q.qv", b="u.v")} AS cosine
+  FROM q JOIN u ON u.vec_id <> q.query_id
+){_mmr_pool_sql(pool)}{_mmr_greedy_sql(k, lam)}
 SELECT query_id, CAST(cand AS BIGINT) AS neighbor_id,
        CAST(mmr_rank AS INT) AS mmr_rank
 FROM selall{k}"""
-    )
-    return "".join(parts)
 
 
 def _mmr_greedy_sql(k: int, lam: int) -> str:
@@ -241,16 +252,8 @@ def _mmr_indexed_sql(k: int = TOP_K, pool: int = 20, lam: int = 7) -> str:
     selection, the in-cell candidate pool, and the unrolled greedy — all
     on fold-dot unit-vector doubles — then the brute-pool overlap audit.
     Called at module bottom (after IVF_CELLS/IVF_PROBE are defined)."""
-    unit_norm = _FOLD_DOT.format(
-        a="(embedding::DOUBLE[])", b="(embedding::DOUBLE[])"
-    )
     prefix = f"""
-WITH u AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[],
-                        x -> x / sqrt({unit_norm})) AS v
-  FROM embeddings
-), cent AS (
+WITH {_fold_unit_vectors_sql()}, cent AS (
   SELECT CAST(vec_id AS INT) AS cell, v AS c FROM u WHERE vec_id < {IVF_CELLS}
 ), assigned AS MATERIALIZED (
   SELECT vec_id, cell FROM (
@@ -276,23 +279,7 @@ WITH u AS MATERIALIZED (
   JOIN assigned a ON a.cell = p.cell
   JOIN u ON u.vec_id = a.vec_id
   WHERE u.vec_id <> q.query_id
-), pool AS MATERIALIZED (
-  SELECT query_id, cand,
-         CAST(ROUND(1000000.0 * cosine) AS BIGINT) AS rel
-  FROM (
-    SELECT query_id, cand, cosine,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, cand ASC) AS pr
-    FROM sc) WHERE pr <= {pool}
-), psim AS MATERIALIZED (
-  SELECT p1.query_id, p1.cand AS ca, p2.cand AS cb,
-         CAST(ROUND(1000000.0 * {_FOLD_DOT.format(a="v1.v", b="v2.v")})
-              AS BIGINT) AS sim
-  FROM pool p1
-  JOIN pool p2 ON p2.query_id = p1.query_id AND p2.cand <> p1.cand
-  JOIN u v1 ON v1.vec_id = p1.cand
-  JOIN u v2 ON v2.vec_id = p2.cand
-)"""
+){_mmr_pool_sql(pool)}"""
     audit_final = f"""
 , bsc AS (
   SELECT q.query_id, u.vec_id AS cand,
@@ -423,16 +410,17 @@ def simsearch_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_exact(ann, exact)
 
 
-SIMSEARCH_ANN_IVF_RECALL_SQL = f"""
-WITH u AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(
-           embedding::DOUBLE[],
-           x -> x / sqrt(list_aggregate(
-                  list_transform(embedding::DOUBLE[], y -> y * y), 'sum'))
-         ) AS unit
-  FROM embeddings
-), cent AS (
+# Oracle fragments of the approximate-search twins below. Each needs
+# u(vec_id, unit) in scope.
+
+
+def _ivf_cands_sql(cands: str) -> str:
+    """IVF replay: ``cent(cell, c)``, the seeded centroids (unit vectors of
+    the first IVF_CELLS ids); ``assigned(vec_id, cell)``, each vector's
+    argmax cell (ties to the lower cell); ``probes(query_id, cell)``, each
+    query's top IVF_PROBE cells; ``{cands}(query_id, neighbor_id)``, the
+    members of the probed cells."""
+    return f""", cent AS (
   SELECT CAST(vec_id AS INT) AS cell, unit AS c FROM u WHERE vec_id < {IVF_CELLS}
 ), assigned AS MATERIALIZED (
   SELECT vec_id, cell FROM (
@@ -452,12 +440,15 @@ WITH u AS MATERIALIZED (
            ) AS r
     FROM u CROSS JOIN cent WHERE u.vec_id < 10
   ) WHERE r <= {IVF_PROBE}
-), cands AS (
+), {cands} AS (
   SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
   FROM probes p JOIN assigned a ON a.cell = p.cell
   WHERE a.vec_id <> p.query_id
-), ann AS (
-  SELECT query_id, neighbor_id FROM (
+)"""
+
+
+# Exact-cosine rank of every cands(query_id, neighbor_id) row per query.
+_RANKED_CANDS = """
     SELECT c.query_id, c.neighbor_id,
            ROW_NUMBER() OVER (
              PARTITION BY c.query_id
@@ -465,9 +456,24 @@ WITH u AS MATERIALIZED (
                       c.neighbor_id ASC) AS rank
     FROM cands c
     JOIN u qu ON qu.vec_id = c.query_id
-    JOIN u nu ON nu.vec_id = c.neighbor_id
+    JOIN u nu ON nu.vec_id = c.neighbor_id"""
+
+# ann(query_id, neighbor_id): the top TOP_K candidates per query.
+_ANN_TOPK = f""", ann AS (
+  SELECT query_id, neighbor_id FROM ({_RANKED_CANDS}
   ) WHERE rank <= {TOP_K}
-), exact AS (
+)"""
+
+# The same top-k as the query result.
+_ANN_TOPK_RESULT = f"""
+SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM ({_RANKED_CANDS}
+) WHERE rank <= {TOP_K}
+ORDER BY query_id, rank
+"""
+
+# Per-query recall@k of ann(query_id, neighbor_id) against the exact
+# top-k, as the query result (the twin of _recall_vs_exact).
+_RECALL_AT_K = f""", exact AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q2.vec_id AS query_id, u2.vec_id AS neighbor_id,
            ROW_NUMBER() OVER (
@@ -491,53 +497,11 @@ LEFT JOIN h ON h.query_id = eq.query_id
 ORDER BY eq.query_id
 """
 
+SIMSEARCH_ANN_IVF_RECALL_SQL = f"""
+WITH {unit_vectors_sql(materialized=True)}{_ivf_cands_sql("cands")}{_ANN_TOPK}{_RECALL_AT_K}"""
 
 SIMSEARCH_ANN_IVF_SQL = f"""
-WITH u AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(
-           embedding::DOUBLE[],
-           x -> x / sqrt(list_aggregate(
-                  list_transform(embedding::DOUBLE[], y -> y * y), 'sum'))
-         ) AS unit
-  FROM embeddings
-), cent AS (
-  SELECT CAST(vec_id AS INT) AS cell, unit AS c FROM u WHERE vec_id < {IVF_CELLS}
-), assigned AS MATERIALIZED (
-  SELECT vec_id, cell FROM (
-    SELECT u.vec_id, cent.cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY u.vec_id
-             ORDER BY list_inner_product(u.unit, cent.c) DESC, cent.cell ASC
-           ) AS r
-    FROM u CROSS JOIN cent
-  ) WHERE r = 1
-), probes AS (
-  SELECT query_id, cell FROM (
-    SELECT u.vec_id AS query_id, cent.cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY u.vec_id
-             ORDER BY list_inner_product(u.unit, cent.c) DESC, cent.cell ASC
-           ) AS r
-    FROM u CROSS JOIN cent WHERE u.vec_id < 10
-  ) WHERE r <= {IVF_PROBE}
-), cands AS (
-  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-  FROM probes p JOIN assigned a ON a.cell = p.cell
-  WHERE a.vec_id <> p.query_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM (
-  SELECT c.query_id, c.neighbor_id,
-         ROW_NUMBER() OVER (
-           PARTITION BY c.query_id
-           ORDER BY list_inner_product(qu.unit, nu.unit) DESC,
-                    c.neighbor_id ASC) AS rank
-  FROM cands c
-  JOIN u qu ON qu.vec_id = c.query_id
-  JOIN u nu ON nu.vec_id = c.neighbor_id
-) WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
-"""
+WITH {unit_vectors_sql(materialized=True)}{_ivf_cands_sql("cands")}{_ANN_TOPK_RESULT}"""
 
 
 PQ_SUB = 4
@@ -548,15 +512,7 @@ PQ_CODES = 8
 # of the 4 subspaces spans 16 dims), and the PQ encoding (per-vector,
 # per-subspace argmin of cc - 2*<x_s, cw>, ties to the lowest code id).
 _PQ_CTES = f"""
-WITH u AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(
-           embedding::DOUBLE[],
-           x -> x / sqrt(list_aggregate(
-                  list_transform(embedding::DOUBLE[], y -> y * y), 'sum'))
-         ) AS unit
-  FROM embeddings
-), cbn AS (
+WITH {unit_vectors_sql(materialized=True)}, cbn AS (
   SELECT s.i AS sub, CAST(vec_id AS INT) AS code,
          u.unit[(s.i*16+1):((s.i+1)*16)] AS cw,
          list_inner_product(u.unit[(s.i*16+1):((s.i+1)*16)],
@@ -619,15 +575,10 @@ def simsearch_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_exact(ann, exact)
 
 
-SIMSEARCH_ANN_PQ_RECALL_SQL = f"""{_PQ_CTES}
-, persub AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, e.sub,
-         list_inner_product(q.unit[(e.sub*16+1):((e.sub+1)*16)], c.cw) AS s
-  FROM enc e
-  JOIN cbn c ON c.sub = e.sub AND c.code = e.code
-  CROSS JOIN u q
-  WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id
-), adc AS (
+# adc(query_id, neighbor_id, score): the fixed-order sum of the per-subspace
+# ADC scores persub(query_id, neighbor_id, sub, s), explicitly parenthesized
+# to match Spark's left fold bitwise; ann: the top TOP_K per query by score.
+_ADC_ANN = f""", adc AS (
   SELECT query_id, neighbor_id,
          ((MAX(CASE WHEN sub = 0 THEN s END)
            + MAX(CASE WHEN sub = 1 THEN s END))
@@ -641,29 +592,17 @@ SIMSEARCH_ANN_PQ_RECALL_SQL = f"""{_PQ_CTES}
                               ORDER BY score DESC, neighbor_id ASC) AS rank
     FROM adc
   ) WHERE rank <= {TOP_K}
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q2.vec_id AS query_id, u2.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q2.vec_id
-             ORDER BY list_inner_product(q2.unit, u2.unit) DESC,
-                      u2.vec_id ASC) AS rank
-    FROM u q2 JOIN u u2 ON u2.vec_id <> q2.vec_id
-    WHERE q2.vec_id < 10
-  ) WHERE rank <= {TOP_K}
-), h AS (
-  SELECT a.query_id, COUNT(*) AS n
-  FROM ann a JOIN exact e
-    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-  GROUP BY a.query_id
-)
-SELECT eq.query_id,
-       CAST(COALESCE(h.n, 0) AS INT) AS n_hits,
-       COALESCE(h.n, 0) / {TOP_K}.0 AS recall_at_k
-FROM (SELECT DISTINCT query_id FROM exact) eq
-LEFT JOIN h ON h.query_id = eq.query_id
-ORDER BY eq.query_id
-"""
+)"""
+
+SIMSEARCH_ANN_PQ_RECALL_SQL = f"""{_PQ_CTES}
+, persub AS (
+  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, e.sub,
+         list_inner_product(q.unit[(e.sub*16+1):((e.sub+1)*16)], c.cw) AS s
+  FROM enc e
+  JOIN cbn c ON c.sub = e.sub AND c.code = e.code
+  CROSS JOIN u q
+  WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id
+){_ADC_ANN}{_RECALL_AT_K}"""
 
 
 def simsearch_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -690,74 +629,14 @@ def simsearch_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIMSEARCH_ANN_IVFPQ_RECALL_SQL = f"""{_PQ_CTES}
-, cent AS (
-  SELECT CAST(vec_id AS INT) AS cell, unit AS c FROM u WHERE vec_id < {IVF_CELLS}
-), assigned AS MATERIALIZED (
-  SELECT vec_id, cell FROM (
-    SELECT u.vec_id, cent.cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY u.vec_id
-             ORDER BY list_inner_product(u.unit, cent.c) DESC, cent.cell ASC
-           ) AS r
-    FROM u CROSS JOIN cent
-  ) WHERE r = 1
-), probes AS (
-  SELECT query_id, cell FROM (
-    SELECT u.vec_id AS query_id, cent.cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY u.vec_id
-             ORDER BY list_inner_product(u.unit, cent.c) DESC, cent.cell ASC
-           ) AS r
-    FROM u CROSS JOIN cent WHERE u.vec_id < 10
-  ) WHERE r <= {IVF_PROBE}
-), cand AS (
-  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-  FROM probes p JOIN assigned a ON a.cell = p.cell
-  WHERE a.vec_id <> p.query_id
-), persub AS (
+{_ivf_cands_sql("cand")}, persub AS (
   SELECT c.query_id, c.neighbor_id, e.sub,
          list_inner_product(qu.unit[(e.sub*16+1):((e.sub+1)*16)], cb2.cw) AS s
   FROM cand c
   JOIN enc e ON e.vec_id = c.neighbor_id
   JOIN cbn cb2 ON cb2.sub = e.sub AND cb2.code = e.code
   JOIN u qu ON qu.vec_id = c.query_id
-), adc AS (
-  SELECT query_id, neighbor_id,
-         ((MAX(CASE WHEN sub = 0 THEN s END)
-           + MAX(CASE WHEN sub = 1 THEN s END))
-          + MAX(CASE WHEN sub = 2 THEN s END))
-         + MAX(CASE WHEN sub = 3 THEN s END) AS score
-  FROM persub GROUP BY 1, 2
-), ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, neighbor_id ASC) AS rank
-    FROM adc
-  ) WHERE rank <= {TOP_K}
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q2.vec_id AS query_id, u2.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q2.vec_id
-             ORDER BY list_inner_product(q2.unit, u2.unit) DESC,
-                      u2.vec_id ASC) AS rank
-    FROM u q2 JOIN u u2 ON u2.vec_id <> q2.vec_id
-    WHERE q2.vec_id < 10
-  ) WHERE rank <= {TOP_K}
-), h AS (
-  SELECT a.query_id, COUNT(*) AS n
-  FROM ann a JOIN exact e
-    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-  GROUP BY a.query_id
-)
-SELECT eq.query_id,
-       CAST(COALESCE(h.n, 0) AS INT) AS n_hits,
-       COALESCE(h.n, 0) / {TOP_K}.0 AS recall_at_k
-FROM (SELECT DISTINCT query_id FROM exact) eq
-LEFT JOIN h ON h.query_id = eq.query_id
-ORDER BY eq.query_id
-"""
+){_ADC_ANN}{_RECALL_AT_K}"""
 
 
 def simsearch_ann_ivf_index_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -787,35 +666,10 @@ def simsearch_ann_ivf_index_recall(spark: SparkSession, sf_dir: str) -> DataFram
 ANN_PLANES = 6
 
 
-def _planes_values_sql() -> str:
-    """The seeded hyperplanes as a DuckDB VALUES list — the exact doubles
-    Spark bakes into its plan (repr round-trips float64)."""
-    planes = S._hyperplanes(64, ANN_PLANES)
-    rows = []
-    for pid, h in enumerate(planes):
-        arr = ", ".join(repr(float(x)) for x in h)
-        rows.append(f"({pid}, [{arr}]::DOUBLE[])")
-    return ",\n       ".join(rows)
-
-
-SIMSEARCH_ANN_RECALL_SQL = f"""
-WITH planes(pid, h) AS (
-  VALUES {_planes_values_sql()}
-), u AS (
-  SELECT vec_id,
-         list_transform(
-           embedding::DOUBLE[],
-           x -> x / sqrt(list_aggregate(
-                  list_transform(embedding::DOUBLE[], y -> y * y), 'sum'))
-         ) AS unit
-  FROM embeddings
-), b AS (
-  SELECT vec_id,
-         CAST(SUM(CASE WHEN list_inner_product(u.unit, planes.h) >= 0
-                       THEN 1 << pid ELSE 0 END) AS BIGINT) AS bucket
-  FROM u CROSS JOIN planes
-  GROUP BY vec_id
-), q AS (
+# SRP probe replay: q(query_id, bucket) for the query vectors,
+# qprobes(query_id, probe) their home and 1-bit-adjacent buckets, and
+# cands(query_id, neighbor_id) the probed buckets' members.
+_SRP_CANDS = """, q AS (
   SELECT vec_id AS query_id, bucket FROM b WHERE vec_id < 10
 ), qprobes AS (
   SELECT query_id, bucket AS probe FROM q
@@ -826,87 +680,17 @@ WITH planes(pid, h) AS (
   SELECT DISTINCT qp.query_id, b.vec_id AS neighbor_id
   FROM qprobes qp JOIN b ON b.bucket = qp.probe
   WHERE b.vec_id <> qp.query_id
-), ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY c.query_id
-             ORDER BY list_inner_product(qu.unit, nu.unit) DESC,
-                      c.neighbor_id ASC) AS rank
-    FROM cands c
-    JOIN u qu ON qu.vec_id = c.query_id
-    JOIN u nu ON nu.vec_id = c.neighbor_id
-  ) WHERE rank <= {TOP_K}
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q2.vec_id AS query_id, u2.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q2.vec_id
-             ORDER BY list_inner_product(q2.unit, u2.unit) DESC,
-                      u2.vec_id ASC) AS rank
-    FROM u q2 JOIN u u2 ON u2.vec_id <> q2.vec_id
-    WHERE q2.vec_id < 10
-  ) WHERE rank <= {TOP_K}
-), h AS (
-  SELECT a.query_id, COUNT(*) AS n
-  FROM ann a JOIN exact e
-    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-  GROUP BY a.query_id
-)
-SELECT eq.query_id,
-       CAST(COALESCE(h.n, 0) AS INT) AS n_hits,
-       COALESCE(h.n, 0) / {TOP_K}.0 AS recall_at_k
-FROM (SELECT DISTINCT query_id FROM exact) eq
-LEFT JOIN h ON h.query_id = eq.query_id
-ORDER BY eq.query_id
-"""
+)"""
 
+SIMSEARCH_ANN_RECALL_SQL = f"""
+WITH {srp_buckets_sql(ANN_PLANES)}{_SRP_CANDS}{_ANN_TOPK}{_RECALL_AT_K}"""
 
 # Full oracle for simsearch_ann_srp itself (not just its recall): the same
 # plane/bucket/probe/candidate replay as SIMSEARCH_ANN_RECALL_SQL, with the
 # ANN ranking as the final output. n_planes/multi-probe match the
 # registered query's parameters exactly.
 SIMSEARCH_ANN_SRP_SQL = f"""
-WITH planes(pid, h) AS (
-  VALUES {_planes_values_sql()}
-), u AS (
-  SELECT vec_id,
-         list_transform(
-           embedding::DOUBLE[],
-           x -> x / sqrt(list_aggregate(
-                  list_transform(embedding::DOUBLE[], y -> y * y), 'sum'))
-         ) AS unit
-  FROM embeddings
-), b AS (
-  SELECT vec_id,
-         CAST(SUM(CASE WHEN list_inner_product(u.unit, planes.h) >= 0
-                       THEN 1 << pid ELSE 0 END) AS BIGINT) AS bucket
-  FROM u CROSS JOIN planes
-  GROUP BY vec_id
-), q AS (
-  SELECT vec_id AS query_id, bucket FROM b WHERE vec_id < 10
-), qprobes AS (
-  SELECT query_id, bucket AS probe FROM q
-  UNION ALL
-  SELECT query_id, xor(bucket, CAST(1 << pid AS BIGINT)) AS probe
-  FROM q CROSS JOIN planes
-), cands AS (
-  SELECT DISTINCT qp.query_id, b.vec_id AS neighbor_id
-  FROM qprobes qp JOIN b ON b.bucket = qp.probe
-  WHERE b.vec_id <> qp.query_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM (
-  SELECT c.query_id, c.neighbor_id,
-         ROW_NUMBER() OVER (
-           PARTITION BY c.query_id
-           ORDER BY list_inner_product(qu.unit, nu.unit) DESC,
-                    c.neighbor_id ASC) AS rank
-  FROM cands c
-  JOIN u qu ON qu.vec_id = c.query_id
-  JOIN u nu ON nu.vec_id = c.neighbor_id
-) WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
-"""
+WITH {srp_buckets_sql(ANN_PLANES)}{_SRP_CANDS}{_ANN_TOPK_RESULT}"""
 
 
 def embedding_quantize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -998,12 +782,16 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EMBEDDING_LABEL_CENTROIDS_SQL = """
-WITH e AS (
+# e(vec_id, label, v) and comps(label, pos, val): every embedding
+# coordinate, keyed by label, for the per-label centroid oracles.
+_LABEL_COMPS = """e AS (
   SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
 ), comps AS (
   SELECT label, unnest(range(len(v))) AS pos, unnest(v) AS val FROM e
-), cs AS (
+)"""
+
+EMBEDDING_LABEL_CENTROIDS_SQL = f"""
+WITH {_LABEL_COMPS}, cs AS (
   -- floor-quantized nano-unit accumulation: exact integers, no
   -- double->decimal cast (whose rounding is engine-dependent)
   SELECT label, pos,
@@ -1048,11 +836,7 @@ def embedding_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMBEDDING_LABEL_SILHOUETTE_SQL = f"""
-WITH e AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
-), comps AS (
-  SELECT label, unnest(range(len(v))) AS pos, unnest(v) AS val FROM e
-), cs AS (
+WITH {_LABEL_COMPS}, cs AS (
   SELECT label, pos,
          SUM(CAST(FLOOR(val * 1e9) AS BIGINT)) AS s, COUNT(*) AS n
   FROM comps GROUP BY 1, 2
@@ -1103,11 +887,7 @@ def embedding_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMBEDDING_NEAREST_CENTROID_SQL = f"""
-WITH e AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
-), comps AS (
-  SELECT label, unnest(range(len(v))) AS pos, unnest(v) AS val FROM e
-), cs AS (
+WITH {_LABEL_COMPS}, cs AS (
   SELECT label, pos,
          CAST(SUM(CAST(floor(val * 1e9) AS BIGINT)) AS DOUBLE)
            / (1e9 * COUNT(*)) AS c
@@ -1235,15 +1015,7 @@ def embedding_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMBEDDING_KMEANS_STEP_SQL = f"""
-WITH u AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(
-           embedding::DOUBLE[],
-           x -> x / sqrt(list_aggregate(
-                  list_transform(embedding::DOUBLE[], y -> y * y), 'sum'))
-         ) AS unit
-  FROM embeddings
-), cents AS (
+WITH {unit_vectors_sql(materialized=True)}, cents AS (
   SELECT CAST(vec_id AS INT) AS cell, unit AS centroid FROM u WHERE vec_id < 8
 ), scored AS (
   SELECT u.vec_id, c.cell,

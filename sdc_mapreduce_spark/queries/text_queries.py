@@ -5,13 +5,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sdc_mapreduce_spark.cache import pin
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.functions import text as T
-from sdc_mapreduce_spark.queries.base import QuerySpec, pin
-
-
-def _stop_list_sql() -> str:
-    return ", ".join(f"'{w}'" for w in T.STOPWORDS)
+from sdc_mapreduce_spark.queries.base import (
+    QUALITY_CHARS_SQL,
+    QUALITY_SCORE_SQL,
+    QuerySpec,
+    quality_features_sql,
+    stop_list_sql,
+)
 
 
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -36,23 +39,16 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEXT_QUALITY_SQL = f"""
 WITH t AS (
   SELECT doc_id,
-         string_split_regex(trim(text), '\\s+') AS toks,
-         length(text) AS n_chars,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha_chars
+         string_split_regex(trim(text), '\\s+') AS toks{QUALITY_CHARS_SQL}
   FROM documents
 ), feat AS (
   SELECT doc_id,
          CAST(len(toks) AS INT) AS n_tokens,
-         len(list_filter(toks, x -> x IN ({_stop_list_sql()}))) / len(toks)
-           AS stopword_ratio,
-         alpha_chars / n_chars AS alpha_ratio,
-         (n_chars - (len(toks) - 1)) / len(toks) AS mean_token_len
+         {quality_features_sql()}
   FROM t
 )
 SELECT doc_id, n_tokens, stopword_ratio, alpha_ratio, mean_token_len,
-       alpha_ratio * 0.5
-       + LEAST(stopword_ratio * 4.0, 1.0) * 0.3
-       + LEAST(mean_token_len / 8.0, 1.0) * 0.2 AS quality_score
+       {QUALITY_SCORE_SQL}
 FROM feat
 """
 
@@ -76,9 +72,12 @@ def _lang_scores_sql() -> tuple[str, str]:
 
 
 _SCORES, _CASE = _lang_scores_sql()
+_BEST = "GREATEST(score_de, score_en, score_es, score_fr, score_zh) AS best"
+_LANG_PRED = f"CASE WHEN best > 0 THEN CASE {_CASE} END ELSE 'und' END AS lang_pred"
 
-TEXT_LANG_SQL = f"""
-WITH t AS (
+# t(doc_id, lang_declared, toks), scored (+ score_<lang>), best (+ best):
+# the marker-count language scores of functions.text.language_id.
+_LANG_BEST = f"""t AS (
   SELECT doc_id, lang AS lang_declared,
          string_split_regex(trim(text), '\\s+') AS toks
   FROM documents
@@ -87,11 +86,14 @@ WITH t AS (
        {_SCORES}
   FROM t
 ), best AS (
-  SELECT *, GREATEST(score_de, score_en, score_es, score_fr, score_zh) AS best
+  SELECT *, {_BEST}
   FROM scored
-)
+)"""
+
+TEXT_LANG_SQL = f"""
+WITH {_LANG_BEST}
 SELECT doc_id, lang_declared, score_de, score_en, score_es, score_fr, score_zh,
-       CASE WHEN best > 0 THEN CASE {_CASE} END ELSE 'und' END AS lang_pred
+       {_LANG_PRED}
 FROM best
 """
 
@@ -448,15 +450,94 @@ def multimodal_decode_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_framed(media).orderBy("media_id")
 
 
-MULTIMODAL_DECODE_PROFILE_SQL = """
-WITH b AS (
+# Oracle fragments over each document's utf-8 bytes, read as hex pairs.
+
+
+def _nibble_sql(pos: str) -> str:
+    """One plus the value of hex digit ``pos`` (1-based) of ``h``."""
+    return f"strpos('0123456789ABCDEF', h[{pos}:{pos}])"
+
+
+def _hex_bytes_sql(where: str = "") -> str:
+    """CTE ``b(doc_id, h, n)``: each text's utf-8 bytes as a hex string
+    and their count."""
+    return f"""b AS (
   SELECT doc_id, hex(encode(text)) AS h,
          octet_length(encode(text)) AS n
-  FROM documents
-), e AS (
+  FROM documents{where}
+)"""
+
+
+def _byte_bins_sql(where: str = "") -> str:
+    """``b``, then ``e(doc_id, bin)``, each byte's high nibble, and
+    ``bins(doc_id, bin, cnt)``: the 16-bin high-nibble histogram."""
+    return f"""{_hex_bytes_sql(where)}, e AS (
+  SELECT doc_id,
+    UNNEST([{_nibble_sql("2*i-1")} - 1
+            FOR i IN range(1, CAST(n AS INT) + 1)]) AS bin
+  FROM b
+), bins AS (
+  SELECT doc_id, bin, COUNT(*) AS cnt FROM e GROUP BY doc_id, bin
+)"""
+
+
+# norms(doc_id, nn): the squared L2 norm of each histogram.
+_BIN_NORMS = """, norms AS (
+  SELECT doc_id, CAST(SUM(cnt * cnt) AS DOUBLE) AS nn FROM bins GROUP BY doc_id
+)"""
+
+# cand(id_a, id_b): histogram LSH candidates — per 4-bin band, the bins
+# quantized to 64ths of the total as the band key; all-zero and hot (> 64
+# docs) keys are skipped.
+_BIN_BAND_CANDS = """, tot AS (
+  SELECT doc_id, SUM(cnt) AS t FROM bins GROUP BY doc_id
+), dense AS (
+  SELECT t.doc_id, r.i AS bin, COALESCE(bn.cnt, 0) AS cnt, t.t
+  FROM tot t CROSS JOIN range(16) r(i)
+  LEFT JOIN bins bn ON bn.doc_id = t.doc_id AND bn.bin = r.i
+), keys AS (
+  SELECT doc_id, bin // 4 AS band,
+         string_agg(CAST((cnt * 64) // t AS VARCHAR), ',' ORDER BY bin)
+           AS bkey
+  FROM dense GROUP BY doc_id, bin // 4
+), live AS (
+  SELECT * FROM keys WHERE bkey <> '0,0,0,0'
+), ok AS (
+  SELECT band, bkey FROM live GROUP BY band, bkey HAVING COUNT(*) <= 64
+), kept AS (
+  SELECT l.* FROM live l JOIN ok USING (band, bkey)
+), cand AS (
+  SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
+  FROM kept a JOIN kept c ON a.band = c.band AND a.bkey = c.bkey
+                         AND a.doc_id < c.doc_id
+)"""
+
+# scored/ranked over pairs(query_id, neighbor_id, dp) and norms: the
+# cosine top-3 per query as the query result.
+_COSINE_TOP3 = """, scored AS (
+  SELECT p.query_id, p.neighbor_id,
+         p.dp / (sqrt(qn.nn) * sqrt(vn.nn)) AS cosine
+  FROM pairs p
+  JOIN norms qn ON qn.doc_id = p.query_id
+  JOIN norms vn ON vn.doc_id = p.neighbor_id
+), ranked AS (
+  SELECT query_id, neighbor_id, cosine,
+         ROW_NUMBER() OVER (
+           PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
+         ) AS rank
+  FROM scored
+)
+SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
+       cosine AS score
+FROM ranked WHERE rank <= 3
+ORDER BY query_id, rank
+"""
+
+MULTIMODAL_DECODE_PROFILE_SQL = f"""
+WITH {_hex_bytes_sql()}, e AS (
   SELECT doc_id, n,
-    UNNEST([16*(strpos('0123456789ABCDEF', h[2*i-1:2*i-1])-1)
-            + (strpos('0123456789ABCDEF', h[2*i:2*i])-1)
+    UNNEST([16*({_nibble_sql("2*i-1")}-1)
+            + ({_nibble_sql("2*i")}-1)
             FOR i IN range(1, CAST(n AS INT) + 1)]) AS byte
   FROM b
 ), sums AS (
@@ -650,44 +731,14 @@ def multimodal_embed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MULTIMODAL_EMBED_SEARCH_SQL = """
-WITH b AS (
-  SELECT doc_id, hex(encode(text)) AS h,
-         octet_length(encode(text)) AS n
-  FROM documents
-), e AS (
-  SELECT doc_id,
-    UNNEST([strpos('0123456789ABCDEF', h[2*i-1:2*i-1]) - 1
-            FOR i IN range(1, CAST(n AS INT) + 1)]) AS bin
-  FROM b
-), bins AS (
-  SELECT doc_id, bin, COUNT(*) AS cnt FROM e GROUP BY doc_id, bin
-), norms AS (
-  SELECT doc_id, CAST(SUM(cnt * cnt) AS DOUBLE) AS nn FROM bins GROUP BY doc_id
-), pairs AS (
+MULTIMODAL_EMBED_SEARCH_SQL = f"""
+WITH {_byte_bins_sql()}{_BIN_NORMS}, pairs AS (
   SELECT q.doc_id AS query_id, v.doc_id AS neighbor_id,
          CAST(SUM(q.cnt * v.cnt) AS DOUBLE) AS dp
   FROM bins q JOIN bins v ON q.bin = v.bin
   WHERE q.doc_id IN (0, 1, 2, 3, 4) AND v.doc_id <> q.doc_id
   GROUP BY q.doc_id, v.doc_id
-), scored AS (
-  SELECT p.query_id, p.neighbor_id,
-         p.dp / (sqrt(qn.nn) * sqrt(vn.nn)) AS cosine
-  FROM pairs p
-  JOIN norms qn ON qn.doc_id = p.query_id
-  JOIN norms vn ON vn.doc_id = p.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (
-           PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-         ) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       cosine AS score
-FROM ranked WHERE rank <= 3
-ORDER BY query_id, rank
-"""
+){_COSINE_TOP3}"""
 
 
 def multimodal_encoder_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -758,18 +809,7 @@ def _encoder_topk_sql() -> str:
         for b, w in enumerate(row)
     )
     return f"""
-WITH b AS (
-  SELECT doc_id, hex(encode(text)) AS h,
-         octet_length(encode(text)) AS n
-  FROM documents
-), e AS (
-  SELECT doc_id,
-    UNNEST([strpos('0123456789ABCDEF', h[2*i-1:2*i-1]) - 1
-            FOR i IN range(1, CAST(n AS INT) + 1)]) AS bin
-  FROM b
-), bins AS (
-  SELECT doc_id, bin, COUNT(*) AS cnt FROM e GROUP BY doc_id, bin
-), r(d, bin, w) AS (
+WITH {_byte_bins_sql()}, r(d, bin, w) AS (
   VALUES {weights}
 ), proj AS (
   SELECT bins.doc_id, r.d, CAST(SUM(r.w * bins.cnt) AS DOUBLE) AS p
@@ -782,24 +822,7 @@ WITH b AS (
   FROM proj q JOIN proj v ON q.d = v.d
   WHERE q.doc_id IN (0, 1, 2, 3, 4) AND v.doc_id <> q.doc_id
   GROUP BY q.doc_id, v.doc_id
-), scored AS (
-  SELECT p.query_id, p.neighbor_id,
-         p.dp / (sqrt(qn.nn) * sqrt(vn.nn)) AS cosine
-  FROM pairs p
-  JOIN norms qn ON qn.doc_id = p.query_id
-  JOIN norms vn ON vn.doc_id = p.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (
-           PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-         ) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       cosine AS score
-FROM ranked WHERE rank <= 3
-ORDER BY query_id, rank
-"""
+){_COSINE_TOP3}"""
 
 
 MULTIMODAL_ENCODER_TOPK_SQL = _encoder_topk_sql()
@@ -982,42 +1005,9 @@ def multimodal_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _neardup_recall_sql() -> str:
-    return """
-WITH b AS (
-  SELECT doc_id, hex(encode(text)) AS h,
-         octet_length(encode(text)) AS n
-  FROM documents WHERE doc_id % 5 = 0 AND doc_id < 100000
-), e AS (
-  SELECT doc_id,
-    UNNEST([strpos('0123456789ABCDEF', h[2*i-1:2*i-1]) - 1
-            FOR i IN range(1, CAST(n AS INT) + 1)]) AS bin
-  FROM b
-), bins AS (
-  SELECT doc_id, bin, COUNT(*) AS cnt FROM e GROUP BY doc_id, bin
-), tot AS (
-  SELECT doc_id, SUM(cnt) AS t FROM bins GROUP BY doc_id
-), dense AS (
-  SELECT t.doc_id, r.i AS bin, COALESCE(bn.cnt, 0) AS cnt, t.t
-  FROM tot t CROSS JOIN range(16) r(i)
-  LEFT JOIN bins bn ON bn.doc_id = t.doc_id AND bn.bin = r.i
-), keys AS (
-  SELECT doc_id, bin // 4 AS band,
-         string_agg(CAST((cnt * 64) // t AS VARCHAR), ',' ORDER BY bin)
-           AS bkey
-  FROM dense GROUP BY doc_id, bin // 4
-), live AS (
-  SELECT * FROM keys WHERE bkey <> '0,0,0,0'
-), ok AS (
-  SELECT band, bkey FROM live GROUP BY band, bkey HAVING COUNT(*) <= 64
-), kept AS (
-  SELECT l.* FROM live l JOIN ok USING (band, bkey)
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-  FROM kept a JOIN kept c ON a.band = c.band AND a.bkey = c.bkey
-                         AND a.doc_id < c.doc_id
-), norms AS (
-  SELECT doc_id, CAST(SUM(cnt * cnt) AS DOUBLE) AS nn FROM bins GROUP BY doc_id
-), alldp AS (
+    bins = _byte_bins_sql(" WHERE doc_id % 5 = 0 AND doc_id < 100000")
+    return f"""
+WITH {bins}{_BIN_BAND_CANDS}{_BIN_NORMS}, alldp AS (
   SELECT x.doc_id AS id_a, y.doc_id AS id_b,
          CAST(SUM(x.cnt * y.cnt) AS DOUBLE) AS dp
   FROM bins x JOIN bins y ON y.bin = x.bin AND x.doc_id < y.doc_id
@@ -1042,42 +1032,8 @@ FROM truth, det
 """
 
 
-MULTIMODAL_NEARDUP_SQL = """
-WITH b AS (
-  SELECT doc_id, hex(encode(text)) AS h,
-         octet_length(encode(text)) AS n
-  FROM documents
-), e AS (
-  SELECT doc_id,
-    UNNEST([strpos('0123456789ABCDEF', h[2*i-1:2*i-1]) - 1
-            FOR i IN range(1, CAST(n AS INT) + 1)]) AS bin
-  FROM b
-), bins AS (
-  SELECT doc_id, bin, COUNT(*) AS cnt FROM e GROUP BY doc_id, bin
-), tot AS (
-  SELECT doc_id, SUM(cnt) AS t FROM bins GROUP BY doc_id
-), dense AS (
-  SELECT t.doc_id, r.i AS bin, COALESCE(bn.cnt, 0) AS cnt, t.t
-  FROM tot t CROSS JOIN range(16) r(i)
-  LEFT JOIN bins bn ON bn.doc_id = t.doc_id AND bn.bin = r.i
-), keys AS (
-  SELECT doc_id, bin // 4 AS band,
-         string_agg(CAST((cnt * 64) // t AS VARCHAR), ',' ORDER BY bin)
-           AS bkey
-  FROM dense GROUP BY doc_id, bin // 4
-), live AS (
-  SELECT * FROM keys WHERE bkey <> '0,0,0,0'
-), ok AS (
-  SELECT band, bkey FROM live GROUP BY band, bkey HAVING COUNT(*) <= 64
-), kept AS (
-  SELECT l.* FROM live l JOIN ok USING (band, bkey)
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-  FROM kept a JOIN kept c ON a.band = c.band AND a.bkey = c.bkey
-                         AND a.doc_id < c.doc_id
-), norms AS (
-  SELECT doc_id, CAST(SUM(cnt * cnt) AS DOUBLE) AS nn FROM bins GROUP BY doc_id
-), dp AS (
+MULTIMODAL_NEARDUP_SQL = f"""
+WITH {_byte_bins_sql()}{_BIN_BAND_CANDS}{_BIN_NORMS}, dp AS (
   SELECT cand.id_a, cand.id_b, CAST(SUM(x.cnt * y.cnt) AS DOUBLE) AS dp
   FROM cand
   JOIN bins x ON x.doc_id = cand.id_a
@@ -1106,35 +1062,68 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-PIPELINE_CURATION_SQL = f"""
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks,
-         length(text) AS n_chars,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha_chars,
+# grams: each document's token 2-grams (functions.text.repetition_features).
+_BIGRAMS = """CASE WHEN len(toks) >= 2
+                THEN list_transform(generate_series(1, len(toks) - 1),
+                                    i -> toks[i] || ' ' || toks[i + 1])
+                ELSE [] END AS grams"""
+
+_DUP_2GRAM_FRACTION = """CASE WHEN len(grams) > 0
+              THEN (len(grams) - len(list_distinct(grams))) / len(grams)
+              ELSE 0.0 END AS dup_2gram_fraction"""
+
+
+def _contamination_grams_sql(g: str) -> str:
+    """CTEs ``{g}(doc_id, grams)``, each document's distinct token 5-grams
+    (functions.text.contamination_check), ``doc_grams(doc_id, gram)`` and
+    ``bench_grams(gram)``, the grams of the benchmark documents
+    (doc_id % 97 = 0)."""
+    return f"""{g} AS (
+  SELECT doc_id,
+         CASE WHEN len(toks) >= 5
+              THEN list_distinct(list_transform(
+                     generate_series(1, len(toks) - 4),
+                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                          || ' ' || toks[i+3] || ' ' || toks[i+4]))
+              ELSE [] END AS grams
+  FROM t
+), doc_grams AS (
+  SELECT doc_id, unnest(grams) AS gram FROM {g}
+), bench_grams AS (
+  SELECT DISTINCT unnest(grams) AS gram FROM {g} WHERE doc_id % 97 = 0
+)"""
+
+
+def _curation_langd_sql(carry: str = "") -> str:
+    """CTEs t, feat, scored and langd(doc_id, fingerprint, n_tokens,
+    quality_score, lang_pred): pipeline.curate's fused quality and
+    language scoring. ``carry`` ("toks, ") keeps columns through feat and
+    scored."""
+    return f"""t AS (
+  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks{QUALITY_CHARS_SQL},
          md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
   FROM documents
 ), feat AS (
-  SELECT doc_id, fingerprint,
+  SELECT doc_id, fingerprint, {carry}
          CAST(len(toks) AS INT) AS n_tokens,
-         len(list_filter(toks, x -> x IN ({_stop_list_sql()}))) / len(toks)
-           AS stopword_ratio,
-         alpha_chars / n_chars AS alpha_ratio,
-         (n_chars - (len(toks) - 1)) / len(toks) AS mean_token_len,
+         {quality_features_sql()},
          {_SCORES}
   FROM t
 ), scored AS (
-  SELECT doc_id, fingerprint, n_tokens,
-         alpha_ratio * 0.5
-         + LEAST(stopword_ratio * 4.0, 1.0) * 0.3
-         + LEAST(mean_token_len / 8.0, 1.0) * 0.2 AS quality_score,
-         GREATEST(score_de, score_en, score_es, score_fr, score_zh) AS best,
+  SELECT doc_id, fingerprint, {carry}n_tokens,
+         {QUALITY_SCORE_SQL},
+         {_BEST},
          score_de, score_en, score_es, score_fr, score_zh
   FROM feat
 ), langd AS (
   SELECT doc_id, fingerprint, n_tokens, quality_score,
-         CASE WHEN best > 0 THEN CASE {_CASE} END ELSE 'und' END AS lang_pred
+         {_LANG_PRED}
   FROM scored
-), kept AS (
+)"""
+
+
+PIPELINE_CURATION_SQL = f"""
+WITH {_curation_langd_sql()}, kept AS (
   SELECT * FROM langd WHERE quality_score >= 0.58
 ), dedup AS (
   SELECT MIN(doc_id) AS doc_id FROM kept GROUP BY fingerprint
@@ -1178,60 +1167,15 @@ def pipeline_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PIPELINE_CURATION_FULL_SQL = f"""
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks,
-         length(text) AS n_chars,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha_chars,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
-  FROM documents
-), feat AS (
-  SELECT doc_id, fingerprint, toks,
-         CAST(len(toks) AS INT) AS n_tokens,
-         len(list_filter(toks, x -> x IN ({{stops}}))) / len(toks)
-           AS stopword_ratio,
-         alpha_chars / n_chars AS alpha_ratio,
-         (n_chars - (len(toks) - 1)) / len(toks) AS mean_token_len,
-         {{scores}}
-  FROM t
-), scored AS (
-  SELECT doc_id, fingerprint, toks, n_tokens,
-         alpha_ratio * 0.5
-         + LEAST(stopword_ratio * 4.0, 1.0) * 0.3
-         + LEAST(mean_token_len / 8.0, 1.0) * 0.2 AS quality_score,
-         GREATEST(score_de, score_en, score_es, score_fr, score_zh) AS best,
-         score_de, score_en, score_es, score_fr, score_zh
-  FROM feat
-), langd AS (
-  SELECT doc_id, fingerprint, n_tokens, quality_score,
-         CASE WHEN best > 0 THEN CASE {{case}} END ELSE 'und' END AS lang_pred
-  FROM scored
-), rep AS (
+WITH {_curation_langd_sql("toks, ")}, rep AS (
   SELECT doc_id,
-         CASE WHEN len(grams) > 0
-              THEN (len(grams) - len(list_distinct(grams))) / len(grams)
-              ELSE 0.0 END AS dup_2gram_fraction
+         {_DUP_2GRAM_FRACTION}
   FROM (
     SELECT doc_id,
-           CASE WHEN len(toks) >= 2
-                THEN list_transform(generate_series(1, len(toks) - 1),
-                                    i -> toks[i] || ' ' || toks[i + 1])
-                ELSE [] END AS grams
+           {_BIGRAMS}
     FROM t
   )
-), g5 AS (
-  SELECT doc_id,
-         CASE WHEN len(toks) >= 5
-              THEN list_distinct(list_transform(
-                     generate_series(1, len(toks) - 4),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                          || ' ' || toks[i+3] || ' ' || toks[i+4]))
-              ELSE [] END AS grams
-  FROM t
-), doc_grams AS (
-  SELECT doc_id, unnest(grams) AS gram FROM g5
-), bench_grams AS (
-  SELECT DISTINCT unnest(grams) AS gram FROM g5 WHERE doc_id % 97 = 0
-), contam AS (
+), {_contamination_grams_sql("g5")}, contam AS (
   SELECT d.doc_id, COUNT(b.gram) / COUNT(*) AS contamination
   FROM doc_grams d LEFT JOIN bench_grams b ON b.gram = d.gram
   GROUP BY d.doc_id
@@ -1251,7 +1195,7 @@ JOIN dedup d ON k.doc_id = d.doc_id
 LEFT JOIN contam c ON c.doc_id = k.doc_id
 WHERE COALESCE(c.contamination, 0.0) <= 0.5
 ORDER BY k.doc_id
-""".format(stops=_stop_list_sql(), scores=_SCORES, case=_CASE)
+"""
 
 
 def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1479,27 +1423,10 @@ def text_language_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CONF_SCORES = ",\n       ".join(
-    f"CAST(len(list_filter(toks, x -> x IN "
-    f"({', '.join(repr(m) for m in T.LANG_MARKERS[lang])}))) AS INT) AS score_{lang}"
-    for lang in sorted(T.LANG_MARKERS)
-)
-
 TEXT_LANG_CONFUSION_SQL = f"""
-WITH t AS (
-  SELECT doc_id, lang AS lang_declared,
-         string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents
-), scored AS (
-  SELECT doc_id, lang_declared,
-       {_CONF_SCORES}
-  FROM t
-), best AS (
-  SELECT *, GREATEST(score_de, score_en, score_es, score_fr, score_zh) AS best
-  FROM scored
-), pred AS (
+WITH {_LANG_BEST}, pred AS (
   SELECT lang_declared,
-         CASE WHEN best > 0 THEN CASE {_CASE} END ELSE 'und' END AS lang_pred
+         {_LANG_PRED}
   FROM best
 ), pairs AS (
   SELECT lang_declared, lang_pred, COUNT(*) AS n
@@ -1523,16 +1450,13 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_REPETITION_SQL = """
+TEXT_REPETITION_SQL = f"""
 WITH t AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
   FROM documents
 ), g AS (
   SELECT doc_id, toks,
-         CASE WHEN len(toks) >= 2
-              THEN list_transform(generate_series(1, len(toks) - 1),
-                                  i -> toks[i] || ' ' || toks[i + 1])
-              ELSE [] END AS grams
+         {_BIGRAMS}
   FROM t
 )
 SELECT doc_id,
@@ -1541,9 +1465,7 @@ SELECT doc_id,
        list_max(list_transform(list_distinct(toks),
                                u -> len(list_filter(toks, x -> x = u))))
          / len(toks) AS top_token_fraction,
-       CASE WHEN len(grams) > 0
-            THEN (len(grams) - len(list_distinct(grams))) / len(grams)
-            ELSE 0.0 END AS dup_2gram_fraction
+       {_DUP_2GRAM_FRACTION}
 FROM g
 ORDER BY doc_id
 """
@@ -1587,24 +1509,11 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.contamination_check(docs, bench, n=5).orderBy("doc_id")
 
 
-TEXT_CONTAMINATION_SQL = """
+TEXT_CONTAMINATION_SQL = f"""
 WITH t AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
   FROM documents
-), g AS (
-  SELECT doc_id,
-         CASE WHEN len(toks) >= 5
-              THEN list_distinct(list_transform(
-                     generate_series(1, len(toks) - 4),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                          || ' ' || toks[i+3] || ' ' || toks[i+4]))
-              ELSE [] END AS grams
-  FROM t
-), doc_grams AS (
-  SELECT doc_id, unnest(grams) AS gram FROM g
-), bench_grams AS (
-  SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 97 = 0
-)
+), {_contamination_grams_sql("g")}
 SELECT d.doc_id,
        COUNT(*) AS n_grams,
        CAST(COUNT(b.gram) AS INT) AS n_overlap,
@@ -1624,8 +1533,9 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "chunk_id")
 
 
-TEXT_CHUNKING_SQL = """
-WITH t AS (
+# t, c and e(doc_id, toks, chunk_id): the 16-token windows at stride 12
+# of functions.text.chunk_documents.
+_CHUNKS_SQL = """t AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
   FROM documents
 ), c AS (
@@ -1638,7 +1548,10 @@ WITH t AS (
   SELECT doc_id, toks,
          unnest(generate_series(0, n_chunks - 1)) AS chunk_id
   FROM c
-)
+)"""
+
+TEXT_CHUNKING_SQL = f"""
+WITH {_CHUNKS_SQL}
 SELECT doc_id,
        CAST(chunk_id AS INT) AS chunk_id,
        CAST(len(toks[chunk_id * 12 + 1 : chunk_id * 12 + 16]) AS INT)
@@ -1678,7 +1591,7 @@ WITH t AS (
 ), feat AS (
   SELECT doc_id, lang,
          (alpha_chars / n_chars) * 0.5
-         + LEAST((len(list_filter(toks, x -> x IN ({_stop_list_sql()})))
+         + LEAST((len(list_filter(toks, x -> x IN ({stop_list_sql()})))
                   / len(toks)) * 4.0, 1.0) * 0.3
          + LEAST(((n_chars - (len(toks) - 1)) / len(toks)) / 8.0, 1.0) * 0.2
            AS quality_score
@@ -1740,21 +1653,8 @@ def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_DUPLICATE_SPANS_SQL = """
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents
-), c AS (
-  SELECT doc_id, toks,
-         CASE WHEN len(toks) <= 16 THEN 1
-              ELSE 1 + CAST(FLOOR((len(toks) - 16 + 12 - 1) / 12.0) AS INT)
-         END AS n_chunks
-  FROM t
-), e AS (
-  SELECT doc_id, toks,
-         unnest(generate_series(0, n_chunks - 1)) AS chunk_id
-  FROM c
-), ch AS (
+TEXT_DUPLICATE_SPANS_SQL = f"""
+WITH {_CHUNKS_SQL}, ch AS (
   SELECT doc_id,
          md5(array_to_string(toks[chunk_id * 12 + 1 : chunk_id * 12 + 16], ' '))
            AS chunk_fp
@@ -1784,8 +1684,9 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _H60 = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
 
-TEXT_QUALITY_CLASSIFIER_SQL = f"""
-WITH t AS (
+# t and s(doc_id, n_tokens, score_milli): the md5-hashed bag-of-buckets
+# score of functions.text.hashed_linear_score (1024 buckets).
+_HASHED_SCORE_SQL = f"""t AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
 ), s AS (
   SELECT doc_id, len(toks) AS n_tokens,
@@ -1793,7 +1694,10 @@ WITH t AS (
            {_H60.format(x="'w#' || CAST(" + _H60.format(x='x') + " % 1024 AS VARCHAR)")}
              % 2001 - 1000)) AS score_milli
   FROM t
-)
+)"""
+
+TEXT_QUALITY_CLASSIFIER_SQL = f"""
+WITH {_HASHED_SCORE_SQL}
 SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
        CAST(score_milli AS DOUBLE) / (1000.0 * n_tokens) AS score,
        CAST(score_milli AS DOUBLE) / (1000.0 * n_tokens) >= 0.0 AS keep
@@ -2056,15 +1960,7 @@ def text_score_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TEXT_SCORE_DISTRIBUTION_SQL = f"""
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), s AS (
-  SELECT doc_id, len(toks) AS n_tokens,
-         list_sum(list_transform(toks, x ->
-           {_H60.format(x="'w#' || CAST(" + _H60.format(x='x') + " % 1024 AS VARCHAR)")}
-             % 2001 - 1000)) AS score_milli
-  FROM t
-), b AS (
+WITH {_HASHED_SCORE_SQL}, b AS (
   SELECT CAST(floor((CAST(score_milli AS DOUBLE)
            / (1000.0 * CAST(n_tokens AS DOUBLE))) * 10.0) AS INT) AS bin,
          score_milli, n_tokens
@@ -2100,33 +1996,40 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_merges(docs, k=4).orderBy("merge_rank")
 
 
-def _bpe_stages_sql(k: int = 4) -> str:
-    """Shared WITH-prefix for the BPE oracles: word table, character
-    state, and k learn+apply stages (argmax as a 1-row cross join)."""
-    stages = []
-    for i in range(1, k + 1):
-        prev = f"s{i - 1}"
-        stages.append(f"""
+# The BPE oracles' word table w0(w, freq) (the ASCII-alphanumeric tokens)
+# and initial state s0(w, freq, syms), one symbol per character.
+_BPE_WORDS = """
+WITH w0 AS (
+  SELECT w, COUNT(*) AS freq FROM (
+    SELECT UNNEST(string_split_regex(trim(text), '\\s+')) AS w
+    FROM documents
+  ) WHERE regexp_full_match(w, '[A-Za-z0-9]+')
+  GROUP BY w
+), s0 AS (
+  SELECT w, freq,
+         [substr(w, i, 1) FOR i IN range(1, CAST(strlen(w) AS INT) + 1)]
+           AS syms
+  FROM w0
+),"""
+
+
+def _bpe_positions_sql(i: int) -> str:
+    """CTE ``pa{i}``: stage i-1's symbols exploded with their positions."""
+    return f"""
 pa{i} AS (
   SELECT w, freq,
          UNNEST([{{'pos': j - 1, 'sym': syms[j]}}
                  FOR j IN range(1, len(syms) + 1)]) AS u
-  FROM {prev}
-), p{i} AS (
-  SELECT w, freq, u.pos AS pos, u.sym AS sym,
-         lead(u.sym) OVER (PARTITION BY w ORDER BY u.pos) AS nxt
-  FROM pa{i}
-), best{i} AS (
-  SELECT sym AS a, nxt AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-  FROM p{i} WHERE nxt IS NOT NULL
-  GROUP BY sym, nxt
-  ORDER BY cnt DESC, a ASC, b ASC
-  LIMIT 1
-), f{i} AS (
-  SELECT p.w, p.freq, p.pos, p.sym, p.nxt,
-         CASE WHEN p.sym = b.a AND p.nxt = b.b THEN 1 ELSE 0 END AS m
-  FROM p{i} p CROSS JOIN best{i} b
-), g{i} AS (
+  FROM s{i - 1}
+)"""
+
+
+def _bpe_apply_sql(i: int) -> str:
+    """The run-parity merge over ``f{i}(w, freq, pos, sym, nxt, m)``,
+    where m flags a selected pair: within each run of matches only every
+    other one merges (greedy left to right), and the symbol after a merge
+    is consumed. Defines the new state ``s{i}(w, freq, syms)``."""
+    return f""", g{i} AS (
   SELECT *, COALESCE(MAX(CASE WHEN m = 0 THEN pos END) OVER (
               PARTITION BY w ORDER BY pos
               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
@@ -2146,20 +2049,61 @@ pa{i} AS (
               ORDER BY pos) AS syms
   FROM c{i} WHERE consumed = 0
   GROUP BY w, freq
-)""")
-    return f"""
-WITH w0 AS (
-  SELECT w, COUNT(*) AS freq FROM (
-    SELECT UNNEST(string_split_regex(trim(text), '\\s+')) AS w
-    FROM documents
-  ) WHERE regexp_full_match(w, '[A-Za-z0-9]+')
-  GROUP BY w
-), s0 AS (
-  SELECT w, freq,
-         [substr(w, i, 1) FOR i IN range(1, CAST(strlen(w) AS INT) + 1)]
-           AS syms
-  FROM w0
-),{",".join(stages)}"""
+)"""
+
+
+def _bpe_segment_tail_sql(k: int) -> str:
+    """Segments every document with the final state ``s{k}``: the
+    positional token explode, the word join and the ordered fingerprint,
+    as the query result."""
+    return f""",
+dt AS (
+  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+  FROM documents
+), dz AS (
+  SELECT doc_id,
+         UNNEST([{{'i': i, 't': toks[i]}}
+                 FOR i IN range(1, len(toks) + 1)]) AS s
+  FROM dt
+), dw AS (
+  SELECT doc_id, s.i - 1 AS tpos, s.t AS w
+  FROM dz WHERE regexp_full_match(s.t, '[A-Za-z0-9]+')
+), seg AS (
+  SELECT dw.doc_id, dw.tpos, s{k}.syms
+  FROM dw JOIN s{k} ON s{k}.w = dw.w
+)
+SELECT doc_id,
+       CAST(COUNT(*) AS INT) AS n_words,
+       CAST(SUM(len(syms)) AS BIGINT) AS n_subwords,
+       md5(string_agg(array_to_string(syms, ' '), ' ' ORDER BY tpos))
+         AS subword_fp
+FROM seg
+GROUP BY doc_id
+ORDER BY doc_id
+"""
+
+
+def _bpe_stages_sql(k: int = 4) -> str:
+    """Shared WITH-prefix for the BPE oracles: word table, character
+    state, and k learn+apply stages (argmax as a 1-row cross join)."""
+    stages = []
+    for i in range(1, k + 1):
+        stages.append(f"""{_bpe_positions_sql(i)}, p{i} AS (
+  SELECT w, freq, u.pos AS pos, u.sym AS sym,
+         lead(u.sym) OVER (PARTITION BY w ORDER BY u.pos) AS nxt
+  FROM pa{i}
+), best{i} AS (
+  SELECT sym AS a, nxt AS b, CAST(SUM(freq) AS BIGINT) AS cnt
+  FROM p{i} WHERE nxt IS NOT NULL
+  GROUP BY sym, nxt
+  ORDER BY cnt DESC, a ASC, b ASC
+  LIMIT 1
+), f{i} AS (
+  SELECT p.w, p.freq, p.pos, p.sym, p.nxt,
+         CASE WHEN p.sym = b.a AND p.nxt = b.b THEN 1 ELSE 0 END AS m
+  FROM p{i} p CROSS JOIN best{i} b
+){_bpe_apply_sql(i)}""")
+    return _BPE_WORDS + ",".join(stages)
 
 
 def _bpe_merges_sql(k: int = 4) -> str:
@@ -2193,31 +2137,7 @@ def text_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_segment_sql(k: int = 4) -> str:
-    return f"""{_bpe_stages_sql(k)},
-dt AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents
-), dz AS (
-  SELECT doc_id,
-         UNNEST([{{'i': i, 't': toks[i]}}
-                 FOR i IN range(1, len(toks) + 1)]) AS s
-  FROM dt
-), dw AS (
-  SELECT doc_id, s.i - 1 AS tpos, s.t AS w
-  FROM dz WHERE regexp_full_match(s.t, '[A-Za-z0-9]+')
-), seg AS (
-  SELECT dw.doc_id, dw.tpos, s{k}.syms
-  FROM dw JOIN s{k} ON s{k}.w = dw.w
-)
-SELECT doc_id,
-       CAST(COUNT(*) AS INT) AS n_words,
-       CAST(SUM(len(syms)) AS BIGINT) AS n_subwords,
-       md5(string_agg(array_to_string(syms, ' '), ' ' ORDER BY tpos))
-         AS subword_fp
-FROM seg
-GROUP BY doc_id
-ORDER BY doc_id
-"""
+    return _bpe_stages_sql(k) + _bpe_segment_tail_sql(k)
 
 
 def text_bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2259,7 +2179,6 @@ def _bpe_batched_stages_sql(passes: int = 3, m: int = 3) -> str:
     pool = m * _BPE_CANDIDATE_OVERFETCH
     stages = []
     for i in range(1, passes + 1):
-        prev = f"s{i - 1}"
         greedy = [
             f"""
 st{i}_0 AS (
@@ -2293,13 +2212,7 @@ sel{i} AS MATERIALIZED (
     {sel_union}
   ) WHERE taken
 )""")
-        stages.append(f"""
-pa{i} AS (
-  SELECT w, freq,
-         UNNEST([{{'pos': j - 1, 'sym': syms[j]}}
-                 FOR j IN range(1, len(syms) + 1)]) AS u
-  FROM {prev}
-), p{i} AS MATERIALIZED (
+        stages.append(f"""{_bpe_positions_sql(i)}, p{i} AS MATERIALIZED (
   -- MATERIALIZED (here and on rk/sel/s below): the greedy-selection
   -- chain references rk{i} once per unrolled rank; letting DuckDB
   -- inline these multi-referenced CTEs re-expands the whole upstream
@@ -2322,40 +2235,8 @@ pa{i} AS (
   SELECT p.w, p.freq, p.pos, p.sym, p.nxt,
          CASE WHEN s.a IS NOT NULL THEN 1 ELSE 0 END AS m
   FROM p{i} p LEFT JOIN sel{i} s ON s.a = p.sym AND s.b = p.nxt
-), g{i} AS (
-  SELECT *, COALESCE(MAX(CASE WHEN m = 0 THEN pos END) OVER (
-              PARTITION BY w ORDER BY pos
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-            ) + 1, 0) AS run_start
-  FROM f{i}
-), h{i} AS (
-  SELECT *, CASE WHEN m = 1 AND (pos - run_start) % 2 = 0
-                 THEN 1 ELSE 0 END AS mg
-  FROM g{i}
-), c{i} AS (
-  SELECT *, COALESCE(LAG(mg) OVER (PARTITION BY w ORDER BY pos), 0)
-              AS consumed
-  FROM h{i}
-), s{i} AS (
-  SELECT w, freq,
-         list(CASE WHEN mg = 1 THEN sym || nxt ELSE sym END
-              ORDER BY pos) AS syms
-  FROM c{i} WHERE consumed = 0
-  GROUP BY w, freq
-)""")
-    return f"""
-WITH w0 AS (
-  SELECT w, COUNT(*) AS freq FROM (
-    SELECT UNNEST(string_split_regex(trim(text), '\\s+')) AS w
-    FROM documents
-  ) WHERE regexp_full_match(w, '[A-Za-z0-9]+')
-  GROUP BY w
-), s0 AS (
-  SELECT w, freq,
-         [substr(w, i, 1) FOR i IN range(1, CAST(strlen(w) AS INT) + 1)]
-           AS syms
-  FROM w0
-),{",".join(stages)}"""
+){_bpe_apply_sql(i)}""")
+    return _BPE_WORDS + ",".join(stages)
 
 
 def _bpe_batched_sql(passes: int = 3, m: int = 3) -> str:
@@ -2391,31 +2272,7 @@ def text_bpe_segment_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_segment_batched_sql(passes: int = 3, m: int = 3) -> str:
-    return f"""{_bpe_batched_stages_sql(passes, m)},
-dt AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents
-), dz AS (
-  SELECT doc_id,
-         UNNEST([{{'i': i, 't': toks[i]}}
-                 FOR i IN range(1, len(toks) + 1)]) AS s
-  FROM dt
-), dw AS (
-  SELECT doc_id, s.i - 1 AS tpos, s.t AS w
-  FROM dz WHERE regexp_full_match(s.t, '[A-Za-z0-9]+')
-), seg AS (
-  SELECT dw.doc_id, dw.tpos, s{passes}.syms
-  FROM dw JOIN s{passes} ON s{passes}.w = dw.w
-)
-SELECT doc_id,
-       CAST(COUNT(*) AS INT) AS n_words,
-       CAST(SUM(len(syms)) AS BIGINT) AS n_subwords,
-       md5(string_agg(array_to_string(syms, ' '), ' ' ORDER BY tpos))
-         AS subword_fp
-FROM seg
-GROUP BY doc_id
-ORDER BY doc_id
-"""
+    return _bpe_batched_stages_sql(passes, m) + _bpe_segment_tail_sql(passes)
 
 
 def text_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:

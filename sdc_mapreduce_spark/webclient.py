@@ -265,28 +265,15 @@ class _Handler(BaseHTTPRequestHandler):
             return self._reply(200, {"queries": sorted(REGISTRY)})
         if parts == ["jobs"]:
             return self._reply(
-                200, {"jobs": [self._job_dict(j) for j in self.server.queue.all()]}
+                200, {"jobs": [j.record() for j in self.server.queue.all()]}
             )
         if len(parts) == 2 and parts[0] == "jobs":
             try:
                 job = self.server.queue.job(int(parts[1]))
             except (KeyError, ValueError):
                 return self._reply(404, {"error": f"no job {parts[1]}"})
-            return self._reply(200, self._job_dict(job))
+            return self._reply(200, job.record())
         return self._reply(404, {"error": "not found"})
-
-    @staticmethod
-    def _job_dict(job) -> dict:
-        return {
-            "job_id": job.job_id,
-            "name": job.name,
-            "status": job.status,
-            "submitted_at": job.submitted_at,
-            "started_at": job.started_at,
-            "finished_at": job.finished_at,
-            "error": job.error,
-            "result_rows": job.result_rows,
-        }
 
 
 class JobServer(ThreadingHTTPServer):

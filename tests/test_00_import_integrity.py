@@ -125,7 +125,6 @@ def test_injected_module_error_trips_the_gate(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr
     quarantined = json.loads(proc.stdout.strip().splitlines()[-1])
-    # dedup_queries imports helpers from text_queries, so the break
-    # cascades — the victim plus its importers quarantine, nothing else.
-    assert "text_queries" in quarantined, quarantined
-    assert set(quarantined) <= {"text_queries", "dedup_queries"}, quarantined
+    # no query module imports another (shared oracle fragments live in
+    # queries/base.py), so exactly the victim quarantines.
+    assert quarantined == ["text_queries"], quarantined

@@ -891,3 +891,43 @@ def test_band_rows_arrow_vectorization_is_bitwise(spark, sf_dir):
         for r in D._band_rows_arrow(sets, num_hashes=num_hashes, bands=bands).collect()
     }
     assert got == expected
+
+
+def test_shingle_sets_hostile_text_matches_duckdb_and_nulls_never_pair(spark):
+    """Hostile document text: per document, shingle_sets must give the
+    set size the shared DuckDB shingle fragment of the oracles gives over
+    the same rows (null text: no shingles; empty and whitespace-only text:
+    one whole-text shingle), and no pair operator may return a null-text
+    document. Hashing null text would give every null document the same
+    shingle and pair all of them at Jaccard 1.0."""
+    import duckdb
+    import pandas as pd
+
+    from sdc_mapreduce_spark.queries.dedup_queries import _shingles_sql
+
+    texts = [
+        None, "", "   ", "a", "a b", "a a a a a", "\tx y z", " x  y   z ",
+        "x\ny\tz w", None, None, None,
+        "the cat sat on the warm mat by the door",
+        "the cat sat on the warm mat by the door",
+    ]
+    rows = list(enumerate(texts))
+    null_ids = {i for i, t in rows if t is None}
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    got = {r["doc_id"]: len(r["shingles"]) for r in D.shingle_sets(docs, n=3).collect()}
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    sizes = f"WITH {_shingles_sql()} SELECT doc_id, len(shingles) FROM sh"
+    expected = dict(con.execute(sizes).fetchall())
+    assert {i: got.get(i, 0) for i, _ in rows} == expected
+    assert all(expected[i] == 0 for i in null_ids)
+
+    for pairs in (
+        D.jaccard_pairs(docs, n=3, threshold=0.8),
+        D.minhash_lsh_pairs(docs, num_hashes=128, bands=32, n=3, threshold=0.8),
+        D.jaccard_prefix_pairs(docs, n=3, threshold=0.8),
+    ):
+        found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+        assert (12, 13) in found
+        assert not {i for pair in found for i in pair} & null_ids, found

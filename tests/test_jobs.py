@@ -24,12 +24,12 @@ def test_fifo_order_and_lifecycle(spark, tmp_path):
     j1 = q.submit(plan(1), name="first")
     j2 = q.submit(plan(2), name="second")
     assert q.status(j1) == J.CREATED and q.status(j2) == J.CREATED
-    # next_created scans in sequence order — the reference master's
-    # lowest-znode-first poll.
-    assert q.next_created().job_id == j1
+    assert q.pending_count() == 2
 
     n = J.JobRunner(spark, q).run_pending()
     assert n == 2
+    # the runner claims in sequence order — the reference master's
+    # lowest-znode-first poll.
     assert ran == [1, 2]
     assert q.status(j1) == J.COMPLETED and q.status(j2) == J.COMPLETED
     assert q.job(j1).result_rows == 3
@@ -120,7 +120,7 @@ def test_queue_recovers_state_and_fails_orphans(spark, tmp_path):
     assert q2.status(99) == "FAILED"
     assert "orphaned" in q2.job(99).error
     # recovered orphans are terminal: nothing pending to re-run
-    assert q2.next_created() is None
+    assert q2.pending_count() == 0 and q2.claim_next() is None
     # sequence continues past the recovered max id
     new_id = q2.submit(lambda s: s.range(1), name="after-restart")
     assert new_id == 100

@@ -22,8 +22,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
+from sdc_mapreduce_spark.cache import drain_pins
 from sdc_mapreduce_spark.catalog import TABLES, table_path
-from sdc_mapreduce_spark.queries.base import drain_pins
 from sdc_mapreduce_spark.session import get_spark
 
 
@@ -226,7 +226,7 @@ def main() -> int:
             # per-query cache hygiene: release pin()'d persists + stray
             # cache entries + nudge the ContextCleaner for localCheckpoint
             # blocks — a full-registry session stays flat on executor
-            # storage (queries/base.py::drain_pins, VERDICT r9 ask #5)
+            # storage (cache.py::drain_pins)
             drain_pins(spark, gc_nudge=True, clear_cache=True)
         except Exception as exc:
             msg = str(exc).splitlines()[0][:200]

@@ -15,10 +15,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from sdc_mapreduce_spark.cache import drain_pins
 from sdc_mapreduce_spark.catalog import DEFAULT_SF_DIR
 from sdc_mapreduce_spark.plans import formatted_plan
 from sdc_mapreduce_spark.queries import REGISTRY, bench_queries
-from sdc_mapreduce_spark.queries.base import drain_pins
 from sdc_mapreduce_spark.session import get_spark
 
 

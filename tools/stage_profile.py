@@ -16,8 +16,8 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from sdc_mapreduce_spark.cache import drain_pins
 from sdc_mapreduce_spark.queries import REGISTRY
-from sdc_mapreduce_spark.queries.base import drain_pins
 from sdc_mapreduce_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
