@@ -139,6 +139,17 @@ def _read_steal():
         return None
 
 
+def _parallelism(spark) -> dict:
+    """The parallelism the run actually had, next to the CPU count it was
+    asked for: a mismatch makes its timings incomparable with other runs."""
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+    }
+
+
 def _steal_summary(steal_start, wall_start: float):
     steal_end = _read_steal()
     if steal_start is None or steal_end is None:
@@ -453,6 +464,7 @@ def main() -> None:
                 "end": [round(x, 2) for x in os.getloadavg()],
             },
             "host_steal": _steal_summary(steal_start, wall_start),
+            **_parallelism(spark),
         }
     )
     # The driver keeps only the LAST 2,000 bytes of stdout and parses the

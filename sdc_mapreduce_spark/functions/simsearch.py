@@ -1204,16 +1204,15 @@ def embedding_near_pairs_arrow(
     there (this mirrors how verification actually runs at scale: exact
     check on a sample, blocked pass on the corpus)."""
     spark = corpus.sparkSession
-    # limit+1 bounds the gate probe itself: an oversized corpus is refused
-    # after pulling max_vectors+1 ids, never the whole dataset (and the
-    # happy path pays no separate count() job — one scan total)
-    probe = corpus.select(id_col).limit(max_vectors + 1).count()
-    if probe > max_vectors:
+    # one bounded collect is both the gate and the data: limit+1 stops the
+    # scan at max_vectors+1 rows, so an oversized corpus is refused without
+    # pulling the whole dataset, and no separate count() job runs first
+    rows = corpus.select(id_col, vec_col).limit(max_vectors + 1).collect()
+    if len(rows) > max_vectors:
         raise ValueError(
             f"exact all-pairs corpus exceeds max_vectors={max_vectors}; "
             "use embedding_near_pairs_blocked for corpora of this size"
         )
-    rows = corpus.select(id_col, vec_col).collect()
     ids = np.asarray([r[id_col] for r in rows], dtype=np.int64)
     mat = np.asarray([list(r[vec_col]) for r in rows], dtype=np.float64)
     mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)

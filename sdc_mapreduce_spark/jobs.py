@@ -94,6 +94,12 @@ class JobQueue:
     get_next_job scan — lowest sequence number with status CREATED
     (reference src/master/master.cpp:300-336, ordering
     src/util/zook.h:161-181).
+
+    Every status change happens here, under one ``threading.Condition``:
+    the transition, its state file and ``notify_all`` form one step, so a
+    reader never sees a half-applied record and waiters (runner threads,
+    ``wait_for``, the cancel reaper) wake on the change instead of polling
+    for it.
     """
 
     def __init__(
@@ -101,12 +107,14 @@ class JobQueue:
     ) -> None:
         self._jobs: dict[int, Job] = {}
         self._seq = 0
-        self._lock = threading.Lock()
+        self._cond = threading.Condition()
+        self._closed = False
         self._max_pending = max_pending
         self._state_dir = Path(state_dir) if state_dir else None
         if self._state_dir:
             self._state_dir.mkdir(parents=True, exist_ok=True)
-            self._recover()
+            with self._cond:
+                self._recover()
 
     def _recover(self) -> None:
         """Reload persisted job records on construction — the restart
@@ -121,7 +129,7 @@ class JobQueue:
             try:
                 rec = json.loads(path.read_text())
             except (OSError, json.JSONDecodeError):
-                # _persist is atomic (tmp + replace), so a bad record means
+                # _publish is atomic (tmp + replace), so a bad record means
                 # external corruption; skip it rather than refusing to
                 # recover every healthy job
                 continue
@@ -144,7 +152,7 @@ class JobQueue:
                 job.status = FAILED
                 job.finished_at = job.finished_at or time.time()
             self._jobs[job.job_id] = job
-            self._persist(job)
+            self._publish(job)
         if self._jobs:
             self._seq = max(self._jobs)
 
@@ -155,42 +163,78 @@ class JobQueue:
         name: str = "",
         conf: dict[str, str] | None = None,
     ) -> int:
-        with self._lock:
-            # the pending bound is enforced HERE, under the queue lock —
-            # a pre-submit backlog check outside the lock is advisory only
-            # (two concurrent submits could both pass it)
-            if self._max_pending is not None:
-                pending = sum(1 for j in self._jobs.values() if j.status == CREATED)
-                if pending >= self._max_pending:
-                    raise QueueFullError(
-                        f"job queue full ({pending} pending >= {self._max_pending})"
-                    )
+        with self._cond:
+            # the pending bound is enforced HERE, under the queue lock, so
+            # two concurrent submits can never both take the last slot
+            pending = len(self._created())
+            if self._max_pending is not None and pending >= self._max_pending:
+                raise QueueFullError(
+                    f"job queue full ({pending} pending >= {self._max_pending})"
+                )
             self._seq += 1
             job = Job(
                 job_id=self._seq, plan=plan, sink=sink, name=name, conf=conf or {}
             )
             self._jobs[job.job_id] = job
-            self._persist(job)
+            self._publish(job)
             return job.job_id
 
-    def claim_next(self) -> Job | None:
+    def claim_next(self, wait: bool = False) -> Job | None:
         """Atomically claim the lowest-sequence CREATED job: flips it to
         RUNNING under the lock so concurrent runner workers never execute
         the same job twice (the multi-worker analog of the reference
-        master's single-leader scan)."""
-        with self._lock:
-            for jid in sorted(self._jobs):
-                job = self._jobs[jid]
-                if job.status == CREATED:
-                    job.status = RUNNING
-                    job.started_at = time.time()
-                    self._persist(job)
-                    return job
-        return None
+        master's single-leader scan). With ``wait``, block until a job
+        arrives; None once the queue is closed."""
+        with self._cond:
+            if wait:
+                self._cond.wait_for(lambda: self._closed or self._created())
+            created = [] if self._closed else self._created()
+            if not created:
+                return None
+            job = created[0]
+            job.status = RUNNING
+            job.started_at = time.time()
+            self._publish(job)
+            return job
+
+    def finish(
+        self,
+        job: Job,
+        status: str,
+        error: str | None = None,
+        result_rows: int | None = None,
+    ) -> None:
+        """Publish a claimed job's outcome: every terminal field lands in
+        the same step, so no reader sees COMPLETED without ``finished_at``
+        or a state file that still says RUNNING."""
+        with self._cond:
+            job.status, job.error, job.result_rows = status, error, result_rows
+            job.finished_at = time.time()
+            self._publish(job)
+
+    def close(self) -> None:
+        """Stop handing out jobs and wake every waiting runner thread."""
+        with self._cond:
+            self._closed = True
+            self._cond.notify_all()
+
+    def wait_for(self, job_id: int, timeout: float = 60.0) -> str:
+        """Block until the job is terminal and return its status; raise
+        TimeoutError if it is still CREATED/RUNNING at the deadline."""
+        with self._cond:
+            job = self._jobs[job_id]
+            if not self._cond.wait_for(
+                lambda: job.status not in (CREATED, RUNNING), timeout
+            ):
+                raise TimeoutError(f"job {job_id} still {job.status} after {timeout}s")
+            return job.status
 
     def pending_count(self) -> int:
-        with self._lock:
-            return sum(1 for j in self._jobs.values() if j.status == CREATED)
+        with self._cond:
+            return len(self._created())
+
+    def _created(self) -> list[Job]:
+        return [j for _, j in sorted(self._jobs.items()) if j.status == CREATED]
 
     def request_cancel(self, job_id: int) -> str:
         """Cancel a job. Returns the status the job held at the decision
@@ -198,14 +242,14 @@ class JobQueue:
         CANCELLED); RUNNING means the flag is set and the caller must
         interrupt the executing action (JobRunner.cancel does both);
         terminal statuses are returned unchanged (cancel is a no-op)."""
-        with self._lock:
+        with self._cond:
             job = self._jobs[job_id]
             was = job.status
             if was == CREATED:
                 job.status = CANCELLED
                 job.error = "cancelled before start"
                 job.finished_at = time.time()
-                self._persist(job)
+                self._publish(job)
             elif was == RUNNING:
                 job.cancel_requested = True
             return was
@@ -213,25 +257,33 @@ class JobQueue:
     def status(self, job_id: int) -> str:
         return self._jobs[job_id].status
 
+    def record(self, job_id: int) -> dict:
+        with self._cond:
+            return self._jobs[job_id].record()
+
+    def records(self) -> list[dict]:
+        with self._cond:
+            return [self._jobs[jid].record() for jid in sorted(self._jobs)]
+
     def all(self) -> list[Job]:
-        with self._lock:
+        with self._cond:
             return [self._jobs[jid] for jid in sorted(self._jobs)]
 
     def job(self, job_id: int) -> Job:
         return self._jobs[job_id]
 
-    def _persist(self, job: Job) -> None:
-        # Durable job-spec analog of the znode tree: one JSON file per job.
-        # Written atomically (tmp + rename) so a crash mid-persist — the
-        # exact scenario recovery exists for — can never leave a truncated
-        # record that poisons the next _recover.
-        if not self._state_dir:
-            return
-        payload = json.dumps(job.record())
-        final = self._state_dir / f"job_{job.job_id}.json"
-        tmp = final.with_suffix(".json.tmp")
-        tmp.write_text(payload)
-        os.replace(tmp, final)
+    def _publish(self, job: Job) -> None:
+        # Caller holds the condition. Durable job-spec analog of the znode
+        # tree: one JSON file per job, written before any waiter wakes so a
+        # woken reader and the disk agree. Written atomically (tmp + rename)
+        # so a crash mid-write — the exact scenario recovery exists for —
+        # can never leave a truncated record that poisons the next _recover.
+        if self._state_dir:
+            final = self._state_dir / f"job_{job.job_id}.json"
+            tmp = final.with_suffix(".json.tmp")
+            tmp.write_text(json.dumps(job.record()))
+            os.replace(tmp, final)
+        self._cond.notify_all()
 
 
 class QueueFullError(RuntimeError):
@@ -246,23 +298,24 @@ class JobRunner:
     """Single-leader job executor: drains the queue one job at a time, like
     the reference master's execute loop (reference
     src/master/master.cpp:338-372) without the 5 s poll sleep — the queue
-    signals instead of being polled."""
+    signals instead of being polled. The runner only reports outcomes;
+    ``JobQueue`` writes every status."""
 
     def __init__(self, spark: SparkSession, queue: JobQueue) -> None:
         self.spark = spark
         self.queue = queue
 
-    def run_pending(self) -> int:
+    def run_pending(self, wait: bool = False) -> int:
         """Run every CREATED job in sequence order; return count executed.
-        Claims are atomic (JobQueue.claim_next), so any number of worker
-        threads can call this concurrently without double-running a job."""
+        With ``wait``, keep taking jobs as they arrive until the queue is
+        closed. Claims are atomic (JobQueue.claim_next), so any number of
+        worker threads can call this concurrently without double-running a
+        job."""
         n = 0
-        while True:
-            job = self.queue.claim_next()
-            if job is None:
-                return n
+        while (job := self.queue.claim_next(wait)) is not None:
             self._run(job)
             n += 1
+        return n
 
     def cancel(self, job_id: int) -> str:
         """Cancel a job wherever it is in the lifecycle; returns the job's
@@ -270,46 +323,50 @@ class JobRunner:
         its job group (the runner tags every action with Job.group_id and
         ``interruptOnCancel=True``). ``cancelJobGroup`` only kills jobs
         already ACTIVE, so a single call races an action that hasn't
-        registered yet; a short-lived reaper re-fires the cancel until the
-        worker observes ``cancel_requested`` (checked before the action) or
-        the interrupted action raises — either way the job records
-        CANCELLED, not FAILED."""
+        registered yet; a short-lived reaper re-fires the cancel every
+        0.2 s until the worker observes ``cancel_requested`` (checked
+        before the action) or the interrupted action raises — either way
+        the job records CANCELLED, not FAILED — and exits on that status
+        change."""
         was = self.queue.request_cancel(job_id)
         if was == RUNNING:
             group = self.queue.job(job_id).group_id
+            sc = self.spark.sparkContext
 
             def _reap() -> None:
                 deadline = time.time() + 30
-                while time.time() < deadline and self.queue.status(job_id) == RUNNING:
-                    self.spark.sparkContext.cancelJobGroup(group)
-                    time.sleep(0.2)
+                while time.time() < deadline:
+                    try:
+                        self.queue.wait_for(job_id, timeout=0.2)
+                        return
+                    except TimeoutError:
+                        sc.cancelJobGroup(group)
 
-            self.spark.sparkContext.cancelJobGroup(group)
+            sc.cancelJobGroup(group)
             threading.Thread(target=_reap, daemon=True, name=f"reap-{job_id}").start()
         return self.queue.status(job_id)
 
     def _run(self, job: Job) -> None:
-        if job.status != RUNNING:  # direct _run call (not via claim_next)
-            job.status = RUNNING
-            job.started_at = time.time()
-        self.queue._persist(job)
-        # Job-scoped confs live on a PER-JOB child session: SQL confs are
-        # session-scoped state, and spark.conf on the shared session is
-        # global — with concurrent workers, set/restore there races (one
-        # worker can snapshot another's override as the "old" value and
-        # resurrect it, silently changing e.g. file-split planning for the
-        # other job). newSession() shares the SparkContext and cache but
-        # isolates SQLConf, so per-job overrides never touch a neighbor;
-        # the session is discarded with the job, so nothing to restore.
-        session = self.spark.newSession() if job.conf else self.spark
-        for k, v in job.conf.items():
-            session.conf.set(k, v)
+        sc = self.spark.sparkContext
         # job-group tag is thread-local (PySpark pinned-thread mode), so
         # concurrent workers tag only their own actions
-        self.spark.sparkContext.setJobGroup(
+        sc.setJobGroup(
             job.group_id, job.name or f"job {job.job_id}", interruptOnCancel=True
         )
+        status, error, rows = FAILED, "runner interrupted", None
         try:
+            # Job-scoped confs live on a PER-JOB child session: SQL confs
+            # are session-scoped state, and spark.conf on the shared session
+            # is global — with concurrent workers, set/restore there races
+            # (one worker can snapshot another's override as the "old" value
+            # and resurrect it, silently changing e.g. file-split planning
+            # for the other job). newSession() shares the SparkContext and
+            # cache but isolates SQLConf, so per-job overrides never touch a
+            # neighbor; the session is discarded with the job, so nothing
+            # to restore.
+            session = self.spark.newSession() if job.conf else self.spark
+            for k, v in job.conf.items():
+                session.conf.set(k, v)
             df = job.plan(session)
             if job.cancel_requested:  # cancelled before the action registered
                 raise _CancelledBeforeAction("cancelled before action")
@@ -318,25 +375,19 @@ class JobRunner:
             else:
                 # No sink → still execute the plan (the reference never
                 # returns results inline; completion IS the result).
-                job.result_rows = df.count()
-            job.status = COMPLETED
+                rows = df.count()
+            status, error = COMPLETED, None
         except Exception as exc:
             if job.cancel_requested and _is_cancellation(exc):
-                job.error = "cancelled while running"
-                job.status = CANCELLED
+                status, error = CANCELLED, "cancelled while running"
             else:
                 # A genuine failure stays FAILED with its traceback even if
                 # a cancel happened to be requested around the same moment —
                 # only the cancellation interrupt itself maps to CANCELLED.
-                # error before status: status is the publish flag a
-                # concurrent reader polls on, so every field it implies
-                # must land first
-                job.error = traceback.format_exc(limit=10)
-                job.status = FAILED
+                status, error = FAILED, traceback.format_exc(limit=10)
         finally:
-            self.spark.sparkContext.setJobGroup("", "")
-            job.finished_at = time.time()
-            self.queue._persist(job)
+            sc.setJobGroup("", "")
+            self.queue.finish(job, status, error, rows)
 
 
 class _CancelledBeforeAction(RuntimeError):

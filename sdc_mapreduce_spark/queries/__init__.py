@@ -57,25 +57,9 @@ for _name in _MODULE_ORDER:
 # CERT_HEAD with the queries whose query functions reach it
 # (tests/test_registry.py computes that set from the call graph).
 CERT_HEAD: tuple[str, ...] = (
-    # shingle_sets (null-text documents have no shingles), directly or via
-    # jaccard_pairs, minhash_lsh_pairs, jaccard_prefix_pairs,
-    # containment_pairs, incremental_minhash_dedup, near_dup_clusters and
-    # pipeline.curate
-    "pipeline_curation",
-    "pipeline_embedding_stats",
-    "dedup_cluster_safe_split",
-    "dedup_cluster_labels",
-    "dedup_incremental_minhash",
-    "dedup_jaccard_pairs",
-    "dedup_jaccard_prefix",
-    "graph_pagerank_neardup",
-    "graph_triangle_stats",
-    "dedup_containment_pairs",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_keep_best",
-    "dedup_cluster_sizes",
-    "dedup_source_leakage_matrix",
+    # embedding_near_pairs_arrow (one bounded collect gates and loads the
+    # corpus)
+    "dedup_embedding_cosine",
 )
 if not IMPORT_QUARANTINE:
     # Only enforce completeness on a healthy import — with a module

@@ -18,8 +18,9 @@ on Spark:
   directly); here it's a proper endpoint returning the full job record.
 - ``GET /jobs`` — all job records, newest last.
 
-A single daemon runner thread drains the queue FIFO — the reference
-master's single-leader execute loop (src/master/master.cpp:338-372).
+``max_concurrent`` daemon runner threads (default 1: the reference
+master's single-leader execute loop, src/master/master.cpp:338-372) drain
+the queue FIFO; each blocks on the queue's condition until a job arrives.
 ``shard_size`` maps to Spark's ``files.maxPartitionBytes`` for the job's
 scan: the same knob (input bytes per map task) the reference's byte-range
 sharder implements by hand (src/master/sharding.h:28-83).
@@ -36,7 +37,6 @@ from __future__ import annotations
 
 import json
 import threading
-import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
@@ -106,17 +106,24 @@ class _Handler(BaseHTTPRequestHandler):
         parts = [p for p in self.path.split("/") if p]
         if len(parts) == 3 and parts[0] == "jobs" and parts[2] == "cancel":
             return self._cancel_job(parts[1])
-        if self.path.rstrip("/") == "/queries":
-            return self._submit_query()
-        if self.path.rstrip("/") == "/mapreduce":
-            return self._submit_legacy()
-        if self.path.rstrip("/") not in ("", "/"):
+        submit = {
+            "": self._submit_wordcount,
+            "/queries": self._submit_query,
+            "/mapreduce": self._submit_legacy,
+        }.get(self.path.rstrip("/"))
+        if submit is None:
             return self._reply(404, {"error": "not found"})
+        try:
+            return submit()
+        except QueueFullError:
+            # the queue's lock-held CREATED-backlog bound, for every endpoint
+            return self._reply(429, {"error": "job queue full"})
+
+    def _submit_wordcount(self):
+        """POST / — the reference webclient's word-count submission."""
         body = self._read_json()
         if body is None:
             return None
-        if self.server.backlog_full():
-            return self._reply(429, {"error": "job queue full"})
         # field validation with the reference's exact messages
         # (webclient.cpp:23-28)
         if "reducer_count" not in body:
@@ -138,21 +145,17 @@ class _Handler(BaseHTTPRequestHandler):
         output_path = body.get("output_path")
 
         sink = _kv_sink(output_path, reducer_count) if output_path else None
-        try:
-            job_id = self.server.queue.submit(
-                _wordcount_plan([str(f) for f in files]),
-                sink=sink,
-                name=body.get("name", "wordcount"),
-                # the reference's per-job shard_size, applied job-scoped by
-                # the runner on an isolated child session (input bytes per
-                # map task)
-                conf={"spark.sql.files.maxPartitionBytes": str(shard_size)},
-            )
-        except QueueFullError:
-            # the authoritative, lock-held bound (backlog_full() above is
-            # only an advisory fast path — concurrent submits race it)
-            return self._reply(429, {"error": "job queue full"})
-        self.server.wake.set()
+        job_id = self.server.queue.submit(
+            _wordcount_plan([str(f) for f in files]),
+            sink=sink,
+            name=body.get("name", "wordcount"),
+            # the reference's per-job shard_size, applied job-scoped by the
+            # runner on an isolated child session (input bytes per map task)
+            conf={"spark.sql.files.maxPartitionBytes": str(shard_size)},
+        )
+        return self._submitted(job_id)
+
+    def _submitted(self, job_id: int):
         return self._reply(
             200,
             {"job_id": job_id, "message": f"Job successfully submitted: {job_id}"},
@@ -164,7 +167,7 @@ class _Handler(BaseHTTPRequestHandler):
         return 409 with their unchanged status."""
         try:
             job_id = int(job_id_raw)
-            before = self.server.queue.job(job_id).status
+            before = self.server.queue.status(job_id)
         except (KeyError, ValueError):
             return self._reply(404, {"error": f"no job {job_id_raw}"})
         from sdc_mapreduce_spark.jobs import CREATED, RUNNING
@@ -201,17 +204,11 @@ class _Handler(BaseHTTPRequestHandler):
             shard_size = int(form["shard_size"])
         except ValueError:
             return self._reply(400, {"error": "shard_size must be an integer"})
-        if self.server.backlog_full():
-            return self._reply(429, {"error": "job queue full"})
-        try:
-            self.server.queue.submit(
-                _wordcount_plan([form["file"]]),
-                name="legacy-mapreduce",
-                conf={"spark.sql.files.maxPartitionBytes": str(shard_size)},
-            )
-        except QueueFullError:
-            return self._reply(429, {"error": "job queue full"})
-        self.server.wake.set()
+        self.server.queue.submit(
+            _wordcount_plan([form["file"]]),
+            name="legacy-mapreduce",
+            conf={"spark.sql.files.maxPartitionBytes": str(shard_size)},
+        )
         # the legacy reply carries no job id (src/app.py:13) — byte-for-byte
         return self._reply(200, {"message": "Job submitted"})
 
@@ -225,8 +222,6 @@ class _Handler(BaseHTTPRequestHandler):
         body = self._read_json()  # body already drained by do_POST
         if body is None:
             return None
-        if self.server.backlog_full():
-            return self._reply(429, {"error": "job queue full"})
         from sdc_mapreduce_spark.catalog import DEFAULT_SF_DIR
         from sdc_mapreduce_spark.queries import REGISTRY
 
@@ -247,15 +242,8 @@ class _Handler(BaseHTTPRequestHandler):
             def sink(df, _out=str(output_path)):
                 df.write.mode("overwrite").parquet(_out)
 
-        try:
-            job_id = self.server.queue.submit(plan, sink=sink, name=f"query:{name}")
-        except QueueFullError:
-            return self._reply(429, {"error": "job queue full"})
-        self.server.wake.set()
-        return self._reply(
-            200,
-            {"job_id": job_id, "message": f"Job successfully submitted: {job_id}"},
-        )
+        job_id = self.server.queue.submit(plan, sink=sink, name=f"query:{name}")
+        return self._submitted(job_id)
 
     def do_GET(self):
         parts = [p for p in self.path.split("/") if p]
@@ -264,15 +252,13 @@ class _Handler(BaseHTTPRequestHandler):
 
             return self._reply(200, {"queries": sorted(REGISTRY)})
         if parts == ["jobs"]:
-            return self._reply(
-                200, {"jobs": [j.record() for j in self.server.queue.all()]}
-            )
+            return self._reply(200, {"jobs": self.server.queue.records()})
         if len(parts) == 2 and parts[0] == "jobs":
             try:
-                job = self.server.queue.job(int(parts[1]))
+                record = self.server.queue.record(int(parts[1]))
             except (KeyError, ValueError):
                 return self._reply(404, {"error": f"no job {parts[1]}"})
-            return self._reply(200, job.record())
+            return self._reply(200, record)
         return self._reply(404, {"error": "not found"})
 
 
@@ -303,51 +289,31 @@ class JobServer(ThreadingHTTPServer):
         self.queue = JobQueue(state_dir=state_dir, max_pending=max_pending)
         self.runner = JobRunner(spark, self.queue)
         self.max_concurrent = max(1, int(max_concurrent))
-        self.max_pending = max_pending
-        self.wake = threading.Event()
-        self._stop = threading.Event()
         self._workers: list[threading.Thread] = []
 
     @property
     def port(self) -> int:
         return self.server_address[1]
 
-    def backlog_full(self) -> bool:
-        return (
-            self.max_pending is not None
-            and self.queue.pending_count() >= self.max_pending
-        )
-
     def start(self) -> None:
         self._workers = [threading.Thread(target=self.serve_forever, daemon=True)]
+        # runner threads block on the queue's condition, not a poll sleep
+        # like the reference master's 5 s loop
         self._workers += [
-            threading.Thread(target=self._run_loop, daemon=True, name=f"sdc-runner-{i}")
+            threading.Thread(
+                target=self.runner.run_pending,
+                args=(True,),
+                daemon=True,
+                name=f"sdc-runner-{i}",
+            )
             for i in range(self.max_concurrent)
         ]
         for t in self._workers:
             t.start()
 
-    def _run_loop(self) -> None:
-        # event-driven drain, not the reference master's 5 s poll sleep
-        while not self._stop.is_set():
-            self.wake.wait(timeout=0.2)
-            self.wake.clear()
-            self.runner.run_pending()
-
     def stop(self) -> None:
-        self._stop.set()
-        self.wake.set()
+        self.queue.close()  # wakes idle runner threads
         self.shutdown()
         for t in self._workers:
             t.join(timeout=5)
         self.server_close()
-
-    def wait_for(self, job_id: int, timeout: float = 60.0) -> str:
-        """Block until the job leaves CREATED/RUNNING; return final status."""
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            status = self.queue.status(job_id)
-            if status not in ("CREATED", "RUNNING"):
-                return status
-            time.sleep(0.05)
-        return self.queue.status(job_id)

@@ -228,3 +228,18 @@ def test_steal_summary_handles_missing_counter():
     import bench as benchmod
 
     assert benchmod._steal_summary(None, 0.0) is None
+
+
+def test_bench_records_the_parallelism_it_ran_with(spark):
+    """The detail JSON carries master, sc.defaultParallelism and
+    SPARK_GRAFT_CPUS; on the test session the recorded parallelism is the
+    CPU count the session was sized by."""
+    import os
+
+    import bench as benchmod
+    from sdc_mapreduce_spark.session import default_parallelism
+
+    rec = benchmod._parallelism(spark)
+    assert rec["master"] == spark.sparkContext.master
+    assert rec["spark_graft_cpus"] == os.environ.get("SPARK_GRAFT_CPUS")
+    assert rec["default_parallelism"] == default_parallelism()

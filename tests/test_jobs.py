@@ -127,7 +127,7 @@ def test_queue_recovers_state_and_fails_orphans(spark, tmp_path):
 
 
 def test_recover_skips_corrupt_record(spark, tmp_path):
-    """A truncated/garbage job file (external corruption; _persist itself is
+    """A truncated/garbage job file (external corruption; _publish itself is
     atomic) must not poison recovery of the healthy records."""
     from sdc_mapreduce_spark.jobs import JobQueue, JobRunner
 
@@ -154,7 +154,7 @@ def test_submit_enforces_pending_bound_atomically():
     with pytest.raises(J.QueueFullError):
         q.submit(lambda s: None, name="c")
     # draining one slot reopens the bound
-    q.job(1).status = J.CANCELLED
+    q.request_cancel(1)
     assert q.submit(lambda s: None, name="c") == 3
 
 
@@ -197,3 +197,57 @@ def test_job_conf_isolated_per_job_session(spark):
     assert seen["in_job"] == "12345678"
     assert seen["shared_during"] == before
     assert spark.conf.get(key) == before
+
+
+def test_wait_for_raises_timeout_while_running():
+    """``wait_for`` has one timeout behaviour, the client SDK's: a job still
+    RUNNING at the deadline raises TimeoutError instead of returning its
+    non-terminal status."""
+    import pytest
+
+    q = J.JobQueue()
+    jid = q.submit(lambda s: None, name="held")
+    assert q.claim_next().job_id == jid
+    with pytest.raises(TimeoutError, match="RUNNING"):
+        q.wait_for(jid, timeout=0.2)
+
+
+def test_wait_for_returns_recovered_orphan_failed_at_once(tmp_path):
+    """A job that restart recovery orphaned is terminal on load: waiting on
+    it returns FAILED without sitting out the timeout."""
+    import time
+
+    state = tmp_path / "state"
+    state.mkdir()
+    (state / "job_7.json").write_text(
+        json.dumps({"job_id": 7, "name": "inflight", "status": "RUNNING",
+                    "submitted_at": 1.0, "started_at": 2.0})
+    )
+    q = J.JobQueue(state_dir=str(state))
+    t0 = time.monotonic()
+    assert q.wait_for(7, timeout=30) == J.FAILED
+    assert time.monotonic() - t0 < 1.0
+
+
+def test_completed_record_is_published_whole(spark, tmp_path):
+    """The waiter wakes on a record that is complete everywhere at once:
+    ``finished_at`` set in memory, and the state file equal to the record
+    (a restart at that moment recovers COMPLETED, not an orphan)."""
+    import threading
+
+    state = tmp_path / "state"
+    q = J.JobQueue(state_dir=str(state))
+    runner = threading.Thread(
+        target=J.JobRunner(spark, q).run_pending, args=(True,), daemon=True
+    )
+    runner.start()
+    try:
+        jid = q.submit(lambda s: s.range(4), name="whole")
+        assert q.wait_for(jid, timeout=60) == J.COMPLETED
+        rec = q.record(jid)
+        assert rec["finished_at"] is not None and rec["result_rows"] == 4
+        assert json.loads((state / f"job_{jid}.json").read_text()) == rec
+    finally:
+        q.close()
+        runner.join(timeout=5)
+    assert not runner.is_alive()

@@ -177,6 +177,16 @@ def test_arrow_near_pairs_equal_declarative(spark, sf_dir):
     with pytest.raises(ValueError, match="max_vectors"):
         S.embedding_near_pairs_arrow(emb, threshold=0.4, max_vectors=10)
 
+    # the bounded collect is the gate too: building the operator over the
+    # one-partition fixture starts exactly one Spark job (no count() probe)
+    sc = spark.sparkContext
+    sc.setJobGroup("arrow-near-pairs-build", "arrow near-pairs build")
+    try:
+        S.embedding_near_pairs_arrow(emb, threshold=0.4)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("arrow-near-pairs-build")) == 1
+
 
 def test_pq_codes_shape_and_codeword_self_encoding(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")

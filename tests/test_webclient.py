@@ -64,7 +64,7 @@ def test_submit_wordcount_over_http_end_to_end(server, tmp_path):
     job_id = body["job_id"]
     assert body["message"] == f"Job successfully submitted: {job_id}"
 
-    assert server.wait_for(job_id) == "COMPLETED"
+    assert server.queue.wait_for(job_id) == "COMPLETED"
     code, status = _get(server.port, f"/jobs/{job_id}")
     assert code == 200
     assert status["status"] == "COMPLETED"
@@ -107,7 +107,7 @@ def test_failed_job_reports_error_status(server, tmp_path):
     )
     assert code == 200
     job_id = body["job_id"]
-    assert server.wait_for(job_id) == "FAILED"
+    assert server.queue.wait_for(job_id) == "FAILED"
     _, status = _get(server.port, f"/jobs/{job_id}")
     assert status["error"]
 
@@ -173,7 +173,7 @@ def test_non_integer_counts_get_400_and_conf_does_not_leak(server, spark, tmp_pa
         {"files": [str(inp)], "shard_size": 1024, "reducer_count": 1},
     )
     assert code == 200
-    assert server.wait_for(body["job_id"]) == "COMPLETED"
+    assert server.queue.wait_for(body["job_id"]) == "COMPLETED"
     assert spark.conf.get("spark.sql.files.maxPartitionBytes") == before
 
 
@@ -222,7 +222,7 @@ def test_submit_registered_query_over_http(server, spark, tmp_path):
         },
     )
     assert code == 200
-    assert server.wait_for(body["job_id"]) == "COMPLETED"
+    assert server.queue.wait_for(body["job_id"]) == "COMPLETED"
 
     from sdc_mapreduce_spark.queries import REGISTRY
 
@@ -322,17 +322,15 @@ def test_cancel_running_job_over_http(server):
     """A RUNNING job must be interrupted via its Spark job group and end
     CANCELLED (not FAILED), releasing the worker for the next job."""
     jid = server.queue.submit(_slow_plan(), name="slow")
-    server.wake.set()
     assert _wait_status(server, jid, "RUNNING")
     code, body = _cancel(server.port, jid)
     assert code == 200
-    assert server.wait_for(jid, timeout=60) == "CANCELLED"
+    assert server.queue.wait_for(jid, timeout=60) == "CANCELLED"
     job = server.queue.job(jid)
     assert "cancel" in (job.error or "")
     # worker must be free again: a quick job completes normally afterwards
     jid2 = server.queue.submit(lambda spark: spark.range(5), name="quick")
-    server.wake.set()
-    assert server.wait_for(jid2, timeout=60) == "COMPLETED"
+    assert server.queue.wait_for(jid2, timeout=60) == "COMPLETED"
 
 
 def test_cancel_queued_job_and_terminal_conflict(server):
@@ -340,12 +338,11 @@ def test_cancel_queued_job_and_terminal_conflict(server):
     it; cancelling a terminal job is a 409 no-op; unknown id is 404."""
     slow = server.queue.submit(_slow_plan(), name="slow")
     queued = server.queue.submit(lambda spark: spark.range(5), name="queued")
-    server.wake.set()
     assert _wait_status(server, slow, "RUNNING")
     code, body = _cancel(server.port, queued)
     assert code == 200 and body["status"] == "CANCELLED"
     _cancel(server.port, slow)
-    assert server.wait_for(slow, timeout=60) == "CANCELLED"
+    assert server.queue.wait_for(slow, timeout=60) == "CANCELLED"
     # queued job must never have run
     assert server.queue.status(queued) == "CANCELLED"
     code, body = _cancel(server.port, queued)
@@ -362,8 +359,7 @@ def test_bounded_concurrency_two_workers(spark):
     try:
         slow = srv.queue.submit(_slow_plan(), name="slow")
         fast = srv.queue.submit(lambda s: s.range(5), name="fast")
-        srv.wake.set()
-        assert srv.wait_for(fast, timeout=60) == "COMPLETED"
+        assert srv.queue.wait_for(fast, timeout=60) == "COMPLETED"
         # Overtaking is the claim: fast finished while slow is UNFINISHED.
         # Slow may still read CREATED for an instant on a loaded machine
         # (its worker thread hasn't flipped the status yet), so assert
@@ -371,7 +367,7 @@ def test_bounded_concurrency_two_workers(spark):
         assert srv.queue.status(slow) in ("CREATED", "RUNNING")
         assert _wait_status(srv, slow, "RUNNING")
         srv.runner.cancel(slow)
-        assert srv.wait_for(slow, timeout=60) == "CANCELLED"
+        assert srv.queue.wait_for(slow, timeout=60) == "CANCELLED"
     finally:
         srv.stop()
 
@@ -383,7 +379,6 @@ def test_max_pending_backlog_replies_429(spark, tmp_path):
     srv.start()
     try:
         slow = srv.queue.submit(_slow_plan(), name="slow")
-        srv.wake.set()
         assert _wait_status(srv, slow, "RUNNING")
         inp = tmp_path / "in.txt"
         inp.write_text("a b c\n")
@@ -404,8 +399,8 @@ def test_max_pending_backlog_replies_429(spark, tmp_path):
             qcode = err.code
         assert qcode == 429
         srv.runner.cancel(slow)
-        srv.wait_for(slow, timeout=60)
-        srv.wait_for(body1["job_id"], timeout=60)
+        srv.queue.wait_for(slow, timeout=60)
+        srv.queue.wait_for(body1["job_id"], timeout=60)
     finally:
         srv.stop()
 
@@ -414,7 +409,6 @@ def test_client_sdk_cancel(server):
     from sdc_mapreduce_spark.client import JobHandle
 
     jid = server.queue.submit(_slow_plan(), name="slow")
-    server.wake.set()
     assert _wait_status(server, jid, "RUNNING")
     handle = JobHandle(base_url=f"http://127.0.0.1:{server.port}", job_id=jid)
     handle.cancel()
@@ -446,7 +440,7 @@ def test_legacy_flask_submitter_contract(server, tmp_path):
     # the fire-and-forget job is real: newest job completes with 2 rows
     job = server.queue.all()[-1]
     assert job.name == "legacy-mapreduce"
-    assert server.wait_for(job.job_id, timeout=60.0) == "COMPLETED"
+    assert server.queue.wait_for(job.job_id, timeout=60.0) == "COMPLETED"
     assert server.queue.job(job.job_id).result_rows == 2
 
     # Flask's request.form[...] 400s on a missing field — same here
@@ -462,3 +456,48 @@ def test_legacy_flask_submitter_contract(server, tmp_path):
     except urllib.error.HTTPError as err:
         code = err.code
     assert code == 400
+
+
+def test_wait_for_wakes_on_cancel_over_http(server):
+    """A thread blocked in ``queue.wait_for`` returns CANCELLED as soon as
+    the job is cancelled over HTTP while it waits."""
+    import threading
+
+    jid = server.queue.submit(_slow_plan(), name="slow")
+    assert _wait_status(server, jid, "RUNNING")
+    got = []
+    waiter = threading.Thread(
+        target=lambda: got.append(server.queue.wait_for(jid, timeout=60))
+    )
+    waiter.start()
+    waiter.join(timeout=0.3)
+    assert waiter.is_alive() and not got  # blocked on the running job
+    code, _ = _cancel(server.port, jid)
+    assert code == 200
+    waiter.join(timeout=60)
+    assert got == ["CANCELLED"]
+
+
+def test_idle_server_does_not_poll_and_stops_its_runners(spark):
+    """Idle runner threads block on the queue's condition: each makes one
+    claim attempt and then no more until work arrives (no periodic tick),
+    and ``stop()`` wakes them so every runner thread has exited when it
+    returns."""
+    import time
+
+    srv = JobServer(spark, port=0, max_concurrent=2)
+    claims = []
+    claim_next = srv.queue.claim_next
+
+    def counting_claim(*args, **kwargs):
+        claims.append(time.monotonic())
+        return claim_next(*args, **kwargs)
+
+    srv.queue.claim_next = counting_claim
+    srv.start()
+    time.sleep(0.7)
+    assert len(claims) == 2, claims  # one blocking claim per runner thread
+    t0 = time.monotonic()
+    srv.stop()
+    assert time.monotonic() - t0 < 4.0
+    assert srv._workers and not any(t.is_alive() for t in srv._workers)
