@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.cache import pin
 from sdc_mapreduce_spark.functions.text import normalized_text, token_hash60, tokens
-from sdc_mapreduce_spark.operators.relational import broadcast_if_small
 
 RNG_SEED_MINHASH = 7
 
@@ -403,7 +402,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int | None = 1000,
-    broadcast_max_candidates: int = 10_000_000,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup candidates, verified with exact
     Jaccard. Signatures and band hashes come from one vectorized numpy
@@ -422,10 +420,11 @@ def minhash_lsh_pairs(
     buckets as a size filter on the aggregated bucket list (no pairs from
     that bucket, but members still collide in their other bands; recall
     only degrades for pairs whose every matching band is corpus-hot, the
-    same trade-off as ``jaccard_pairs(max_df=...)``). The verify-side
-    broadcast is gated by a bounded ``limit(N+1).count()`` probe over the
-    candidate set; past ``broadcast_max_candidates`` the verify joins fall
-    back to plain shuffle joins instead of an unbounded driver broadcast.
+    same trade-off as ``jaccard_pairs(max_df=...)``). The verify joins
+    carry no hint: the planner broadcasts a side its size estimate puts
+    under the session's byte threshold, AQE converts a shuffle join whose
+    materialized side is small at runtime, and anything larger stays a
+    shuffle join. Building the frame starts no Spark job.
     """
     # The shingle arrays feed three consumers (banding, and both sides of
     # the verify join); persist so the tokenize+gram pass runs once. At
@@ -458,7 +457,7 @@ def minhash_lsh_pairs(
         F.sort_array(F.collect_list("__id")).alias("__ids")
     )
     cap = F.size("__ids") <= max_bucket if max_bucket is not None else F.lit(True)
-    cand = pin(
+    cand = (
         buckets.filter((F.size("__ids") >= 2) & cap)
         .select(F.posexplode("__ids").alias("__i", "id_a"), "__ids")
         .select(
@@ -469,33 +468,12 @@ def minhash_lsh_pairs(
                 )
             ).alias("id_b"),
         )
-        .distinct(),
-        # pinned so both verify joins and the size probe share one
-        # materialization of the bucket pair generation
-        StorageLevel.MEMORY_AND_DISK,
+        .distinct()
     )
-    # Bounded gate on the verify-side broadcast: candidates are usually a
-    # vanishing fraction of the corpus; the probe stops at N+1 rows and the
-    # partitions it does compute land in cand's persist for the verify.
-    probe = cand.select("id_a").limit(broadcast_max_candidates + 1).count()
-    cand_hinted = F.broadcast(cand) if probe <= broadcast_max_candidates else cand
-
     sa = sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("__sh_a"))
     sb = sets.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("__sh_b"))
-    if probe <= broadcast_max_candidates:
-        # The planner cannot know the first verify join's output
-        # (candidates + arrays) is small, so it plans the second join as
-        # SMJ, and AQE's late BHJ conversion still materializes the
-        # probe-side exchange — the ENTIRE corpus shingle table reshuffled
-        # (219 MiB at the 100x corpus) to serve 26k candidate rows.
-        # Semi-filtering the b-side to candidate ids first (ids broadcast;
-        # same inner-join semantics) makes that exchange carry only the
-        # docs that appear in some pair.
-        sb = sb.join(
-            F.broadcast(cand.select("id_b").distinct()), "id_b", "semi"
-        )
     verified = (
-        cand_hinted.join(sa, "id_a")
+        cand.join(sa, "id_a")
         .join(sb, "id_b")
         .select(
             "id_a",
@@ -537,10 +515,12 @@ def incremental_minhash_dedup(
     Scale shape: batch band rows ≪ corpus band rows, so the bucket join
     broadcasts the batch side; candidates are usually a vanishing fraction
     and broadcast into the shingle-verify joins (so the corpus shingle
-    table never shuffles) — but only a bounded size probe proves it: past
-    ``broadcast_max_candidates`` (a templated batch colliding with a
-    templated corpus region goes quadratic) the verify falls back to plain
-    shuffle joins instead of an unbounded driver broadcast."""
+    table never shuffles). This is the one dedup operator that still
+    probes before it hints: a bounded ``limit(N+1).count()`` over the
+    pinned candidates, and past ``broadcast_max_candidates`` (a templated
+    batch colliding with a templated corpus region goes quadratic) the
+    verify falls back to plain shuffle joins instead of an unbounded
+    driver broadcast."""
     from pyspark import StorageLevel
 
     sets_new = pin(
@@ -563,7 +543,12 @@ def incremental_minhash_dedup(
         .distinct(),
         StorageLevel.MEMORY_AND_DISK,
     )
-    cand_hinted = broadcast_if_small(cand, broadcast_max_candidates)
+    # Kept probe: cand comes out of a join, which Spark sizes as the product
+    # of its sides, so unhinted it is never the broadcast side; once the
+    # corpus shingle table passes the byte threshold, the verify then
+    # shuffles that table. The probe's partitions land in cand's persist.
+    if cand.limit(broadcast_max_candidates + 1).count() <= broadcast_max_candidates:
+        cand = F.broadcast(cand)
     sa = sets_new.select(
         F.col(id_col).alias("__new_id"), F.col("shingles").alias("__sh_a")
     )
@@ -571,8 +556,7 @@ def incremental_minhash_dedup(
         F.col(id_col).alias("__ex_id"), F.col("shingles").alias("__sh_b")
     )
     verified = (
-        cand_hinted
-        .join(sa, "__new_id")
+        cand.join(sa, "__new_id")
         .join(sb, "__ex_id")
         .select(
             "__new_id",
@@ -860,7 +844,6 @@ def exact_substring_dedup(
     chunk_size: int = 16,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_max_docs: int = 1_000_000,
 ) -> DataFrame:
     """Apply-side of the duplicated-span inventory (the exact SUB-document
     dedup of Lee et al., "Deduplicating Training Data Makes Language Models
@@ -878,13 +861,13 @@ def exact_substring_dedup(
     the defined expansion — and aggregates on the fingerprint with map-side
     partial counts; only the duplicated sliver survives the >= 2 filter.
     The per-doc drop list (docs that lose at least one chunk x the ids
-    they lose) is broadcast back onto the scan when it is provably small:
-    the persisted list is probed by ``broadcast_if_small`` (a bounded
-    ``limit(N+1).count()``), and past
-    ``broadcast_max_docs`` rows the rebuild falls back to the same plan
-    with a shuffle join on doc_id — still sliver-sized, never corpus-sized,
-    and safe at an extreme duplication rate where the drop list is a
-    corpus-scale fraction that would blow the 8 GB broadcast limit. The
+    they lose) joins back onto the scan unhinted: the planner broadcasts it
+    when its size estimate is under the session's byte threshold, AQE
+    converts at runtime when the materialized list is small, and otherwise
+    the rebuild is a shuffle join on doc_id — still sliver-sized, never
+    corpus-sized, and safe at an extreme duplication rate where the drop
+    list is a corpus-scale fraction that would blow the 8 GB broadcast
+    limit. Building the frame starts no Spark job. The
     reference has no sub-document operator of any kind; the nearest
     primitive is its hash-shuffle group-by (SURVEY.md O10-O13), which is
     what the fingerprint aggregation compiles to.
@@ -950,11 +933,7 @@ def exact_substring_dedup(
         .groupBy("__id")
         .agg(F.sort_array(F.collect_list("chunk_id")).alias("__drop_ids"))
     )
-    # pinned so the size probe below and the rebuild join share one
-    # materialization of the inventory aggregation
-    drops = pin(drops, StorageLevel.MEMORY_AND_DISK)
-    drops_hinted = broadcast_if_small(drops, broadcast_max_docs)
-    rebuilt = base.join(drops_hinted, "__id", "left")
+    rebuilt = base.join(drops, "__id", "left")
     drop_ids = F.coalesce(F.col("__drop_ids"), F.array().cast("array<int>"))
     kept = F.flatten(
         F.transform(

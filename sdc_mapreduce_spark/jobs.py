@@ -33,6 +33,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sdc_mapreduce_spark.cache import drain_pins
+
 CREATED = "CREATED"
 RUNNING = "RUNNING"
 COMPLETED = "COMPLETED"
@@ -354,17 +356,18 @@ class JobRunner:
             job.group_id, job.name or f"job {job.job_id}", interruptOnCancel=True
         )
         status, error, rows = FAILED, "runner interrupted", None
+        # Every job runs on its OWN child session. SQL confs are
+        # session-scoped state, and spark.conf on the shared session is
+        # global — with concurrent workers, set/restore there races (one
+        # worker can snapshot another's override as the "old" value and
+        # resurrect it, silently changing e.g. file-split planning for the
+        # other job). The pin ledger is keyed by session too, so draining
+        # this one after the sink releases exactly the frames this job's
+        # builder pinned, never a concurrent job's. newSession() shares the
+        # SparkContext and cache but isolates SQLConf; the session is
+        # discarded with the job, so nothing to restore.
+        session = self.spark.newSession()
         try:
-            # Job-scoped confs live on a PER-JOB child session: SQL confs
-            # are session-scoped state, and spark.conf on the shared session
-            # is global — with concurrent workers, set/restore there races
-            # (one worker can snapshot another's override as the "old" value
-            # and resurrect it, silently changing e.g. file-split planning
-            # for the other job). newSession() shares the SparkContext and
-            # cache but isolates SQLConf, so per-job overrides never touch a
-            # neighbor; the session is discarded with the job, so nothing
-            # to restore.
-            session = self.spark.newSession() if job.conf else self.spark
             for k, v in job.conf.items():
                 session.conf.set(k, v)
             df = job.plan(session)
@@ -386,6 +389,7 @@ class JobRunner:
                 # only the cancellation interrupt itself maps to CANCELLED.
                 status, error = FAILED, traceback.format_exc(limit=10)
         finally:
+            drain_pins(session)
             sc.setJobGroup("", "")
             self.queue.finish(job, status, error, rows)
 

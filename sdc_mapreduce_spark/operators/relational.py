@@ -14,24 +14,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def broadcast_if_small(df: DataFrame, max_rows: int) -> DataFrame:
-    """Probe-gated broadcast hint: only a PROVABLY small side earns
-    ``F.broadcast``. The probe is a bounded ``limit(N+1).count()`` — it
-    stops scanning at N+1 rows, so the gate itself is cheap even when the
-    side turns out to be huge — and anything past the threshold falls back
-    to a plain (shuffle-joinable) DataFrame. This is the repo-standard
-    pattern (functions/dedup.py exact-substring drop list, minhash verify
-    gate, text.py max_vocab) extracted as a helper: an UN-gated broadcast
-    of a data-dependent cardinality (a vocab, a drop list, a cluster index)
-    is exactly what blows the 8 GB broadcast limit at 100 TB.
-
-    ``max_rows <= 0`` forces the shuffle path (used by fallback-parity
-    tests)."""
-    if max_rows > 0 and df.limit(max_rows + 1).count() <= max_rows:
-        return F.broadcast(df)
-    return df
-
-
 def top_k(df: DataFrame, order_cols: list, k: int) -> DataFrame:
     """Global top-k: Catalyst plans ``orderBy().limit(k)`` as TakeOrdered —
     per-partition heap + single driver merge of k rows per partition, never a

@@ -57,9 +57,19 @@ for _name in _MODULE_ORDER:
 # CERT_HEAD with the queries whose query functions reach it
 # (tests/test_registry.py computes that set from the call graph).
 CERT_HEAD: tuple[str, ...] = (
-    # embedding_near_pairs_arrow (one bounded collect gates and loads the
-    # corpus)
-    "dedup_embedding_cosine",
+    # minhash_lsh_pairs, exact_substring_dedup, dedup_cluster_labels,
+    # dedup_source_leakage_matrix and dedup_cluster_safe_split (unhinted
+    # joins; no count probe, MinHash semi-filter or probe-only pin)
+    "pipeline_curation",
+    "pipeline_embedding_stats",
+    "dedup_cluster_safe_split",
+    "dedup_cluster_labels",
+    "dedup_exact_substring",
+    "dedup_minhash_lsh",
+    "dedup_clusters",
+    "dedup_keep_best",
+    "dedup_cluster_sizes",
+    "dedup_source_leakage_matrix",
 )
 if not IMPORT_QUARANTINE:
     # Only enforce completeness on a healthy import — with a module

@@ -18,7 +18,6 @@ from sdc_mapreduce_spark.cache import pin
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.functions import dedup as D
 from sdc_mapreduce_spark.functions.simsearch import embedding_near_pairs
-from sdc_mapreduce_spark.operators.relational import broadcast_if_small
 from sdc_mapreduce_spark.queries.base import (
     QUALITY_CHARS_SQL,
     QUALITY_SCORE_SQL,
@@ -995,12 +994,7 @@ ORDER BY id_a, id_b
 
 
 
-def dedup_cluster_labels(
-    spark: SparkSession,
-    sf_dir: str,
-    broadcast_max_clusters: int = 2_000_000,
-    broadcast_max_terms: int = 10_000_000,
-) -> DataFrame:
+def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster labeling — the BERTopic/c-TF-IDF-style composition: name
     each multi-doc near-dup cluster by its top-3 characteristic terms.
     Composes near_dup_clusters (LSH pairs -> connected components) with a
@@ -1012,28 +1006,28 @@ def dedup_cluster_labels(
     combinable aggregates over O(cluster-terms) rows; the per-cluster
     ranking window touches only multi-doc clusters.
 
-    Both small-side joins are PROBE-GATED (broadcast_if_small), not blindly
-    hinted: ``sizes`` is cluster-count-scale and ``cdf`` is vocab-scale on
-    a real corpus — the exact cardinality class text.py's max_vocab gate
-    exists to bound — so past the thresholds each falls back to a plain
-    shuffle join with identical output (fallback parity is tested with
-    thresholds forced to 0). The probed intermediates are persisted so the
-    gate's bounded count never re-runs the LSH/token-explode lineage."""
+    Neither small-side join is hinted: ``sizes`` is cluster-count-scale
+    and ``cdf`` is vocab-scale on a real corpus — the cardinality class
+    text.py's max_vocab gate exists to bound — so the planner broadcasts
+    each only under the session's byte threshold (AQE converting at
+    runtime) and otherwise shuffle-joins with identical output (parity
+    tested with broadcasts disabled)."""
     from pyspark import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")
     clusters = D.near_dup_clusters(
         docs, num_hashes=128, bands=32, n=3, threshold=0.8
     )
+    # sizes and tf each feed two consumers (sizes: the member join and the
+    # cluster count; tf: the cdf aggregate and the scoring join), so each
+    # is persisted once instead of re-running the LSH/token-explode lineage
     sizes = pin(
         clusters.groupBy("rep_id")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .filter(F.col("n_docs") >= 2),
         StorageLevel.MEMORY_AND_DISK,
     )
-    members = clusters.join(
-        broadcast_if_small(sizes, broadcast_max_clusters), "rep_id"
-    )
+    members = clusters.join(sizes, "rep_id")
     toks = docs.select(
         "doc_id",
         F.explode(F.split(F.trim("text"), "\\s+")).alias("term"),
@@ -1047,7 +1041,7 @@ def dedup_cluster_labels(
     cdf = tf.groupBy("term").agg(F.count(F.lit(1)).alias("cdf"))
     ncl = sizes.agg(F.count(F.lit(1)).alias("n_clusters"))
     scored = (
-        tf.join(broadcast_if_small(cdf, broadcast_max_terms), "term")
+        tf.join(cdf, "term")
         .crossJoin(F.broadcast(ncl))
         .withColumn(
             "score_milli",
@@ -1081,18 +1075,17 @@ def dedup_source_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     unordered (source_a <= source_b) pair-count matrix, diagonal included
     (within-source duplication). Scale shape: the pair set is the already
     hot-capped LSH output — corpus-scale work happens once in the LSH
-    stage; the matrix aggregation is O(pairs) with a probe-gated broadcast
-    of the pair list into the two doc→source attach joins, and the output
-    is O(sources²) rows."""
+    stage; the matrix aggregation is O(pairs) — the pair list meets the
+    two doc→source attach joins unhinted, broadcast or shuffled as the
+    planner and AQE decide from its byte size — and the output is
+    O(sources²) rows. Building the frame starts no Spark job."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = pin(
-        D.minhash_lsh_pairs(docs, num_hashes=128, bands=32, n=3, threshold=0.8)
-        .select("id_a", "id_b")
-    )
+    pairs = D.minhash_lsh_pairs(
+        docs, num_hashes=128, bands=32, n=3, threshold=0.8
+    ).select("id_a", "id_b")
     src = docs.select("doc_id", "source")
-    hinted = broadcast_if_small(pairs, 10_000_000)
     attached = (
-        hinted.join(
+        pairs.join(
             src.select(
                 F.col("doc_id").alias("id_a"), F.col("source").alias("__sa")
             ),
@@ -1175,7 +1168,8 @@ def dedup_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-document hash with the same salt (>0 on any corpus with near-dups:
     the bug being prevented, quantified). Scale shape: clustering is the
     already hot-capped LSH + O(diameter) label propagation; the split tag
-    and audits are O(docs) + O(pairs) joins with probe-gated broadcasts."""
+    and audits are O(docs) + O(pairs) joins, broadcast or shuffled as the
+    planner and AQE decide from byte sizes."""
     from sdc_mapreduce_spark.functions.dedup import min_label_propagation
     from sdc_mapreduce_spark.functions.splits import split_column
 
@@ -1212,8 +1206,7 @@ def dedup_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("naive_split").alias("__npb"),
     )
     straddle = (
-        broadcast_if_small(pairs, 10_000_000)
-        .join(sa, "id_a")
+        pairs.join(sa, "id_a")
         .join(sb, "id_b")
         .agg(
             F.sum((F.col("__spa") != F.col("__spb")).cast("long")).alias(

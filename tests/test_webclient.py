@@ -237,6 +237,28 @@ def test_submit_registered_query_over_http(server, spark, tmp_path):
     assert code == 400 and "name missing" in body["error"]
 
 
+def test_completed_query_job_releases_its_pins(server, sf_dir, tmp_path):
+    """A job's builder pins (persists) shared frames; the runner drains the
+    job's own session after the sink, so a long-lived server does not keep
+    every submitted query's caches alive."""
+    from sdc_mapreduce_spark import cache
+
+    before = {id(df) for df in cache.pinned_frames()}
+    code, body = _post_path(
+        server.port,
+        "/queries",
+        {
+            "name": "dedup_minhash_lsh",
+            "sf_dir": sf_dir,
+            "output_path": str(tmp_path / "q_out"),
+        },
+    )
+    assert code == 200
+    assert server.queue.wait_for(body["job_id"]) == "COMPLETED"
+    leaked = [df for df in cache.pinned_frames() if id(df) not in before]
+    assert leaked == []
+
+
 def _post_path(port: int, path: str, payload: dict) -> tuple[int, dict]:
     req = urllib.request.Request(
         f"http://127.0.0.1:{port}{path}",
