@@ -28,9 +28,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sdc_mapreduce_spark import queries as qreg
 from sdc_mapreduce_spark.cache import drain_pins
+from sdc_mapreduce_spark.catalog import DEFAULT_SF_DIR
 from sdc_mapreduce_spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # CANONICAL bench order (VERDICT r9 ask #2). The bench set used to inherit
 # the registry's PRIORITY order, which rotates every round for the
@@ -262,9 +261,9 @@ def _make_skewed_events(spark, hot_users: str = "1pct") -> str:
 
     from sdc_mapreduce_spark.catalog import load_table
 
-    tag = os.path.basename(SF_DIR.rstrip("/"))
+    tag = os.path.basename(DEFAULT_SF_DIR.rstrip("/"))
     out = f"/tmp/sdcms_bench_skewed_events_{hot_users}_{tag}"
-    ev = load_table(spark, SF_DIR, "events")
+    ev = load_table(spark, DEFAULT_SF_DIR, "events")
     n_users = ev.select("user_id").distinct().count()
     n_hot = max(n_users // 100, 1)
     # 30x replication (distinct event_ids, shifted timestamps) so per-row
@@ -380,7 +379,7 @@ def main() -> None:
     bench = _ordered_bench()
     # Warm up the JVM/session so the first measured query doesn't pay
     # executor/codegen startup.
-    next(iter(bench.values()))(spark, SF_DIR).limit(1).collect()
+    next(iter(bench.values()))(spark, DEFAULT_SF_DIR).limit(1).collect()
     # ...and the Python/Arrow worker pool (mapInPandas/pandas-UDF queries
     # would otherwise pay daemon fork + Arrow init inside their timing).
     # A trivial kernel over unrelated data — no query-specific caches warm.
@@ -396,7 +395,7 @@ def main() -> None:
         # execution of each plan pays whole-stage-codegen compile — observed
         # 2-4x outliers that previously landed one cold sample in every
         # median-of-3 and showed up as round-over-round "drift"
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        fn(spark, DEFAULT_SF_DIR).write.format("noop").mode("overwrite").save()
         # MEASUREMENT CONVENTION (changed r11, ADVICE r10): pins are
         # drained after the warm-up AND after every timed sample (outside
         # the timer), so each timed run is self-contained — a query that
@@ -413,7 +412,10 @@ def main() -> None:
         # passes exactly like the skew suites; per-query settle status is
         # recorded below under "settle".
         samples, settled, passes = _settled_runs(
-            lambda: fn(spark, SF_DIR).write.format("noop").mode("overwrite").save(),
+            lambda: fn(spark, DEFAULT_SF_DIR)
+            .write.format("noop")
+            .mode("overwrite")
+            .save(),
             name=name,
             stalls=stalls,
             after_run=lambda: drain_pins(spark),
@@ -441,7 +443,7 @@ def main() -> None:
         )
     # sf is best-effort metadata: a non-"sfX.Y" dir name (e.g. the 10x
     # replica corpus) must not crash the run AFTER all timings are in
-    sf = SF_DIR.rstrip("/").split("/")[-1].replace("sf", "")
+    sf = DEFAULT_SF_DIR.rstrip("/").split("/")[-1].replace("sf", "")
     try:
         sf_val: float | None = float(sf)
     except ValueError:

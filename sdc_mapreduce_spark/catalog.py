@@ -77,7 +77,7 @@ _SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 # (q1 over lineitem, sessionize over events) only pays an extra exchange —
 # those plans either aggregate in place or re-shuffle on their own keys
 # immediately.
-SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", 512 * 1024))
+SPREAD_MIN_BYTES = 512 * 1024
 SPREAD_TABLES: tuple[str, ...] = ("documents", "embeddings")
 
 
@@ -117,9 +117,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for ``spark.sql`` queries."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -288,32 +288,53 @@ def jaccard_pairs(
         # sizes); the capped path derives sizes from the filtered index, so
         # persisting the wide shingle arrays there would be dead weight
         sets = pin(sets, StorageLevel.MEMORY_AND_DISK)
-    inv = sets.select(
-        F.col(id_col).alias("__id"),
-        # shingles are already 8-byte hashes (shingle_sets, r14) — the
-        # index explodes them directly; no per-element re-hash
-        F.explode("shingles").alias("__shingle"),
-    )
+    inv = _inverted_index(sets, id_col)
     if max_df is not None:
-        # Hot-shingle anti-join: the hot set is tiny (shingles above the
-        # cap), so broadcast it; the df count is a map-side-combinable
-        # aggregation over the index — linear, vs the quadratic join it
-        # prevents.
-        hot = (
-            inv.groupBy("__shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("__shingle")
-        )
-        inv = pin(
-            inv.join(F.broadcast(hot), "__shingle", "left_anti"),
-            StorageLevel.MEMORY_AND_DISK,
-        )
-        sizes = inv.groupBy(F.col("__id")).agg(F.count(F.lit(1)).alias("__sz"))
+        inv = pin(_drop_hot_shingles(inv, max_df), StorageLevel.MEMORY_AND_DISK)
+        sizes = _index_sizes(inv)
     else:
         sizes = sets.select(
             F.col(id_col).alias("__id"), F.size("shingles").alias("__sz")
         )
+    with_sizes = _common_with_sizes(inv, sizes)
+    jac = F.col("__common") / (F.col("__sz_a") + F.col("__sz_b") - F.col("__common"))
+    return with_sizes.select(
+        "id_a", "id_b", jac.alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def _inverted_index(sets: DataFrame, id_col: str) -> DataFrame:
+    """(__id, __shingle): one row per (document, shingle). Shingles are
+    already 8-byte hashes (:func:`shingle_sets`), so the index explodes
+    them directly; no per-element re-hash."""
+    return sets.select(
+        F.col(id_col).alias("__id"), F.explode("shingles").alias("__shingle")
+    )
+
+
+def _drop_hot_shingles(inv: DataFrame, max_df: int) -> DataFrame:
+    """The index without shingles in more than ``max_df`` documents. The
+    hot set is tiny (shingles above the cap), so it is broadcast into an
+    anti-join; the df count is a map-side-combinable aggregation over the
+    index — linear, vs the quadratic self-join it prevents."""
+    hot = (
+        inv.groupBy("__shingle")
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .filter(F.col("__df") > max_df)
+        .select("__shingle")
+    )
+    return inv.join(F.broadcast(hot), "__shingle", "left_anti")
+
+
+def _index_sizes(inv: DataFrame) -> DataFrame:
+    """(__id, __sz): each document's shingle count in the index."""
+    return inv.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz"))
+
+
+def _common_with_sizes(inv: DataFrame, sizes: DataFrame) -> DataFrame:
+    """(id_a < id_b, __common, __sz_a, __sz_b): the inverted-index
+    self-join counts each pair's common shingles, then both documents'
+    sizes are joined on."""
     a = inv.select(F.col("__id").alias("id_a"), "__shingle")
     b = inv.select(F.col("__id").alias("id_b"), "__shingle")
     common = (
@@ -322,16 +343,12 @@ def jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("__common"))
     )
-    with_sizes = (
+    return (
         common.join(sizes.withColumnRenamed("__sz", "__sz_a"), F.col("id_a") == F.col("__id"))
         .drop("__id")
         .join(sizes.withColumnRenamed("__sz", "__sz_b"), F.col("id_b") == F.col("__id"))
         .drop("__id")
     )
-    jac = F.col("__common") / (F.col("__sz_a") + F.col("__sz_b") - F.col("__common"))
-    return with_sizes.select(
-        "id_a", "id_b", jac.alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
 
 
 def _band_rows_arrow(
@@ -972,41 +989,12 @@ def containment_pairs(
     :func:`jaccard_pairs` (a shingle in d docs is d² candidate pairs);
     containment is an exact int/int division — oracle-hashable. Returns
     (id_a, id_b, containment) with id_a < id_b."""
-    inv = shingle_sets(df, n=n, text_col=text_col, id_col=id_col).select(
-        F.col(id_col).alias("__id"),
-        # shingles are already hashes (shingle_sets, r14)
-        F.explode("shingles").alias("__shingle"),
-    )
+    sets = shingle_sets(df, n=n, text_col=text_col, id_col=id_col)
+    inv = _inverted_index(sets, id_col)
     if max_df is not None:
-        hot = (
-            inv.groupBy("__shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("__shingle")
-        )
-        inv = inv.join(F.broadcast(hot), "__shingle", "left_anti")
+        inv = _drop_hot_shingles(inv, max_df)
     inv = inv.localCheckpoint(eager=True)
-    sizes = inv.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz"))
-    a = inv.select(F.col("__id").alias("id_a"), "__shingle")
-    b = inv.select(F.col("__id").alias("id_b"), "__shingle")
-    common = (
-        a.join(b, "__shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__common"))
-    )
-    with_sizes = (
-        common.join(
-            sizes.withColumnRenamed("__sz", "__sz_a"),
-            F.col("id_a") == F.col("__id"),
-        )
-        .drop("__id")
-        .join(
-            sizes.withColumnRenamed("__sz", "__sz_b"),
-            F.col("id_b") == F.col("__id"),
-        )
-        .drop("__id")
-    )
+    with_sizes = _common_with_sizes(inv, _index_sizes(inv))
     cont = F.col("__common") / F.least(F.col("__sz_a"), F.col("__sz_b"))
     return with_sizes.select("id_a", "id_b", cont.alias("containment")).filter(
         F.col("containment") >= threshold

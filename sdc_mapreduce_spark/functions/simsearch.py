@@ -57,6 +57,64 @@ def with_unit_vectors(
     return df.withColumn(out_col, F.transform(v, lambda x: x / n))
 
 
+def _unit_frame(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, __unit): the corpus projected to its unit vectors."""
+    return with_unit_vectors(corpus, vec_col=vec_col, out_col="__unit").select(
+        F.col(id_col), "__unit"
+    )
+
+
+def _query_slice(
+    prepared: DataFrame, query_ids: list[int], id_col: str, *extra
+) -> DataFrame:
+    """The query rows of a unit frame as (query_id, __qunit, *extra)."""
+    return prepared.filter(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("query_id"), F.col("__unit").alias("__qunit"), *extra
+    )
+
+
+def _cosine_scored(pairs: DataFrame, id_col: str, *keep) -> DataFrame:
+    """(query_id, neighbor_id, cosine, *keep) from (query, candidate) rows
+    carrying both unit vectors; the cosine is the fixed-order ``dot``."""
+    return pairs.select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        dot(F.col("__qunit"), F.col("__unit")).alias("cosine"),
+        *keep,
+    )
+
+
+def _exact_scored(
+    prepared: DataFrame, query_ids: list[int], id_col: str, *keep
+) -> DataFrame:
+    """Every (query, corpus vector) pair scored exactly: the query slice is
+    broadcast and the corpus streams through a nested-loop theta-join —
+    the right physical plan when one side is a few rows."""
+    queries = _query_slice(prepared, query_ids, id_col)
+    pairs = prepared.join(F.broadcast(queries), F.col(id_col) != F.col("query_id"))
+    return _cosine_scored(pairs, id_col, *keep)
+
+
+def _rank_neighbors(
+    scored: DataFrame, k: int, score: str = "cosine", rank_col: str = "rank"
+) -> DataFrame:
+    """The k best rows per ``query_id``: ``score`` descending, ties broken
+    by the lowest ``neighbor_id`` — the one tie rule every top-k operator
+    here shares, so equal scores rank the same way on every path."""
+    return top_k_per_group(
+        scored,
+        ["query_id"],
+        [F.col(score).desc(), F.col("neighbor_id").asc()],
+        k,
+        rank_col=rank_col,
+    )
+
+
+def _topk(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """(query_id, neighbor_id, rank) of :func:`_rank_neighbors`."""
+    return _rank_neighbors(scored, k, score).select("query_id", "neighbor_id", "rank")
+
+
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     query_ids: list[int],
@@ -69,30 +127,10 @@ def cosine_topk_bruteforce(
     The query side is a broadcast-joined slice of the corpus (a few rows);
     the corpus side streams — the pair generation is a broadcast
     nested-loop join, which is the *correct* physical plan when one side is
-    tiny. Ranking ties broken by neighbor id (deterministic).
+    tiny. Ranked by cosine descending, ties to the lowest neighbor id.
     """
-    v = _as_double(F.col(vec_col))
-    n = l2_norm(v)
-    prepared = corpus.select(
-        F.col(id_col),
-        F.transform(v, lambda x: x / n).alias("__unit"),
-    )
-    queries = prepared.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("__unit").alias("__qunit")
-    )
-    pairs = prepared.join(F.broadcast(queries), F.col(id_col) != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        dot(F.col("__qunit"), F.col("__unit")).alias("cosine"),
-    )
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank")
+    scored = _exact_scored(_unit_frame(corpus, id_col, vec_col), query_ids, id_col)
+    return _topk(scored, k)
 
 
 def cosine_topk_pandas(
@@ -105,9 +143,13 @@ def cosine_topk_pandas(
     """Exact top-k via Arrow batches + BLAS: the throughput path.
 
     The query matrix rides to executors as a broadcast variable; each
-    ``mapInPandas`` batch emits its local top-k per query (k * n_queries
-    rows per batch, independent of batch size), and a final per-query top-k
-    window reduces partials. Shuffle volume is O(partitions * queries * k).
+    ``mapInPandas`` batch emits its k+1 best rows per query under the final
+    order — cosine descending, ties to the lowest neighbor id (one slot
+    spare for the query itself) — so a tie wider than k keeps the same
+    members the final window would pick. That is (k+1) * n_queries rows
+    per batch, independent of batch size, and a final per-query top-k
+    window reduces the partials with the same order. Shuffle volume is
+    O(partitions * queries * k).
     """
     spark = corpus.sparkSession
     qids = [q[0] for q in queries]
@@ -125,7 +167,7 @@ def cosine_topk_pandas(
             mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
             sims = bqmat @ mat.T  # (n_queries, batch)
             kk = min(k + 1, sims.shape[1])
-            idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
+            idx = np.stack([np.lexsort((ids, -row))[:kk] for row in sims])
             out = {
                 "query_id": np.repeat(bqids, kk),
                 "neighbor_id": ids[idx].ravel(),
@@ -136,14 +178,7 @@ def cosine_topk_pandas(
     partials = corpus.select(id_col, vec_col).mapInPandas(
         score_batches, schema="query_id long, neighbor_id long, cosine double"
     )
-    ranked = top_k_per_group(
-        partials.filter(F.col("neighbor_id") != F.col("query_id")),
-        ["query_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    )
-    return ranked.select("query_id", "neighbor_id", "rank")
+    return _topk(partials.filter(F.col("neighbor_id") != F.col("query_id")), k)
 
 
 def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
@@ -202,45 +237,21 @@ def cosine_topk_srp(
     cosine within the probed buckets. Candidates per query ≈
     corpus * (1 + planes) / 2^planes — equi-joins on the bucket id, so the
     plan is shuffle-bounded, never all-pairs. Recall tunes via n_planes
-    (fewer planes = bigger buckets) and multi_probe_bits."""
-    planes = _hyperplanes(dim, n_planes)
-    v = _as_double(F.col(vec_col))
-    n = l2_norm(v)
-    prepared = corpus.select(
-        F.col(id_col),
-        F.transform(v, lambda x: x / n).alias("__unit"),
-    ).withColumn("__bucket", srp_bucket(F.col("__unit"), planes))
-    probes = [F.col("__bucket")]
-    if multi_probe_bits >= 1:
-        probes += [
-            F.col("__bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-            for i in range(n_planes)
-        ]
-    queries = (
-        prepared.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("__unit").alias("__qunit"),
-            F.explode(F.array(*probes)).alias("__bucket"),
-        )
+    (fewer planes = bigger buckets) and multi_probe_bits. Candidates are
+    ranked by exact cosine descending, ties to the lowest neighbor id."""
+    prepared = _srp_prep(corpus, _hyperplanes(dim, n_planes), id_col, vec_col)
+    queries = _query_slice(
+        prepared,
+        query_ids,
+        id_col,
+        F.explode(_probe_buckets(n_planes, multi_probe_bits)).alias("__bucket"),
     )
     cands = (
         prepared.join(F.broadcast(queries), "__bucket")
         .filter(F.col(id_col) != F.col("query_id"))
         .dropDuplicates(["query_id", id_col])
     )
-    scored = cands.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        dot(F.col("__qunit"), F.col("__unit")).alias("cosine"),
-    )
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank")
+    return _topk(_cosine_scored(cands, id_col), k)
 
 
 def ivf_assignments(
@@ -310,9 +321,7 @@ def assign_cells(
     lowest cell id): a broadcast nested-loop over the tiny centroid set +
     a per-id top-1 — the distributed IVF assign step; cost is
     |corpus| * n_cells with no shuffle of the corpus vectors."""
-    prepared = with_unit_vectors(corpus, vec_col=vec_col, out_col="__unit").select(
-        F.col(id_col), "__unit"
-    )
+    prepared = _unit_frame(corpus, id_col, vec_col)
     scored = prepared.join(F.broadcast(centroids)).select(
         id_col,
         "__unit",
@@ -346,44 +355,42 @@ def cosine_topk_ivf(
 
     ``centroids`` injects a pre-built coarse quantizer (``__cell``,
     ``__centroid`` unit vectors — e.g. ``seeded_centroids``); default is a
-    fitted KMeans (``ivf_assignments``)."""
+    fitted KMeans (``ivf_assignments``). Candidates are ranked by exact
+    cosine descending, ties to the lowest neighbor id."""
     if centroids is not None:
         assigned = assign_cells(corpus, centroids, id_col=id_col, vec_col=vec_col)
     else:
         assigned, centroids = ivf_assignments(
             corpus, n_cells=n_cells, id_col=id_col, vec_col=vec_col
         )
-    queries = assigned.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("__unit").alias("__qunit")
+    queries = _query_slice(assigned, query_ids, id_col)
+    probes = _probe_cells(queries, centroids, n_probe)
+    cands = assigned.join(F.broadcast(probes), "__cell").filter(
+        F.col(id_col) != F.col("query_id")
     )
+    return _topk(_cosine_scored(cands, id_col), k)
+
+
+def _probe_cells(
+    queries: DataFrame, centroids: DataFrame, n_probe: int
+) -> DataFrame:
+    """IVF probe selection: each query's ``n_probe`` nearest cells by cosine
+    to the centroid (ties to the lowest cell id), as
+    (query_id, __qunit, __cell) — a (queries x n_cells) broadcast
+    cross-score and a per-query top-n_probe."""
     probe_scores = queries.join(F.broadcast(centroids)).select(
         "query_id",
         "__qunit",
         "__cell",
         dot(F.col("__qunit"), F.col("__centroid")).alias("__cscore"),
     )
-    probes = top_k_per_group(
+    return top_k_per_group(
         probe_scores,
         ["query_id"],
         [F.col("__cscore").desc(), F.col("__cell").asc()],
         n_probe,
         rank_col="__prank",
     ).select("query_id", "__qunit", "__cell")
-    cands = assigned.join(F.broadcast(probes), "__cell").filter(
-        F.col(id_col) != F.col("query_id")
-    )
-    scored = cands.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        dot(F.col("__qunit"), F.col("__unit")).alias("cosine"),
-    )
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank")
 
 
 def pq_codebooks(
@@ -454,10 +461,9 @@ def pq_encode(
     at scan speed and fuses into an embedding-table write, which is the
     whole point of PQ at 100 TB: the stored index is m_sub bytes per
     vector instead of 4·dim. Returns (id, __unit, __codes array<int>)."""
-    u = with_unit_vectors(corpus, vec_col=vec_col, out_col="__unit").select(
-        F.col(id_col), "__unit"
+    enc = _unit_frame(corpus, id_col, vec_col).crossJoin(
+        F.broadcast(_pq_nested(codebooks, m_sub))
     )
-    enc = u.crossJoin(F.broadcast(_pq_nested(codebooks, m_sub)))
     d_sub = F.expr(f"size(__unit) div {m_sub}")
 
     def keys(s):
@@ -491,44 +497,15 @@ def cosine_topk_pq(
     bitwise reproducible. Scoring touches codes + a constant codebook, not
     vectors: at scale the scan reads m_sub bytes/vector (32x smaller than
     the float corpus at dim=64), and composes with IVF for candidate
-    pruning exactly as IVFPQ does."""
+    pruning exactly as IVFPQ does. Ranked by ADC score descending, ties to
+    the lowest neighbor id."""
     cbs = pq_codebooks(
         corpus, m_sub=m_sub, n_codes=n_codes, id_col=id_col, vec_col=vec_col
     )
     encoded = pq_encode(corpus, cbs, m_sub=m_sub, id_col=id_col, vec_col=vec_col)
-    queries = (
-        encoded.filter(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("query_id"), F.col("__unit").alias("__qunit"))
-    )
-    cands = (
-        encoded.select(F.col(id_col), "__codes")
-        .join(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .crossJoin(F.broadcast(_pq_nested(cbs, m_sub)))
-    )
-    d_sub = F.expr(f"size(__qunit) div {m_sub}")
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + dot(
-            F.slice(F.col("__qunit"), s * d_sub + 1, d_sub),
-            F.element_at(
-                F.element_at(F.col("__cb"), s + 1),
-                F.element_at(F.col("__codes"), s + 1) + 1,
-            )["cw"],
-        ),
-    )
-    scored = cands.select(
-        "query_id", F.col(id_col).alias("neighbor_id"), adc.alias("adc")
-    )
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("adc").desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank")
+    queries = _query_slice(encoded, query_ids, id_col)
+    pairs = encoded.select(F.col(id_col), "__codes").join(F.broadcast(queries))
+    return _adc_topk(pairs, cbs, m_sub, k, id_col)
 
 
 def _adc_score(m_sub: int) -> "F.Column":
@@ -569,7 +546,8 @@ def cosine_topk_ivfpq(
     shrink, which is what makes the scan viable at 100 TB. Both stages use
     the deterministic sampled quantizers (``seeded_centroids`` +
     ``pq_codebooks``), so the whole pipeline replays in an external
-    engine."""
+    engine. Ranked by ADC score descending, ties to the lowest neighbor
+    id."""
     cents = (
         centroids
         if centroids is not None
@@ -586,37 +564,26 @@ def cosine_topk_ivfpq(
     index = assigned.select(F.col(id_col), "__cell").join(
         encoded.select(F.col(id_col), "__codes"), id_col
     )
-    queries = assigned.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("__unit").alias("__qunit")
-    )
-    probe_scores = queries.join(F.broadcast(cents)).select(
-        "query_id",
-        "__qunit",
-        "__cell",
-        dot(F.col("__qunit"), F.col("__centroid")).alias("__cscore"),
-    )
-    probes = top_k_per_group(
-        probe_scores,
-        ["query_id"],
-        [F.col("__cscore").desc(), F.col("__cell").asc()],
-        n_probe,
-        rank_col="__prank",
-    ).select("query_id", "__qunit", "__cell")
+    queries = _query_slice(assigned, query_ids, id_col)
+    probes = _probe_cells(queries, cents, n_probe)
+    pairs = index.join(F.broadcast(probes), "__cell")
+    return _adc_topk(pairs, cbs, m_sub, k, id_col)
+
+
+def _adc_topk(
+    pairs: DataFrame, cbs: DataFrame, m_sub: int, k: int, id_col: str
+) -> DataFrame:
+    """ADC rerank of (query, coded candidate) rows: drop the query itself,
+    attach the nested codebook, score with :func:`_adc_score` and keep the
+    top k per query."""
     cands = (
-        index.join(F.broadcast(probes), "__cell")
-        .filter(F.col(id_col) != F.col("query_id"))
+        pairs.filter(F.col(id_col) != F.col("query_id"))
         .crossJoin(F.broadcast(_pq_nested(cbs, m_sub)))
     )
     scored = cands.select(
         "query_id", F.col(id_col).alias("neighbor_id"), _adc_score(m_sub).alias("adc")
     )
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("adc").desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank")
+    return _topk(scored, k, "adc")
 
 
 def label_centroid_rank(
@@ -627,8 +594,9 @@ def label_centroid_rank(
 ) -> DataFrame:
     """Per-cluster centroids + every vector's cosine to its own centroid +
     within-cluster rank — the working set of SemDeDup-style semantic
-    pruning (vectors ranked by centroid affinity inside each cluster; the
-    curation decision drops from the top of each ranking). Returns
+    pruning (vectors ranked by centroid affinity inside each cluster, ties
+    to the lowest id; the curation decision drops from the top of each
+    ranking). Returns
     (id, label, cos_to_centroid, rank_in_label).
 
     Determinism: centroid components accumulate floor-quantized nano-units
@@ -641,32 +609,12 @@ def label_centroid_rank(
     rows with map-side partial sums; the centroid table is tiny →
     broadcast back onto the corpus; the final rank is one shuffle on the
     label key."""
-    v = F.col(vec_col).cast("array<double>")
-    comps = df.select(F.col(label_col), F.posexplode(v).alias("pos", "val"))
-    cs = comps.groupBy(label_col, "pos").agg(
-        F.sum(F.floor(F.col("val") * F.lit(1e9)).cast("long")).alias("__s"),
-        F.count(F.lit(1)).alias("__n"),
-    )
-    cent = (
-        cs.select(
-            F.col(label_col),
-            "pos",
-            (F.col("__s").cast("double") / (F.lit(1e9) * F.col("__n"))).alias("c"),
-        )
-        .groupBy(label_col)
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "c"))), lambda e: e["c"]
-            ).alias("__cent")
-        )
-    )
+    v = _as_double(F.col(vec_col))
+    cent = _nano_centroids(df, label_col, v, label_col, "__cent")
     scored = df.select(F.col(id_col), F.col(label_col), v.alias("__v")).join(
         F.broadcast(cent), label_col
     )
-    cos = dot(F.col("__v"), F.col("__cent")) / (
-        F.sqrt(dot(F.col("__v"), F.col("__v")))
-        * F.sqrt(dot(F.col("__cent"), F.col("__cent")))
-    )
+    cos = _cosine(F.col("__v"), F.col("__cent"))
     from pyspark.sql import Window
 
     w = Window.partitionBy(label_col).orderBy(
@@ -676,6 +624,40 @@ def label_centroid_rank(
         scored.select(F.col(id_col), F.col(label_col), cos.alias("cos_to_centroid"))
         .withColumn("rank_in_label", F.row_number().over(w))
     )
+
+
+def _nano_centroids(
+    df: DataFrame, key: str, vec: "F.Column", out_key: str, out_col: str
+) -> DataFrame:
+    """One centroid per ``key`` value as (out_key, out_col array<double>):
+    each component is the sum of floor-quantized nano-units (exact longs,
+    order-free) divided once by the exact scaled member count, so every
+    centroid double replays bitwise in an external engine. The component
+    aggregation shuffles (keys × dim) narrow rows with map-side partial
+    sums."""
+    comps = df.select(F.col(key), F.posexplode(vec).alias("pos", "val"))
+    cs = comps.groupBy(key, "pos").agg(
+        F.sum(F.floor(F.col("val") * F.lit(1e9)).cast("long")).alias("__s"),
+        F.count(F.lit(1)).alias("__n"),
+    )
+    return (
+        cs.select(
+            F.col(key).alias(out_key),
+            "pos",
+            (F.col("__s").cast("double") / (F.lit(1e9) * F.col("__n"))).alias("c"),
+        )
+        .groupBy(out_key)
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("pos", "c"))), lambda e: e["c"]
+            ).alias(out_col)
+        )
+    )
+
+
+def _cosine(a: "F.Column", b: "F.Column") -> "F.Column":
+    """Cosine of two unnormalized vectors: fixed-order folds throughout."""
+    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 def quantize_int8(
@@ -755,15 +737,10 @@ def cosine_topk_ivf_from_index(
     STATIC ``__cell IN (...)`` partition filter, so the candidate scan
     prunes to the probed directories at planning time (no reliance on
     runtime DPP). Result-identical to the in-memory path given the same
-    centroids; plan-asserted in tests/test_plans.py."""
+    centroids, including its tie rule (cosine descending, ties to the
+    lowest neighbor id); plan-asserted in tests/test_plans.py."""
     scored = _index_scored(spark, path, query_ids, n_probe, id_col)
-    return top_k_per_group(
-        scored.select("query_id", "neighbor_id", "cosine"),
-        ["query_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank")
+    return _topk(scored.select("query_id", "neighbor_id", "cosine"), k)
 
 
 def _index_scored(
@@ -783,22 +760,8 @@ def _index_scored(
     :func:`mmr_topk` with ``index_path`` (diversified serving)."""
     corpus = spark.read.parquet(f"{path}/corpus")
     centroids = spark.read.parquet(f"{path}/centroids")
-    queries = corpus.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("__unit").alias("__qunit")
-    )
-    probe_scores = queries.join(F.broadcast(centroids)).select(
-        "query_id",
-        "__qunit",
-        "__cell",
-        dot(F.col("__qunit"), F.col("__centroid")).alias("__cscore"),
-    )
-    probes = top_k_per_group(
-        probe_scores,
-        ["query_id"],
-        [F.col("__cscore").desc(), F.col("__cell").asc()],
-        n_probe,
-        rank_col="__prank",
-    ).select("query_id", "__qunit", "__cell")
+    queries = _query_slice(corpus, query_ids, id_col)
+    probes = _probe_cells(queries, centroids, n_probe)
     # Collect the probe table ONCE — O(queries * n_probe) rows, each a
     # query unit vector + cell id — and rebuild it as a local DataFrame:
     # this yields the static partition filter AND avoids re-executing the
@@ -814,12 +777,7 @@ def _index_scored(
         .join(F.broadcast(probes_local), "__cell")
         .filter(F.col(id_col) != F.col("query_id"))
     )
-    return cands.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        dot(F.col("__qunit"), F.col("__unit")).alias("cosine"),
-        "__unit",
-    )
+    return _cosine_scored(cands, id_col, "__unit")
 
 
 def embedding_near_pairs_blocked(
@@ -1068,28 +1026,31 @@ def incremental_embedding_dedup(
 
 def _srp_prep(df: DataFrame, planes, id_col: str, vec_col: str) -> DataFrame:
     """(id, vec) → (id, __unit, __bucket): unit-normalize + SRP bucket."""
-    v = _as_double(F.col(vec_col))
-    n = l2_norm(v)
-    return df.select(
-        F.col(id_col), F.transform(v, lambda x: x / n).alias("__unit")
-    ).withColumn("__bucket", srp_bucket(F.col("__unit"), planes))
+    return _unit_frame(df, id_col, vec_col).withColumn(
+        "__bucket", srp_bucket(F.col("__unit"), planes)
+    )
 
 
-def _srp_probe_rows(
-    newp: DataFrame, n_planes: int, multi_probe_bits: int, id_col: str
-) -> DataFrame:
-    """Explode a prepared batch into its probe rows: home bucket plus every
-    1-bit flip when multi-probe is on."""
+def _probe_buckets(n_planes: int, multi_probe_bits: int) -> "F.Column":
+    """The buckets a vector probes: its home ``__bucket`` plus every 1-bit
+    flip when multi-probe is on."""
     probes = [F.col("__bucket")]
     if multi_probe_bits >= 1:
         probes += [
             F.col("__bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
             for i in range(n_planes)
         ]
+    return F.array(*probes)
+
+
+def _srp_probe_rows(
+    newp: DataFrame, n_planes: int, multi_probe_bits: int, id_col: str
+) -> DataFrame:
+    """Explode a prepared batch into its probe rows."""
     return newp.select(
         F.col(id_col).alias("__new_id"),
         F.col("__unit").alias("__un"),
-        F.explode(F.array(*probes)).alias("__bucket"),
+        F.explode(_probe_buckets(n_planes, multi_probe_bits)).alias("__bucket"),
     )
 
 
@@ -1252,11 +1213,7 @@ def embedding_near_pairs(
     ``cosine_topk_srp``-style bucketing first — this operator is the exact
     verifier of that pipeline's candidates.
     """
-    v = _as_double(F.col(vec_col))
-    n = l2_norm(v)
-    prepared = corpus.select(
-        F.col(id_col), F.transform(v, lambda x: x / n).alias("__unit")
-    )
+    prepared = _unit_frame(corpus, id_col, vec_col)
     a = prepared.select(F.col(id_col).alias("id_a"), F.col("__unit").alias("__ua"))
     b = prepared.select(F.col(id_col).alias("id_b"), F.col("__unit").alias("__ub"))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
@@ -1289,25 +1246,8 @@ def label_silhouette_audit(
     the fit, broadcast centroids, map-side scoring over n_labels
     candidates per vector, one O(labels) final aggregate — the corpus
     never shuffles."""
-    v = F.col(vec_col).cast("array<double>")
-    comps = df.select(F.col(label_col), F.posexplode(v).alias("pos", "val"))
-    cs = comps.groupBy(label_col, "pos").agg(
-        F.sum(F.floor(F.col("val") * F.lit(1e9)).cast("long")).alias("__s"),
-        F.count(F.lit(1)).alias("__n"),
-    )
-    cent = (
-        cs.select(
-            F.col(label_col).alias("__cand"),
-            "pos",
-            (F.col("__s").cast("double") / (F.lit(1e9) * F.col("__n"))).alias("c"),
-        )
-        .groupBy("__cand")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "c"))), lambda e: e["c"]
-            ).alias("__cent")
-        )
-    )
+    v = _as_double(F.col(vec_col))
+    cent = _nano_centroids(df, label_col, v, "__cand", "__cent")
     # norms hoisted out of the per-(vector, candidate) cosine: the vector
     # norm folds once per vector (below the broadcast join, so it is not
     # re-evaluated against every candidate) and the centroid norm once per
@@ -1382,32 +1322,12 @@ def nearest_centroid_classify(
     so scoring is a map-side nested-loop over n_labels candidates per
     vector — the corpus never shuffles, and the argmax is a per-row
     aggregation, not a window."""
-    v = F.col(vec_col).cast("array<double>")
-    comps = df.select(F.col(label_col), F.posexplode(v).alias("pos", "val"))
-    cs = comps.groupBy(label_col, "pos").agg(
-        F.sum(F.floor(F.col("val") * F.lit(1e9)).cast("long")).alias("__s"),
-        F.count(F.lit(1)).alias("__n"),
-    )
-    cent = (
-        cs.select(
-            F.col(label_col).alias("__cand"),
-            "pos",
-            (F.col("__s").cast("double") / (F.lit(1e9) * F.col("__n"))).alias("c"),
-        )
-        .groupBy("__cand")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "c"))), lambda e: e["c"]
-            ).alias("__cent")
-        )
-    )
+    v = _as_double(F.col(vec_col))
+    cent = _nano_centroids(df, label_col, v, "__cand", "__cent")
     scored = df.select(F.col(id_col), F.col(label_col), v.alias("__v")).crossJoin(
         F.broadcast(cent)
     )
-    cos = dot(F.col("__v"), F.col("__cent")) / (
-        F.sqrt(dot(F.col("__v"), F.col("__v")))
-        * F.sqrt(dot(F.col("__cent"), F.col("__cent")))
-    )
+    cos = _cosine(F.col("__v"), F.col("__cent"))
     best = F.max(
         F.struct(cos.alias("c"), (-F.col("__cand")).alias("nl"))
     ).alias("__b")
@@ -1441,24 +1361,9 @@ def cosine_range_search(
     NO ranking window is needed at all (membership is per-row), so the
     only shuffle is whatever consumes the result. The LSH/IVF bucketed
     variants prune candidates the same way they do for top-k."""
-    v = _as_double(F.col(vec_col))
-    n = l2_norm(v)
-    prepared = corpus.select(
-        F.col(id_col),
-        F.transform(v, lambda x: x / n).alias("__unit"),
-    )
-    queries = prepared.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("__unit").alias("__qunit")
-    )
-    pairs = prepared.join(F.broadcast(queries), F.col(id_col) != F.col("query_id"))
-    return (
-        pairs.select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            dot(F.col("__qunit"), F.col("__unit")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= F.lit(threshold))
-        .select("query_id", "neighbor_id")
+    scored = _exact_scored(_unit_frame(corpus, id_col, vec_col), query_ids, id_col)
+    return scored.filter(F.col("cosine") >= F.lit(threshold)).select(
+        "query_id", "neighbor_id"
     )
 
 
@@ -1543,32 +1448,12 @@ def kmeans_lloyd_step(
     fitted-KMeans path cannot)."""
     cents = seeded_centroids(corpus, n_cells, id_col, vec_col)
     assigned = assign_cells(corpus, cents, id_col, vec_col)
-    comps = assigned.select("__cell", F.posexplode("__unit").alias("pos", "val"))
-    cs = comps.groupBy("__cell", "pos").agg(
-        F.sum(F.floor(F.col("val") * F.lit(1e9)).cast("long")).alias("__s"),
-        F.count(F.lit(1)).alias("__n"),
-    )
-    newc = (
-        cs.select(
-            "__cell",
-            "pos",
-            (F.col("__s").cast("double") / (F.lit(1e9) * F.col("__n"))).alias("c"),
-        )
-        .groupBy("__cell")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "c"))), lambda e: e["c"]
-            ).alias("__new")
-        )
-    )
+    newc = _nano_centroids(assigned, "__cell", F.col("__unit"), "__cell", "__new")
     counts = assigned.groupBy("__cell").agg(F.count(F.lit(1)).alias("n_members"))
     joined = newc.join(F.broadcast(cents), "__cell").join(
         F.broadcast(counts), "__cell"
     )
-    cos = dot(F.col("__new"), F.col("__centroid")) / (
-        F.sqrt(dot(F.col("__new"), F.col("__new")))
-        * F.sqrt(dot(F.col("__centroid"), F.col("__centroid")))
-    )
+    cos = _cosine(F.col("__new"), F.col("__centroid"))
     return joined.select(
         F.col("__cell").alias("cell"), "n_members", cos.alias("cos_shift")
     )
@@ -1604,8 +1489,9 @@ def mmr_topk(
     per-query pool cost is |corpus|·n_probe/n_cells — the scale path for
     a 100 TB corpus; its pool recall vs brute force is audited by the
     ``simsearch_mmr_indexed`` registered query. Either way the greedy
-    loop only ever sees the POOL (``pool`` candidates per query, pool²
-    pairwise similarities), grouped per query and reranked in one
+    loop only ever sees the POOL (the ``pool`` best candidates per query
+    by cosine descending, ties to the lowest neighbor id; pool² pairwise
+    similarities), grouped per query and reranked in one
     applyInPandas pass — O(queries · pool²) rows total, never a driver
     collect, never corpus-sized state.
 
@@ -1628,32 +1514,10 @@ def mmr_topk(
             corpus.sparkSession, index_path, query_ids, n_probe, id_col
         )
     else:
-        v = _as_double(F.col(vec_col))
-        n = l2_norm(v)
-        prepared = corpus.select(
-            F.col(id_col),
-            F.transform(v, lambda x: x / n).alias("__unit"),
-        )
-        queries = prepared.filter(F.col(id_col).isin(query_ids)).select(
-            F.col(id_col).alias("query_id"), F.col("__unit").alias("__qunit")
-        )
-        pairs = prepared.join(
-            F.broadcast(queries), F.col(id_col) != F.col("query_id")
-        )
-        scored = pairs.select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            dot(F.col("__qunit"), F.col("__unit")).alias("cosine"),
-            "__unit",
-        )
+        prepared = _unit_frame(corpus, id_col, vec_col)
+        scored = _exact_scored(prepared, query_ids, id_col, "__unit")
     pooled = pin(
-        top_k_per_group(
-            scored,
-            ["query_id"],
-            [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-            pool,
-            rank_col="__pool_rank",
-        ),
+        _rank_neighbors(scored, pool, rank_col="__pool_rank"),
         StorageLevel.MEMORY_AND_DISK,
     )
     rel = pooled.select(

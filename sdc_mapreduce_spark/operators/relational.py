@@ -110,49 +110,6 @@ def top_k_per_group_salted(
     return top_k_per_group(survivors, partition_cols, order_cols, k, rank_col)
 
 
-def top_k_per_group_salted_isolated(
-    df: DataFrame,
-    partition_cols: list[str],
-    order_cols: list,
-    k: int,
-    rank_col: str = "rn",
-    n_salts: int = 16,
-    salt_cols: list[str] | None = None,
-    salt_expr=None,
-    hot_threshold: int = 100_000,
-) -> DataFrame:
-    """Isolated skew handling: salt ONLY the groups that need it.
-
-    Uniform two-phase salting taxes every group with a second ranking pass;
-    when volume lives in a long tail of small groups, the survivors of
-    phase 1 (≤ n_salts·k per group) are nearly the whole input and the tax
-    approaches 2x. The isolated form first counts rows per group (map-side
-    combinable — shuffles one row per group), broadcasts the hot-group key
-    set (small by definition: groups above ``hot_threshold``), and routes
-    hot groups through the two-phase plan while the tail keeps the plain
-    single-window plan. Each group is ranked wholly within one branch, so
-    the union is result-identical to ``top_k_per_group``. This is the shape
-    that holds at 100 TB: the hot 1% never lands on one reducer, and the
-    uniform 99% never pays for it."""
-    hot_keys = (
-        df.groupBy(*partition_cols)
-        .agg(F.count(F.lit(1)).alias("__gcnt"))
-        .filter(F.col("__gcnt") > hot_threshold)
-        .select(*partition_cols)
-    )
-    # semi/anti against the broadcast hot-key set (rather than tagging with
-    # a left join both branches re-filter): each branch reads the base data
-    # once — three input scans total including the count pass, vs four with
-    # the tag-then-filter shape, and no intermediate to persist
-    hot = df.join(F.broadcast(hot_keys), partition_cols, "left_semi")
-    cold = df.join(F.broadcast(hot_keys), partition_cols, "left_anti")
-    hot_topk = top_k_per_group_salted(
-        hot, partition_cols, order_cols, k, rank_col, n_salts, salt_cols, salt_expr
-    )
-    cold_topk = top_k_per_group(cold, partition_cols, order_cols, k, rank_col)
-    return hot_topk.unionByName(cold_topk)
-
-
 def global_running_sum(
     df: DataFrame,
     order_col: str,

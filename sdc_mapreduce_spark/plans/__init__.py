@@ -5,8 +5,8 @@ optimizer at all, and Catalyst covers every rewrite reference parity needs),
 so this package's job is *verification* of the plans Catalyst produces:
 the pushdown/broadcast/partial-agg properties the engine promises at scale
 are asserted in tests/test_plans.py through these helpers, and
-``explain_all`` dumps the formatted plan of every registered query for
-review.
+``tools/dump_plans.py`` writes the formatted plan of registered queries
+for review.
 """
 
 from __future__ import annotations
@@ -26,37 +26,3 @@ def formatted_plan(df: DataFrame) -> str:
         "formatted"
     )
     return df._jdf.queryExecution().explainString(mode)
-
-
-def has_operator(df: DataFrame, name: str) -> bool:
-    return name in executed_plan(df)
-
-
-def count_shuffles(df: DataFrame) -> int:
-    """Number of Exchange operators in the plan (each is a full shuffle)."""
-    return executed_plan(df).count("Exchange hashpartitioning") + executed_plan(
-        df
-    ).count("Exchange rangepartitioning")
-
-
-def scan_summary(df: DataFrame) -> list[str]:
-    """The FileScan lines — where PushedFilters and ReadSchema live."""
-    return [
-        line.strip()
-        for line in executed_plan(df).splitlines()
-        if "FileScan" in line
-    ]
-
-
-def explain_all(spark, sf_dir: str) -> dict[str, str]:
-    """Formatted plan for every registered query (skips queries whose plan
-    needs runtime artifacts, e.g. fitted models, if they fail to build)."""
-    from sdc_mapreduce_spark import queries as qreg
-
-    plans: dict[str, str] = {}
-    for name, fn in qreg.queries().items():
-        try:
-            plans[name] = formatted_plan(fn(spark, sf_dir))
-        except Exception as exc:  # pragma: no cover - diagnostic path
-            plans[name] = f"<failed to build plan: {exc}>"
-    return plans

@@ -57,19 +57,36 @@ for _name in _MODULE_ORDER:
 # CERT_HEAD with the queries whose query functions reach it
 # (tests/test_registry.py computes that set from the call graph).
 CERT_HEAD: tuple[str, ...] = (
-    # minhash_lsh_pairs, exact_substring_dedup, dedup_cluster_labels,
-    # dedup_source_leakage_matrix and dedup_cluster_safe_split (unhinted
-    # joins; no count probe, MinHash semi-filter or probe-only pin)
-    "pipeline_curation",
-    "pipeline_embedding_stats",
-    "dedup_cluster_safe_split",
-    "dedup_cluster_labels",
-    "dedup_exact_substring",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_keep_best",
-    "dedup_cluster_sizes",
-    "dedup_source_leakage_matrix",
+    # the similarity operators rebuilt from shared plan fragments (unit
+    # vectors, query slice, neighbour rank, cell probe, ADC, nano
+    # centroids), cosine_topk_pandas's per-batch tie order, the shared
+    # multimodal top-3 builder and the jaccard/containment index core
+    "multimodal_embed_search",
+    "multimodal_encoder_topk",
+    "dedup_jaccard_pairs",
+    "graph_pagerank_neardup",
+    "graph_triangle_stats",
+    "dedup_containment_pairs",
+    "dedup_incremental_embedding",
+    "dedup_streaming_embedding_certified",
+    "dedup_incremental_embedding_index",
+    "simsearch_topk",
+    "simsearch_mmr",
+    "simsearch_mmr_indexed",
+    "embedding_nearest_centroid",
+    "simsearch_range_search",
+    "embedding_kmeans_step",
+    "simsearch_topk_arrow",
+    "simsearch_ann_srp",
+    "simsearch_ann_recall",
+    "simsearch_ann_ivf",
+    "simsearch_ann_ivf_recall",
+    "simsearch_ann_ivf_index_recall",
+    "simsearch_ann_pq_recall",
+    "simsearch_ann_ivfpq_recall",
+    "embedding_label_centroids",
+    "embedding_label_silhouette",
+    "simsearch_pq_codes",
 )
 if not IMPORT_QUARANTINE:
     # Only enforce completeness on a healthy import — with a module

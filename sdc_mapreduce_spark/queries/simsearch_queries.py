@@ -198,8 +198,6 @@ def simsearch_mmr_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection → in-cell pool → pairwise sims → unrolled greedy → brute
     pool overlap) on identical fold-dot doubles, so the approximate
     RESULT hash-matches, not just a recall floor."""
-    from sdc_mapreduce_spark.operators.relational import top_k_per_group
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = S.seeded_centroids(emb, n_cells=IVF_CELLS)
     assigned = S.assign_cells(emb, cents)
@@ -215,13 +213,8 @@ def simsearch_mmr_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             index_path=path,
             n_probe=IVF_PROBE,
         )
-        scored = S._index_scored(spark, path, QUERY_IDS, IVF_PROBE)
-        ivf_pool = top_k_per_group(
-            scored.select("query_id", "neighbor_id", "cosine"),
-            ["query_id"],
-            [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-            20,
-            rank_col="__pr",
+        ivf_pool = S.cosine_topk_ivf_from_index(
+            spark, path, QUERY_IDS, k=20, n_probe=IVF_PROBE
         ).select("query_id", "neighbor_id")
         brute_pool = S.cosine_topk_bruteforce(emb, QUERY_IDS, k=20).select(
             "query_id", "neighbor_id"

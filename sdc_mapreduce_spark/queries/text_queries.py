@@ -673,29 +673,24 @@ ORDER BY media_id
 """
 
 
-def multimodal_embed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end multimodal similarity search, fully oracle-checked: framed
-    media payloads → Arrow byte-histogram feature kernel (integer counts =
-    exact math) → broadcast cosine top-k. Cosine is computed as
-    int_dot / (sqrt(qq) * sqrt(vv)) with the same left-fold order the DuckDB
-    oracle uses (bin-join dot product), so scores are bit-reproducible
-    cross-engine. The digest-stub encoder path (extract_features) remains
-    separately exercised in tests/test_multimodal.py."""
-    from sdc_mapreduce_spark.functions.simsearch import dot
-    from sdc_mapreduce_spark.multimodal import byte_bin_histogram, synthesize_framed_media
-    from sdc_mapreduce_spark.operators.relational import top_k_per_group
+def _media_cosine_top3(features: DataFrame) -> DataFrame:
+    """Broadcast cosine top-3 for query media 0-4 over a (media_id,
+    feature) frame: int_dot / (sqrt(qq) * sqrt(vv)) on exact integer
+    features, ranked by cosine descending with ties to the lowest neighbor
+    id, as (query_id, neighbor_id, rank, score).
 
-    media = synthesize_framed_media(load_table(spark, sf_dir, "documents"))
-    hist = byte_bin_histogram(media)
+    Zero-norm (empty-body) vectors are dropped: they have no cosine
+    direction, and the DuckDB twins' bin joins drop them implicitly (an
+    empty text yields no bins rows) — without this filter an empty doc
+    would surface as a NaN-scored row the oracle never produces. The
+    bounded (media_id, vector, norm) frame is pinned: it feeds both the
+    query side and the corpus side of the theta-join, and without the
+    persist each side re-runs the Arrow feature kernel end-to-end."""
+    from sdc_mapreduce_spark.functions.simsearch import _rank_neighbors, dot
+
     v = F.col("feature").cast("array<double>")
-    # drop zero-norm (empty-body) vectors: they have no cosine direction,
-    # and the DuckDB twin's bin-join drops them implicitly (an empty text
-    # yields no bins rows) — without this filter an empty doc would surface
-    # here as a NaN-scored row the oracle never produces. Pinned: the frame
-    # feeds both sides of the theta-join, and the Arrow histogram kernel
-    # would otherwise run twice (same shape as multimodal_encoder_topk).
     prepared = pin(
-        hist.select(
+        features.select(
             "media_id", v.alias("__v"), dot(v, v).alias("__nn")
         ).filter(F.col("__nn") > 0)
     )
@@ -714,21 +709,25 @@ def multimodal_embed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine.alias("__cos"),
     )
     return (
-        top_k_per_group(
-            scored,
-            ["query_id"],
-            [F.col("__cos").desc(), F.col("neighbor_id").asc()],
-            3,
-            rank_col="rank",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.col("__cos").alias("score"),
-        )
+        _rank_neighbors(scored, 3, score="__cos")
+        .select("query_id", "neighbor_id", "rank", F.col("__cos").alias("score"))
         .orderBy("query_id", "rank")
     )
+
+
+def multimodal_embed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end multimodal similarity search, fully oracle-checked: framed
+    media payloads → Arrow byte-histogram feature kernel (integer counts =
+    exact math) → broadcast cosine top-k (:func:`_media_cosine_top3`).
+    Cosine is computed as int_dot / (sqrt(qq) * sqrt(vv)) with the same
+    left-fold order the DuckDB oracle uses (bin-join dot product), so
+    scores are bit-reproducible cross-engine. The digest-stub encoder path
+    (extract_features) remains separately exercised in
+    tests/test_multimodal.py."""
+    from sdc_mapreduce_spark.multimodal import byte_bin_histogram, synthesize_framed_media
+
+    media = synthesize_framed_media(load_table(spark, sf_dir, "documents"))
+    return _media_cosine_top3(byte_bin_histogram(media))
 
 
 MULTIMODAL_EMBED_SEARCH_SQL = f"""
@@ -746,54 +745,19 @@ def multimodal_encoder_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     extract_features): framed payloads → fixed-seed integer random
     projection of the body byte-histogram (a real Johnson–Lindenstrauss
     feature map, not a digest stub — r9, VERDICT r8 ask #6) → broadcast
-    cosine top-3 for query media 0-4. Every projected coordinate is an
-    exact integer (hist counts × weights in [-8,8], |proj| << 2^53 at any
-    fixture SF), so dot products and norms are order-free and the DuckDB
-    twin — which carries the projection matrix as 256 literal weights and
-    replays hist → proj → cosine relationally — reproduces every score
-    bit-for-bit."""
-    from sdc_mapreduce_spark.functions.simsearch import dot
+    cosine top-3 for query media 0-4 (:func:`_media_cosine_top3`). Every
+    projected coordinate is an exact integer (hist counts × weights in
+    [-8,8], |proj| << 2^53 at any fixture SF), so dot products and norms
+    are order-free and the DuckDB twin — which carries the projection
+    matrix as 256 literal weights and replays hist → proj → cosine
+    relationally — reproduces every score bit-for-bit."""
     from sdc_mapreduce_spark.multimodal import synthesize_and_extract
-    from sdc_mapreduce_spark.operators.relational import top_k_per_group
 
-    # r13: fused synthesize+extract kernel — the framed payload bytes never
-    # cross the JVM<->Python boundary (was 2 stacked MapInPandas nodes);
-    # output is bit-identical (see synthesize_and_extract's docstring)
-    feats = synthesize_and_extract(load_table(spark, sf_dir, "documents"))
-    v = F.col("feature").cast("array<double>")
-    # pin the bounded (media_id, vector, norm) feature frame: it feeds
-    # BOTH the query side and the corpus side of the theta-join, and
-    # without the persist each side re-runs synthesize + the Arrow encode
-    # kernel end-to-end — the whole cost of this query (VERDICT r9 ask #4)
-    prepared = pin(
-        feats.select(
-            "media_id", v.alias("__v"), dot(v, v).alias("__nn")
-        ).filter(F.col("__nn") > 0)
-    )
-    queries = prepared.filter(F.col("media_id").isin([0, 1, 2, 3, 4])).select(
-        F.col("media_id").alias("query_id"),
-        F.col("__v").alias("__q"),
-        F.col("__nn").alias("__qnn"),
-    )
-    pairs = prepared.join(F.broadcast(queries), F.col("media_id") != F.col("query_id"))
-    cosine = dot(F.col("__q"), F.col("__v")) / (
-        F.sqrt(F.col("__qnn")) * F.sqrt(F.col("__nn"))
-    )
-    scored = pairs.select(
-        "query_id",
-        F.col("media_id").alias("neighbor_id"),
-        cosine.alias("__cos"),
-    )
-    return (
-        top_k_per_group(
-            scored,
-            ["query_id"],
-            [F.col("__cos").desc(), F.col("neighbor_id").asc()],
-            3,
-            rank_col="rank",
-        )
-        .select("query_id", "neighbor_id", "rank", F.col("__cos").alias("score"))
-        .orderBy("query_id", "rank")
+    # fused synthesize+extract kernel: the framed payload bytes never
+    # cross the JVM<->Python boundary; output is bit-identical (see
+    # synthesize_and_extract's docstring)
+    return _media_cosine_top3(
+        synthesize_and_extract(load_table(spark, sf_dir, "documents"))
     )
 
 

@@ -43,11 +43,30 @@ def test_import_quarantine_is_empty():
 # every query whose query function reaches one of them must sit in CERT_HEAD.
 _CHANGED_OPERATORS = frozenset(
     {
-        "minhash_lsh_pairs",
-        "exact_substring_dedup",
-        "dedup_cluster_labels",
-        "dedup_source_leakage_matrix",
-        "dedup_cluster_safe_split",
+        "assign_cells",
+        "pq_encode",
+        "cosine_topk_bruteforce",
+        "cosine_topk_pandas",
+        "cosine_topk_srp",
+        "cosine_topk_ivf",
+        "cosine_topk_pq",
+        "cosine_topk_ivfpq",
+        "cosine_topk_ivf_from_index",
+        "_index_scored",
+        "embedding_near_pairs",
+        "cosine_range_search",
+        "mmr_topk",
+        "_srp_prep",
+        "_srp_probe_rows",
+        "label_centroid_rank",
+        "label_silhouette_audit",
+        "nearest_centroid_classify",
+        "kmeans_lloyd_step",
+        "multimodal_embed_search",
+        "multimodal_encoder_topk",
+        "simsearch_mmr_indexed",
+        "jaccard_pairs",
+        "containment_pairs",
     }
 )
 

@@ -51,6 +51,43 @@ def test_arrow_path_matches_jvm_path(spark, sf_dir):
     assert jvm == arrow
 
 
+_TIE_OPERATORS = {
+    "bruteforce": lambda df, q: S.cosine_topk_bruteforce(df, [q[0]], k=K),
+    "arrow": lambda df, q: S.cosine_topk_pandas(df, [q], k=K),
+    "srp": lambda df, q: S.cosine_topk_srp(df, [q[0]], k=K),
+    "ivf": lambda df, q: S.cosine_topk_ivf(
+        df, [q[0]], k=K, centroids=S.seeded_centroids(df)
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_TIE_OPERATORS))
+def test_topk_ties_break_by_lowest_neighbor_id(spark, op):
+    """A tie wider than k — 40 identical copies of the query vector (ids
+    0-39) among 20 random vectors, shuffled over 3 partitions — must rank
+    by the documented rule on every exact-rerank top-k operator: cosine
+    descending, then the lowest neighbor id, so query 0 gets neighbors
+    1..5. The Arrow path pre-selects per batch, so it only holds if each
+    batch already applies the same order. PQ and IVFPQ are left out:
+    their ADC scores approximate the cosine from codes, so a random
+    vector may outscore the copies and 1..5 is not their expected
+    answer."""
+    rng = np.random.RandomState(7)
+    q = rng.standard_normal(64).astype(np.float32).tolist()
+    rows = [(i, q) for i in range(40)] + [
+        (i, rng.standard_normal(64).astype(np.float32).tolist()) for i in range(40, 60)
+    ]
+    shuffled = [rows[i] for i in rng.permutation(len(rows))]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(shuffled, 3),
+        "vec_id long, embedding array<float>",
+    )
+    assert df.rdd.getNumPartitions() >= 2
+    result = _TIE_OPERATORS[op](df, (0, q)).collect()
+    got = sorted((r["rank"], r["neighbor_id"]) for r in result)
+    assert got == [(1, 1), (2, 2), (3, 3), (4, 4), (5, 5)]
+
+
 def test_srp_ann_recall(spark, sf_dir):
     """Bucketed ANN with few planes must recover a reasonable fraction of
     the true top-k (recall ≥ 0.2 on random vectors with 4 planes — loose

@@ -22,9 +22,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sdc_mapreduce_spark import queries as qreg
 from sdc_mapreduce_spark.cache import drain_pins
+from sdc_mapreduce_spark.catalog import DEFAULT_SF_DIR
 from sdc_mapreduce_spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
@@ -35,7 +34,7 @@ def main() -> None:
     spark = get_spark("bench-ab")
     spark.sparkContext.setLogLevel("ERROR")
     # identical warm-up to bench.py
-    next(iter(specs.values()))(spark, SF_DIR).limit(1).collect()
+    next(iter(specs.values()))(spark, DEFAULT_SF_DIR).limit(1).collect()
     spark.range(32).repartition(32).mapInPandas(
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
@@ -44,12 +43,12 @@ def main() -> None:
 
     out: dict[str, list[float]] = {}
     for name, fn in specs.items():
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        fn(spark, DEFAULT_SF_DIR).write.format("noop").mode("overwrite").save()
         drain_pins(spark)  # bench.py's r11 convention: timed runs start cold
         samples = []
         for _ in range(3):
             t0 = time.time()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            fn(spark, DEFAULT_SF_DIR).write.format("noop").mode("overwrite").save()
             samples.append(round(time.time() - t0, 3))
             drain_pins(spark)
         out[name] = samples

@@ -17,10 +17,9 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sdc_mapreduce_spark.cache import drain_pins
+from sdc_mapreduce_spark.catalog import DEFAULT_SF_DIR
 from sdc_mapreduce_spark.queries import REGISTRY
 from sdc_mapreduce_spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
@@ -30,7 +29,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     fn = REGISTRY[name].fn
     # warm-up (bench.py protocol)
-    fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    fn(spark, DEFAULT_SF_DIR).write.format("noop").mode("overwrite").save()
     drain_pins(spark)
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
@@ -44,7 +43,7 @@ def main() -> int:
     seen = {s["stageId"] for s in stages()}
     t0 = time.time()
     for _ in range(runs):
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        fn(spark, DEFAULT_SF_DIR).write.format("noop").mode("overwrite").save()
         drain_pins(spark)
     wall = time.time() - t0
     rows = []
