@@ -756,8 +756,8 @@ def _index_scored(
     partition filter, and emit every in-cell candidate scored —
     ``(query_id, neighbor_id, cosine, __unit)``, the candidate's unit
     vector kept for consumers that need pairwise math downstream (MMR).
-    Used by both :func:`cosine_topk_ivf_from_index` (top-k serving) and
-    :func:`mmr_topk` with ``index_path`` (diversified serving)."""
+    Used by :func:`cosine_topk_ivf_from_index` (top-k serving) and passed
+    to :func:`mmr_topk` as ``scored`` (diversified serving)."""
     corpus = spark.read.parquet(f"{path}/corpus")
     centroids = spark.read.parquet(f"{path}/centroids")
     queries = _query_slice(corpus, query_ids, id_col)
@@ -1467,8 +1467,7 @@ def mmr_topk(
     lam_tenths: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    index_path: str | None = None,
-    n_probe: int = 4,
+    scored: DataFrame | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance diversified top-k (Carbonell & Goldstein,
     SIGIR'98) — retrieval that trades relevance against redundancy:
@@ -1483,11 +1482,12 @@ def mmr_topk(
     Scale design: the expensive part — scoring the corpus — has two
     interchangeable providers. Default: the broadcast-nested-loop +
     per-group top-k plan of :func:`cosine_topk_bruteforce` (exact pool).
-    ``index_path`` (VERDICT r11 ask #4): the pool is built FROM the
-    persisted partition-pruned IVF index instead (:func:`_index_scored` —
-    probe ``n_probe`` cells per query, scan only those directories), so
-    per-query pool cost is |corpus|·n_probe/n_cells — the scale path for
-    a 100 TB corpus; its pool recall vs brute force is audited by the
+    ``scored``: the caller's candidate frame ``(query_id, neighbor_id,
+    cosine, __unit)`` instead, e.g. :func:`_index_scored` over the
+    persisted partition-pruned IVF index (probe ``n_probe`` cells per
+    query, scan only those directories), so per-query pool cost is
+    |corpus|·n_probe/n_cells — the scale path for a 100 TB corpus; its
+    pool recall vs brute force is audited by the
     ``simsearch_mmr_indexed`` registered query. Either way the greedy
     loop only ever sees the POOL (the ``pool`` best candidates per query
     by cosine descending, ties to the lowest neighbor id; pool² pairwise
@@ -1509,11 +1509,7 @@ def mmr_topk(
         raise ValueError(f"k={k} exceeds candidate pool={pool}")
     from pyspark import StorageLevel
 
-    if index_path is not None:
-        scored = _index_scored(
-            corpus.sparkSession, index_path, query_ids, n_probe, id_col
-        )
-    else:
+    if scored is None:
         prepared = _unit_frame(corpus, id_col, vec_col)
         scored = _exact_scored(prepared, query_ids, id_col, "__unit")
     pooled = pin(

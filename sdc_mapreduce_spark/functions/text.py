@@ -1353,6 +1353,9 @@ def bpe_merges(
     Returns the merge table: (merge_rank, left_sym, right_sym, pair_count),
     merge_rank 1..k in learned order. Stops early if no pair repeats.
 
+    This is the batched learner with one merge per pass (``m=1``): its
+    batch is the single argmax pair, so its pass id is the merge rank.
+
     SCALE NOTE: this exact-sequential learner runs k driver-sequenced
     Spark jobs (one argmax + one state rewrite per merge) — right for
     exactness demos and modest k, wrong for a real 32k-merge vocabulary
@@ -1360,11 +1363,11 @@ def bpe_merges(
     [[bpe_merges_batched]], which learns up to m disjoint merges per pass
     for an O(k/m_eff) job count with the same run-parity application.
     """
-    merges, _state = _bpe_learn(
-        df, k=k, text_col=text_col, min_word_freq=min_word_freq
+    merges, _state = _bpe_learn_batched(
+        df, passes=k, m=1, text_col=text_col, min_word_freq=min_word_freq
     )
     return df.sparkSession.createDataFrame(
-        merges or [],
+        [(rank, a, b, cnt) for rank, _pass_id, a, b, cnt in merges],
         "merge_rank int, left_sym string, right_sym string, pair_count bigint",
     )
 
@@ -1388,8 +1391,8 @@ def bpe_segment(
     (doc_id, n_words, n_subwords, subword_fp) where subword_fp
     is the md5 of the space-joined subword stream in document token order
     — the byte-exact witness of the segmentation without shuffling it."""
-    _merges, state = _bpe_learn(
-        df, k=k, text_col=text_col, min_word_freq=min_word_freq
+    _merges, state = _bpe_learn_batched(
+        df, passes=k, m=1, text_col=text_col, min_word_freq=min_word_freq
     )
     return _segment_with_state(df, state, text_col=text_col, id_col=id_col)
 
@@ -1451,68 +1454,13 @@ def _segment_with_state(
     )
 
 
-def _bpe_learn(
-    df: DataFrame,
-    k: int,
-    text_col: str,
-    min_word_freq: int,
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """The shared BPE loop: returns (merge list, final per-word state
-    (w, freq, syms)). See bpe_merges for semantics."""
-    from pyspark.sql import Window
-
-    words = (
-        df.select(F.explode(tokens(text_col)).alias("w"))
-        .filter(F.col("w").rlike("^[A-Za-z0-9]+$"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .filter(F.col("freq") >= min_word_freq)
-    )
-    state = words.select(
-        "w",
-        "freq",
-        F.expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        ).alias("syms"),
-    ).localCheckpoint(eager=True)
-
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, k + 1):
-        pos = state.select(
-            "w", "freq", F.posexplode("syms").alias("pos", "sym")
-        )
-        w_ord = Window.partitionBy("w").orderBy("pos")
-        paired = pos.withColumn("nxt", F.lead("sym").over(w_ord))
-        best_rows = (
-            paired.filter(F.col("nxt").isNotNull())
-            .groupBy("sym", "nxt")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("sym").asc(), F.col("nxt").asc())
-            .limit(1)
-            .collect()
-        )
-        if not best_rows or best_rows[0]["cnt"] < 2:
-            break
-        a, b, cnt = best_rows[0]["sym"], best_rows[0]["nxt"], int(best_rows[0]["cnt"])
-        merges.append((rank, a, b, cnt))
-
-        # m must be 0 (not NULL) at the word-final position, where nxt is
-        # NULL — a NULL would vanish from the run_start MAX below and make
-        # the last position look like part of a match run
-        m = (F.col("sym") == F.lit(a)) & (F.col("nxt") == F.lit(b))
-        state = _bpe_apply_merges(paired, m, w_ord)
-
-    return merges, state
-
-
 def _bpe_apply_merges(paired: DataFrame, match, w_ord) -> DataFrame:
     """Apply every position matching ``match`` (a boolean Column over
     (sym, nxt)) greedily left-to-right via the run-parity windows, and
-    return the rebuilt, eagerly-checkpointed state (w, freq, syms). Shared
-    by the sequential learner (match = one literal pair) and the batched
-    learner (match = OR over the pass's selected pairs — sound because the
+    return the rebuilt, eagerly-checkpointed state (w, freq, syms). The
+    match is the OR over the pass's selected pairs — sound because the
     selected pairs are pairwise symbol-disjoint, so matches of different
-    pairs are never positionally adjacent and every run is homogeneous)."""
+    pairs are never positionally adjacent and every run is homogeneous."""
     from pyspark.sql import Window
 
     flagged = paired.withColumn("m", F.coalesce(match.cast("int"), F.lit(0)))
@@ -1619,8 +1567,9 @@ def _bpe_learn_batched(
     text_col: str,
     min_word_freq: int,
 ) -> tuple[list[tuple[int, int, str, str, int]], DataFrame]:
-    """The batched BPE loop: returns (merge list with pass ids, final
-    per-word state). See bpe_merges_batched for the selection semantics."""
+    """The BPE loop: returns (merge list with pass ids, final per-word
+    state (w, freq, syms)). See bpe_merges_batched for the selection
+    semantics; with ``m=1`` it is the sequential learner of bpe_merges."""
     from pyspark.sql import Window
 
     if passes < 1 or m < 1:

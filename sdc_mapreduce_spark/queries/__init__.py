@@ -57,36 +57,26 @@ for _name in _MODULE_ORDER:
 # CERT_HEAD with the queries whose query functions reach it
 # (tests/test_registry.py computes that set from the call graph).
 CERT_HEAD: tuple[str, ...] = (
-    # the similarity operators rebuilt from shared plan fragments (unit
-    # vectors, query slice, neighbour rank, cell probe, ADC, nano
-    # centroids), cosine_topk_pandas's per-batch tie order, the shared
-    # multimodal top-3 builder and the jaccard/containment index core
-    "multimodal_embed_search",
-    "multimodal_encoder_topk",
-    "dedup_jaccard_pairs",
-    "graph_pagerank_neardup",
-    "graph_triangle_stats",
-    "dedup_containment_pairs",
-    "dedup_incremental_embedding",
-    "dedup_streaming_embedding_certified",
-    "dedup_incremental_embedding_index",
-    "simsearch_topk",
+    # the streaming certifications and events_sliding run the
+    # streaming/events.py operators (the certs over replay_events streams)
+    "events_streaming_tumbling_certified",
+    "events_streaming_sliding_certified",
+    "events_streaming_watermark_certified",
+    "events_streaming_update_certified",
+    "events_streaming_restart_certified",
+    "events_streaming_dedup_certified",
+    "events_streaming_stateful_certified",
+    "events_streaming_join_certified",
+    "events_streaming_cdc_certified",
+    "events_streaming_session_certified",
+    "events_sliding",
+    # mmr_topk takes the scored candidate frame; the indexed query probes
+    # its IVF index once
     "simsearch_mmr",
     "simsearch_mmr_indexed",
-    "embedding_nearest_centroid",
-    "simsearch_range_search",
-    "embedding_kmeans_step",
-    "simsearch_topk_arrow",
-    "simsearch_ann_srp",
-    "simsearch_ann_recall",
-    "simsearch_ann_ivf",
-    "simsearch_ann_ivf_recall",
-    "simsearch_ann_ivf_index_recall",
-    "simsearch_ann_pq_recall",
-    "simsearch_ann_ivfpq_recall",
-    "embedding_label_centroids",
-    "embedding_label_silhouette",
-    "simsearch_pq_codes",
+    # bpe_merges / bpe_segment run the batched learner with m=1
+    "text_bpe_merges",
+    "text_bpe_segment",
 )
 if not IMPORT_QUARANTINE:
     # Only enforce completeness on a healthy import — with a module

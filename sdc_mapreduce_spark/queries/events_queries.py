@@ -1,9 +1,11 @@
 """Event-table queries: batch forms of the streaming operators (tumbling
-windows, sessionization), JSON extraction, as-of and time-range joins.
+windows, sessionization), JSON extraction, as-of and time-range joins, and
+the streaming certifications.
 
-The streaming twins of these plans live in ``sdc_mapreduce_spark.streaming``
-(same logical shapes under watermarks); the batch forms here are the
-oracle-checkable surface.
+The ``events_streaming_*_certified`` queries run the
+``sdc_mapreduce_spark.streaming.events`` operators over ``replay_events``
+file streams, so the streaming runtime itself answers an oracle-checked
+query; the batch forms are the rest of the oracle-checkable surface.
 """
 
 from __future__ import annotations
@@ -19,6 +21,17 @@ from sdc_mapreduce_spark.operators.relational import (
 )
 from sdc_mapreduce_spark.queries.base import QuerySpec, dsum, sql_dsum
 from sdc_mapreduce_spark.queries.scratch import scratch
+from sdc_mapreduce_spark.streaming.events import (
+    cdc_upsert_stream,
+    read_cdc_snapshot,
+    replay_events,
+    session_aggregate,
+    sliding_counts,
+    stateful_user_totals,
+    stream_stream_error_purchase_join,
+    streaming_dedup,
+    tumbling_counts,
+)
 
 # --- DuckDB oracle fragments ---------------------------------------------
 
@@ -89,8 +102,9 @@ _CHANGES = """ordered AS (
 
 
 def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5-minute tumbling-window counts per event type (batch form of
-    streaming.tumbling_counts — identical logical plan minus the watermark)."""
+    """5-minute tumbling-window counts per event type: the batch form of
+    streaming.tumbling_counts, kept separate because its value sum is the
+    exact ``dsum`` decimal its oracle checks, not the operator's double."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
@@ -118,12 +132,7 @@ def events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 10-minute windows every 5 minutes: each event lands in two
     windows (batch form of streaming.sliding_counts). The oracle enumerates
     the two covering window starts per event and groups on them."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
-    )
+    return sliding_counts(load_table(spark, sf_dir, "events"), watermark=None)
 
 
 EVENTS_SLIDING_SQL = """
@@ -810,48 +819,28 @@ ORDER BY g.hour, g.event_type
 
 
 def events_streaming_tumbling_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL Structured Streaming engine, driver-certified: materialize
-    the events table as a replayable json file stream, run the streaming
-    tumbling-count pipeline to completion (availableNow trigger, COMPLETE
-    output mode so every window is emitted — no watermark-withheld tail),
-    and return its result for the oracle hash. This is the one registered
-    query whose answer is produced by the streaming runtime itself — micro-
-    batch planning, state store, event-time windows — rather than a batch
-    twin; a state-management bug that batch plans can't exhibit turns this
-    row red. Counts only (exact integers): streaming's double sums
-    accumulate in arrival order, so the deterministic value-sum surface
-    stays with the batch twins."""
+    """The REAL Structured Streaming engine, driver-certified: replay the
+    events table as a json file stream, run ``tumbling_counts`` to
+    completion (availableNow trigger, COMPLETE output mode so every window
+    is emitted — no watermark-withheld tail), and return its result for
+    the oracle hash. The answer is produced by the streaming runtime itself
+    — micro-batch planning, state store, event-time windows — rather than
+    a batch twin; a state-management bug that batch plans can't exhibit
+    turns this row red. Counts only (exact integers): streaming's double
+    sums accumulate in arrival order, so the deterministic value-sum
+    surface stays with the batch twins. Event time is read as
+    TIMESTAMP_NTZ: this query runs inside the DRIVER's session, whose
+    timezone we don't control, and a zoned parse would shift window
+    boundaries relative to the naive-timestamp DuckDB oracle."""
     with scratch(spark) as s:
         src, ckpt = s.dir(), s.dir()
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        ).repartition(4).write.mode("overwrite").json(src)
-        # parse ts as TIMESTAMP_NTZ: this query runs inside the DRIVER's
-        # session, whose timezone we don't control — a zone-dependent
-        # `timestamp` parse would shift window boundaries relative to the
-        # naive-timestamp DuckDB oracle
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp_ntz, user_id long, "
-                "event_type string, value double, props string"
-            )
-            .format("json")
-            .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .load(src)
+        stream = replay_events(
+            load_table(spark, sf_dir, "events"), src, "ts", "event_type", "value"
         )
-        agg = (
-            stream.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
-        )
+        agg = tumbling_counts(stream, watermark=None)
         result = s.memory(
-            agg.writeStream.outputMode("complete")
+            agg.select("window_start", "event_type", "cnt")
+            .writeStream.outputMode("complete")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
         )
@@ -872,38 +861,22 @@ def events_streaming_sliding_certified(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """SLIDING-window twin of events_streaming_tumbling_certified: the
-    real micro-batch engine runs a 10-minute window sliding every 5
-    minutes (every event belongs to exactly TWO overlapping windows) to
-    completion, and the result earns its own oracle hash. Overlapping
-    window-assignment is a distinct state-store code path from tumbling —
-    Spark expands each row into duration/slide window copies before the
-    stateful aggregation — so the tumbling cert alone does not exercise
-    it. The oracle replays the expansion: window starts for event t are
-    bucket5(t) and bucket5(t) − 5 minutes. Counts only, as in the
-    tumbling cert (arrival-order double sums stay with batch twins)."""
+    real micro-batch engine runs ``sliding_counts`` (a 10-minute window
+    sliding every 5 minutes, so every event belongs to exactly TWO
+    overlapping windows) to completion, and the result earns its own
+    oracle hash. Overlapping window-assignment is a distinct state-store
+    code path from tumbling — Spark expands each row into duration/slide
+    window copies before the stateful aggregation — so the tumbling cert
+    alone does not exercise it. The oracle replays the expansion: window
+    starts for event t are bucket5(t) and bucket5(t) − 5 minutes."""
     with scratch(spark) as s:
         src, ckpt = s.dir(), s.dir()
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            "event_type",
-        ).repartition(4).write.mode("overwrite").json(src)
-        stream = (
-            spark.readStream.schema("event_id long, ts timestamp_ntz, event_type string")
-            .format("json")
-            .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .load(src)
-        )
-        agg = (
-            stream.groupBy(
-                F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type"
-            )
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
+        stream = replay_events(
+            load_table(spark, sf_dir, "events"), src, "ts", "event_type"
         )
         result = s.memory(
-            agg.writeStream.outputMode("complete")
+            sliding_counts(stream, watermark=None)
+            .writeStream.outputMode("complete")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
         )
@@ -928,12 +901,12 @@ def events_streaming_watermark_certified(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """APPEND-mode watermark finalization, driver-certified by the real
-    micro-batch engine: the events table replays as a json file stream,
-    aggregated into 5-minute tumbling counts under ``withWatermark("ts",
-    "10 minutes")`` in APPEND output mode — so the sink receives exactly
-    the windows the watermark has CLOSED, and the still-open tail (every
-    window whose end exceeds max_event_time − 10min) is withheld. The
-    oracle twin replays that contract: counts over all events where
+    micro-batch engine: the events table replays as a json file stream
+    (two files per micro-batch) into ``tumbling_counts`` under its
+    10-minute watermark in APPEND output mode — so the sink receives
+    exactly the windows the watermark has CLOSED, and the still-open tail
+    (every window whose end exceeds max_event_time − 10min) is withheld.
+    The oracle twin replays that contract: counts over all events where
     window_end <= max(ts) − 10 minutes. This certifies the state-eviction
     path the other streaming certifications never touch (they run
     complete/update shapes): watermark tracking across micro-batches,
@@ -946,9 +919,9 @@ def events_streaming_watermark_certified(
     micro-batches but input rows arriving late in a later batch MERGE
     into (or re-open) their window's state rather than being dropped —
     the hard guarantee is finalization, not input-dropping, so the twin
-    must count ALL rows. SPARK-VERSION DEPENDENCY (ADVICE r8): Spark
-    documents late-data dropping as "may or may not" — pinned on Spark
-    4.1.2 by tests/test_streaming.py (the aligned fixture and
+    must count ALL rows. SPARK-VERSION DEPENDENCY: Spark documents
+    late-data dropping as "may or may not" — pinned on Spark 4.1.2 by
+    tests/test_streaming.py (the aligned fixture and
     test_watermark_drops_late_rows), which must stay in CI across any
     Spark upgrade; if this cert ever goes red after a version bump,
     triage it as an ENGINE-BEHAVIOR change (re-derive the twin's counting
@@ -962,78 +935,67 @@ def events_streaming_watermark_certified(
     (the --tz Asia/Kolkata audit exercises exactly this)."""
     with scratch(spark) as s:
         src, ckpt = s.dir(), s.dir()
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+        stream = replay_events(
+            load_table(spark, sf_dir, "events"),
+            src,
+            "ts",
             "event_type",
-        ).repartition(4).write.mode("overwrite").json(src)
-        stream = (
-            spark.readStream.schema("ts timestamp, event_type string")
-            .format("json")
-            .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .option("maxFilesPerTrigger", 2)
-            .load(src)
-        )
-        # cast the zoned window start back to NTZ (= session-tz wall
-        # clock) BEFORE collecting: plain collect() renders TimestampType
-        # in the driver *process* zone, not the session zone, so a zoned
-        # column would shift under the --tz audit while NTZ round-trips
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(
-                F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-                "event_type",
-                "cnt",
-            )
+            "value",
+            event_time="zoned",
+            max_files_per_trigger=2,
         )
         result = s.memory(
-            agg.writeStream.outputMode("append")
+            _closed_windows(stream)
+            .writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
         )
         return result.orderBy("window_start", "event_type")
 
 
+def _closed_windows(stream: DataFrame) -> DataFrame:
+    """``tumbling_counts`` under its 10-minute watermark, with the zoned
+    window start cast back to NTZ (= session-tz wall clock) BEFORE
+    collecting: plain collect() renders TimestampType in the driver
+    *process* zone, not the session zone, so a zoned column would shift
+    under the --tz audit while NTZ round-trips."""
+    return tumbling_counts(stream).select(
+        F.col("window_start").cast("timestamp_ntz").alias("window_start"),
+        "event_type",
+        "cnt",
+    )
+
+
 def events_streaming_update_certified(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """UPDATE-mode delta emission, driver-certified: the events table
-    replays as a 4-file json stream forced through one-file micro-batches,
-    aggregated into 5-minute tumbling counts in UPDATE output mode, and
-    every batch's emissions land (tagged with the batch id) in a parquet
-    sink via foreachBatch. Update mode re-emits a key each time its
-    aggregate CHANGES, so the certified invariant is versioning, not
-    append-once: for every (window, event_type) the LATEST emission must
-    equal the full batch-twin count — regardless of how the files split
-    into micro-batches, the last delta always carries the total. A state
-    bug that loses or double-applies a per-batch increment turns exactly
-    this row red. This is the one output mode the other streaming
+    replays as a 4-file json stream forced through one-file micro-batches
+    into ``tumbling_counts`` in UPDATE output mode, and every batch's
+    emissions land (tagged with the batch id) in a parquet sink via
+    foreachBatch. Update mode re-emits a key each time its aggregate
+    CHANGES, so the certified invariant is versioning, not append-once:
+    for every (window, event_type) the LATEST emission must equal the full
+    batch-twin count — regardless of how the files split into
+    micro-batches, the last delta always carries the total. A state bug
+    that loses or double-applies a per-batch increment turns exactly this
+    row red. This is the one output mode the other streaming
     certifications don't exercise (tumbling/session run complete, the
     watermark cert runs append). Event time stays TIMESTAMP_NTZ — update
     mode needs no watermark, which keeps the replay zone-proof and the
     state finite only because the replay is (availableNow; an unbounded
-    deployment would add withWatermark, as incremental_rollup does)."""
+    deployment would keep the watermark, as incremental_rollup does)."""
     with scratch(spark) as s:
         src, ckpt, sink = s.dir(), s.dir(), s.dir()
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+        stream = replay_events(
+            load_table(spark, sf_dir, "events"),
+            src,
+            "ts",
             "event_type",
-        ).repartition(4).write.mode("overwrite").json(src)
-        stream = (
-            spark.readStream.schema("ts timestamp_ntz, event_type string")
-            .format("json")
-            .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
+            "value",
+            max_files_per_trigger=1,
         )
-        agg = (
-            stream.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
-        )
+        agg = tumbling_counts(stream, watermark=None)
 
         def land(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.withColumn("__b", F.lit(batch_id)).write.mode(
@@ -1041,7 +1003,8 @@ def events_streaming_update_certified(
             ).parquet(sink)
 
         s.run(
-            agg.writeStream.foreachBatch(land)
+            agg.select("window_start", "event_type", "cnt")
+            .writeStream.foreachBatch(land)
             .outputMode("update")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -1066,10 +1029,10 @@ def events_streaming_restart_certified(
     """Checkpoint-restart recovery, driver-certified — the exactly-once +
     watermark-persistence semantics no single-run certification can
     reach: the stream runs TWICE against one checkpoint. Run 1 processes
-    events before Jan 21 (append mode, 10-minute watermark, 5-minute
-    tumbling counts into a parquet sink) and finalizes every window the
-    phase-1 watermark closes. Run 2 restarts from the checkpoint with the
-    remaining events PLUS a late echo of the first day's rows: the
+    events before Jan 21 (append mode, ``tumbling_counts`` under its
+    10-minute watermark into a parquet sink) and finalizes every window
+    the phase-1 watermark closes. Run 2 restarts from the checkpoint with
+    the remaining events PLUS a late echo of the first day's rows: the
     recovered watermark (a checkpoint artifact, not session state) drops
     the echo — inside one availableNow run late rows merge
     (events_streaming_watermark_certified pins that), but across a
@@ -1081,35 +1044,19 @@ def events_streaming_restart_certified(
     (wm1, wm2] count everything; the final open tail is withheld.
     A broken state restore, a re-emitted finalized window, a lost or
     double-processed file — each turns this row red."""
-    cutoff = "2024-01-21 00:00:00"
-    echo_end = "2024-01-02 00:00:00"
+    cutoff = F.expr("timestamp_ntz'2024-01-21 00:00:00'")
+    echo_end = F.expr("timestamp_ntz'2024-01-02 00:00:00'")
     with scratch(spark) as s:
         src, ckpt, sink = s.dir(), s.dir(), s.dir()
         ev = load_table(spark, sf_dir, "events")
-        cols = [
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            "event_type",
-        ]
 
-        def run() -> None:
-            stream = (
-                spark.readStream.schema("ts timestamp, event_type string")
-                .format("json")
-                .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-                .load(src)
-            )
-            agg = (
-                stream.withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .select(
-                    F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-                    "event_type",
-                    "cnt",
-                )
+        def run(delivery: DataFrame) -> None:
+            stream = replay_events(
+                delivery, src, "ts", "event_type", "value", event_time="zoned", files=2
             )
             s.run(
-                agg.writeStream.format("parquet")
+                _closed_windows(stream)
+                .writeStream.format("parquet")
                 .option("path", sink)
                 .option("checkpointLocation", ckpt)
                 .outputMode("append")
@@ -1117,16 +1064,14 @@ def events_streaming_restart_certified(
                 .start()
             )
 
-        phase1 = ev.filter(F.col("ts") < F.expr(f"timestamp_ntz'{cutoff}'"))
-        s.land(phase1.select(*cols).coalesce(2), "json", src, "p1")
-        run()
+        run(ev.filter(F.col("ts") < cutoff))
         # restart input: the fresh tail + a LATE ECHO of day-1 rows (all
         # of whose windows the phase-1 watermark already finalized)
-        tail = ev.filter(F.col("ts") >= F.expr(f"timestamp_ntz'{cutoff}'"))
-        echo = ev.filter(F.col("ts") < F.expr(f"timestamp_ntz'{echo_end}'"))
-        phase2 = tail.select(*cols).unionByName(echo.select(*cols))
-        s.land(phase2.coalesce(2), "json", src, "p2")
-        run()
+        run(
+            ev.filter(F.col("ts") >= cutoff).unionByName(
+                ev.filter(F.col("ts") < echo_end)
+            )
+        )
         result = (
             spark.read.parquet(sink)
             .select("window_start", "event_type", "cnt")
@@ -1302,41 +1247,31 @@ ORDER BY d.event_id
 
 def events_streaming_dedup_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second driver-certified streaming query: the streaming DEDUP state
-    store, run by the real micro-batch engine. The events table is
-    materialized as a replayable json stream, projected to the dedup key
-    (user_id, event_type, 10-minute bucket) BEFORE ``dropDuplicates`` — so
-    the output is the exact distinct-key set regardless of which physical
-    arrival survives — and streamed to completion with an availableNow
-    trigger in append mode. A state-store bug (key lost, key re-emitted,
-    hash collision) changes the emitted set and turns this row red against
-    the batch DISTINCT oracle. Exact-state dropDuplicates (no watermark
-    TTL) keeps the finite certification run deterministic; the
-    watermark-TTL form and its kill/resume exactly-once behavior are
-    covered in tests/test_streaming.py."""
+    store, run by the real micro-batch engine. The events table replays as
+    a json stream, projected to the dedup key (user_id, event_type,
+    10-minute bucket) BEFORE ``streaming_dedup`` — so the output is the
+    exact distinct-key set regardless of which physical arrival survives —
+    and streamed to completion with an availableNow trigger in append
+    mode. A state-store bug (key lost, key re-emitted, hash collision)
+    changes the emitted set and turns this row red against the batch
+    DISTINCT oracle. Exact-state dedup (no watermark TTL) keeps the finite
+    certification run deterministic; the watermark-TTL form is covered in
+    tests/test_streaming.py."""
     with scratch(spark) as s:
         src, ckpt = s.dir(), s.dir()
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            "user_id",
-            "event_type",
-        ).repartition(4).write.mode("overwrite").json(src)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp_ntz, user_id long, event_type string"
-            )
-            .format("json")
-            .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .load(src)
+        stream = replay_events(
+            load_table(spark, sf_dir, "events"), src, "ts", "user_id", "event_type"
         )
         keys = stream.select(
             "user_id",
             "event_type",
             F.window("ts", "10 minutes")["start"].alias("bucket_start"),
-        ).dropDuplicates(["user_id", "event_type", "bucket_start"])
+        )
         result = s.memory(
-            keys.writeStream.outputMode("append")
+            streaming_dedup(
+                keys, ["user_id", "event_type", "bucket_start"], watermark=None
+            )
+            .writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
         )
@@ -1345,77 +1280,30 @@ def events_streaming_dedup_certified(spark: SparkSession, sf_dir: str) -> DataFr
 
 def events_streaming_stateful_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Third driver-certified streaming query: ARBITRARY STATE via
-    ``applyInPandasWithState``, run by the real micro-batch engine. Per-user
-    lifetime totals accumulate in exact integer micro-units (each value is
-    floor-quantized once, then summed as longs — order-free, so the result
-    is identical however the engine batches the files), and the final state
-    emission per user is recovered as the row with the largest n_events
-    (n strictly increases across a user's emissions, so this is
-    batching-invariant). The oracle is the plain per-user aggregate; a
-    state-store round-trip bug (lost/duplicated state between batches)
-    changes the totals and turns the row red."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    ``applyInPandasWithState`` (``stateful_user_totals``), run by the real
+    micro-batch engine. Per-user lifetime totals accumulate in exact
+    integer micro-units (each value is floor-quantized once, then summed
+    as longs — order-free, so the result is identical however the engine
+    batches the files), and the final state emission per user is
+    recovered as the row with the largest n_events (n strictly increases
+    across a user's emissions, so this is batching-invariant). The oracle
+    is the plain per-user aggregate; a state-store round-trip bug
+    (lost/duplicated state between batches) changes the totals and turns
+    the row red. No watermark: NoTimeout state needs none."""
     with scratch(spark) as s:
         src, ckpt = s.dir(), s.dir()
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            "user_id",
-            F.floor(F.col("value") * 1e6).cast("long").alias("value_micro"),
-        ).repartition(4).write.mode("overwrite").json(src)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp_ntz, user_id long, value_micro long"
-            )
-            .format("json")
-            .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .load(src)
-        )
-
-        def update(key, pdfs, state):
-            n, total = state.get if state.exists else (0, 0)
-            for pdf in pdfs:
-                n += len(pdf)
-                total += int(pdf["value_micro"].sum())
-            state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "value_micro_sum": [total],
-                }
-            )
-
-        # no watermark: NoTimeout state needs none, and withWatermark
-        # rejects TIMESTAMP_NTZ event time (the NTZ discipline the oracle
-        # comparison requires)
-        totals = (
-            stream.groupBy("user_id")
-            .applyInPandasWithState(
-                update,
-                outputStructType=(
-                    "user_id long, n_events long, value_micro_sum long"
-                ),
-                stateStructType="n long, total long",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+        stream = replay_events(
+            load_table(spark, sf_dir, "events"), src, "user_id", "value"
         )
         emitted = s.memory(
-            totals.writeStream.outputMode("update")
+            stateful_user_totals(stream, watermark=None)
+            .writeStream.outputMode("update")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
         )
         return (
             emitted.groupBy("user_id")
-            .agg(
-                F.max(
-                    F.struct("n_events", "value_micro_sum")
-                ).alias("__f")
-            )
+            .agg(F.max(F.struct("n_events", "value_micro_sum")).alias("__f"))
             .select(
                 "user_id",
                 F.col("__f.n_events").alias("n_events"),
@@ -1437,65 +1325,30 @@ ORDER BY user_id
 
 def events_streaming_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fourth driver-certified streaming query: a STREAM-STREAM time-bounded
-    inner join run by the real micro-batch engine (the remaining major
-    streaming operator family after windowed aggregation, dedup state, and
-    arbitrary state). One replayable json stream, filtered into error and
-    purchase sides, each watermarked, joined on user within a 1-hour
-    look-ahead — the bounded-state join plan. Watermarks require a zoned
-    event time, and the driver's session zone is uncontrolled, so the
-    stream's timestamp strings carry an EXPLICIT +0000 offset: the parsed
-    instants — and therefore the matched pair set — are identical in any
-    session zone, and the output is ids only. Oracle = the batch interval
-    predicate."""
+    inner join (``stream_stream_error_purchase_join``) run by the real
+    micro-batch engine (the remaining major streaming operator family after
+    windowed aggregation, dedup state, and arbitrary state). One replayable
+    json stream, filtered into error and purchase sides, each watermarked,
+    joined on user within a 1-hour look-ahead — the bounded-state join
+    plan. Watermarks require a zoned event time, and the driver's session
+    zone is uncontrolled, so the stream's timestamp strings carry an
+    EXPLICIT +0000 offset: the parsed instants — and therefore the matched
+    pair set — are identical in any session zone, and the output is ids
+    only. Oracle = the batch interval predicate."""
     with scratch(spark) as s:
         src, ckpt = s.dir(), s.dir()
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(
+        stream = replay_events(
+            load_table(spark, sf_dir, "events"),
+            src,
             "event_id",
-            F.concat(
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-                F.lit("+0000"),
-            ).alias("ts"),
+            "ts",
             "user_id",
             "event_type",
-        ).repartition(4).write.mode("overwrite").json(src)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string"
-            )
-            .format("json")
-            .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSSxx")
-            .load(src)
+            event_time="utc",
         )
-        errors = (
-            stream.filter(F.col("event_type") == "error")
-            .select(
-                F.col("event_id").alias("error_event_id"),
-                "user_id",
-                F.col("ts").alias("error_ts"),
-            )
-            .withWatermark("error_ts", "2 hours")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_event_id"),
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("purchase_ts"),
-            )
-            .withWatermark("purchase_ts", "2 hours")
-        )
-        joined = errors.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("purchase_ts") >= F.col("error_ts"))
-            & (
-                F.col("purchase_ts")
-                <= F.col("error_ts") + F.expr("INTERVAL 1 HOUR")
-            ),
-        ).select("error_event_id", "purchase_event_id", "user_id")
         result = s.memory(
-            joined.writeStream.outputMode("append")
+            stream_stream_error_purchase_join(stream)
+            .writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
         )
@@ -2247,31 +2100,18 @@ def events_streaming_cdc_certified(spark: SparkSession, sf_dir: str) -> DataFram
     in cross-batch upsert semantics (a later batch failing to supersede an
     earlier version, tombstone mishandling, double-counted replays) turns
     this row red in a way no batch plan can."""
-    from sdc_mapreduce_spark.streaming.events import (
-        cdc_upsert_stream,
-        read_cdc_snapshot,
-    )
-
     with scratch(spark) as s:
-        src_dir, snap, ckpt = s.dir(), s.dir(), s.dir()
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(
+        src, snap, ckpt = s.dir(), s.dir(), s.dir()
+        stream = replay_events(
+            load_table(spark, sf_dir, "events"),
+            src,
             "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+            "ts",
             "user_id",
             "event_type",
             "value",
-            "props",
-        ).repartition(8).write.mode("overwrite").json(src_dir)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp_ntz, user_id long, "
-                "event_type string, value double, props string"
-            )
-            .format("json")
-            .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .option("maxFilesPerTrigger", 2)
-            .load(src_dir)
+            files=8,
+            max_files_per_trigger=2,
         )
         s.run(cdc_upsert_stream(stream, snap, ckpt))
         return s.local(read_cdc_snapshot(spark, snap).orderBy("user_id"))
@@ -2368,49 +2208,35 @@ def events_streaming_session_certified(
 ) -> DataFrame:
     """Streaming SESSION-WINDOW state, driver-certified by the real
     micro-batch engine: the events table replays as a json file stream
-    forced through multiple micro-batches (maxFilesPerTrigger), aggregated
-    with the NATIVE merging ``session_window`` (30-minute gap) per user —
-    the batch form of which events_sessionize_native certifies — in
-    complete output mode, and the final session set must equal the manual
-    lag→flag→running-count sessionization oracle. This is the one stateful
-    shape the other streaming certifications don't cover: session state
-    MERGES across micro-batches (two open sessions can fuse when a
-    gap-bridging event arrives in a later batch), so a merge-semantics bug
-    in the session state store turns exactly this row red. Complete mode
-    keeps the certification run watermark-free (NTZ event time, the oracle
-    discipline); a production deployment bounds state with
-    ``withWatermark`` + append mode instead — the trade is documented, not
-    hidden."""
+    forced through multiple micro-batches (maxFilesPerTrigger) into
+    ``session_aggregate`` — the NATIVE merging ``session_window``
+    (30-minute gap) per user, the batch form of which
+    events_sessionize_native certifies — in complete output mode, and the
+    final session set must equal the manual lag→flag→running-count
+    sessionization oracle. This is the one stateful shape the other
+    streaming certifications don't cover: session state MERGES across
+    micro-batches (two open sessions can fuse when a gap-bridging event
+    arrives in a later batch), so a merge-semantics bug in the session
+    state store turns exactly this row red. Complete mode keeps the
+    certification run watermark-free (NTZ event time, the oracle
+    discipline); a production deployment bounds state with the watermark
+    + append mode instead — the trade is documented, not hidden."""
     with scratch(spark) as s:
         src, ckpt = s.dir(), s.dir()
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+        stream = replay_events(
+            load_table(spark, sf_dir, "events"),
+            src,
+            "ts",
             "user_id",
-        ).repartition(4).write.mode("overwrite").json(src)
-        stream = (
-            spark.readStream.schema("event_id long, ts timestamp_ntz, user_id long")
-            .format("json")
-            .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-        )
-        agg = stream.groupBy(
-            F.session_window("ts", "30 minutes").alias("w"), "user_id"
-        ).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
+            max_files_per_trigger=1,
         )
         result = s.memory(
-            agg.writeStream.outputMode("complete")
+            session_aggregate(stream, watermark=None)
+            .writeStream.outputMode("complete")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
         )
-        return result.select(
-            "user_id", "session_start", "session_end", "n_events"
-        ).orderBy("user_id", "session_start")
+        return result.orderBy("user_id", "session_start")
 
 
 EVENTS_STREAMING_SESSION_SQL = f"""

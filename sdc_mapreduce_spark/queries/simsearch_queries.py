@@ -8,7 +8,11 @@ from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.functions import simsearch as S
-from sdc_mapreduce_spark.functions.simsearch import quantization_audit
+from sdc_mapreduce_spark.functions.simsearch import (
+    _index_scored,
+    _topk,
+    quantization_audit,
+)
 from sdc_mapreduce_spark.queries.base import (
     QuerySpec,
     srp_buckets_sql,
@@ -181,10 +185,10 @@ def _mmr_greedy_sql(k: int, lam: int) -> str:
 
 def simsearch_mmr_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR diversified top-5 served FROM the persisted partition-pruned
-    IVF index (VERDICT r11 ask #4): build the seeded quantizer, write the
-    index (corpus one directory per cell + centroids), then run
-    ``mmr_topk(..., index_path=...)`` — the pool stage probes
-    ``IVF_PROBE`` cells per query and scans only those directories
+    IVF index: build the seeded quantizer, write the index (corpus one
+    directory per cell + centroids), probe it once and run
+    ``mmr_topk(..., scored=...)`` on the probed candidates — the probe
+    selects ``IVF_PROBE`` cells per query and scans only those directories
     (static ``__cell IN`` partition filter), so pool cost is
     |corpus|·n_probe/n_cells instead of |corpus|. The greedy rerank is
     unchanged (integer micro-unit arithmetic).
@@ -204,18 +208,12 @@ def simsearch_mmr_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scratch(spark) as s:
         path = s.dir()
         S.write_ivf_index(assigned, cents, path)
+        # one probe of the index feeds both the MMR pool and the audit pool
+        scored = _index_scored(spark, path, QUERY_IDS, IVF_PROBE)
         mmr = S.mmr_topk(
-            emb,
-            QUERY_IDS,
-            k=TOP_K,
-            pool=20,
-            lam_tenths=7,
-            index_path=path,
-            n_probe=IVF_PROBE,
+            emb, QUERY_IDS, k=TOP_K, pool=20, lam_tenths=7, scored=scored
         )
-        ivf_pool = S.cosine_topk_ivf_from_index(
-            spark, path, QUERY_IDS, k=20, n_probe=IVF_PROBE
-        ).select("query_id", "neighbor_id")
+        ivf_pool = _topk(scored.select("query_id", "neighbor_id", "cosine"), 20)
         brute_pool = S.cosine_topk_bruteforce(emb, QUERY_IDS, k=20).select(
             "query_id", "neighbor_id"
         )

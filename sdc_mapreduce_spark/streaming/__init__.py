@@ -1,28 +1,3 @@
 """Structured Streaming surface (the reference has none — SURVEY.md §2.2):
-event-time windows with watermarks, streaming dedup, stateful sessionization."""
-
-from sdc_mapreduce_spark.streaming.events import (
-    EVENTS_DDL,
-    enrich_with_dimension,
-    incremental_rollup,
-    read_events_stream,
-    session_aggregate,
-    sliding_counts,
-    stateful_user_totals,
-    stream_stream_error_purchase_join,
-    streaming_dedup,
-    tumbling_counts,
-)
-
-__all__ = [
-    "EVENTS_DDL",
-    "enrich_with_dimension",
-    "incremental_rollup",
-    "read_events_stream",
-    "session_aggregate",
-    "sliding_counts",
-    "stateful_user_totals",
-    "stream_stream_error_purchase_join",
-    "streaming_dedup",
-    "tumbling_counts",
-]
+event-time windows with watermarks, streaming dedup, stateful
+sessionization and per-key state, stream-stream joins; see ``events``."""

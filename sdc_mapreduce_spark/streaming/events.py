@@ -1,21 +1,26 @@
 """Streaming operators over the events schema (FIXTURES.md Group B).
 
 Batch and stream share one logical plan in Structured Streaming, so each
-operator here takes whatever DataFrame it is given — the tests drive them
-both from a file stream (``availableNow`` trigger) and from batch frames.
+operator here takes whatever DataFrame it is given: the registered
+``events_streaming_*_certified`` queries run them over
+:func:`replay_events` file streams (``availableNow`` trigger), and the
+batch twin ``events_sliding`` runs ``sliding_counts`` on the table.
 
 Watermark policy (ours to define — the reference has no streaming at all):
 event-time = ``ts``; late rows older than the watermark delay are dropped;
 windowed aggregates emit in append mode once the watermark passes window
 end. State stores stay bounded because every stateful operator below is
 keyed by (window | user) x watermark — the requirement for unbounded-input
-deployments.
+deployments. ``watermark=None`` runs a windowed, dedup or per-user
+operator without one, as the certifications do for finite replays in
+complete or update mode.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
 # Watermarks require TIMESTAMP (with local time zone); the session pins
 # spark.sql.session.timeZone=UTC so wall-clock values agree with the
@@ -25,27 +30,85 @@ EVENTS_DDL = (
     "value double, props string"
 )
 
+# Event time in a replay file is microsecond wall-clock text. How it reads
+# back: "ntz" as TIMESTAMP_NTZ, the same naive value in any session zone;
+# "zoned" as TIMESTAMP in the session zone, which watermarks accept; "utc"
+# as TIMESTAMP from text carrying an explicit +0000 offset, so the parsed
+# instants are the same in every session zone.
+_TS_TEXT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+_EVENT_TIME = {
+    # encoding -> (ts type, reader option, reader pattern, written offset)
+    "ntz": (TimestampNTZType(), "timestampNTZFormat", _TS_TEXT, ""),
+    "zoned": (TimestampType(), "timestampFormat", _TS_TEXT, ""),
+    "utc": (TimestampType(), "timestampFormat", _TS_TEXT + "xx", "+0000"),
+}
+
+
+def replay_events(
+    events: DataFrame,
+    dest: str,
+    *cols: str,
+    event_time: str = "ntz",
+    files: int = 4,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Land ``events.select(*cols)`` as ``files`` json files in ``dest``
+    and return a file stream over ``dest`` (the replayable analog of a
+    Kafka topic; swapping in ``format('kafka')`` changes only the reader).
+    The stream's schema is the projection's, with ``ts`` read in the
+    ``event_time`` encoding. Files are appended, so a second call on the
+    same ``dest`` adds a delivery that a checkpointed query picks up on
+    restart."""
+    ts_type, _option, _pattern, offset = _EVENT_TIME[event_time]
+    text = F.concat(F.date_format("ts", _TS_TEXT), F.lit(offset)).alias("ts")
+    landed = events.select(*(text if c == "ts" else c for c in cols))
+    landed.repartition(files).write.mode("append").json(dest)
+    schema = StructType(
+        [
+            StructField(f.name, ts_type if f.name == "ts" else f.dataType)
+            for f in landed.schema
+        ]
+    )
+    return _json_stream(
+        events.sparkSession, dest, schema, event_time, max_files_per_trigger
+    )
+
 
 def read_events_stream(
     spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-based stream over json event batches (the replayable analog of a
-    Kafka topic; swapping in ``format('kafka')`` changes only this reader)."""
-    reader = (
-        spark.readStream.schema(EVENTS_DDL)
-        .format("json")
-    )
+    """File stream over full event rows landed by :func:`replay_events`
+    with ``event_time="zoned"``."""
+    return _json_stream(spark, source_dir, EVENTS_DDL, "zoned", max_files_per_trigger)
+
+
+def _json_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType | str,
+    event_time: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    _ts_type, option, pattern, _offset = _EVENT_TIME[event_time]
+    reader = spark.readStream.schema(schema).format("json").option(option, pattern)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(source_dir)
 
 
+def _watermarked(events: DataFrame, col: str, delay: str | None) -> DataFrame:
+    """``events`` with an event-time watermark on ``col``; ``delay=None``
+    means none (complete/update runs, and NTZ event time, which
+    ``withWatermark`` rejects)."""
+    return events if delay is None else events.withWatermark(col, delay)
+
+
 def tumbling_counts(
-    events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes"
+    events: DataFrame, window: str = "5 minutes", watermark: str | None = "10 minutes"
 ) -> DataFrame:
     """Tumbling event-time window: count + value sum per (window, type)."""
     return (
-        events.withWatermark("ts", watermark)
+        _watermarked(events, "ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum_value"))
         .select(
@@ -62,11 +125,12 @@ def sliding_counts(
     events: DataFrame,
     window: str = "10 minutes",
     slide: str = "5 minutes",
-    watermark: str = "10 minutes",
+    watermark: str | None = "10 minutes",
 ) -> DataFrame:
-    """Sliding event-time window (overlapping assignment)."""
+    """Sliding event-time window (overlapping assignment): each event
+    counts in window/slide windows."""
     return (
-        events.withWatermark("ts", watermark)
+        _watermarked(events, "ts", watermark)
         .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
@@ -74,24 +138,20 @@ def sliding_counts(
 
 
 def session_aggregate(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "30 minutes"
+    events: DataFrame, gap: str = "30 minutes", watermark: str | None = "30 minutes"
 ) -> DataFrame:
     """Session windows: dynamic-length windows that close after ``gap`` of
-    per-user inactivity (``F.session_window`` — state bounded by watermark)."""
+    per-user inactivity (``F.session_window``, merging across
+    micro-batches). A session spans its first to its last event."""
     return (
-        events.withWatermark("ts", watermark)
+        _watermarked(events, "ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("session_value"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
         )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "session_value",
-        )
+        .select("user_id", "session_start", "session_end", "n_events")
     )
 
 
@@ -127,9 +187,16 @@ def stream_stream_error_purchase_join(
     ).select("error_event_id", "purchase_event_id", "user_id")
 
 
-def stateful_user_totals(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def stateful_user_totals(
+    events: DataFrame, watermark: str | None = "10 minutes"
+) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: per-user
     lifetime totals (event count + value sum), re-emitted on every update.
+
+    Each value is floored to integer micro-units once and the state sums
+    longs, so the totals are exact and do not depend on how the engine
+    splits the input into micro-batches; the last emission per user (the
+    largest n_events) is the lifetime total.
 
     This is the arbitrary-state escape hatch for operators the built-in
     windowed aggregations can't express (per-key accumulators, custom
@@ -140,37 +207,29 @@ def stateful_user_totals(events: DataFrame, watermark: str = "10 minutes") -> Da
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def update(key, pdfs, state):
-        n, total = state.get if state.exists else (0, 0.0)
+        n, total = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             n += len(pdf)
-            total += float(pdf["value"].sum())
+            total += int(pdf["value_micro"].sum())
         state.update((n, total))
         yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
+            {"user_id": [key[0]], "n_events": [n], "value_micro_sum": [total]}
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        _watermarked(events, "ts", watermark)
+        .select(
+            "user_id", F.floor(F.col("value") * 1e6).cast("long").alias("value_micro")
+        )
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
-            outputStructType="user_id long, n_events long, total_value double",
-            stateStructType="n long, total double",
+            outputStructType="user_id long, n_events long, value_micro_sum long",
+            stateStructType="n long, total long",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def enrich_with_dimension(
-    events: DataFrame, dim: DataFrame, on: str = "user_id"
-) -> DataFrame:
-    """Stream-static join: enrich each streaming event with a static
-    dimension (broadcast per micro-batch, no state store involved) — the
-    standard lookup-table pattern. The static side is re-resolved every
-    trigger, so a refreshed dimension table is picked up without restarting
-    the query."""
-    return events.join(F.broadcast(dim), on, "left")
 
 
 def incremental_rollup(
@@ -264,14 +323,18 @@ def incremental_rollup(
 
 
 def streaming_dedup(
-    events: DataFrame, keys: list[str] | None = None, watermark: str = "10 minutes"
+    events: DataFrame,
+    keys: list[str] | None = None,
+    watermark: str | None = "10 minutes",
 ) -> DataFrame:
-    """Streaming exact dedup on event id within the watermark horizon —
-    ``dropDuplicatesWithinWatermark`` keeps state only for the watermark
-    window, the bounded-state form of streaming dedup."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
-    )
+    """Streaming exact dedup on ``keys`` (default event id). With a
+    watermark, ``dropDuplicatesWithinWatermark`` keeps state only for the
+    watermark window, the bounded-state form; ``watermark=None`` is
+    ``dropDuplicates`` over the whole stream (exact, unbounded state)."""
+    keys = keys or ["event_id"]
+    if watermark is None:
+        return events.dropDuplicates(keys)
+    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
 def dedup_ingest(

@@ -43,30 +43,17 @@ def test_import_quarantine_is_empty():
 # every query whose query function reaches one of them must sit in CERT_HEAD.
 _CHANGED_OPERATORS = frozenset(
     {
-        "assign_cells",
-        "pq_encode",
-        "cosine_topk_bruteforce",
-        "cosine_topk_pandas",
-        "cosine_topk_srp",
-        "cosine_topk_ivf",
-        "cosine_topk_pq",
-        "cosine_topk_ivfpq",
-        "cosine_topk_ivf_from_index",
-        "_index_scored",
-        "embedding_near_pairs",
-        "cosine_range_search",
+        "replay_events",
+        "tumbling_counts",
+        "sliding_counts",
+        "session_aggregate",
+        "streaming_dedup",
+        "stateful_user_totals",
+        "stream_stream_error_purchase_join",
         "mmr_topk",
-        "_srp_prep",
-        "_srp_probe_rows",
-        "label_centroid_rank",
-        "label_silhouette_audit",
-        "nearest_centroid_classify",
-        "kmeans_lloyd_step",
-        "multimodal_embed_search",
-        "multimodal_encoder_topk",
         "simsearch_mmr_indexed",
-        "jaccard_pairs",
-        "containment_pairs",
+        "bpe_merges",
+        "bpe_segment",
     }
 )
 
@@ -103,6 +90,28 @@ def _reaches(graph: dict[str, set[str]], start: str, targets) -> bool:
             seen.add(name)
             stack.extend(graph.get(name, ()))
     return False
+
+
+def test_registered_builders_run_the_streaming_operators():
+    """Each shared streaming operator of streaming/events.py is reached by
+    a registered query function, so the streaming certifications run the
+    library operators rather than inline copies of their plans."""
+    import sdc_mapreduce_spark.queries as q
+
+    graph = _package_call_graph()
+    unreached = [
+        op
+        for op in (
+            "tumbling_counts",
+            "sliding_counts",
+            "session_aggregate",
+            "streaming_dedup",
+            "stateful_user_totals",
+            "stream_stream_error_purchase_join",
+        )
+        if not any(_reaches(graph, spec.fn.__name__, {op}) for spec in q.REGISTRY.values())
+    ]
+    assert not unreached, unreached
 
 
 def test_every_registered_query_is_prioritized():

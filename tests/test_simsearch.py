@@ -600,28 +600,27 @@ def test_mmr_validates_args(spark, sf_dir):
 
 
 def test_mmr_indexed_pool_matches_python_greedy_on_ivf_candidates(spark, sf_dir, tmp_path):
-    """mmr_topk(index_path=...) must equal the Python greedy replayed over
-    the EXACT candidate set the index serves (probed-cell members), and
-    rank 1 must be the best candidate IN THE PROBED CELLS — the indexed
-    path approximates the pool, never the greedy."""
+    """mmr_topk(scored=<index candidates>) must equal the Python greedy
+    replayed over the EXACT candidate set the index serves (probed-cell
+    members), and rank 1 must be the best candidate IN THE PROBED CELLS —
+    the indexed path approximates the pool, never the greedy."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = S.seeded_centroids(emb, n_cells=8)
     assigned = S.assign_cells(emb, cents)
     path = str(tmp_path / "mmr_ivf")
     S.write_ivf_index(assigned, cents, path)
+    scored = S._index_scored(spark, path, QUERY_IDS, n_probe=4)
 
     got = {
         (r["query_id"], r["neighbor_id"], r["mmr_rank"])
         for r in S.mmr_topk(
-            emb, QUERY_IDS, k=K, pool=20, lam_tenths=7,
-            index_path=path, n_probe=4,
+            emb, QUERY_IDS, k=K, pool=20, lam_tenths=7, scored=scored
         ).collect()
     }
     # replay: restrict each query's candidates to its probed cells, then
     # run the same python greedy used by the brute-force parity test
-    scored = S._index_scored(spark, path, QUERY_IDS, n_probe=4).collect()
     by_q: dict[int, list] = {}
-    for r in scored:
+    for r in scored.collect():
         by_q.setdefault(r["query_id"], []).append(r)
     expected = set()
     for q, cands in by_q.items():

@@ -1,8 +1,12 @@
 """Structured Streaming: file-source streams driven with availableNow
-triggers into memory sinks; streaming results must match the batch twins."""
+triggers into memory sinks; streaming results must match the batch twins.
+Every stream runs through ``queries.scratch``, which fails a stalled
+stream with TimeoutError instead of handing back a partial sink, and drops
+its memory-sink views."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 
@@ -10,10 +14,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.catalog import load_table
-from sdc_mapreduce_spark.streaming import (
-    enrich_with_dimension,
+from sdc_mapreduce_spark.queries.scratch import scratch
+from sdc_mapreduce_spark.streaming.events import (
     incremental_rollup,
     read_events_stream,
+    replay_events,
     session_aggregate,
     stateful_user_totals,
     stream_stream_error_purchase_join,
@@ -21,42 +26,34 @@ from sdc_mapreduce_spark.streaming import (
     tumbling_counts,
 )
 
+_EVENT_COLUMNS = ("event_id", "ts", "user_id", "event_type", "value", "props")
+
 
 @pytest.fixture(scope="module")
 def events_json_dir(spark, sf_dir, tmp_path_factory):
-    """Materialize the events fixture as json files (a replayable stream)."""
+    """Land the events fixture as json files (a replayable stream)."""
     out = str(tmp_path_factory.mktemp("events_stream"))
-    ev = load_table(spark, sf_dir, "events")
-    ev.select(
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    ).repartition(4).write.mode("overwrite").json(out)
+    replay_events(
+        load_table(spark, sf_dir, "events"), out, *_EVENT_COLUMNS, event_time="zoned"
+    )
     return out
 
 
-def _run_to_memory(df, name: str, output_mode: str = "append"):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
+def _drain(s, df, output_mode: str = "append"):
+    """Run ``df`` to completion into a memory sink of scope ``s``; its rows."""
+    return s.memory(
+        df.writeStream.outputMode(output_mode).trigger(availableNow=True)
+    ).collect()
 
 
 def test_tumbling_counts_match_batch(spark, sf_dir, events_json_dir):
     stream = read_events_stream(spark, events_json_dir)
     assert stream.isStreaming
-    _run_to_memory(tumbling_counts(stream), "tumbling_out", "append")
+    with scratch(spark) as s:
+        rows = _drain(s, tumbling_counts(stream))
     got = {
         (r["window_start"], r["event_type"]): (r["cnt"], round(r["sum_value"], 6))
-        for r in spark.sql("select * from tumbling_out").collect()
+        for r in rows
     }
     ev = load_table(spark, sf_dir, "events")
     batch = (
@@ -77,33 +74,25 @@ def test_tumbling_counts_match_batch(spark, sf_dir, events_json_dir):
     assert len(got) >= len(expected) * 0.9
 
 
-def test_streaming_dedup_drops_duplicates(spark, events_json_dir, tmp_path):
-    # double the stream: copy the json files so every event appears twice
+def test_streaming_dedup_drops_duplicates(spark, sf_dir, tmp_path):
+    # land the events twice into one source: every event appears twice
+    ev = load_table(spark, sf_dir, "events")
     dup_dir = str(tmp_path / "dup")
-    os.makedirs(dup_dir)
-    n = 0
-    for fname in os.listdir(events_json_dir):
-        if not fname.endswith(".json"):
-            continue
-        src = os.path.join(events_json_dir, fname)
-        for copy in ("a", "b"):
-            with open(src) as fh, open(
-                os.path.join(dup_dir, f"{copy}_{fname}"), "w"
-            ) as out:
-                out.write(fh.read())
-        n += 1
-    assert n > 0
-    stream = read_events_stream(spark, dup_dir)
-    _run_to_memory(streaming_dedup(stream), "dedup_out", "append")
-    rows = spark.sql("select event_id, count(*) c from dedup_out group by 1").collect()
-    assert rows, "dedup emitted nothing"
-    assert all(r["c"] == 1 for r in rows), "duplicates survived streaming dedup"
+    replay_events(ev, dup_dir, *_EVENT_COLUMNS, event_time="zoned")
+    stream = replay_events(ev, dup_dir, *_EVENT_COLUMNS, event_time="zoned")
+    with scratch(spark) as s:
+        rows = _drain(s, streaming_dedup(stream))
+    counts = {}
+    for r in rows:
+        counts[r["event_id"]] = counts.get(r["event_id"], 0) + 1
+    assert counts, "dedup emitted nothing"
+    assert all(c == 1 for c in counts.values()), "duplicates survived streaming dedup"
 
 
 def test_session_aggregate_runs(spark, events_json_dir):
     stream = read_events_stream(spark, events_json_dir)
-    _run_to_memory(session_aggregate(stream), "sessions_out", "append")
-    rows = spark.sql("select * from sessions_out").collect()
+    with scratch(spark) as s:
+        rows = _drain(s, session_aggregate(stream))
     assert rows
     assert all(r["session_end"] >= r["session_start"] for r in rows)
     assert all(r["n_events"] >= 1 for r in rows)
@@ -111,28 +100,25 @@ def test_session_aggregate_runs(spark, events_json_dir):
 
 def test_stateful_user_totals_match_batch(spark, sf_dir, events_json_dir):
     """The applyInPandasWithState accumulator's final emission per user must
-    equal the batch groupBy — state survives across micro-batches."""
+    equal the batch groupBy — state survives across micro-batches. Totals
+    are exact micro-unit longs, so they compare exactly."""
     stream = read_events_stream(spark, events_json_dir)
-    _run_to_memory(stateful_user_totals(stream), "user_totals_out", "update")
-    # update mode re-emits a row per state change; the LAST row per user is
-    # the lifetime total. Memory sink preserves emission order per batch, so
-    # take max(n_events) — the accumulator is monotone.
-    got = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-        for r in spark.sql(
-            """
-            select user_id, n_events, total_value from (
-              select *, row_number() over (partition by user_id
-                        order by n_events desc) rn from user_totals_out) t
-            where rn = 1
-            """
-        ).collect()
-    }
+    with scratch(spark) as s:
+        rows = _drain(s, stateful_user_totals(stream), "update")
+    # update mode re-emits a row per state change; the accumulator is
+    # monotone, so the row with the largest n_events is the lifetime total
+    got: dict[int, tuple[int, int]] = {}
+    for r in rows:
+        if r["user_id"] not in got or r["n_events"] > got[r["user_id"]][0]:
+            got[r["user_id"]] = (r["n_events"], r["value_micro_sum"])
     ev = load_table(spark, sf_dir, "events")
     expected = {
-        r["user_id"]: (r["n"], round(r["total"], 6))
+        r["user_id"]: (r["n"], r["micro"])
         for r in ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias("micro"),
+        )
         .collect()
     }
     assert got == expected
@@ -143,13 +129,9 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, events_json_dir):
     range-join result, and it must emit the vast majority of them (pairs in
     the trailing watermark horizon may be withheld at end-of-stream)."""
     stream = read_events_stream(spark, events_json_dir)
-    _run_to_memory(
-        stream_stream_error_purchase_join(stream), "ss_join_out", "append"
-    )
-    got = {
-        (r["error_event_id"], r["purchase_event_id"])
-        for r in spark.sql("select * from ss_join_out").collect()
-    }
+    with scratch(spark) as s:
+        rows = _drain(s, stream_stream_error_purchase_join(stream))
+    got = {(r["error_event_id"], r["purchase_event_id"]) for r in rows}
     from sdc_mapreduce_spark.queries.events_queries import events_range_join
 
     expected = {
@@ -167,23 +149,24 @@ def test_checkpoint_restart_is_exactly_once(spark, events_json_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 
-    def run_once():
-        q = (
-            tumbling_counts(read_events_stream(spark, events_json_dir))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    with scratch(spark) as s:
 
-    run_once()
-    first = spark.read.parquet(out).count()
-    assert first > 0
-    run_once()
-    assert spark.read.parquet(out).count() == first, "restart duplicated rows"
+        def run_once():
+            s.run(
+                tumbling_counts(read_events_stream(spark, events_json_dir))
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+
+        run_once()
+        first = spark.read.parquet(out).count()
+        assert first > 0
+        run_once()
+        assert spark.read.parquet(out).count() == first, "restart duplicated rows"
 
 
 def test_foreach_batch_custom_sink(spark, sf_dir, events_json_dir, tmp_path):
@@ -197,14 +180,14 @@ def test_foreach_batch_custom_sink(spark, sf_dir, events_json_dir, tmp_path):
             "append"
         ).parquet(out)
 
-    q = (
-        read_events_stream(spark, events_json_dir, max_files_per_trigger=2)
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(tmp_path / "fb_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with scratch(spark) as s:
+        s.run(
+            read_events_stream(spark, events_json_dir, max_files_per_trigger=2)
+            .writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", str(tmp_path / "fb_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
     delivered = spark.read.parquet(out)
     expected = load_table(spark, sf_dir, "events").count()
     assert delivered.count() == expected
@@ -212,43 +195,16 @@ def test_foreach_batch_custom_sink(spark, sf_dir, events_json_dir, tmp_path):
     assert delivered.select("batch_id").distinct().count() >= 2
 
 
-def test_stream_static_enrichment(spark, sf_dir, events_json_dir):
-    """Stream-static join: every streamed event picks up its dimension row
-    (broadcast per micro-batch, no state store); left join keeps events with
-    no dimension match."""
-    dim = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id")
-        .distinct()
-        .withColumn("segment", (F.col("user_id") % 3).cast("int"))
+def _click_events(spark, rows: list[tuple[int, str]]):
+    """Click events from (event_id, "yyyy-MM-dd HH:mm:ss") pairs."""
+    return spark.createDataFrame(
+        [
+            (event_id, dt.datetime.fromisoformat(ts), event_id, "click", 1.0, "{}")
+            for event_id, ts in rows
+        ],
+        "event_id long, ts timestamp_ntz, user_id long, event_type string, "
+        "value double, props string",
     )
-    stream = read_events_stream(spark, events_json_dir)
-    _run_to_memory(
-        enrich_with_dimension(stream, dim).select("event_id", "user_id", "segment"),
-        "enriched_out",
-    )
-    rows = spark.sql("select * from enriched_out").collect()
-    assert len(rows) == load_table(spark, sf_dir, "events").count()
-    assert all(r["segment"] == r["user_id"] % 3 for r in rows)
-
-
-def _write_events_json(path: str, rows: list[tuple[int, str, int]]) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as fh:
-        for event_id, ts, user_id in rows:
-            fh.write(
-                json.dumps(
-                    {
-                        "event_id": event_id,
-                        "ts": ts,
-                        "user_id": user_id,
-                        "event_type": "click",
-                        "value": 1.0,
-                        "props": "{}",
-                    }
-                )
-                + "\n"
-            )
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):
@@ -260,47 +216,49 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     ckpt = str(tmp_path / "late_ckpt")
     out = str(tmp_path / "late_out")
 
-    def run(_name):
-        # file sink: the one sink that recovers watermark + progress from
-        # the checkpoint across restarts (memory sink cannot)
-        q = (
-            tumbling_counts(read_events_stream(spark, src))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with scratch(spark) as s:
+
+        def deliver(rows):
+            # file sink: the one sink that recovers watermark + progress
+            # from the checkpoint across restarts (memory sink cannot)
+            stream = replay_events(
+                _click_events(spark, rows),
+                src,
+                *_EVENT_COLUMNS,
+                event_time="zoned",
+                files=1,
+            )
+            s.run(
+                tumbling_counts(stream)
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+
+        # run 1: two rows in the 12:00 window, one at 12:31 to advance the
+        # watermark (10 min delay) to 12:21 > 12:05 → the 12:00 window emits
+        deliver(
+            [
+                (1, "2024-06-01 12:00:01"),
+                (2, "2024-06-01 12:04:00"),
+                (3, "2024-06-01 12:31:00"),
+            ]
         )
-        q.awaitTermination(120)
+        first = {
+            r["window_start"]: r["cnt"] for r in spark.read.parquet(out).collect()
+        }
+        assert any(ws.minute == 0 for ws in first) and all(
+            cnt == 2 for ws, cnt in first.items() if ws.minute == 0
+        )
 
-    # run 1: two rows in the 12:00 window, one at 12:31 to advance the
-    # watermark (10 min delay) to 12:21 > 12:05 → the 12:00 window emits
-    _write_events_json(
-        os.path.join(src, "batch1.json"),
-        [
-            (1, "2024-06-01 12:00:01", 1),
-            (2, "2024-06-01 12:04:00", 2),
-            (3, "2024-06-01 12:31:00", 3),
-        ],
-    )
-    run("late_run1")
-    first = {
-        r["window_start"]: r["cnt"] for r in spark.read.parquet(out).collect()
-    }
-    assert any(ws.minute == 0 for ws in first) and all(
-        cnt == 2 for ws, cnt in first.items() if ws.minute == 0
-    )
-
-    # run 2: one LATE row for the closed 12:00 window (12:01 < watermark
-    # 12:21 → dropped) plus a fresh 12:50 row that pushes the watermark to
-    # 12:40, emitting the 12:30 window with cnt=1 — never a corrected
-    # 12:00 window
-    _write_events_json(
-        os.path.join(src, "batch2.json"),
-        [(4, "2024-06-01 12:01:00", 4), (5, "2024-06-01 12:50:00", 5)],
-    )
-    run("late_run2")
+        # run 2: one LATE row for the closed 12:00 window (12:01 < watermark
+        # 12:21 → dropped) plus a fresh 12:50 row that pushes the watermark
+        # to 12:40, emitting the 12:30 window with cnt=1 — never a corrected
+        # 12:00 window
+        deliver([(4, "2024-06-01 12:01:00"), (5, "2024-06-01 12:50:00")])
     both = [
         (r["window_start"], r["cnt"]) for r in spark.read.parquet(out).collect()
     ]
@@ -319,42 +277,19 @@ def test_watermark_append_emission_boundary_is_inclusive(spark, tmp_path):
     10-minute delay the watermark lands EXACTLY on the 09:45–09:50 window
     end, and that window IS emitted (window_end <= watermark, inclusive)
     while the still-open 10:00 window is withheld."""
-    src = str(tmp_path / "bnd_src")
-    ckpt = str(tmp_path / "bnd_ckpt")
-    os.makedirs(src)
-    with open(os.path.join(src, "a.json"), "w") as f:
-        f.write(
-            '{"k":"x","ts":"2024-06-01 09:46:00.000000"}\n'
-            '{"k":"x","ts":"2024-06-01 10:00:00.000000"}\n'
-        )
-    stream = (
-        spark.readStream.schema("k string, ts timestamp")
-        .format("json")
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .load(src)
+    stream = replay_events(
+        _click_events(spark, [(1, "2024-06-01 09:46:00"), (2, "2024-06-01 10:00:00")]),
+        str(tmp_path / "bnd_src"),
+        *_EVENT_COLUMNS,
+        event_time="zoned",
+        files=1,
     )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "k")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("ws"), "k", "cnt"
-        )
+    agg = tumbling_counts(stream).select(
+        F.col("window_start").cast("timestamp_ntz").alias("ws"), "cnt"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("wm_boundary")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = [
-        (r["ws"].strftime("%H:%M"), r["cnt"])
-        for r in spark.table("wm_boundary").orderBy("ws").collect()
-    ]
-    assert rows == [("09:45", 1)]
+    with scratch(spark) as s:
+        rows = _drain(s, agg)
+    assert [(r["ws"].strftime("%H:%M"), r["cnt"]) for r in rows] == [("09:45", 1)]
 
 
 def test_incremental_rollup_snapshot_matches_batch(
@@ -388,12 +323,14 @@ def test_incremental_rollup_snapshot_matches_batch(
         with open(os.path.join(src, f"slice{i}.json"), "w") as fh:
             for r in ev_rows[i * slice_size : (i + 1) * slice_size]:
                 fh.write(json.dumps(r.asDict()) + "\n")
-    q = incremental_rollup(
-        read_events_stream(spark, src, max_files_per_trigger=1),
-        snapshot_dir=snap,
-        checkpoint_dir=ckpt,
-    )
-    q.awaitTermination(180)
+    with scratch(spark) as s:
+        s.run(
+            incremental_rollup(
+                read_events_stream(spark, src, max_files_per_trigger=1),
+                snapshot_dir=snap,
+                checkpoint_dir=ckpt,
+            )
+        )
 
     got = {
         (r["window_start"], r["event_type"]): (r["cnt"], round(r["sum_value"], 6))
@@ -515,20 +452,12 @@ def test_tumbling_throughput_floor(spark, sf_dir, tmp_path):
         .drop("__rep")
     )
     n_events = big.count()
-    big.select(
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    ).repartition(8).write.mode("overwrite").json(out)
-
-    stream = read_events_stream(spark, out)
+    stream = replay_events(big, out, *_EVENT_COLUMNS, event_time="zoned", files=8)
     t0 = time.monotonic()
-    _run_to_memory(tumbling_counts(stream), "tumbling_floor_out", "append")
+    with scratch(spark) as s:
+        rows = _drain(s, tumbling_counts(stream))
     elapsed = time.monotonic() - t0
-    assert spark.sql("select count(*) from tumbling_floor_out").collect()[0][0] > 0
+    assert rows
     rate = n_events / elapsed
     # floor chosen ~50x below the JVM-side rate and ~50x above a
     # row-at-a-time Python pace, so contention noise can't trip it but a
@@ -559,8 +488,8 @@ def test_dedup_ingest_across_deliveries(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).json(str(src))
-        q = dedup_ingest(stream, index_dir, accepted_dir, ckpt)
-        q.awaitTermination(120)
+        with scratch(spark) as s:
+            s.run(dedup_ingest(stream, index_dir, accepted_dir, ckpt))
 
     deliver("d1.json", [(1, "alpha"), (2, "beta"), (3, "alpha")])  # 3 dups 1
     run()
@@ -596,7 +525,6 @@ def test_cdc_upsert_supersession_and_replay_idempotent(spark, tmp_path):
             rows, "event_id long, ts timestamp_ntz, user_id long, "
             "event_type string, value double"
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         delta = (
             df.groupBy("user_id")
             .agg(
@@ -607,7 +535,11 @@ def test_cdc_upsert_supersession_and_replay_idempotent(spark, tmp_path):
             )
             .withColumn("__batch", F.lit(batch_id))
         )
-        delta.write.mode("overwrite").partitionBy("__batch").parquet(snap)
+        # per-write dynamic overwrite, as cdc_upsert_stream does: a
+        # session conf would change every later overwrite in the session
+        delta.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("__batch").parquet(snap)
 
     t = lambda m: dt.datetime(2024, 1, 1, 10, m)
     land([(0, t(0), 1, "view", 1.0), (1, t(1), 2, "click", 2.0)], 0)
