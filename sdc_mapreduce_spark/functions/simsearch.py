@@ -913,15 +913,17 @@ def embedding_near_pairs_blocked(
             acc += M[:, d] * M[:, d]
         return M / np.sqrt(acc)[:, None]
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": []}).astype(
-            {"id_a": "int64", "id_b": "int64"}
-        )
+    no_ids = np.empty(0, dtype=np.int64)
+
+    def pairs(id_a: np.ndarray, id_b: np.ndarray) -> pd.DataFrame:
+        return pd.DataFrame({"id_a": id_a, "id_b": id_b}, copy=False)
+
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         home_mask = pdf["__home"].to_numpy()
-        ids = pdf["__id"].to_numpy()
+        ids = pdf["__id"].to_numpy(np.int64)
         h_ids = ids[home_mask]
         if len(h_ids) == 0:
-            return empty
+            return pairs(no_ids, no_ids)
         raw = pdf["__e"].to_numpy()
         H = _unitize(raw[home_mask])
         # Visitor block: cross-bucket up-probe rows, plus — in salt 0 —
@@ -935,7 +937,7 @@ def embedding_near_pairs_blocked(
         elif triangle:
             V, v_ids = H, h_ids
         else:
-            return empty
+            return pairs(no_ids, no_ids)
         n_tri = len(h_ids) if triangle else 0
         H32 = H.astype(np.float32)
         out_a, out_b = [], []
@@ -969,10 +971,8 @@ def embedding_near_pairs_blocked(
             out_a.append(np.minimum(ia, ib))
             out_b.append(np.maximum(ia, ib))
         if not out_a:
-            return empty
-        return pd.DataFrame(
-            {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
-        ).astype({"id_a": "int64", "id_b": "int64"})
+            return pairs(no_ids, no_ids)
+        return pairs(np.concatenate(out_a), np.concatenate(out_b))
 
     return rows.groupBy("__g", "__salt").applyInPandas(
         kernel, schema="id_a long, id_b long"

@@ -57,26 +57,10 @@ for _name in _MODULE_ORDER:
 # CERT_HEAD with the queries whose query functions reach it
 # (tests/test_registry.py computes that set from the call graph).
 CERT_HEAD: tuple[str, ...] = (
-    # the streaming certifications and events_sliding run the
-    # streaming/events.py operators (the certs over replay_events streams)
-    "events_streaming_tumbling_certified",
-    "events_streaming_sliding_certified",
-    "events_streaming_watermark_certified",
-    "events_streaming_update_certified",
-    "events_streaming_restart_certified",
-    "events_streaming_dedup_certified",
-    "events_streaming_stateful_certified",
-    "events_streaming_join_certified",
-    "events_streaming_cdc_certified",
-    "events_streaming_session_certified",
-    "events_sliding",
-    # mmr_topk takes the scored candidate frame; the indexed query probes
-    # its IVF index once
-    "simsearch_mmr",
-    "simsearch_mmr_indexed",
-    # bpe_merges / bpe_segment run the batched learner with m=1
-    "text_bpe_merges",
-    "text_bpe_segment",
+    # embedding_near_pairs_blocked's kernel builds its int64 id columns
+    # directly (no per-group astype)
+    "dedup_embedding_ann",
+    "dedup_embedding_clusters",
 )
 if not IMPORT_QUARANTINE:
     # Only enforce completeness on a healthy import — with a module

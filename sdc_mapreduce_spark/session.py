@@ -12,7 +12,12 @@ Here every knob maps to a Spark conf that holds from local[32] up to a
   instead of shuffling the fact table;
 - Arrow enabled for the few pandas-UDF code paths;
 - session timezone pinned to UTC so timestamp semantics are deterministic
-  across engines (matters for the DuckDB correctness oracle).
+  across engines (matters for the DuckDB correctness oracle);
+- Python workers forked from ``pyworker``, a daemon that runs them on the
+  unpacked pyspark instead of Spark's ``pyspark.zip``: with the archive on
+  ``sys.path`` every task's ``importlib.invalidate_caches()`` re-reads it
+  (about 0.24 s per task, against kernels that take milliseconds), and
+  the daemon also imports pandas/pyarrow once for all of its workers.
 """
 
 from __future__ import annotations
@@ -60,7 +65,13 @@ DEFAULT_CONF: dict[str, str] = {
     # `runtimeFilter.semiJoinReduction.enabled` was tried and REVERTED — it
     # sent planning time pathological on this query inventory (a 30 s
     # subset had not finished after 11 minutes).
+    "spark.python.daemon.module": "sdc_mapreduce_spark.pyworker",
 }
+
+# Workers import the daemon module from here, whatever the driver's cwd
+# (on a cluster the package sits at the same path on every executor, as
+# the UDFs' by-reference helpers already require).
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -95,6 +106,7 @@ def get_spark(
     # the driver env; remote executors need the conf).
     for k in _BLAS_ENV:
         conf.setdefault(f"spark.executorEnv.{k}", os.environ[k])
+    conf["spark.executorEnv.PYTHONPATH"] = _PACKAGE_PARENT
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

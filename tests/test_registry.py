@@ -41,21 +41,7 @@ def test_import_quarantine_is_empty():
 
 # Operators whose code changed since their consumers were last certified;
 # every query whose query function reaches one of them must sit in CERT_HEAD.
-_CHANGED_OPERATORS = frozenset(
-    {
-        "replay_events",
-        "tumbling_counts",
-        "sliding_counts",
-        "session_aggregate",
-        "streaming_dedup",
-        "stateful_user_totals",
-        "stream_stream_error_purchase_join",
-        "mmr_topk",
-        "simsearch_mmr_indexed",
-        "bpe_merges",
-        "bpe_segment",
-    }
-)
+_CHANGED_OPERATORS = frozenset({"embedding_near_pairs_blocked"})
 
 
 def _package_call_graph() -> dict[str, set[str]]:
