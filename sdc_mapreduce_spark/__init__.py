@@ -19,24 +19,4 @@ physical strategy; Python UDFs appear only where built-ins genuinely cannot
 express the semantics, and then only as Arrow-batched pandas UDFs.
 """
 
-import importlib
-
-# Re-exported on first access (PEP 562): importing the package must not
-# import pyspark, because Spark's Python daemon (``pyworker``) runs as a
-# submodule and has to settle ``sys.path`` before pyspark is first loaded.
-_EXPORTS = {
-    "get_spark": "session",
-    "TABLES": "catalog",
-    "load_table": "catalog",
-    "load_tables": "catalog",
-}
-
-__all__ = list(_EXPORTS)
 __version__ = "0.1.0"
-
-
-def __getattr__(name: str):
-    if name not in _EXPORTS:
-        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
-    module = importlib.import_module(f"{__name__}.{_EXPORTS[name]}")
-    return getattr(module, name)

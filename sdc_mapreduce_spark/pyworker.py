@@ -1,28 +1,25 @@
-"""Spark's Python daemon, run on the unpacked pyspark with the kernels'
-libraries already imported.
+"""Spark's Python daemon, run on the unpacked pyspark.
 
 Spark starts it as ``python -m sdc_mapreduce_spark.pyworker [worker
 module]`` (``spark.python.daemon.module`` in ``session.DEFAULT_CONF``) and
 forks one worker from it per Python task slot. Before ``pyspark.daemon``
-takes over it does two things:
+takes over it takes Spark's archives off ``sys.path``.
 
-- It takes Spark's archives off ``sys.path``. Spark puts
-  ``$SPARK_HOME/python/lib/pyspark.zip``, the py4j zip and the
-  ``spark-core`` jar (which holds no ``.py`` file) first on every worker's
-  path, so pyspark loads from the zip. ``pyspark.worker_util.
-  setup_spark_files`` calls ``importlib.invalidate_caches()`` once per
-  task, and on CPython 3.11 that makes every cached ``zipimporter`` re-read
-  its whole archive directory: 16 of them per worker, about 0.24 s per
-  task against kernels that run in milliseconds. With the archives gone
-  the call only touches directory finders. The path is left as Spark set
-  it unless the same pyspark version, and py4j, import from a directory
-  on what remains (``unpacked_path``).
-- It imports numpy, pyarrow, pandas and ``pyspark.worker`` once, so every
-  forked worker inherits them instead of importing them on its first task.
+Spark puts ``$SPARK_HOME/python/lib/pyspark.zip``, the py4j zip and the
+``spark-core`` jar (which holds no ``.py`` file) first on every worker's
+path, so pyspark loads from the zip. ``pyspark.worker_util.
+setup_spark_files`` calls ``importlib.invalidate_caches()`` once per task,
+and on CPython 3.11 that makes every cached ``zipimporter`` re-read its
+whole archive directory: 16 of them per worker, about 0.24 s per task
+against kernels that run in milliseconds. With the archives gone the call
+only touches directory finders. The path is left as Spark set it unless
+the same pyspark version, and py4j, import from a directory on what
+remains (``unpacked_path``). Any other archive on the path (a jar or zip
+shipped with ``spark.submit.pyFiles``) stays.
 
 ``pyspark.daemon`` is only imported after the path is settled, and the
-package ``__init__`` imports nothing eagerly, so nothing here loads from
-an archive first.
+package ``__init__`` imports nothing, so nothing here loads from an
+archive first.
 """
 
 from __future__ import annotations
@@ -38,9 +35,9 @@ _VERSION = re.compile(r"""__version__\s*(?::\s*str\s*)?=\s*["']([^"']+)["']""")
 def _is_spark_archive(entry: str) -> bool:
     name = os.path.basename(entry)
     return (
-        name.endswith(".jar")
-        or name == "pyspark.zip"
+        name == "pyspark.zip"
         or (name.startswith("py4j-") and name.endswith(".zip"))
+        or (name.startswith("spark-core_") and name.endswith(".jar"))
     )
 
 
@@ -60,9 +57,9 @@ def _pyspark_version(path: list[str]) -> str | None:
 
 
 def unpacked_path(path: list[str]) -> list[str]:
-    """``path`` without Spark's archives (``*.jar``, ``pyspark.zip``,
-    ``py4j-*.zip``) when the remaining entries import the same pyspark
-    version and a py4j; otherwise ``path`` itself, unchanged."""
+    """``path`` without Spark's archives (``pyspark.zip``, ``py4j-*.zip``,
+    ``spark-core_*.jar``) when the remaining entries import the same
+    pyspark version and a py4j; otherwise ``path`` itself, unchanged."""
     rest = [p for p in path if not _is_spark_archive(p)]
     if len(rest) == len(path):
         return path
@@ -90,18 +87,8 @@ def _drop_archives() -> None:
             del sys.path_importer_cache[key]
 
 
-def _preload() -> None:
-    # With the BLAS pools pinned to one thread (session.py), the only
-    # thread these leave behind is pyarrow's jemalloc background thread,
-    # and jemalloc's own fork handlers make forking past it safe.
-    import numpy  # noqa: F401
-    import pandas  # noqa: F401
-    import pyarrow  # noqa: F401
-
-
 def main() -> None:
     _drop_archives()
-    _preload()
     # Imports the worker module (argv[1], default pyspark.worker).
     import pyspark.daemon
 

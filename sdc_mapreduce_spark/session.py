@@ -16,8 +16,7 @@ Here every knob maps to a Spark conf that holds from local[32] up to a
 - Python workers forked from ``pyworker``, a daemon that runs them on the
   unpacked pyspark instead of Spark's ``pyspark.zip``: with the archive on
   ``sys.path`` every task's ``importlib.invalidate_caches()`` re-reads it
-  (about 0.24 s per task, against kernels that take milliseconds), and
-  the daemon also imports pandas/pyarrow once for all of its workers.
+  (about 0.24 s per task, against kernels that take milliseconds).
 """
 
 from __future__ import annotations

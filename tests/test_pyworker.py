@@ -78,6 +78,8 @@ def test_archives_stay_unless_the_same_pyspark_is_unpacked(tmp_path, monkeypatch
         _zip(lib / "py4j-0.10.9.9-src.zip", {"py4j/__init__.py": ""}),
         _zip(lib / "spark-core_2.13-4.1.2.jar", {"META-INF/MANIFEST.MF": ""}),
     ]
+    # a jar shipped with spark.submit.pyFiles that carries Python code
+    shipped = _zip(tmp_path / "graphframes-0.8.4.jar", {"graphframes/__init__.py": ""})
     same = tmp_path / "same"
     _package(same, "pyspark", "4.1.2")
     _package(same, "py4j")
@@ -89,8 +91,8 @@ def test_archives_stay_unless_the_same_pyspark_is_unpacked(tmp_path, monkeypatch
     empty = tmp_path / "empty"
     empty.mkdir()
 
-    path = [str(tmp_path / "cwd"), *archives, str(same)]
-    assert unpacked_path(path) == [str(tmp_path / "cwd"), str(same)]
+    path = [str(tmp_path / "cwd"), *archives, shipped, str(same)]
+    assert unpacked_path(path) == [str(tmp_path / "cwd"), shipped, str(same)]
     for site in (empty, other, no_py4j):
         path = [*archives, str(site)]
         assert unpacked_path(path) is path, site

@@ -7,8 +7,8 @@ setup_spark_files`` took and how many ``zipimporter`` objects the worker
 holds afterwards. Modes:
 
 - ``stock``: Spark's own ``pyspark.daemon`` (pyspark from ``pyspark.zip``);
-- ``unpacked``: ``pyworker``'s archive filter, no preload;
-- ``pyworker``: the engine daemon as configured (filter + preload).
+- ``pyworker``: the engine daemon as configured (Spark's archives off
+  ``sys.path``).
 
 Prints per mode the first Python job's wall time after a JVM-only warm-up
 job (daemon start, worker forks and first imports included), the median
@@ -31,19 +31,17 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-MODES = ("stock", "unpacked", "pyworker")
+MODES = ("stock", "pyworker")
 
 # Imported by the worker as ``python -m _timed_daemon <worker module>``.
 _DAEMON = '''
 import os, sys, time, zipimport
 
 mode = os.environ["WORKER_SETUP_MODE"]
-if mode != "stock":
+if mode == "pyworker":
     from sdc_mapreduce_spark import pyworker
 
     pyworker._drop_archives()
-    if mode == "pyworker":
-        pyworker._preload()
 
 import pyspark.daemon
 import pyspark.worker
