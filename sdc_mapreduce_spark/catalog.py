@@ -113,7 +113,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             if df.rdd.getNumPartitions() < target:
                 df = df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

@@ -654,6 +654,11 @@ def near_dup_clusters(
     )
 
 
+class LabelPropagationNotConverged(RuntimeError):
+    """min_label_propagation reached max_iterations with labels still
+    changing."""
+
+
 def min_label_propagation(
     nodes: DataFrame,
     pairs: DataFrame,
@@ -678,7 +683,11 @@ def min_label_propagation(
     edges, one ~19k-node component) plain min-label needed ~25 rounds
     (359 s); with shortcutting it converges in ~6. Each round shuffles
     only (node, label) pairs — two joins, no corpus payloads; lineage
-    truncated per round; batched convergence check.
+    truncated per round; batched convergence check. The O(log diameter)
+    bound holds when ids rise or fall along paths; shuffled ids on a long
+    chain can need many more rounds, so a final round that still changes
+    labels raises :class:`LabelPropagationNotConverged` instead of
+    returning partial components.
     """
     if check_every < 1:
         raise ValueError(f"check_every must be >= 1, got {check_every}")
@@ -700,6 +709,7 @@ def min_label_propagation(
 
     last_checked = labels
     for i in range(1, max_iterations + 1):
+        prev = labels
         neighbor_min = (
             edges.join(labels, edges.src == labels.node)
             .groupBy(F.col("dst").alias("node"))
@@ -729,15 +739,29 @@ def min_label_propagation(
             )
             .localCheckpoint(eager=True)
         )
-        if i % check_every == 0 or i == max_iterations:
+        final = i == max_iterations
+        if final or i % check_every == 0:
+            # the final round compares with the round before it: converged
+            # means one round that changes nothing
             changed = (
                 labels.withColumnRenamed("label", "new_label")
-                .join(last_checked.withColumnRenamed("label", "old_label"), "node")
+                .join(
+                    (prev if final else last_checked).withColumnRenamed(
+                        "label", "old_label"
+                    ),
+                    "node",
+                )
                 .filter(F.col("new_label") != F.col("old_label"))
                 .count()
             )
             if changed == 0:
                 break
+            if final:
+                edges.unpersist()
+                raise LabelPropagationNotConverged(
+                    f"min_label_propagation did not converge in {max_iterations} "
+                    f"rounds: {changed} labels still changing"
+                )
             last_checked = labels
     edges.unpersist()
     return labels.select(F.col("node").alias(id_col), F.col("label").alias("rep_id"))

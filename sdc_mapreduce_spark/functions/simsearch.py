@@ -270,7 +270,7 @@ def ivf_assignments(
     and write the assigned corpus bucketed by ``__cell`` so probes prune
     files on read."""
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     prepared = with_unit_vectors(df=corpus, vec_col=vec_col, out_col="__unit")
     feats = prepared.select(
@@ -791,7 +791,7 @@ def embedding_near_pairs_blocked(
     chunk: int = 2048,
 ) -> DataFrame:
     """SRP-blocked approximate near-pair detection — the scale path that
-    replaces ``embedding_near_pairs``'s O(n²) self-join: vectors pair only
+    replaces the exact O(n²) self-join: vectors pair only
     within the same (or, with multi-probe, 1-bit-adjacent) SRP bucket, then
     exact cosine filters the candidates. Expected candidate volume is
     n²·(collision probability) ≈ n²·(1 - θ/π)^planes — tune n_planes so
@@ -1198,30 +1198,6 @@ def embedding_near_pairs_arrow(
         kernel, schema="id_a long, id_b long, cosine double"
     )
     return pairs.select("id_a", "id_b")
-
-
-def embedding_near_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine near-duplicate pairs (id_a < id_b, cosine ≥ threshold).
-
-    Exhaustive by definition; expressed as a self-join so Catalyst/AQE pick
-    the physical join. For corpora where n² is prohibitive, use
-    ``cosine_topk_srp``-style bucketing first — this operator is the exact
-    verifier of that pipeline's candidates.
-    """
-    prepared = _unit_frame(corpus, id_col, vec_col)
-    a = prepared.select(F.col(id_col).alias("id_a"), F.col("__unit").alias("__ua"))
-    b = prepared.select(F.col(id_col).alias("id_b"), F.col("__unit").alias("__ub"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    return (
-        pairs.select("id_a", "id_b", dot("__ua", "__ub").alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b")
-    )
 
 
 def label_silhouette_audit(

@@ -1046,8 +1046,6 @@ def encode_with_vocab(
     import hashlib
     import re
 
-    from pyspark.sql import functions as _F  # noqa: F401  (doc parity)
-
     # Bounded gate FUSED into the broadcast collect (VERDICT r8 ask #8):
     # one job pulls at most max_vocab+1 rows — the success path pulls
     # exactly the rows it needs anyway, and an oversized vocabulary is
@@ -1308,95 +1306,6 @@ def bm25_topk(
     )
 
 
-def bpe_merges(
-    df: DataFrame,
-    k: int = 4,
-    text_col: str = "text",
-    min_word_freq: int = 1,
-) -> DataFrame:
-    """Distributed BPE merge learning — the tokenizer-TRAINING step proper
-    ([[vocab_ids]] builds the type vocabulary; this learns the merge table
-    a byte-pair-encoding tokenizer is made of): Sennrich (ACL'16
-    ``learn_bpe``) counting/merge semantics with a SMALLEST-pair
-    deterministic tie-break — note subword-nmt itself breaks count ties by
-    the lexicographically LARGEST pair, so merge tables can diverge from
-    it on tied corpora (the tie-break here is pinned cross-engine with the
-    DuckDB oracle, which is the contract that matters) — re-expressed
-    relationally:
-
-    1. word table: whitespace tokens restricted to ASCII alphanumerics
-       (the documented scope — Spark and DuckDB disagree on non-ASCII
-       string indexing, bytes vs code points, so the cross-engine contract
-       pins the symbol alphabet), grouped to (word, freq);
-    2. state: each word as an ordered symbol array, initially characters;
-    3. per iteration: count EVERY adjacent symbol position weighted by
-       word freq (overlaps included — 'aaa' contributes ('a','a') twice,
-       exactly ``get_stats``), pick the max pair with the deterministic
-       tie-break (count desc, left asc, right asc), then apply the merge
-       GREEDY LEFT-TO-RIGHT with overlap skipping — 'a a a' under ('a','a')
-       becomes 'aa a', not 'aa aa' — the way ``learn_bpe`` re-segments.
-
-    The greedy application needs no sequential scan: within each maximal
-    run of consecutive matching positions, exactly the even offsets merge.
-    run_start comes from a running MAX over the last non-matching position
-    (one window), offset parity is arithmetic, and the consumed position is
-    a LAG — three window expressions per iteration, identical in Spark and
-    the DuckDB oracle, no regex/replace whose overlap semantics the engines
-    could disagree on.
-
-    Scale shape: state is O(distinct words x avg word length) symbol rows —
-    the classic corpus-BPE working set, shuffled k times on the word key
-    (windows partition by word, so no global sort). Driver state per
-    iteration is ONE collected row (the argmax pair); each iteration's
-    result is eagerly localCheckpointed to truncate the k-deep lineage
-    (bounded rows; same session-lifetime note as graph.triangle_stats).
-    Returns the merge table: (merge_rank, left_sym, right_sym, pair_count),
-    merge_rank 1..k in learned order. Stops early if no pair repeats.
-
-    This is the batched learner with one merge per pass (``m=1``): its
-    batch is the single argmax pair, so its pass id is the merge rank.
-
-    SCALE NOTE: this exact-sequential learner runs k driver-sequenced
-    Spark jobs (one argmax + one state rewrite per merge) — right for
-    exactness demos and modest k, wrong for a real 32k-merge vocabulary
-    build. Production-scale merge tables should use
-    [[bpe_merges_batched]], which learns up to m disjoint merges per pass
-    for an O(k/m_eff) job count with the same run-parity application.
-    """
-    merges, _state = _bpe_learn_batched(
-        df, passes=k, m=1, text_col=text_col, min_word_freq=min_word_freq
-    )
-    return df.sparkSession.createDataFrame(
-        [(rank, a, b, cnt) for rank, _pass_id, a, b, cnt in merges],
-        "merge_rank int, left_sym string, right_sym string, pair_count bigint",
-    )
-
-
-def bpe_segment(
-    df: DataFrame,
-    k: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_word_freq: int = 1,
-) -> DataFrame:
-    """BPE APPLY — segment every document with the merge table
-    [[bpe_merges]] learns on the same corpus, through the distinct-word
-    memoization join (the production shape: segmentation is a pure
-    function of the word, so the O(distinct words) learned state IS the
-    segmentation table; per-doc work is an equi-join, never a re-scan of
-    the merge loop). Emits per document, for its ASCII-alphanumeric tokens
-    (documents with none are omitted — segmentation of an empty stream is
-    undefined; with ``min_word_freq > 1`` the learned state excludes rare
-    words and the inner join drops them from the stats too):
-    (doc_id, n_words, n_subwords, subword_fp) where subword_fp
-    is the md5 of the space-joined subword stream in document token order
-    — the byte-exact witness of the segmentation without shuffling it."""
-    _merges, state = _bpe_learn_batched(
-        df, passes=k, m=1, text_col=text_col, min_word_freq=min_word_freq
-    )
-    return _segment_with_state(df, state, text_col=text_col, id_col=id_col)
-
-
 def bpe_segment_batched(
     df: DataFrame,
     passes: int = 3,
@@ -1405,13 +1314,19 @@ def bpe_segment_batched(
     id_col: str = "doc_id",
     min_word_freq: int = 1,
 ) -> DataFrame:
-    """BPE APPLY for the batched learner: segment every document with the
-    merge state [[bpe_merges_batched]] learns on the same corpus (up to m
-    disjoint merges per pass, O(k/m_eff) driver-sequenced jobs), through
-    the same distinct-word memoization join as [[bpe_segment]] — the
-    learned per-word state IS the segmentation table, so apply cost is
-    one equi-join regardless of how the merges were learned. Output shape
-    matches bpe_segment: (doc_id, n_words, n_subwords, subword_fp)."""
+    """BPE APPLY — segment every document with the merge state
+    [[bpe_merges_batched]] learns on the same corpus, through the
+    distinct-word memoization join (the production shape: segmentation is
+    a pure function of the word, so the O(distinct words) learned state IS
+    the segmentation table; per-doc work is one equi-join however the
+    merges were learned, never a re-scan of the merge loop). Emits per
+    document, for its ASCII-alphanumeric tokens (documents with none are
+    omitted — segmentation of an empty stream is undefined; with
+    ``min_word_freq > 1`` the learned state excludes rare words and the
+    inner join drops them from the stats too):
+    (doc_id, n_words, n_subwords, subword_fp) where subword_fp is the md5
+    of the space-joined subword stream in document token order — the
+    byte-exact witness of the segmentation without shuffling it."""
     _merges, state = _bpe_learn_batched(
         df, passes=passes, m=m, text_col=text_col, min_word_freq=min_word_freq
     )
@@ -1423,7 +1338,7 @@ def _segment_with_state(
 ) -> DataFrame:
     """Shared BPE apply body: join the per-word learned state (w, syms)
     against the positional token stream and emit per-doc stats + the
-    order-exact subword fingerprint. See bpe_segment for semantics."""
+    order-exact subword fingerprint. See bpe_segment_batched for semantics."""
     toks = df.select(
         F.col(id_col), F.posexplode(tokens(text_col)).alias("tpos", "w")
     ).filter(F.col("w").rlike("^[A-Za-z0-9]+$"))
@@ -1514,37 +1429,66 @@ def bpe_merges_batched(
     text_col: str = "text",
     min_word_freq: int = 1,
 ) -> DataFrame:
-    """SCALE-HONEST BPE merge learning: the batched top-m variant of
-    [[bpe_merges]] (the standard scalable-BPE trick; VERDICT r9 ask #3).
-    The sequential learner runs ONE Spark job per merge — k = 32,768 merge
-    ranks means 32k driver-sequenced jobs, untenable on a real vocabulary
-    build. This variant learns up to ``m`` merges per pass, so the job
-    count is O(k / m_eff): exactly ``passes`` rounds, each = one bounded
-    candidate aggregation (limit m, collected — O(m) driver rows) + one
-    distributed state rewrite. m_eff is the greedy disjoint-selection
-    size, worst case 1 on adversarial corpora where every top pair shares
-    one symbol, ~m on natural text where top pairs are mostly disjoint.
+    """Distributed BPE merge learning — the tokenizer-TRAINING step proper
+    ([[vocab_ids]] builds the type vocabulary; this learns the merge table
+    a byte-pair-encoding tokenizer is made of): Sennrich (ACL'16
+    ``learn_bpe``) counting/merge semantics with a SMALLEST-pair
+    deterministic tie-break — note subword-nmt itself breaks count ties by
+    the lexicographically LARGEST pair, so merge tables can diverge from
+    it on tied corpora (the tie-break here is pinned cross-engine with the
+    DuckDB oracle, which is the contract that matters) — re-expressed
+    relationally:
 
-    Batch selection rule (pinned cross-engine by the DuckDB oracle):
-    rank candidate pairs by (count desc, left asc, right asc), then GREEDY
+    1. word table: whitespace tokens restricted to ASCII alphanumerics
+       (the documented scope — Spark and DuckDB disagree on non-ASCII
+       string indexing, bytes vs code points, so the cross-engine contract
+       pins the symbol alphabet), grouped to (word, freq);
+    2. state: each word as an ordered symbol array, initially characters;
+    3. per pass: count EVERY adjacent symbol position weighted by word freq
+       (overlaps included — 'aaa' contributes ('a','a') twice, exactly
+       ``get_stats``), select up to ``m`` pairs (below), then apply them
+       GREEDY LEFT-TO-RIGHT with overlap skipping — 'a a a' under ('a','a')
+       becomes 'aa a', not 'aa aa' — the way ``learn_bpe`` re-segments.
+
+    With ``m=1`` each pass merges the single argmax pair (count desc, left
+    asc, right asc): the sequential ``learn_bpe`` order, one merge per
+    pass, so pass_id equals merge_rank. That is the exact learner, at one
+    driver-sequenced Spark job per merge — right for exactness and modest
+    k, wrong for a 32k-merge vocabulary build. With ``m > 1`` the job count
+    is O(k / m_eff): exactly ``passes`` rounds, each = one bounded
+    candidate aggregation (O(m) collected driver rows) + one distributed
+    state rewrite. m_eff is the greedy disjoint-selection size, worst case
+    1 on adversarial corpora where every top pair shares one symbol, ~m on
+    natural text where top pairs are mostly disjoint.
+
+    Batch selection rule (pinned cross-engine by the DuckDB oracle): rank
+    candidate pairs by (count desc, left asc, right asc), then GREEDY
     SKIP-AND-CONTINUE over the top ``4*m`` — scanning in rank order, SKIP
     any pair sharing a symbol with an already-kept pair and keep scanning
-    until m pairs are kept or the pool runs out, so a conflict no longer
-    ends the batch (VERDICT r10 ask #2; the old first-conflict cutoff
-    measured ~2.3 merges/pass at m=3) and skipped slots BACKFILL from
-    ranks past m (without the 4x over-fetch, natural-text top-m pools
-    still left utilization below 0.8*m). The collect stays O(m) driver
-    rows; at most m merges apply per pass. The kept set is pairwise
-    symbol-disjoint, which is what makes the simultaneous application
-    exact:
-    matches of different selected pairs can never overlap positionally
-    (adjacent matches would have to share the boundary symbol), so one
-    run-parity pass applies the whole batch with byte-identical results to
-    applying the selected pairs one at a time. Batched learning is NOT
-    guaranteed to reproduce the sequential merge TABLE on every corpus
-    (a merge can create a new pair that outranks a later batch member —
-    the standard recall/throughput trade of batched BPE); on natural
-    corpora the tables agree for the overwhelming prefix.
+    until m pairs are kept or the pool runs out, so a conflict does not
+    end the batch and skipped slots BACKFILL from ranks past m. The kept
+    set is pairwise symbol-disjoint, which is what makes the simultaneous
+    application exact: matches of different selected pairs can never
+    overlap positionally (adjacent matches would have to share the
+    boundary symbol), so one run-parity pass applies the whole batch with
+    byte-identical results to applying the selected pairs one at a time.
+    Batched learning is NOT guaranteed to reproduce the sequential merge
+    TABLE on every corpus (a merge can create a new pair that outranks a
+    later batch member — the standard recall/throughput trade of batched
+    BPE); on natural corpora the tables agree for the overwhelming prefix.
+
+    The greedy application needs no sequential scan: within each maximal
+    run of consecutive matching positions, exactly the even offsets merge.
+    run_start comes from a running MAX over the last non-matching position
+    (one window), offset parity is arithmetic, and the consumed position is
+    a LAG — three window expressions per pass, identical in Spark and the
+    DuckDB oracle, no regex/replace whose overlap semantics the engines
+    could disagree on.
+
+    Scale shape: state is O(distinct words x avg word length) symbol rows —
+    the classic corpus-BPE working set, shuffled once per pass on the word
+    key (windows partition by word, so no global sort); each pass's result
+    is eagerly localCheckpointed to truncate the lineage.
 
     Returns (merge_rank, pass_id, left_sym, right_sym, pair_count), rank
     1..N in learned order, pass_id making the batching auditable. Stops
@@ -1569,7 +1513,7 @@ def _bpe_learn_batched(
 ) -> tuple[list[tuple[int, int, str, str, int]], DataFrame]:
     """The BPE loop: returns (merge list with pass ids, final per-word
     state (w, freq, syms)). See bpe_merges_batched for the selection
-    semantics; with ``m=1`` it is the sequential learner of bpe_merges."""
+    semantics; with ``m=1`` it is the sequential learner."""
     from pyspark.sql import Window
 
     if passes < 1 or m < 1:

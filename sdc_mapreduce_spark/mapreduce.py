@@ -25,7 +25,6 @@ no Python in the hot loop; ``callable``/``pipe`` exist for user-code parity.
 from __future__ import annotations
 
 import shlex
-import sys
 from collections.abc import Callable, Iterable
 from typing import Any
 

@@ -15,13 +15,12 @@ statistics, nearest-neighbor resample — is real executable code, and only
 the codec *format* is synthetic. Swapping in Pillow/ffmpeg changes the
 parse/resample bodies, nothing about the Spark plumbing.
 
-The feature-extraction surface is real end-to-end since round 9:
-``extract_features`` is a deterministic fixed-seed random-projection
-encoder over the payload's byte histogram (signed-integer projection
-matrix, exact integer arithmetic, oracle-replayable), and ``decode_media``
-parses real SDCM headers with a raw-buffer layout inference fallback for
-unframed payloads. Swapping in a learned ONNX/torch encoder changes only
-the kernel body, not the Arrow-batched plumbing or output contract.
+The feature encoder is real end-to-end: ``synthesize_and_extract`` is a
+deterministic fixed-seed random-projection encoder over the payload
+body's byte histogram (signed-integer projection matrix, exact integer
+arithmetic, oracle-replayable), and ``decode_framed`` parses real SDCM
+headers. Swapping in a learned ONNX/torch encoder changes only the kernel
+body, not the Arrow-batched plumbing or output contract.
 """
 
 from __future__ import annotations
@@ -38,7 +37,6 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -61,10 +59,6 @@ MEDIA_SCHEMA = StructType(
             ),
         ),
     ]
-)
-
-DECODED_SCHEMA = (
-    "media_id long, kind string, width int, height int, n_channels int, n_bytes long"
 )
 
 FEATURE_DIM = 16
@@ -221,58 +215,11 @@ def synthesize_media(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def decode_media(df: DataFrame) -> DataFrame:
-    """Batched decode: binary payload → dimension metadata via
-    ``mapInPandas``. Framed payloads (SDCM magic) parse their REAL header;
-    unframed payloads get the standard raw-buffer layout inference (width =
-    ceil(sqrt(n)), height = ceil(n / width), 1 channel — the densest
-    near-square packing of an n-byte stream, the conventional fallback for
-    headerless buffers). Deterministic, content-derived, no digest
-    pseudo-dimensions. The iterator-of-batches shape means constant memory
-    per task regardless of partition size — the pattern that survives
-    100 TB."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            kinds, widths, heights, chans, sizes = [], [], [], [], []
-            for kind, b in zip(pdf["kind"], pdf["content"]):
-                payload = bytes(b)
-                parsed = parse_header(payload)
-                if parsed is not None:
-                    kind, width, height, channels = parsed
-                else:
-                    n = max(len(payload), 1)
-                    width = math.isqrt(n - 1) + 1  # ceil(sqrt(n))
-                    height = (n + width - 1) // width
-                    channels = 1
-                kinds.append(kind)
-                widths.append(width)
-                heights.append(height)
-                chans.append(channels)
-                sizes.append(len(payload))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": kinds,
-                    "width": widths,
-                    "height": heights,
-                    "n_channels": chans,
-                    "n_bytes": sizes,
-                }
-            )
-
-    return df.select("media_id", "kind", "content").mapInPandas(
-        kernel, schema=DECODED_SCHEMA
-    )
-
-
 def byte_bin_histogram(df: DataFrame, n_bins: int = 16) -> DataFrame:
     """Real feature extraction over framed payloads: a ``n_bins``-bin byte
     histogram of the body buffer (default bin = high nibble, i.e.
     ``byte // 16``). Integer counts make downstream cosine math exact and
-    cross-engine reproducible — this is the oracle-checkable feature path,
-    vs the digest-stub ``extract_features`` which stands in for a learned
-    encoder."""
+    cross-engine reproducible."""
     shift = 8 - (n_bins - 1).bit_length()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -292,7 +239,7 @@ def byte_bin_histogram(df: DataFrame, n_bins: int = 16) -> DataFrame:
     )
 
 
-# Fixed-seed signed-integer projection matrix for extract_features: the
+# Fixed-seed signed-integer projection matrix for synthesize_and_extract: the
 # encoder must be (a) stable across sessions/executors — features written
 # today must match features computed tomorrow — and (b) replayable by an
 # external engine, so the weights are small integers a DuckDB oracle can
@@ -306,58 +253,23 @@ PROJECTION_MATRIX = np.random.RandomState(PROJECTION_SEED).randint(
 ).astype(np.int64)
 
 
-def extract_features(df: DataFrame) -> DataFrame:
-    """Batched feature extraction: payload → fixed-dim float vector — a
-    REAL deterministic feature map (random projection, the classical
-    Johnson–Lindenstrauss encoder): 16-bin byte histogram of the payload
-    body (header-stripped when framed, whole buffer when not) projected
-    through the fixed-seed signed-integer matrix ``PROJECTION_MATRIX``.
-    Near-duplicate payloads get near-identical vectors (the projection is
-    1-Lipschitz in the histogram, up to the matrix norm), so downstream
-    cosine search over these features ranks by real content similarity.
-
-    All arithmetic is int64 (hist counts × weights in [-8, 8]) — exact and
-    order-free; the cast to float32 at the output boundary is exact while
-    |proj| < 2^24 (payloads below ~2 MiB) and IEEE-deterministic beyond. A
-    learned ONNX/torch encoder would replace only this kernel body; the
-    Arrow-batched shape and simsearch-compatible output contract are what
-    downstream operators consume.
-    """
-    R = PROJECTION_MATRIX
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf["content"]:
-                payload = bytes(b)
-                offset = HEADER_LEN if parse_header(payload) is not None else 0
-                body = np.frombuffer(payload, dtype=np.uint8, offset=offset)
-                hist = np.bincount(
-                    body >> 4, minlength=PROJECTION_BINS
-                ).astype(np.int64)
-                feats.append((R @ hist).astype(np.float32))
-            yield pd.DataFrame({"media_id": pdf["media_id"], "feature": feats})
-
-    return df.select("media_id", "content").mapInPandas(kernel, schema=FEATURE_SCHEMA)
-
-
 def synthesize_and_extract(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Fused ``extract_features(synthesize_framed_media(df))`` — identical
-    output bit-for-bit, one Arrow kernel instead of two stacked
-    ``mapInPandas`` nodes (r13 optimization round, guide §4.1).
+    """Feature extraction over synthesized media: each document's payload
+    body (``text.encode('utf-8')``) becomes a 16-bin high-nibble byte
+    histogram projected through ``PROJECTION_MATRIX`` — a deterministic
+    random projection, the classical Johnson–Lindenstrauss encoder.
+    Near-duplicate payloads get near-identical vectors, so cosine search
+    over these features ranks by content similarity.
 
-    The stacked form pays Python→JVM→Python serialization of every framed
-    payload between the two kernels — the heaviest column in the pipeline
-    crosses the boundary twice just to be discarded after feature
-    extraction. Fused, the content bytes never cross at all. Equivalence:
-    a synthesized header always parses (magic/version/kind are valid by
-    construction), so ``extract_features``'s offset strips it and the
-    histogram is over exactly ``text.encode('utf-8')`` — the header
-    contributes nothing to the features; the fused kernel therefore skips
-    header packing entirely (asserted against the stacked path in
-    tests/test_multimodal.py)."""
+    It is the projection of ``synthesize_framed_media(df)``'s payloads with
+    their header stripped, computed in one Arrow kernel from the text, so
+    the framed bytes never cross Python→JVM→Python between two
+    ``mapInPandas`` nodes (tests/test_multimodal.py checks it against that
+    stacked path). All arithmetic is int64 (histogram counts × weights in
+    [-8, 8]), exact and order-free; the float32 cast at the output is exact
+    while |projection| < 2^24 (payloads below ~2 MiB)."""
     R = PROJECTION_MATRIX
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -7,9 +7,10 @@ a single sort order only serves one column. Interleaving the bits of two
 (or more) columns' rank-bucketed values puts rows that are close in BOTH
 dimensions into the same files, so box predicates on either or both
 columns prune well — this is exactly what Delta/Iceberg `OPTIMIZE ZORDER
-BY` does. Implemented as pure integer column arithmetic (no UDF, no
-shuffle beyond the final range partition), and the bucket/interleave math
-is md5-free exact integer ops, so it replays bit-for-bit in any engine.
+BY` does. Implemented as pure integer column arithmetic (no UDF; a
+writer clusters on the z-value with one range partition plus a
+per-partition sort), and the bucket/interleave math is md5-free exact
+integer ops, so it replays bit-for-bit in any engine.
 
 The reference framework has no layout control beyond fixed-size byte
 shards (SURVEY.md O6); this is the scale-era replacement for that design
@@ -87,28 +88,4 @@ def with_zvalue(
             interleave2(F.col(f"{out_prefix}x"), F.col(f"{out_prefix}y"), bits),
         )
         .drop("__minx", "__maxx", "__miny", "__maxy")
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_x: str,
-    col_y: str,
-    bits: int = 8,
-    n_files: int = 16,
-) -> None:
-    """Cluster-and-write: range-partition by the z-value into ``n_files``
-    output files and sort within each — rows close in (x, y) land in the
-    same parquet files, whose min/max column stats then prune box
-    predicates on either dimension. The only shuffle is the final range
-    exchange (sampled split points, same cost class as any global sort);
-    the z computation itself is narrow."""
-    z = with_zvalue(df, col_x, col_y, bits=bits)
-    (
-        z.repartitionByRange(n_files, F.col("z"))
-        .sortWithinPartitions("z")
-        .drop("zx", "zy", "z")
-        .write.mode("overwrite")
-        .parquet(path)
     )

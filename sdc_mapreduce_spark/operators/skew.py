@@ -149,16 +149,10 @@ def sessionize_chunked(
 # same table pay the probe once; the threshold comparison stays per-call.
 # Keyed by the PARENT frame's semanticHash (logical-plan identity) plus
 # the key-column name, so two textually different but semantically equal
-# reads share an entry. The
-# cache assumes the data behind a plan is stable within a process — after
-# rewriting the table in place, pass use_cached_stats=False or call
-# clear_key_stats_cache().
+# reads share an entry. The cache assumes the data behind a plan is stable
+# within a process — after rewriting the table in place, pass
+# use_cached_stats=False.
 _KEY_STATS_CACHE: dict[tuple[int, str, float, int], float] = {}
-
-
-def clear_key_stats_cache() -> None:
-    """Drop all cached sessionize_auto key statistics."""
-    _KEY_STATS_CACHE.clear()
 
 
 def sessionize_auto(

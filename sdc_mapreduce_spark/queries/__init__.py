@@ -57,10 +57,16 @@ for _name in _MODULE_ORDER:
 # CERT_HEAD with the queries whose query functions reach it
 # (tests/test_registry.py computes that set from the call graph).
 CERT_HEAD: tuple[str, ...] = (
-    # embedding_near_pairs_blocked's kernel builds its int64 id columns
-    # directly (no per-group astype)
-    "dedup_embedding_ann",
+    # min_label_propagation raises instead of returning unconverged labels
+    # when a final round still changes labels
+    "dedup_clusters",
+    "dedup_keep_best",
+    "dedup_cluster_sizes",
+    "dedup_cluster_labels",
+    "dedup_cluster_safe_split",
     "dedup_embedding_clusters",
+    "pipeline_curation",
+    "pipeline_embedding_stats",
 )
 if not IMPORT_QUARANTINE:
     # Only enforce completeness on a healthy import — with a module

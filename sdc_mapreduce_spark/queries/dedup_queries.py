@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from sdc_mapreduce_spark.cache import pin
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.functions import dedup as D
-from sdc_mapreduce_spark.functions.simsearch import embedding_near_pairs
 from sdc_mapreduce_spark.queries.base import (
     QUALITY_CHARS_SQL,
     QUALITY_SCORE_SQL,

@@ -920,7 +920,7 @@ def layout_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-bit rank buckets of (o_custkey, o_totalprice) and their Morton
     interleave — the sort key a `OPTIMIZE ZORDER BY` write clusters files
     on. Pure integer/IEEE-fixed arithmetic, so every z-value hash-matches
-    cross-engine; write_zordered + the file-pruning property are covered
+    cross-engine; the file pruning of a write clustered on z is covered
     in tests/test_layout.py."""
     from sdc_mapreduce_spark.operators.layout import with_zvalue
 

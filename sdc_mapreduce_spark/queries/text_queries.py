@@ -721,9 +721,8 @@ def multimodal_embed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact math) → broadcast cosine top-k (:func:`_media_cosine_top3`).
     Cosine is computed as int_dot / (sqrt(qq) * sqrt(vv)) with the same
     left-fold order the DuckDB oracle uses (bin-join dot product), so
-    scores are bit-reproducible cross-engine. The digest-stub encoder path
-    (extract_features) remains separately exercised in
-    tests/test_multimodal.py."""
+    scores are bit-reproducible cross-engine. The projection encoder's
+    twin is multimodal_encoder_topk."""
     from sdc_mapreduce_spark.multimodal import byte_bin_histogram, synthesize_framed_media
 
     media = synthesize_framed_media(load_table(spark, sf_dir, "documents"))
@@ -742,9 +741,9 @@ WITH {_byte_bins_sql()}{_BIN_NORMS}, pairs AS (
 
 def multimodal_encoder_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity search over the ENCODER features (multimodal.
-    extract_features): framed payloads → fixed-seed integer random
-    projection of the body byte-histogram (a real Johnson–Lindenstrauss
-    feature map, not a digest stub — r9, VERDICT r8 ask #6) → broadcast
+    synthesize_and_extract): framed payloads → fixed-seed integer random
+    projection of the body byte-histogram (a Johnson–Lindenstrauss feature
+    map) → broadcast
     cosine top-3 for query media 0-4 (:func:`_media_cosine_top3`). Every
     projected coordinate is an exact integer (hist counts × weights in
     [-8,8], |proj| << 2^53 at any fixture SF), so dot products and norms
@@ -753,9 +752,8 @@ def multimodal_encoder_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationally — reproduces every score bit-for-bit."""
     from sdc_mapreduce_spark.multimodal import synthesize_and_extract
 
-    # fused synthesize+extract kernel: the framed payload bytes never
-    # cross the JVM<->Python boundary; output is bit-identical (see
-    # synthesize_and_extract's docstring)
+    # one kernel from the text: the framed payload bytes never cross the
+    # JVM<->Python boundary (see synthesize_and_extract's docstring)
     return _media_cosine_top3(
         synthesize_and_extract(load_table(spark, sf_dir, "documents"))
     )
@@ -1941,7 +1939,8 @@ FROM b GROUP BY bin ORDER BY bin
 
 
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE merge learning (functions.text.bpe_merges — the
+    """Distributed BPE merge learning (functions.text.bpe_merges_batched
+    with one merge per pass, the sequential learner — the
     tokenizer-TRAINING step; text_vocab_ids/encode cover the type-vocab
     side): 4 merge iterations over the ASCII-alphanumeric word table of
     the documents corpus, canonical Sennrich semantics (every adjacent
@@ -1954,10 +1953,10 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     best pair's count < 2; the SQL always emits 4 stages — equivalent on
     any corpus where 4 productive merges exist (every fixture SF; unit
     tests cover the degenerate cases)."""
-    from sdc_mapreduce_spark.functions.text import bpe_merges
+    from sdc_mapreduce_spark.functions.text import bpe_merges_batched
 
     docs = load_table(spark, sf_dir, "documents")
-    return bpe_merges(docs, k=4).orderBy("merge_rank")
+    return bpe_merges_batched(docs, passes=4, m=1).drop("pass_id").orderBy("merge_rank")
 
 
 # The BPE oracles' word table w0(w, freq) (the ASCII-alphanumeric tokens)
@@ -2085,8 +2084,9 @@ ORDER BY merge_rank
 
 
 def text_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE APPLY (functions.text.bpe_segment): segment every document with
-    the 4-merge table learned on the same corpus, via the distinct-word
+    """BPE APPLY (functions.text.bpe_segment_batched, one merge per pass):
+    segment every document with the 4-merge table learned on the same
+    corpus, via the distinct-word
     memoization join — segmentation is a pure function of the word, so the
     learned O(distinct words) state IS the segmentation table and per-doc
     work is one equi-join. Emits (doc_id, n_words, n_subwords, subword_fp)
@@ -2094,10 +2094,10 @@ def text_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     space-joined subword stream in document token order byte-for-byte. The
     DuckDB twin replays learn + apply: the shared 4-stage CTE prefix, a
     positional token explode, the same join, and an ordered string_agg."""
-    from sdc_mapreduce_spark.functions.text import bpe_segment
+    from sdc_mapreduce_spark.functions.text import bpe_segment_batched
 
     docs = load_table(spark, sf_dir, "documents")
-    return bpe_segment(docs, k=4).orderBy("doc_id")
+    return bpe_segment_batched(docs, passes=4, m=1).orderBy("doc_id")
 
 
 def _bpe_segment_sql(k: int = 4) -> str:

@@ -1,138 +1,21 @@
-"""Sources and sinks.
+"""Sinks and table maintenance beyond the reference's text blobs.
 
 The reference's only storage interface is whole/ranged text-blob reads and
 blob uploads against one Azure container (SURVEY.md O1-O5, reference
-src/util/blob.cpp:33-94). Spark's DataSource API generalizes that to any
-Hadoop-compatible filesystem and format; this module pins down the engine's
-supported formats with explicit schemas and scale-relevant writer options:
+src/util/blob.cpp:33-94); its text source and key-value sink live in
+``mapreduce`` (``read_text``, ``write_kv_text``). Spark's DataSource API
+generalizes that to any Hadoop-compatible filesystem and format; this
+module holds the two writers the registered queries use for data kept
+across jobs:
 
-- **text** — the reference's native format (one line per row);
-- **csv / json** — schema-explicit (inference is a full extra pass over
-  100 TB — never rely on it in production paths), malformed rows dropped
-  (DROPMALFORMED), matching the reference's silent-skip semantics
-  (reference src/app/reducer.py:11-12,21-24);
-- **parquet** — the columnar default for everything analytic;
-- writers: overwrite-mode parquet/csv/json with optional hive-style
-  partitioning (partition pruning on read) and sorted-bucketed parquet
-  tables (shuffle-free joins on the bucket key for repeat consumers).
+- ``write_bucketed_table`` — sorted-bucketed parquet tables (shuffle-free
+  joins on the bucket key for repeat consumers);
+- ``compact_parquet`` — small-file compaction, optionally range-clustered.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
-
-from sdc_mapreduce_spark.mapreduce import read_text, write_kv_text  # noqa: F401
-
-__all__ = [
-    "read_text",
-    "read_csv",
-    "read_json",
-    "read_parquet",
-    "write_csv",
-    "write_json",
-    "write_parquet",
-    "write_bucketed_table",
-    "write_kv_text",
-]
-
-
-def read_csv(
-    spark: SparkSession,
-    paths: str | list[str],
-    schema: StructType | str,
-    header: bool = True,
-    sep: str = ",",
-) -> DataFrame:
-    """CSV source with a required schema; malformed rows are dropped (the
-    reference's silent-skip contract, quirk-faithful instead of failing
-    mid-job on dirty data)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", header)
-        .option("sep", sep)
-        .option("mode", "DROPMALFORMED")
-        .csv(paths)
-    )
-
-
-def read_json(
-    spark: SparkSession, paths: str | list[str], schema: StructType | str
-) -> DataFrame:
-    """JSON-lines source with a required schema (no inference pass)."""
-    return spark.read.schema(schema).option("mode", "DROPMALFORMED").json(paths)
-
-
-def read_parquet(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """Parquet source — schema from footers; pushdown + pruning automatic."""
-    return spark.read.parquet(*paths) if isinstance(paths, list) else spark.read.parquet(paths)
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Parquet sink. ``partition_by`` writes hive-style directories so
-    readers prune partitions from the path alone; ``max_records_per_file``
-    caps file size (huge single files serialize the scan's split planning
-    on object stores)."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.parquet(path)
-
-
-def read_orc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """ORC source — the second columnar format Spark ships natively; same
-    pushdown/pruning machinery as parquet (predicate → stripe/row-group
-    skip via ORC statistics)."""
-    return spark.read.orc(*paths) if isinstance(paths, list) else spark.read.orc(paths)
-
-
-def write_orc(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def write_csv(df: DataFrame, path: str, header: bool = True, sep: str = ",") -> None:
-    df.write.mode("overwrite").option("header", header).option("sep", sep).csv(path)
-
-
-def write_json(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)
-
-
-def write_sorted_global(
-    df: DataFrame,
-    path: str,
-    order_cols: list[str],
-    fmt: str = "parquet",
-    num_files: int | None = None,
-) -> None:
-    """Globally-ordered sink: a range-partitioning exchange (sampled split
-    points) + per-partition sort, so part files are internally sorted AND
-    file i's keys all precede file i+1's — a total order across the
-    directory without any single-node sort. The distributed upgrade of the
-    reference's partition-local sorted sink (reference src/app/reducer.py:26,
-    SURVEY.md O14/Q4: hash partitioning interleaves key ranges; range
-    partitioning is what makes the global order real). ``num_files`` pins
-    the output file count (output-size control at scale); default lets
-    AQE pick."""
-    if num_files:
-        out = df.repartitionByRange(num_files, *order_cols).sortWithinPartitions(
-            *order_cols
-        )
-    else:
-        out = df.orderBy(*order_cols)
-    out.write.mode("overwrite").format(fmt).save(path)
+from pyspark.sql import DataFrame
 
 
 def write_bucketed_table(

@@ -18,17 +18,9 @@ complete or update mode.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
-
-# Watermarks require TIMESTAMP (with local time zone); the session pins
-# spark.sql.session.timeZone=UTC so wall-clock values agree with the
-# TIMESTAMP_NTZ batch twins read from parquet.
-EVENTS_DDL = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
 
 # Event time in a replay file is microsecond wall-clock text. How it reads
 # back: "ntz" as TIMESTAMP_NTZ, the same naive value in any session zone;
@@ -59,7 +51,7 @@ def replay_events(
     ``event_time`` encoding. Files are appended, so a second call on the
     same ``dest`` adds a delivery that a checkpointed query picks up on
     restart."""
-    ts_type, _option, _pattern, offset = _EVENT_TIME[event_time]
+    ts_type, option, pattern, offset = _EVENT_TIME[event_time]
     text = F.concat(F.date_format("ts", _TS_TEXT), F.lit(offset)).alias("ts")
     landed = events.select(*(text if c == "ts" else c for c in cols))
     landed.repartition(files).write.mode("append").json(dest)
@@ -69,31 +61,14 @@ def replay_events(
             for f in landed.schema
         ]
     )
-    return _json_stream(
-        events.sparkSession, dest, schema, event_time, max_files_per_trigger
+    reader = (
+        events.sparkSession.readStream.schema(schema)
+        .format("json")
+        .option(option, pattern)
     )
-
-
-def read_events_stream(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File stream over full event rows landed by :func:`replay_events`
-    with ``event_time="zoned"``."""
-    return _json_stream(spark, source_dir, EVENTS_DDL, "zoned", max_files_per_trigger)
-
-
-def _json_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType | str,
-    event_time: str,
-    max_files_per_trigger: int | None,
-) -> DataFrame:
-    _ts_type, option, pattern, _offset = _EVENT_TIME[event_time]
-    reader = spark.readStream.schema(schema).format("json").option(option, pattern)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(source_dir)
+    return reader.load(dest)
 
 
 def _watermarked(events: DataFrame, col: str, delay: str | None) -> DataFrame:
@@ -232,96 +207,6 @@ def stateful_user_totals(
     )
 
 
-def incremental_rollup(
-    events: DataFrame,
-    snapshot_dir: str,
-    checkpoint_dir: str,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-):
-    """Continuously-maintained rollup table (the 'hypertable rollup'
-    pattern): a windowed aggregate in UPDATE mode, merged into a
-    date-partitioned parquet snapshot via ``foreachBatch`` — the MERGE-INTO
-    upsert expressed without a table format. Each micro-batch:
-
-    1. collects the (bounded) set of window dates it touched,
-    2. reads ONLY those snapshot partitions (partition pruning),
-    3. anti-joins out the rows being replaced, unions the fresh aggregates,
-    4. rewrites just those date partitions (dynamic partition overwrite).
-
-    Maintenance cost is proportional to the update footprint, never the
-    snapshot size — the property that matters when the snapshot is years of
-    history. Replaying a failed batch rewrites the same partitions to the
-    same content (idempotent), so the checkpoint gives end-to-end
-    exactly-once.
-
-    Returns the started StreamingQuery; the snapshot at ``snapshot_dir`` is
-    readable with ``spark.read.parquet`` at any time.
-    """
-
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "cnt",
-            "sum_value",
-            F.to_date(F.col("w.start")).alias("window_date"),
-        )
-    )
-
-    def land(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.persist()
-        try:
-            # touched dates: bounded by the batch's window footprint, not
-            # data volume — a safe driver-side collect
-            dates = [
-                r["window_date"]
-                for r in batch_df.select("window_date").distinct().collect()
-            ]
-            if not dates:
-                return
-            try:  # schema resolution is eager: missing path raises here
-                existing = spark.read.parquet(snapshot_dir).filter(
-                    F.col("window_date").isin(dates)
-                )
-            except Exception:  # first batch: snapshot does not exist yet
-                existing = None
-            if existing is None:
-                merged = batch_df
-            else:
-                keys = batch_df.select("window_start", "event_type").distinct()
-                kept = existing.join(
-                    keys, ["window_start", "event_type"], "left_anti"
-                )
-                # materialize before the write: the plan reads the same
-                # partitions the overwrite is about to delete
-                merged = kept.unionByName(batch_df).localCheckpoint(eager=True)
-            (
-                # dynamic overwrite scoped to THIS write (DataFrameWriter
-                # option, not session conf): a session-wide conf.set here
-                # would silently change overwrite semantics for every later
-                # partitioned write on the shared session
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("window_date")
-                .parquet(snapshot_dir)
-            )
-        finally:
-            batch_df.unpersist()
-
-    return (
-        agg.writeStream.foreachBatch(land)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def streaming_dedup(
     events: DataFrame,
     keys: list[str] | None = None,
@@ -335,78 +220,6 @@ def streaming_dedup(
     if watermark is None:
         return events.dropDuplicates(keys)
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def dedup_ingest(
-    docs_stream: DataFrame,
-    index_dir: str,
-    accepted_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Continuous dedup ingestion — the streaming form of
-    functions.dedup.incremental_dedup: every micro-batch fingerprints its
-    documents, dedups within the batch (lowest id survives), anti-joins the
-    PERSISTED fingerprint index accumulated by all prior batches, then
-    lands the survivors and appends their fingerprints to the index.
-
-    Exactly-once across restarts without a transactional table format:
-    both sinks write into a ``batch=<id>`` subdirectory with overwrite, so
-    a replayed micro-batch rewrites identical content instead of
-    double-appending; the checkpoint guarantees batch ids are stable.
-
-    Scale shape per delivery: the index side is fingerprints only (32
-    bytes/doc, bucketable — see
-    test_incremental_dedup_fingerprint_index_bucket_join_no_shuffle), the
-    batch is the small side of the anti-join, and the index grows by one
-    append per batch — cost tracks the delivery, never the corpus.
-
-    Returns the started StreamingQuery; read ``accepted_dir`` with
-    ``spark.read.parquet`` at any time for the deduped corpus.
-    """
-
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fps = batch_df.select(
-            F.col(id_col), F.col(text_col), F.md5(F.col(text_col)).alias("__fp")
-        ).persist()
-        try:
-            winners = fps.groupBy("__fp").agg(F.min(id_col).alias(id_col))
-            in_batch = fps.join(winners, ["__fp", id_col])
-            try:
-                # exclude THIS batch's own partition: on replay the index
-                # already holds our fingerprints and an unfiltered
-                # anti-join would drop the whole batch (breaking the
-                # rewrite-identical-content idempotence)
-                existing = (
-                    spark.read.parquet(index_dir)
-                    .filter(F.col("batch") != batch_id)
-                    .select("__fp")
-                    .distinct()
-                )
-                fresh = in_batch.join(existing, "__fp", "left_anti")
-            except Exception:
-                fresh = in_batch  # first batch: no index yet
-            fresh = fresh.persist()
-            try:
-                fresh.drop("__fp").write.mode("overwrite").parquet(
-                    f"{accepted_dir}/batch={batch_id}"
-                )
-                fresh.select("__fp").write.mode("overwrite").parquet(
-                    f"{index_dir}/batch={batch_id}"
-                )
-            finally:
-                fresh.unpersist()
-        finally:
-            fps.unpersist()
-
-    return (
-        docs_stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def cdc_upsert_stream(
@@ -430,7 +243,7 @@ def cdc_upsert_stream(
     compacts the deltas with ONE partial-aggregable groupBy and filters
     tombstoned keys. At scale the delta set is folded periodically with the
     same compaction writer the engine already ships
-    (sources.compact_small_files); per-batch delta size is O(keys touched
+    (sources.compact_parquet); per-batch delta size is O(keys touched
     in the batch), never history size.
 
     Tombstones are RETAINED in the snapshot: a tombstone is its key's
@@ -450,8 +263,10 @@ def cdc_upsert_stream(
             .withColumn("__batch", F.lit(batch_id))
         )
         (
-            # per-write dynamic overwrite (no session conf mutation — see
-            # the snapshot writer above for why)
+            # dynamic overwrite scoped to THIS write (DataFrameWriter
+            # option, not session conf): a session-wide conf.set here
+            # would silently change overwrite semantics for every later
+            # partitioned write on the shared session
             delta.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__batch")

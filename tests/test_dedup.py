@@ -148,6 +148,23 @@ def test_near_dup_clusters_check_every_invariant(spark, sf_dir):
         D.near_dup_clusters(docs, check_every=0)
 
 
+def test_label_propagation_raises_at_its_round_cap(spark):
+    """A 100-node chain with shuffled ids needs more than 6 rounds; at the
+    cap the operator fails by name (round count, labels still changing)
+    instead of returning several rep_ids for the one component."""
+    import random
+
+    import pytest
+
+    ids = random.Random(0).sample(range(100), 100)
+    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    pairs = spark.createDataFrame(list(zip(ids, ids[1:])), "id_a long, id_b long")
+    with pytest.raises(
+        D.LabelPropagationNotConverged, match=r"in 6 rounds: [1-9]\d* labels still changing"
+    ):
+        D.min_label_propagation(nodes, pairs, max_iterations=6)
+
+
 def test_minhash_lsh_equals_exhaustive(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     exact = {

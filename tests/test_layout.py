@@ -59,7 +59,14 @@ def test_zorder_write_prunes_box_predicates(spark, sf_dir, tmp_path):
     orders = load_table(spark, sf_dir, "orders")
     zpath = str(tmp_path / "zordered")
     npath = str(tmp_path / "naive")
-    L.write_zordered(orders, zpath, "o_custkey", "o_totalprice", bits=8, n_files=16)
+    # clustered layout: range-partition on the z-value, sort within files
+    (
+        L.with_zvalue(orders, "o_custkey", "o_totalprice", bits=8)
+        .repartitionByRange(16, "z")
+        .sortWithinPartitions("z")
+        .drop("zx", "zy", "z")
+        .write.parquet(zpath)
+    )
     # naive layout: hash-scatter on the primary key (what a plain ETL
     # write produces) — every file spans ~the full (custkey, price) space
     orders.repartition(16, "o_orderkey").write.mode("overwrite").parquet(npath)

@@ -1,16 +1,38 @@
 """Multimodal plumbing: schemas, batched decode, the random-projection
 encoder, frame sampling — kernels and the Spark-side contract are both
-real (r9: the digest stubs are gone; decode parses real SDCM headers with
-a raw-buffer layout fallback, features are a fixed-seed integer random
-projection of the byte histogram)."""
+real (decode parses real SDCM headers, features are a fixed-seed integer
+random projection of the byte histogram)."""
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark import multimodal as M
 from sdc_mapreduce_spark.catalog import load_table
+
+
+def _extract_features(df):
+    """Reference encoder over any media payload: the 16-bin high-nibble
+    histogram of the body (header stripped when the payload is framed,
+    the whole buffer when not) projected through PROJECTION_MATRIX."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            feats = []
+            for b in pdf["content"]:
+                payload = bytes(b)
+                offset = M.HEADER_LEN if M.parse_header(payload) is not None else 0
+                body = np.frombuffer(payload, dtype=np.uint8, offset=offset)
+                hist = np.bincount(body >> 4, minlength=M.PROJECTION_BINS)
+                feats.append((M.PROJECTION_MATRIX @ hist.astype(np.int64)).astype(np.float32))
+            yield pd.DataFrame({"media_id": pdf["media_id"], "feature": feats})
+
+    return df.select("media_id", "content").mapInPandas(kernel, schema=M.FEATURE_SCHEMA)
 
 
 @pytest.fixture(scope="module")
@@ -26,47 +48,22 @@ def test_media_schema(media):
     assert "n_bytes" in media.select("meta.n_bytes").columns
 
 
-def test_decode_media_unframed_layout_inference(media):
-    """Unframed payloads get the raw-buffer near-square layout: width =
-    ceil(sqrt(n)), height = ceil(n/width), 1 channel — deterministic and
-    content-derived (w*h covers the buffer, one fewer row would not)."""
-    a = {
-        r["media_id"]: (r["width"], r["height"], r["n_channels"], r["n_bytes"])
-        for r in M.decode_media(media).collect()
-    }
-    b = {
-        r["media_id"]: (r["width"], r["height"], r["n_channels"], r["n_bytes"])
-        for r in M.decode_media(media).collect()
-    }
-    assert a == b
-    for w, h, c, n in a.values():
-        assert c == 1
-        assert w * h >= n
-        assert w * (h - 1) < max(n, 1)
-
-
 def test_decode_media_framed_uses_real_header(framed):
+    """decode_framed reads kind and dimensions from the SDCM header."""
     decoded = {
         r["media_id"]: (r["kind"], r["width"], r["height"], r["n_channels"])
-        for r in M.decode_media(framed).collect()
+        for r in M.decode_framed(framed).collect()
     }
+    assert decoded
     for mid, (kind, w, h, c) in decoded.items():
         assert (w, h, c) == M.media_dims(mid)
         assert kind == ("image", "audio", "video")[mid % 3]
 
 
-def test_decode_n_bytes_matches_meta(media):
-    joined = (
-        M.decode_media(media)
-        .select("media_id", F.col("n_bytes").alias("decoded_bytes"))
-        .join(media.select("media_id", F.col("meta.n_bytes").alias("meta_bytes")), "media_id")
-    )
-    assert joined.filter(F.col("decoded_bytes") != F.col("meta_bytes")).count() == 0
-
-
-def test_extract_features_shape(media):
-    feats = M.extract_features(media).collect()
-    assert len(feats) == media.count()
+def test_extract_features_shape(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents").limit(60)
+    feats = M.synthesize_and_extract(docs).collect()
+    assert len(feats) == docs.count()
     assert all(len(r["feature"]) == M.FEATURE_DIM for r in feats)
 
 
@@ -75,8 +72,6 @@ def test_extract_features_is_the_projection_of_the_histogram(spark):
     PROJECTION_MATRIX @ (16-bin high-nibble histogram of the body), exact
     integers — identical payloads map to identical vectors, and the framed
     header is stripped before hashing so framing doesn't perturb features."""
-    import numpy as np
-
     body = b"the quick brown fox jumps over the lazy dog"
     rows = [
         (1, "raw", bytearray(body)),
@@ -84,7 +79,7 @@ def test_extract_features_is_the_projection_of_the_histogram(spark):
         (3, "framed", bytearray(M.frame_header("image", 4, 4, 1) + body)),
     ]
     df = spark.createDataFrame(rows, "media_id long, kind string, content binary")
-    feats = {r["media_id"]: list(r["feature"]) for r in M.extract_features(df).collect()}
+    feats = {r["media_id"]: list(r["feature"]) for r in _extract_features(df).collect()}
     hist = np.bincount(
         np.frombuffer(body, dtype=np.uint8) >> 4, minlength=16
     ).astype(np.int64)
@@ -101,14 +96,14 @@ def test_sample_frames_expands_rows(media):
     assert all(r["count"] == 4 for r in per)
 
 
-def test_features_flow_into_similarity_search(media):
+def test_features_flow_into_similarity_search(spark, sf_dir):
     """End-to-end multimodal pipeline: binary payload → Arrow feature
     kernel → cosine top-k over the extracted vectors. The feature column
     must be directly consumable by the simsearch operators (schema
     compatibility is the contract)."""
     from sdc_mapreduce_spark.functions.simsearch import cosine_topk_bruteforce
 
-    feats = M.extract_features(media)
+    feats = M.synthesize_and_extract(load_table(spark, sf_dir, "documents").limit(60))
     qids = [r["media_id"] for r in feats.select("media_id").limit(2).collect()]
     top = cosine_topk_bruteforce(
         feats, qids, k=3, id_col="media_id", vec_col="feature"
@@ -126,14 +121,14 @@ def framed(spark, sf_dir):
 
 
 def test_synthesize_and_extract_matches_stacked_pipeline(spark, sf_dir):
-    """r13 fused kernel: synthesize_and_extract must be bit-identical to
-    extract_features(synthesize_framed_media(df)) — the fusion only removes
+    """synthesize_and_extract must be bit-identical to the reference encoder
+    over synthesize_framed_media(df): computing from the text only removes
     the JVM<->Python round trip of the framed payload, never a bit of the
     feature math."""
     docs = load_table(spark, sf_dir, "documents").limit(40)
     stacked = {
         r["media_id"]: list(r["feature"])
-        for r in M.extract_features(M.synthesize_framed_media(docs)).collect()
+        for r in _extract_features(M.synthesize_framed_media(docs)).collect()
     }
     fused = {
         r["media_id"]: list(r["feature"])
@@ -216,8 +211,6 @@ def test_resize_media_dims_and_determinism(framed):
 
 
 def test_resize_media_nearest_neighbor_exact(spark):
-    import numpy as np
-
     # 2x2 single-channel image with distinct corner values; upscaling 2x
     # must replicate each corner into a 2x2 block (nearest neighbor).
     pixels = np.array([[1, 2], [3, 4]], dtype=np.uint8)
@@ -238,8 +231,6 @@ def test_resize_media_drops_zero_dim_payloads(spark):
     zero-size axis (width/height/channels = 0) is malformed: the kernel
     must DROP the row — matching the malformed-payload policy — rather than
     crash the whole task on an empty pixel buffer."""
-    import numpy as np
-
     good = np.array([[1, 2], [3, 4]], dtype=np.uint8)
     rows = [
         (1, bytearray(M.frame_header("image", 0, 2, 1) + b"xy")),

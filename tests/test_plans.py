@@ -493,3 +493,36 @@ def test_mmr_pool_scoring_broadcasts_queries(spark, sf_dir):
     plan = _plan(simsearch_mmr(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan
     assert "Exchange SinglePartition" not in plan
+
+
+def test_normalized_plan_masks_run_dependent_tokens():
+    """Spark-free: the four run-dependent token kinds of a formatted plan
+    are masked, and nothing else changes. The first three lines are
+    recorded from dedup_clusters at sf0.01; the last is a parquet scan of
+    a scratch directory (``sdcms_`` prefix, random suffix)."""
+    from sdc_mapreduce_spark.plans import normalized_plan
+
+    recorded = (
+        "Arguments: [node#228L, label#482L], MapPartitionsRDD[146] at localCheckpoint"
+        " at NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)\n"
+        "Arguments: rangepartitioning(doc_id#553L ASC NULLS FIRST, 8),"
+        " ENSURE_REQUIREMENTS, [plan_id=3555]\n"
+        "Output [2]: [node#228L AS doc_id#553L, label#482L AS rep_id#554L]\n"
+        "Location: InMemoryFileIndex [file:/tmp/sdcms_k3x9q1ab/part.parquet]\n"
+    )
+    assert normalized_plan(recorded) == (
+        "Arguments: [node#NL, label#NL], MapPartitionsRDD[N] at localCheckpoint"
+        " at NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)\n"
+        "Arguments: rangepartitioning(doc_id#NL ASC NULLS FIRST, 8),"
+        " ENSURE_REQUIREMENTS, [plan_id=N]\n"
+        "Output [2]: [node#NL AS doc_id#NL, label#NL AS rep_id#NL]\n"
+        "Location: InMemoryFileIndex [file:/tmp/sdcms_X/part.parquet]\n"
+    )
+    # a second run of the same code differs only in those tokens
+    rerun = (
+        recorded.replace("#228L", "#301L")
+        .replace("[146]", "[151]")
+        .replace("3555", "4012")
+        .replace("k3x9q1ab", "zz81mm0c")
+    )
+    assert normalized_plan(rerun) == normalized_plan(recorded)

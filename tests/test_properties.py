@@ -671,12 +671,12 @@ bpe_word = st.text(alphabet="abc", min_size=1, max_size=6)
 def test_bpe_merges_matches_reference_on_random_corpora(spark, words):
     from collections import Counter as _Counter
 
-    from sdc_mapreduce_spark.functions.text import bpe_merges
+    from sdc_mapreduce_spark.functions.text import bpe_merges_batched
 
     df = spark.createDataFrame([(" ".join(words),)], "text string")
     got = [
         (r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in bpe_merges(df, k=3).orderBy("merge_rank").collect()
+        for r in bpe_merges_batched(df, passes=3, m=1).orderBy("merge_rank").collect()
     ]
     expect = _ref_bpe_learn(dict(_Counter(words)), 3)
     assert got == expect, f"words={words}\n got={got}\nwant={expect}"

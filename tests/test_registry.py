@@ -9,6 +9,8 @@ the quarantine loud in CI while the driver keeps its window.
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import subprocess
 import sys
 
@@ -41,41 +43,114 @@ def test_import_quarantine_is_empty():
 
 # Operators whose code changed since their consumers were last certified;
 # every query whose query function reaches one of them must sit in CERT_HEAD.
-_CHANGED_OPERATORS = frozenset({"embedding_near_pairs_blocked"})
+_CHANGED_OPERATORS = frozenset({"min_label_propagation"})
 
 
-def _package_call_graph() -> dict[str, set[str]]:
-    """Top-level function name -> every name it references (calls,
-    attribute accesses, bare names), over the whole package. Keyed by bare
-    name, so the graph over-approximates reachability — never under."""
-    import ast
-    import pathlib
+_REPO = pathlib.Path(__file__).resolve().parents[1]
+_PACKAGE = "sdc_mapreduce_spark"
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
-    import sdc_mapreduce_spark
 
-    graph: dict[str, set[str]] = {}
-    for path in pathlib.Path(sdc_mapreduce_spark.__file__).parent.rglob("*.py"):
-        for node in ast.parse(path.read_text()).body:
-            if isinstance(node, ast.FunctionDef):
-                refs = graph.setdefault(node.name, set())
-                for sub in ast.walk(node):
-                    if isinstance(sub, ast.Name):
-                        refs.add(sub.id)
-                    elif isinstance(sub, ast.Attribute):
-                        refs.add(sub.attr)
+def _production_files() -> list[pathlib.Path]:
+    """The files whose code runs in production: the package, the bench,
+    the benchmark harness, the tools and __spark_entry__.py."""
+    return [
+        *sorted((_REPO / _PACKAGE).rglob("*.py")),
+        _REPO / "bench.py",
+        _REPO / "__spark_entry__.py",
+        *(p for p in sorted((_REPO / "perfbench").glob("*.py")) if not p.name.startswith("test_")),
+        *sorted((_REPO / "tools").glob("*.py")),
+    ]
+
+
+def _module_name(path: pathlib.Path) -> str:
+    parts = path.relative_to(_REPO).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _in_package(node: str) -> bool:
+    return node.partition(":")[0].partition(".")[0] == _PACKAGE
+
+
+def _units(tree: ast.Module):
+    """(name, statement) per top-level unit: each function, each class (one
+    unit holding all of its methods) and each name bound by a plain
+    assignment; every other module-level statement is the unit ''."""
+    for stmt in tree.body:
+        targets = (
+            stmt.targets if isinstance(stmt, ast.Assign)
+            else [stmt.target] if isinstance(stmt, ast.AnnAssign)
+            else []
+        )
+        if isinstance(stmt, _DEFS):
+            yield stmt.name, stmt
+        elif targets and all(isinstance(t, ast.Name) for t in targets):
+            for t in targets:
+                yield t.id, stmt
+        else:
+            yield "", stmt
+
+
+def _call_graph() -> dict[str, set[str]]:
+    """Node ``module:name`` -> the nodes it references, over the production
+    files (``module:`` is the module's loose top-level code). A bare name
+    resolves through its module's own units and ``from ... import``s, as
+    Python scoping does; an attribute ``x.name`` resolves to every package
+    unit called ``name``, so method calls and module-attribute calls
+    over-approximate. Text inside string constants is not a reference."""
+    trees = {_module_name(p): ast.parse(p.read_text()) for p in _production_files()}
+    units = {mod: list(_units(tree)) for mod, tree in trees.items()}
+    nodes = {f"{mod}:{name}" for mod, us in units.items() for name, _ in us}
+    imports = {
+        mod: {
+            alias.asname or alias.name: (sub.module, alias.name)
+            for sub in ast.walk(tree)
+            if isinstance(sub, ast.ImportFrom)
+            for alias in sub.names
+        }
+        for mod, tree in trees.items()
+    }
+    by_name: dict[str, set[str]] = {}
+    for node in nodes:
+        if _in_package(node):
+            by_name.setdefault(node.partition(":")[2], set()).add(node)
+
+    def resolve(mod: str, name: str) -> set[str]:
+        if f"{mod}:{name}" in nodes:
+            return {f"{mod}:{name}"}
+        if name in imports.get(mod, {}):
+            return resolve(*imports[mod][name])
+        return set()
+
+    graph: dict[str, set[str]] = {node: set() for node in nodes}
+    for mod, us in units.items():
+        for name, stmt in us:
+            refs = graph[f"{mod}:{name}"]
+            for sub in ast.walk(stmt):
+                if isinstance(sub, ast.Name):
+                    refs |= resolve(mod, sub.id)
+                elif isinstance(sub, ast.Attribute):
+                    refs |= by_name.get(sub.attr, set())
     return graph
 
 
-def _reaches(graph: dict[str, set[str]], start: str, targets) -> bool:
-    seen, stack = set(), [start]
+def _reached(graph: dict[str, set[str]], roots) -> set[str]:
+    seen, stack = set(), list(roots)
     while stack:
-        name = stack.pop()
-        if name in targets:
-            return True
-        if name not in seen:
-            seen.add(name)
-            stack.extend(graph.get(name, ()))
-    return False
+        node = stack.pop()
+        if node not in seen:
+            seen.add(node)
+            stack.extend(graph.get(node, ()))
+    return seen
+
+
+def _query_node(spec) -> str:
+    return f"{spec.fn.__module__}:{spec.fn.__name__}"
+
+
+def _reaches(graph: dict[str, set[str]], start: str, targets) -> bool:
+    """Whether node ``start`` reaches a unit whose bare name is in ``targets``."""
+    return any(node.partition(":")[2] in targets for node in _reached(graph, [start]))
 
 
 def test_registered_builders_run_the_streaming_operators():
@@ -84,7 +159,7 @@ def test_registered_builders_run_the_streaming_operators():
     library operators rather than inline copies of their plans."""
     import sdc_mapreduce_spark.queries as q
 
-    graph = _package_call_graph()
+    graph = _call_graph()
     unreached = [
         op
         for op in (
@@ -95,9 +170,58 @@ def test_registered_builders_run_the_streaming_operators():
             "stateful_user_totals",
             "stream_stream_error_purchase_join",
         )
-        if not any(_reaches(graph, spec.fn.__name__, {op}) for spec in q.REGISTRY.values())
+        if not any(_reaches(graph, _query_node(spec), {op}) for spec in q.REGISTRY.values())
     ]
     assert not unreached, unreached
+
+
+# Public package functions that no production file calls, each with the
+# reason it stays.
+_USER_CODE_CONTRACT = (
+    "the reference's user-code contract (Python mapper and reducer around "
+    "a shuffle); test_reference_golden.py reproduces its word count through it"
+)
+_NO_PRODUCTION_CALLER = {
+    "sdc_mapreduce_spark.mapreduce:map_reduce": _USER_CODE_CONTRACT,
+    "sdc_mapreduce_spark.mapreduce:python_word_mapper": _USER_CODE_CONTRACT,
+    "sdc_mapreduce_spark.mapreduce:python_sum_reducer": _USER_CODE_CONTRACT,
+}
+
+
+def test_every_public_package_function_has_a_production_caller():
+    """Each public top-level function of the package is reached from a
+    production root (a registered query, module-level code, bench.py,
+    perfbench, tools, __spark_entry__) or is allow-listed with a reason,
+    so no operator keeps an alternate implementation only tests call."""
+    import sdc_mapreduce_spark.queries as q
+
+    graph = _call_graph()
+    defs: dict[str, ast.stmt] = {
+        f"{_module_name(path)}:{stmt.name}": stmt
+        for path in _production_files()
+        for stmt in ast.parse(path.read_text()).body
+        if isinstance(stmt, _DEFS)
+    }
+    # Module-level code runs on import; outside the package, all code is
+    # production code.
+    roots = {
+        node
+        for node in graph
+        if node not in defs or not _in_package(node)
+    } | {_query_node(spec) for spec in q.REGISTRY.values()}
+    reached = _reached(graph, roots)
+    public = {
+        node
+        for node, stmt in defs.items()
+        if _in_package(node)
+        and not isinstance(stmt, ast.ClassDef)
+        and not stmt.name.startswith("_")
+    }
+    assert all(_NO_PRODUCTION_CALLER.values())
+    stale = set(_NO_PRODUCTION_CALLER) - (public - reached)
+    assert not stale, f"allow-listed but reached or gone: {sorted(stale)}"
+    unreached = public - reached - set(_NO_PRODUCTION_CALLER)
+    assert not unreached, "no production caller:\n" + "\n".join(sorted(unreached))
 
 
 def test_every_registered_query_is_prioritized():
@@ -133,11 +257,11 @@ def test_window_head_is_the_r14_plan():
     assert len(head) <= 50
     assert list(q.REGISTRY)[: len(head)] == head
 
-    graph = _package_call_graph()
+    graph = _call_graph()
     reaching = {
         name
         for name, spec in q.REGISTRY.items()
-        if _reaches(graph, spec.fn.__name__, _CHANGED_OPERATORS)
+        if _reaches(graph, _query_node(spec), _CHANGED_OPERATORS)
     }
     assert reaching, "call graph found no consumer of the changed operators"
     assert reaching <= set(head), sorted(reaching - set(head))

@@ -14,6 +14,19 @@ QUERY_IDS = [0, 1, 2, 3, 4]
 K = 5
 
 
+def _embedding_near_pairs(corpus, threshold, id_col="vec_id", vec_col="embedding"):
+    """Reference exact cosine near pairs (id_a < id_b, cosine >= threshold):
+    the exhaustive self-join the approximate operators are checked against."""
+    prepared = S._unit_frame(corpus, id_col, vec_col)
+    a = prepared.select(F.col(id_col).alias("id_a"), F.col("__unit").alias("__ua"))
+    b = prepared.select(F.col(id_col).alias("id_b"), F.col("__unit").alias("__ub"))
+    return (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .filter(S.dot("__ua", "__ub") >= threshold)
+        .select("id_a", "id_b")
+    )
+
+
 def _numpy_topk(rows, query_ids, k):
     ids = np.array([r[0] for r in rows])
     V = np.asarray([r[1] for r in rows], dtype=np.float64)
@@ -152,7 +165,7 @@ def test_blocked_near_pairs_subset_with_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").cache()
     exact = {
         (r["id_a"], r["id_b"])
-        for r in S.embedding_near_pairs(emb, threshold=0.4).collect()
+        for r in _embedding_near_pairs(emb, threshold=0.4).collect()
     }
     approx = {
         (r["id_a"], r["id_b"])
@@ -187,7 +200,7 @@ def test_embedding_near_pairs_symmetric_threshold(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {
         (r["id_a"], r["id_b"])
-        for r in S.embedding_near_pairs(df, threshold=0.9).collect()
+        for r in _embedding_near_pairs(df, threshold=0.9).collect()
     }
     assert got == {(1, 2)}
 
@@ -203,7 +216,7 @@ def test_arrow_near_pairs_equal_declarative(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     declarative = {
         (r["id_a"], r["id_b"])
-        for r in S.embedding_near_pairs(emb, threshold=0.4).collect()
+        for r in _embedding_near_pairs(emb, threshold=0.4).collect()
     }
     arrow = {
         (r["id_a"], r["id_b"])
@@ -425,7 +438,7 @@ def blocked_case(spark, sf_dir):
     }
     exact = [
         (r["id_a"], r["id_b"])
-        for r in S.embedding_near_pairs(emb, threshold=0.4).collect()
+        for r in _embedding_near_pairs(emb, threshold=0.4).collect()
     ]
     expected = {}
     for mpb in (0, 1):

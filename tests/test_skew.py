@@ -210,13 +210,9 @@ def test_sessionize_auto_key_stats_cache(spark, sf_dir):
     cached est_max still flips the plan), and use_cached_stats=False
     re-probes without error."""
     from sdc_mapreduce_spark.catalog import load_table
-    from sdc_mapreduce_spark.operators.skew import (
-        _KEY_STATS_CACHE,
-        clear_key_stats_cache,
-        sessionize_auto,
-    )
+    from sdc_mapreduce_spark.operators.skew import _KEY_STATS_CACHE, sessionize_auto
 
-    clear_key_stats_cache()
+    _KEY_STATS_CACHE.clear()
     ev = load_table(spark, sf_dir, "events")
     sessionize_auto(ev, sample_fraction=1.0)
     assert len(_KEY_STATS_CACHE) == 1
@@ -235,8 +231,7 @@ def test_sessionize_auto_key_stats_cache(spark, sf_dir):
     # different fraction = different key statistics -> separate entry
     sessionize_auto(ev, sample_fraction=0.5)
     assert len(_KEY_STATS_CACHE) == 2
-    clear_key_stats_cache()
-    assert not _KEY_STATS_CACHE
+    _KEY_STATS_CACHE.clear()
 
 
 def test_sessionize_chunked_merges_cross_boundary_sessions(spark):

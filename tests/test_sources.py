@@ -1,5 +1,5 @@
-"""Source/sink round-trips: schema fidelity, malformed-row dropping,
-hive partitioning, bucketed-table shuffle elimination."""
+"""Sources and sinks: range-clustered compaction, bucketed-table shuffle
+elimination, compressed text blobs."""
 
 from __future__ import annotations
 
@@ -10,47 +10,18 @@ from pyspark.sql import functions as F
 from sdc_mapreduce_spark import sources as io
 
 
-def test_csv_roundtrip_and_dropmalformed(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5)], "id long, name string, x double"
-    )
-    out = str(tmp_path / "csv")
-    io.write_csv(df, out)
-    # inject a malformed row as a NEW part file (appending to an existing
-    # one would invalidate its Hadoop .crc checksum)
-    with open(os.path.join(out, "part-99999-bad.csv"), "w") as fh:
-        fh.write("id,name,x\nnotanint,oops,alsobad\n")
-    back = io.read_csv(spark, out, "id long, name string, x double")
-    assert sorted((r.id, r.name, r.x) for r in back.collect()) == [
-        (1, "a", 1.5),
-        (2, "b", 2.5),
-    ]
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from sdc_mapreduce_spark.plans import executed_plan as _plan
-
-    df = spark.createDataFrame(
-        [(i, f"n{i}", float(i) * 1.5) for i in range(100)],
-        "id long, name string, x double",
-    )
-    out = str(tmp_path / "orc")
-    io.write_orc(df, out)
-    back = io.read_orc(spark, out).filter(F.col("id") >= 90).select("id", "x")
-    assert back.count() == 10
-    plan = _plan(back)
-    assert "PushedFilters: [" in plan  # predicate reaches the ORC scan
-    assert "ReadSchema: struct<id:bigint,x:double>" in plan  # pruned
-
-
 def test_sorted_global_write_totally_ordered(spark, tmp_path):
+    """compact_parquet with order_cols range-clusters the rewrite: every
+    output file is internally sorted and file i's keys all precede file
+    i+1's, a total order across the directory."""
     import glob
 
-    df = spark.createDataFrame(
+    src = str(tmp_path / "unsorted")
+    spark.createDataFrame(
         [((i * 7919) % 1000, f"v{i}") for i in range(1000)], "k int, v string"
-    ).repartition(8)
+    ).repartition(8).write.parquet(src)
     out = str(tmp_path / "sorted")
-    io.write_sorted_global(df, out, ["k"], num_files=5)
+    io.compact_parquet(spark, src, out, target_file_bytes=1024, order_cols=["k"])
     parts = sorted(glob.glob(os.path.join(out, "part-*")))
     assert len(parts) > 1, "need multiple range partitions to prove global order"
     last_max = None
@@ -61,38 +32,6 @@ def test_sorted_global_write_totally_ordered(spark, tmp_path):
             assert ks[0] >= last_max, "file ranges overlap — not a total order"
         if ks:
             last_max = ks[-1]
-
-
-def test_json_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, ["x", "y"], {"k": 2})],
-        "id long, tags array<string>, props map<string,long>",
-    )
-    out = str(tmp_path / "json")
-    io.write_json(df, out)
-    back = io.read_json(
-        spark, out, "id long, tags array<string>, props map<string,long>"
-    )
-    row = back.collect()[0]
-    assert row.id == 1 and row.tags == ["x", "y"] and row.props == {"k": 2}
-
-
-def test_parquet_partitioned_prunes_directories(spark, tmp_path):
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 4).alias("bucket")
-    )
-    out = str(tmp_path / "pq")
-    io.write_parquet(df, out, partition_by=["bucket"])
-    assert sorted(p for p in os.listdir(out) if p.startswith("bucket=")) == [
-        "bucket=0",
-        "bucket=1",
-        "bucket=2",
-        "bucket=3",
-    ]
-    back = io.read_parquet(spark, out).filter(F.col("bucket") == 2)
-    # partition pruning: the filter never reads the other directories
-    assert "PartitionFilters: [isnotnull(bucket" in back._jdf.queryExecution().executedPlan().toString() or back.count() == 25
-    assert back.count() == 25
 
 
 def test_bucketed_table_join_has_no_shuffle(spark, tmp_path):

@@ -7,7 +7,6 @@ its memory-sink views."""
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
 
 import pytest
@@ -16,8 +15,6 @@ from pyspark.sql import functions as F
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.queries.scratch import scratch
 from sdc_mapreduce_spark.streaming.events import (
-    incremental_rollup,
-    read_events_stream,
     replay_events,
     session_aggregate,
     stateful_user_totals,
@@ -29,14 +26,21 @@ from sdc_mapreduce_spark.streaming.events import (
 _EVENT_COLUMNS = ("event_id", "ts", "user_id", "event_type", "value", "props")
 
 
-@pytest.fixture(scope="module")
-def events_json_dir(spark, sf_dir, tmp_path_factory):
-    """Land the events fixture as json files (a replayable stream)."""
-    out = str(tmp_path_factory.mktemp("events_stream"))
-    replay_events(
-        load_table(spark, sf_dir, "events"), out, *_EVENT_COLUMNS, event_time="zoned"
+def _replay(spark, sf_dir, dest, **kw):
+    """The events fixture landed in ``dest`` as a replayable file stream,
+    ``ts`` read as session-zoned TIMESTAMP (watermarks need it)."""
+    return replay_events(
+        load_table(spark, sf_dir, "events"),
+        str(dest),
+        *_EVENT_COLUMNS,
+        event_time="zoned",
+        **kw,
     )
-    return out
+
+
+@pytest.fixture
+def events_stream(spark, sf_dir, tmp_path):
+    return _replay(spark, sf_dir, tmp_path / "events")
 
 
 def _drain(s, df, output_mode: str = "append"):
@@ -46,11 +50,10 @@ def _drain(s, df, output_mode: str = "append"):
     ).collect()
 
 
-def test_tumbling_counts_match_batch(spark, sf_dir, events_json_dir):
-    stream = read_events_stream(spark, events_json_dir)
-    assert stream.isStreaming
+def test_tumbling_counts_match_batch(spark, sf_dir, events_stream):
+    assert events_stream.isStreaming
     with scratch(spark) as s:
-        rows = _drain(s, tumbling_counts(stream))
+        rows = _drain(s, tumbling_counts(events_stream))
     got = {
         (r["window_start"], r["event_type"]): (r["cnt"], round(r["sum_value"], 6))
         for r in rows
@@ -89,22 +92,20 @@ def test_streaming_dedup_drops_duplicates(spark, sf_dir, tmp_path):
     assert all(c == 1 for c in counts.values()), "duplicates survived streaming dedup"
 
 
-def test_session_aggregate_runs(spark, events_json_dir):
-    stream = read_events_stream(spark, events_json_dir)
+def test_session_aggregate_runs(spark, events_stream):
     with scratch(spark) as s:
-        rows = _drain(s, session_aggregate(stream))
+        rows = _drain(s, session_aggregate(events_stream))
     assert rows
     assert all(r["session_end"] >= r["session_start"] for r in rows)
     assert all(r["n_events"] >= 1 for r in rows)
 
 
-def test_stateful_user_totals_match_batch(spark, sf_dir, events_json_dir):
+def test_stateful_user_totals_match_batch(spark, sf_dir, events_stream):
     """The applyInPandasWithState accumulator's final emission per user must
     equal the batch groupBy — state survives across micro-batches. Totals
     are exact micro-unit longs, so they compare exactly."""
-    stream = read_events_stream(spark, events_json_dir)
     with scratch(spark) as s:
-        rows = _drain(s, stateful_user_totals(stream), "update")
+        rows = _drain(s, stateful_user_totals(events_stream), "update")
     # update mode re-emits a row per state change; the accumulator is
     # monotone, so the row with the largest n_events is the lifetime total
     got: dict[int, tuple[int, int]] = {}
@@ -124,13 +125,12 @@ def test_stateful_user_totals_match_batch(spark, sf_dir, events_json_dir):
     assert got == expected
 
 
-def test_stream_stream_join_matches_batch(spark, sf_dir, events_json_dir):
+def test_stream_stream_join_matches_batch(spark, sf_dir, events_stream):
     """Every pair the stream-stream join emits must exist in the batch
     range-join result, and it must emit the vast majority of them (pairs in
     the trailing watermark horizon may be withheld at end-of-stream)."""
-    stream = read_events_stream(spark, events_json_dir)
     with scratch(spark) as s:
-        rows = _drain(s, stream_stream_error_purchase_join(stream))
+        rows = _drain(s, stream_stream_error_purchase_join(events_stream))
     got = {(r["error_event_id"], r["purchase_event_id"]) for r in rows}
     from sdc_mapreduce_spark.queries.events_queries import events_range_join
 
@@ -142,7 +142,7 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, events_json_dir):
     assert len(got) >= 0.9 * len(expected), (len(got), len(expected))
 
 
-def test_checkpoint_restart_is_exactly_once(spark, events_json_dir, tmp_path):
+def test_checkpoint_restart_is_exactly_once(spark, events_stream, tmp_path):
     """Restarting a checkpointed query over an unchanged source must add
     nothing: the checkpoint records consumed files, so the second run
     commits zero new batches (file-sink exactly-once)."""
@@ -153,7 +153,7 @@ def test_checkpoint_restart_is_exactly_once(spark, events_json_dir, tmp_path):
 
         def run_once():
             s.run(
-                tumbling_counts(read_events_stream(spark, events_json_dir))
+                tumbling_counts(events_stream)
                 .writeStream.format("parquet")
                 .option("path", out)
                 .option("checkpointLocation", ckpt)
@@ -169,7 +169,7 @@ def test_checkpoint_restart_is_exactly_once(spark, events_json_dir, tmp_path):
         assert spark.read.parquet(out).count() == first, "restart duplicated rows"
 
 
-def test_foreach_batch_custom_sink(spark, sf_dir, events_json_dir, tmp_path):
+def test_foreach_batch_custom_sink(spark, sf_dir, tmp_path):
     """foreachBatch: each micro-batch lands through arbitrary batch-writer
     code (here: appended parquet) — the escape hatch for sinks Structured
     Streaming lacks natively. Total delivered rows must equal the source."""
@@ -182,7 +182,7 @@ def test_foreach_batch_custom_sink(spark, sf_dir, events_json_dir, tmp_path):
 
     with scratch(spark) as s:
         s.run(
-            read_events_stream(spark, events_json_dir, max_files_per_trigger=2)
+            _replay(spark, sf_dir, tmp_path / "events", max_files_per_trigger=2)
             .writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", str(tmp_path / "fb_ckpt"))
             .trigger(availableNow=True)
@@ -292,67 +292,9 @@ def test_watermark_append_emission_boundary_is_inclusive(spark, tmp_path):
     assert [(r["ws"].strftime("%H:%M"), r["cnt"]) for r in rows] == [("09:45", 1)]
 
 
-def test_incremental_rollup_snapshot_matches_batch(
-    spark, sf_dir, events_json_dir, tmp_path
-):
-    """Drive the continuously-maintained rollup in small micro-batches
-    (update mode → the same window is upserted repeatedly); the final
-    snapshot must equal the one-shot batch aggregate, proving the per-batch
-    merge neither drops sibling rows nor double-counts."""
-    snap = str(tmp_path / "rollup_snapshot")
-    ckpt = str(tmp_path / "rollup_ckpt")
-    # time-sliced source files (a real stream arrives roughly time-ordered;
-    # random slices would put whole slices behind the watermark)
-    src = str(tmp_path / "rollup_src")
-    os.makedirs(src)
-    ev_rows = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-        .orderBy("ts")
-        .collect()
-    )
-    slice_size = (len(ev_rows) + 3) // 4
-    for i in range(4):
-        with open(os.path.join(src, f"slice{i}.json"), "w") as fh:
-            for r in ev_rows[i * slice_size : (i + 1) * slice_size]:
-                fh.write(json.dumps(r.asDict()) + "\n")
-    with scratch(spark) as s:
-        s.run(
-            incremental_rollup(
-                read_events_stream(spark, src, max_files_per_trigger=1),
-                snapshot_dir=snap,
-                checkpoint_dir=ckpt,
-            )
-        )
-
-    got = {
-        (r["window_start"], r["event_type"]): (r["cnt"], round(r["sum_value"], 6))
-        for r in spark.read.parquet(snap).collect()
-    }
-    ev = load_table(spark, sf_dir, "events")
-    batch = (
-        ev.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("ws"), "event_type", "cnt", "sum_value")
-    )
-    expected = {
-        (r["ws"], r["event_type"]): (r["cnt"], round(r["sum_value"], 6))
-        for r in batch.collect()
-    }
-    assert got == expected
-
-
-def test_json_roundtrip_preserves_schema(spark, events_json_dir):
-    stream = read_events_stream(spark, events_json_dir)
-    assert dict(stream.dtypes)["ts"] == "timestamp"
-    assert dict(stream.dtypes)["value"] == "double"
+def test_json_roundtrip_preserves_schema(events_stream):
+    assert dict(events_stream.dtypes)["ts"] == "timestamp"
+    assert dict(events_stream.dtypes)["value"] == "double"
 
 
 def test_kvtext_kill_and_resume_mid_stream_exactly_once(spark, tmp_path):
@@ -463,48 +405,6 @@ def test_tumbling_throughput_floor(spark, sf_dir, tmp_path):
     # row-at-a-time Python pace, so contention noise can't trip it but a
     # real regression can't hide
     assert rate >= 1000, f"streaming throughput regressed: {rate:.0f} ev/s ({elapsed:.1f}s for {n_events})"
-
-
-def test_dedup_ingest_across_deliveries(spark, tmp_path):
-    """Continuous dedup ingestion (streaming/events.dedup_ingest): two
-    deliveries with in-batch and cross-batch duplicates; the accepted
-    corpus must equal the batch-mode incremental plan's answer."""
-    import json as _json
-    import os
-
-    from sdc_mapreduce_spark.streaming.events import dedup_ingest
-
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    index_dir = str(tmp_path / "fp_index")
-    accepted_dir = str(tmp_path / "accepted")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-
-    def deliver(name, rows):
-        with open(src / name, "w") as f:
-            for r in rows:
-                f.write(_json.dumps({"doc_id": r[0], "text": r[1]}) + "\n")
-
-    def run():
-        stream = spark.readStream.schema(schema).json(str(src))
-        with scratch(spark) as s:
-            s.run(dedup_ingest(stream, index_dir, accepted_dir, ckpt))
-
-    deliver("d1.json", [(1, "alpha"), (2, "beta"), (3, "alpha")])  # 3 dups 1
-    run()
-    deliver("d2.json", [(4, "beta"), (5, "gamma"), (6, "gamma"), (7, "alpha")])
-    run()
-
-    got = {
-        (r["doc_id"], r["text"])
-        for r in spark.read.parquet(accepted_dir).collect()
-    }
-    # batch semantics: 1 alpha, 2 beta survive delivery 1; delivery 2 keeps
-    # only 5 gamma (4 beta and 7 alpha are corpus dups, 6 loses in-batch)
-    assert got == {(1, "alpha"), (2, "beta"), (5, "gamma")}
-    # index holds exactly the distinct fingerprints
-    assert spark.read.parquet(index_dir).select("__fp").distinct().count() == 3
 
 
 def test_cdc_upsert_supersession_and_replay_idempotent(spark, tmp_path):

@@ -607,7 +607,7 @@ def test_bpe_merges_matches_reference_incl_overlaps(spark):
     ('aaaa' merges to 'aa aa', 'aaa' to 'aa a'), re-merging of merged
     symbols across iterations, frequency weighting, and the deterministic
     tie-break."""
-    from sdc_mapreduce_spark.functions.text import bpe_merges
+    from sdc_mapreduce_spark.functions.text import bpe_merges_batched
 
     word_freqs = {
         "aaaa": 3,
@@ -624,7 +624,7 @@ def test_bpe_merges_matches_reference_incl_overlaps(spark):
     df = spark.createDataFrame(rows, "text string")
     got = [
         (r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in bpe_merges(df, k=6).orderBy("merge_rank").collect()
+        for r in bpe_merges_batched(df, passes=6, m=1).orderBy("merge_rank").collect()
     ]
     expect = _reference_bpe(word_freqs, 6)
     assert got == expect, f"\n got: {got}\nwant: {expect}"
@@ -634,12 +634,12 @@ def test_bpe_merges_single_hot_run(spark):
     """One word of repeated symbols: 'aaaa' x2 -> ('a','a') counted at
     every adjacent position (6 with freq 2), merged with overlap skip to
     ['aa','aa'], then ('aa','aa')."""
-    from sdc_mapreduce_spark.functions.text import bpe_merges
+    from sdc_mapreduce_spark.functions.text import bpe_merges_batched
 
     df = spark.createDataFrame([("aaaa aaaa",)], "text string")
     got = [
         (r["merge_rank"], r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in bpe_merges(df, k=2).orderBy("merge_rank").collect()
+        for r in bpe_merges_batched(df, passes=2, m=1).orderBy("merge_rank").collect()
     ]
     assert got == [(1, "a", "a", 6), (2, "aa", "aa", 2)]
 
@@ -725,7 +725,7 @@ def test_bpe_merges_batched_conflict_prefix_rule(spark):
     and (x,a) share 'a', so even greedy skip-and-continue selection yields
     ONE merge per pass, and pass 2 proceeds on the REBUILT state exactly
     like the sequential learner would."""
-    from sdc_mapreduce_spark.functions.text import bpe_merges, bpe_merges_batched
+    from sdc_mapreduce_spark.functions.text import bpe_merges_batched
 
     df = spark.createDataFrame([("xab " * 5,), ("xab xab",)], "text string")
     batched = [
@@ -734,7 +734,7 @@ def test_bpe_merges_batched_conflict_prefix_rule(spark):
     ]
     seq = [
         (r["merge_rank"], r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in bpe_merges(df, k=2).orderBy("merge_rank").collect()
+        for r in bpe_merges_batched(df, passes=2, m=1).orderBy("merge_rank").collect()
     ]
     # every top-3 candidate in pass 1 shares a symbol -> batch of 1; the
     # conflict-degraded batched run IS the sequential run here
@@ -791,7 +791,7 @@ def test_bpe_segment_consistent_with_reference(spark):
     preserved in the fingerprint."""
     import hashlib
 
-    from sdc_mapreduce_spark.functions.text import bpe_segment
+    from sdc_mapreduce_spark.functions.text import bpe_segment_batched
 
     word_freqs = {"banana": 4, "bandana": 2, "low": 5, "lower": 2, "newest": 3}
     docs = [
@@ -823,7 +823,7 @@ def test_bpe_segment_consistent_with_reference(spark):
             syms = out
         return syms
 
-    got = {r["doc_id"]: r for r in bpe_segment(df, k=4).collect()}
+    got = {r["doc_id"]: r for r in bpe_segment_batched(df, passes=4, m=1).collect()}
     assert set(got) == {0, 1, 2}
     for doc_id, text in docs[:3]:
         words = [w for w in text.split() if w.isalnum() and w.isascii()]
