@@ -83,14 +83,14 @@ def _ordered_bench() -> dict:
         if n not in ordered:
             ordered[n] = flagged[n]
     return ordered
-REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
+REPEATS = 3
 # Variance guard (VERDICT r8 ask #3): when a query's raw spread exceeds
 # SPREAD_MAX after REPEATS samples, keep sampling (up to MAX_REPEATS) so a
 # single contended run can't dominate a 3-sample median. Combined with the
 # per-query clearCache below (which removes the accumulated executor-storage
 # pressure that produced the r8 outliers: 24.1 s first skew run, 2.0 s
 # pipeline_curation tail), headline raw spreads stay < 2x.
-MAX_REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_REPEATS", "7"))
+MAX_REPEATS = 7
 SPREAD_MAX = 2.0
 # SPARK_GRAFT_BENCH_SKEW=0 skips the two skew-fixture suites (detail JSON
 # records null for "skew"/"skew_hot_user"). The fixtures replicate the
@@ -105,13 +105,8 @@ RUN_SKEW = os.environ.get("SPARK_GRAFT_BENCH_SKEW", "1") != "0"
 # the skew suites (r12) AND the headline set (r13, VERDICT r12 ask #1:
 # the official r12 headline read 162.5 s in a contended window while the
 # same-HEAD re-run read 37.99 s — the settle protocol existed but only
-# guarded the skew suites). Validated >= 1 (ADVICE r12): a value <= 0
-# would make _settled_runs skip its loop and crash on best[0].
-SKEW_SETTLE_PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_SKEW_PASSES", "3"))
-if SKEW_SETTLE_PASSES < 1:
-    raise SystemExit(
-        f"SPARK_GRAFT_BENCH_SKEW_PASSES must be >= 1, got {SKEW_SETTLE_PASSES}"
-    )
+# guarded the skew suites).
+SKEW_SETTLE_PASSES = 3
 
 
 def _median(xs: list[float]) -> float:

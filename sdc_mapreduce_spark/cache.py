@@ -48,22 +48,19 @@ def pin(df: DataFrame, level=None) -> DataFrame:
     return df
 
 
-def pinned_frames(spark: SparkSession | None = None) -> list[DataFrame]:
-    """The frames currently pinned — for ``spark``, or across all live
-    sessions when ``spark`` is None. A snapshot copy; mutating it does not
-    affect the ledger."""
-    if spark is not None:
-        return list(_PINNED.get(spark, []))
-    return [df for frames in _PINNED.values() for df in frames]
+def pinned_frames(spark: SparkSession) -> list[DataFrame]:
+    """The frames currently pinned for ``spark``. A snapshot copy; mutating
+    it does not affect the ledger."""
+    return list(_PINNED.get(spark, []))
 
 
 def drain_pins(
-    spark: SparkSession | None = None,
+    spark: SparkSession,
     gc_nudge: bool = False,
     clear_cache: bool = False,
 ) -> None:
-    """Release every pin()'d frame of ``spark`` (all sessions when None;
-    blocking=False — eviction proceeds in the background).
+    """Release every pin()'d frame of ``spark`` (blocking=False — eviction
+    proceeds in the background).
 
     ``clear_cache=True`` additionally runs ``spark.catalog.clearCache()``
     — belt-and-braces for long single-purpose sweeps; NOT the default
@@ -76,19 +73,15 @@ def drain_pins(
     SoftReferences (codegen/class caches included), and the measured
     effect was a uniform ~20-30% inflation of every subsequent query in
     the r10 bench until the caches rewarmed."""
-    sessions = [spark] if spark is not None else list(_PINNED.keys())
-    for sess in sessions:
-        for df in _PINNED.get(sess, []):
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session may already be stopped; nothing to release
-        _PINNED.pop(sess, None)
-    if spark is not None:
+    for df in _PINNED.pop(spark, []):
         try:
-            if clear_cache:
-                spark.catalog.clearCache()
-            if gc_nudge:
-                spark.sparkContext._jvm.System.gc()
+            df.unpersist()
         except Exception:
-            pass
+            pass  # session may already be stopped; nothing to release
+    try:
+        if clear_cache:
+            spark.catalog.clearCache()
+        if gc_nudge:
+            spark.sparkContext._jvm.System.gc()
+    except Exception:
+        pass

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import shutil
+import sys
 import tempfile
 import time
 import urllib.error
@@ -127,7 +128,7 @@ class MapReduceClient:
         return JobHandle(self.base_url, body["job_id"])
 
 
-def main(argv: list[str] | None = None) -> int:
+def main(argv: list[str]) -> int:
     """CLI twin of the reference's submit_map_reduce.py executable."""
     import argparse
 
@@ -161,4 +162,4 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

@@ -13,8 +13,7 @@ contract as a first-class pluggable Spark source:
   exactly like createShardAllocations (tail of file i + head of file i+1
   share a shard; only the last shard is smaller) — each shard becomes one
   Spark input partition, so scan parallelism is data-size-driven exactly
-  like the reference's master (SURVEY.md O6). ``pack=false`` falls back to
-  one partition per (file, range).
+  like the reference's master (SURVEY.md O6).
 - ``read()`` applies the line-boundary protocol (the robust form of the
   reference's isalnum ±lookahead adjustment, SURVEY.md O7/Q5): a partition
   starting mid-file discards its partial first line and reads one line past
@@ -62,19 +61,17 @@ DEFAULT_SHARD_SIZE = 50_000  # the reference client's SHARD_SIZE default
 # batch reader is deliberately NOT capped — batch tasks launch through the
 # scheduler at executor-slot concurrency and reuse workers, and the scan
 # certs exercise deliberately tiny shards there. The stream reader
-# coalesces its planned shards to at most this many partitions per batch
-# (override with the max_batch_shards option); the shard PLAN is unchanged
-# — coalescing concatenates whole record-aligned shards, so row ownership
-# is untouched.
-DEFAULT_MAX_BATCH_SHARDS = 128
+# coalesces its planned shards to at most this many partitions per batch;
+# the shard PLAN is unchanged — coalescing concatenates whole
+# record-aligned shards, so row ownership is untouched.
+MAX_BATCH_SHARDS = 128
 
 # Advisory bound for the BATCH reader (VERDICT r10 ask #7): batch scans
 # are deliberately uncapped (tasks launch at executor-slot concurrency and
 # reuse workers, unlike a micro-batch's all-at-once worker fan-out), but a
 # plan wider than this warns — cheap insurance that a 10x-style corpus
 # surprise announces itself instead of silently planning 100k partitions.
-# Override per read with the warn_partitions option.
-DEFAULT_WARN_BATCH_PARTITIONS = 10_000
+WARN_BATCH_PARTITIONS = 10_000
 
 
 class KVShard(InputPartition):
@@ -93,15 +90,14 @@ class KVShard(InputPartition):
         return sum(end - start for _, start, end in self.segments)
 
 
-def _parse_options(options) -> tuple[str, int, bool]:
+def _parse_options(options) -> tuple[str, int]:
     path = options.get("path")
     if not path:
         raise ValueError("kvtext: 'path' option is required")
     shard_size = int(options.get("shard_size", DEFAULT_SHARD_SIZE))
     if shard_size <= 0:
         raise ValueError("kvtext: shard_size must be positive")
-    pack = str(options.get("pack", "true")).lower() != "false"
-    return path, shard_size, pack
+    return path, shard_size
 
 
 def _list_files(path: str) -> list[str]:
@@ -112,13 +108,11 @@ def _list_files(path: str) -> list[str]:
     return [path]
 
 
-def plan_shards(paths: list[str], shard_size: int, pack: bool) -> list[KVShard]:
+def plan_shards(paths: list[str], shard_size: int) -> list[KVShard]:
     # The reference's createShardAllocations (src/master/sharding.h:28-83):
     # greedy capacity packing — each shard holds exactly shard_size bytes
     # of ranges, spanning file boundaries (tail of file i + head of file
-    # i+1 in one shard); only the final shard may be smaller. With
-    # pack=false, one partition per fixed-size (file, range) instead —
-    # same output rows, simpler partition map.
+    # i+1 in one shard); only the final shard may be smaller.
     shards: list[KVShard] = []
     current: list[tuple[str, int, int]] = []
     current_cap = 0
@@ -126,11 +120,6 @@ def plan_shards(paths: list[str], shard_size: int, pack: bool) -> list[KVShard]:
         size = os.path.getsize(p)
         start = 0
         while start < size:
-            if not pack:
-                end = min(start + shard_size, size)
-                shards.append(KVShard([(p, start, end)]))
-                start = end
-                continue
             needed = shard_size - current_cap
             end = min(start + needed, size)
             current.append((p, start, end))
@@ -149,10 +138,9 @@ def coalesce_shards(shards: list[KVShard], max_shards: int) -> list[KVShard]:
     CONTIGUOUS runs of shards (adjacent in plan order, so merged segments
     stay sequential within each file — one seek per original shard at
     most). Groups are balanced by CUMULATIVE SEGMENT BYTES, not shard
-    count (ADVICE r10): with ``pack=false`` every file's tail shard is
-    short, so count-balanced groups over many small files were
-    byte-skewed; for equal-sized inputs — every pack=true plan — the byte
-    split degenerates to the old count split.
+    count (ADVICE r10): count-balanced groups over shards of unequal size
+    are byte-skewed; for equal-sized shards (every packed plan but its
+    last shard) the byte split degenerates to the count split.
     Row ownership is untouched — ``read_shard`` applies the
     line-boundary protocol per SEGMENT, and coalescing only concatenates
     whole segments.
@@ -222,24 +210,22 @@ def read_shard(partition: KVShard) -> Iterator[tuple]:
                     continue  # malformed: non-integer value (O15)
                 yield (parts[0], value)
                 # note: the loop condition uses tell() BEFORE the read, so
-                # a line that starts exactly at `end` belongs to the next
-                # partition, and a line starting before `end` is fully
-                # consumed here even if it extends past it
+                # a line that starts exactly at `end` is read HERE (the next
+                # partition skips it as its first line), and a line
+                # starting before `end` is fully consumed here even if it
+                # extends past it
 
 
 class KVTextReader(DataSourceReader):
     def __init__(self, options):
-        path, self.shard_size, self.pack = _parse_options(options)
+        path, self.shard_size = _parse_options(options)
         self.paths = _list_files(path)
         if not self.paths:
             raise ValueError(f"kvtext: no files under {path!r}")
-        self.warn_partitions = int(
-            options.get("warn_partitions", DEFAULT_WARN_BATCH_PARTITIONS)
-        )
 
     def partitions(self):
-        shards = plan_shards(self.paths, self.shard_size, self.pack)
-        if len(shards) > self.warn_partitions:
+        shards = plan_shards(self.paths, self.shard_size)
+        if len(shards) > WARN_BATCH_PARTITIONS:
             # Advisory only (VERDICT r10 ask #7): the batch reader stays
             # deliberately uncapped — batch tasks launch at executor-slot
             # concurrency and reuse workers, and the scan certs exercise
@@ -249,9 +235,8 @@ class KVTextReader(DataSourceReader):
             # letting the next scale surprise arrive silently.
             warnings.warn(
                 f"kvtext: planned {len(shards)} batch partitions "
-                f"(> {self.warn_partitions}); consider a larger "
-                "shard_size for this input size, or raise "
-                "warn_partitions to silence",
+                f"(> {WARN_BATCH_PARTITIONS}); consider a larger "
+                "shard_size for this input size",
                 stacklevel=2,
             )
         return shards or [KVShard([(self.paths[0], 0, 0)])]
@@ -305,18 +290,10 @@ class KVTextStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, options):
-        self._path, self.shard_size, self.pack = _parse_options(options)
+        self._path, self.shard_size = _parse_options(options)
         if not os.path.isdir(self._path):
             raise ValueError(
                 f"kvtext streaming: 'path' must be a directory, got {self._path!r}"
-            )
-        self.max_batch_shards = int(
-            options.get("max_batch_shards", DEFAULT_MAX_BATCH_SHARDS)
-        )
-        if self.max_batch_shards < 1:
-            raise ValueError(
-                "kvtext streaming: max_batch_shards must be >= 1, got "
-                f"{self.max_batch_shards}"
             )
         self.max_batch_files = int(options.get("max_batch_files", 0))
         if self.max_batch_files < 0:
@@ -371,12 +348,12 @@ class KVTextStreamReader(DataSourceStreamReader):
         # re-admitted (duplicate ingestion).
         self._current = sorted(set(self._current or []) | set(end.get("files", [])))
         new = sorted(set(end.get("files", [])) - set(start.get("files", [])))
-        shards = plan_shards(new, self.shard_size, self.pack)
-        # Partition-count guard (see DEFAULT_MAX_BATCH_SHARDS): a
+        shards = plan_shards(new, self.shard_size)
+        # Partition-count guard (see MAX_BATCH_SHARDS): a
         # micro-batch must never plan unbounded Python partitions — the
         # shard planner mirrors the reference's capacity packing
         # (src/master/sharding.h:27-83) and the cap re-packs per batch.
-        shards = coalesce_shards(shards, self.max_batch_shards)
+        shards = coalesce_shards(shards, MAX_BATCH_SHARDS)
         # Spark requires >= 1 partition per batch; an empty shard reads 0 rows
         return shards or [KVShard([])]
 

@@ -1029,7 +1029,6 @@ def fuzzy_name_pairs(
     df: DataFrame,
     name_col: str,
     max_dist: int = 4,
-    block_col=None,
     max_block: int | None = 10_000,
 ) -> DataFrame:
     """Entity-resolution fuzzy self-join: distinct-name blocking +
@@ -1040,8 +1039,8 @@ def fuzzy_name_pairs(
        one map-side-combinable groupBy; every downstream quadratic step
        runs on names, never rows (at scale the distinct-name set is orders
        of magnitude smaller than the row count);
-    2. blocking: equi-join names on a cheap deterministic key (default:
-       first lowercase whitespace token) — the ER analogue of LSH banding.
+    2. blocking: equi-join names on a cheap deterministic key (the first
+       lowercase whitespace token) — the ER analogue of LSH banding.
        Pairs in different blocks are never compared (documented recall
        trade-off, same contract as ``jaccard_pairs(max_df=...)``);
     3. length prefilter ``abs(len(a)-len(b)) <= max_dist`` inside the join
@@ -1061,11 +1060,7 @@ def fuzzy_name_pairs(
     names = df.groupBy(F.col(name_col).alias("__nm")).agg(
         F.count(F.lit(1)).alias("__rows")
     )
-    blk = (
-        block_col
-        if block_col is not None
-        else F.split_part(F.lower(F.col("__nm")), F.lit(" "), F.lit(1))
-    )
+    blk = F.split_part(F.lower(F.col("__nm")), F.lit(" "), F.lit(1))
     # The distinct-name set is read three times (hot-block count + both
     # self-join sides): persist it so the row-level groupBy — the heaviest
     # stage on a 100 TB fact table — runs exactly once.

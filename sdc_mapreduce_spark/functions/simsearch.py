@@ -254,41 +254,6 @@ def cosine_topk_srp(
     return _topk(_cosine_scored(cands, id_col), k)
 
 
-def ivf_assignments(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fit_fraction: float = 1.0,
-) -> tuple[DataFrame, DataFrame]:
-    """IVF index build: KMeans centroids (fit on a sample at scale) + a cell
-    id per vector. Returns (assigned_corpus, centroids_df).
-
-    The centroid set is tiny (n_cells rows) and lives as a DataFrame so
-    probe selection stays a broadcast join — no driver-side vector math over
-    the corpus. At 100 TB: fit on ``fit_fraction`` ≪ 1, persist the model,
-    and write the assigned corpus bucketed by ``__cell`` so probes prune
-    files on read."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    prepared = with_unit_vectors(df=corpus, vec_col=vec_col, out_col="__unit")
-    feats = prepared.select(
-        F.col(id_col), array_to_vector(F.col("__unit")).alias("features"), "__unit"
-    )
-    fit_df = feats if fit_fraction >= 1.0 else feats.sample(fit_fraction, seed=RNG_SEED)
-    model = KMeans(k=n_cells, seed=RNG_SEED, maxIter=20).fit(fit_df)
-    assigned = model.transform(feats).select(
-        id_col, "__unit", F.col("prediction").alias("__cell")
-    )
-    spark = corpus.sparkSession
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        schema="__cell int, __centroid array<double>",
-    )
-    return assigned, centroids
-
-
 def seeded_centroids(
     corpus: DataFrame,
     n_cells: int = 8,
@@ -300,8 +265,7 @@ def seeded_centroids(
     standard alternative to a trained one (FAISS's IVF accepts any coarse
     quantizer); the payoff here is reproducibility — every engine can
     recompute the centroid set from the corpus itself, which is what lets
-    the IVF recall metric be oracle-checked end-to-end (vs the fitted
-    KMeans path, whose centroids no external engine can replay)."""
+    the IVF recall metric be oracle-checked end-to-end."""
     prepared = with_unit_vectors(
         corpus.filter(F.col(id_col) < n_cells), vec_col=vec_col, out_col="__unit"
     )
@@ -340,12 +304,11 @@ def assign_cells(
 def cosine_topk_ivf(
     corpus: DataFrame,
     query_ids: list[int],
+    centroids: DataFrame,
     k: int = 5,
-    n_cells: int = 16,
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: each query searches only its ``n_probe``
     nearest cells. Probe selection is a (queries x n_cells) broadcast
@@ -353,16 +316,10 @@ def cosine_topk_ivf(
     fetch is an equi-join on the cell id, so work scales with
     |corpus| * n_probe / n_cells per query instead of |corpus|.
 
-    ``centroids`` injects a pre-built coarse quantizer (``__cell``,
-    ``__centroid`` unit vectors — e.g. ``seeded_centroids``); default is a
-    fitted KMeans (``ivf_assignments``). Candidates are ranked by exact
-    cosine descending, ties to the lowest neighbor id."""
-    if centroids is not None:
-        assigned = assign_cells(corpus, centroids, id_col=id_col, vec_col=vec_col)
-    else:
-        assigned, centroids = ivf_assignments(
-            corpus, n_cells=n_cells, id_col=id_col, vec_col=vec_col
-        )
+    ``centroids`` is the coarse quantizer (``__cell``, ``__centroid`` unit
+    vectors — ``seeded_centroids``). Candidates are ranked by exact cosine
+    descending, ties to the lowest neighbor id."""
+    assigned = assign_cells(corpus, centroids, id_col=id_col, vec_col=vec_col)
     queries = _query_slice(assigned, query_ids, id_col)
     probes = _probe_cells(queries, centroids, n_probe)
     cands = assigned.join(F.broadcast(probes), "__cell").filter(
@@ -529,14 +486,13 @@ def _adc_score(m_sub: int) -> "F.Column":
 def cosine_topk_ivfpq(
     corpus: DataFrame,
     query_ids: list[int],
+    centroids: DataFrame,
     k: int = 5,
-    n_cells: int = 8,
     n_probe: int = 4,
     m_sub: int = 4,
     n_codes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVFPQ — the composition that serves billion-vector ANN in practice
     (FAISS IndexIVFPQ): the coarse quantizer prunes candidates to the
@@ -548,12 +504,7 @@ def cosine_topk_ivfpq(
     ``pq_codebooks``), so the whole pipeline replays in an external
     engine. Ranked by ADC score descending, ties to the lowest neighbor
     id."""
-    cents = (
-        centroids
-        if centroids is not None
-        else seeded_centroids(corpus, n_cells=n_cells, id_col=id_col, vec_col=vec_col)
-    )
-    assigned = assign_cells(corpus, cents, id_col=id_col, vec_col=vec_col)
+    assigned = assign_cells(corpus, centroids, id_col=id_col, vec_col=vec_col)
     cbs = pq_codebooks(
         corpus, m_sub=m_sub, n_codes=n_codes, id_col=id_col, vec_col=vec_col
     )
@@ -565,7 +516,7 @@ def cosine_topk_ivfpq(
         encoded.select(F.col(id_col), "__codes"), id_col
     )
     queries = _query_slice(assigned, query_ids, id_col)
-    probes = _probe_cells(queries, cents, n_probe)
+    probes = _probe_cells(queries, centroids, n_probe)
     pairs = index.join(F.broadcast(probes), "__cell")
     return _adc_topk(pairs, cbs, m_sub, k, id_col)
 
@@ -1420,8 +1371,7 @@ def kmeans_lloyd_step(
     n_cells candidates (corpus never shuffles); the update is a
     (cells × dim) partial-agg shuffle of exact longs — the textbook
     distributed k-means iteration, here with every double derived from
-    exact integers so the whole step hash-verifies cross-engine (the
-    fitted-KMeans path cannot)."""
+    exact integers so the whole step hash-verifies cross-engine."""
     cents = seeded_centroids(corpus, n_cells, id_col, vec_col)
     assigned = assign_cells(corpus, cents, id_col, vec_col)
     newc = _nano_centroids(assigned, "__cell", F.col("__unit"), "__cell", "__new")

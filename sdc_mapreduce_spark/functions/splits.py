@@ -22,6 +22,9 @@ from pyspark.sql import functions as F
 
 _SPACE = 16**4  # 4 hex chars
 
+# The train/val/test fractions hash_split assigns.
+SPLIT_FRACTIONS = {"train": 0.9, "val": 0.05, "test": 0.05}
+
 
 def _boundaries(fractions: dict[str, float]) -> tuple[list[tuple[str, str]], str]:
     """((name, upper_bound_hex) for all but the last split, last_name).
@@ -71,13 +74,11 @@ def split_sql_case(key_sql: str, fractions: dict[str, float], salt: str = "split
 def hash_split(
     df: DataFrame,
     key: str,
-    fractions: dict[str, float] | None = None,
     salt: str = "split-v1",
     split_col: str = "split",
 ) -> DataFrame:
-    """Attach a deterministic split assignment column."""
-    fractions = fractions or {"train": 0.9, "val": 0.05, "test": 0.05}
-    return df.withColumn(split_col, split_column(key, fractions, salt))
+    """Attach a deterministic SPLIT_FRACTIONS assignment column."""
+    return df.withColumn(split_col, split_column(key, SPLIT_FRACTIONS, salt))
 
 
 def stratified_sample(

@@ -68,11 +68,7 @@ def tokenize(df: DataFrame, text_col: str = "value", out_col: str = "token") -> 
     )
 
 
-def word_count(
-    df: DataFrame,
-    text_col: str = "value",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def word_count(df: DataFrame, text_col: str = "value") -> DataFrame:
     """The reference's one shipped application (reference src/app/mapper.py +
     reducer.py) as a declarative plan: tokenize → groupBy(token).count().
 
@@ -82,14 +78,11 @@ def word_count(
     partials (reference src/worker/worker.cpp:290-299). Scales with the
     number of distinct keys per partition, not input bytes.
     """
-    counts = (
+    return (
         tokenize(df, text_col=text_col, out_col="word")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    if num_partitions:
-        counts = counts.repartition(num_partitions, "word")
-    return counts
 
 
 def map_reduce(
@@ -231,22 +224,25 @@ def write_kv_text(
     key_col: str = "key",
     value_col: str = "value",
     num_partitions: int = 3,
-    sort_within_partitions: bool = True,
 ) -> None:
     """Partition-sorted ``key<space>value`` text sink — the reference's output
     contract (SURVEY.md O14/Q4): one file per reduce partition, keys
     hash-disjoint across partitions, sorted within each (reference
     src/app/reducer.py:26-27, src/worker/worker.cpp:298-303).
     """
-    out = df.select(
-        F.concat_ws(" ", F.col(key_col).cast("string"), F.col(value_col).cast("string")).alias(
-            "value"
-        ),
-        F.col(key_col).alias("__k"),
-    ).repartition(num_partitions, "__k")
-    if sort_within_partitions:
-        out = out.sortWithinPartitions("__k")
-    out.select("value").write.mode("overwrite").text(path)
+    (
+        df.select(
+            F.concat_ws(
+                " ", F.col(key_col).cast("string"), F.col(value_col).cast("string")
+            ).alias("value"),
+            F.col(key_col).alias("__k"),
+        )
+        .repartition(num_partitions, "__k")
+        .sortWithinPartitions("__k")
+        .select("value")
+        .write.mode("overwrite")
+        .text(path)
+    )
 
 
 def python_word_mapper(row: Any) -> Iterable[tuple[str, int]]:

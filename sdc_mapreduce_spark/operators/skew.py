@@ -150,8 +150,7 @@ def sessionize_chunked(
 # Keyed by the PARENT frame's semanticHash (logical-plan identity) plus
 # the key-column name, so two textually different but semantically equal
 # reads share an entry. The cache assumes the data behind a plan is stable
-# within a process — after rewriting the table in place, pass
-# use_cached_stats=False.
+# within a process.
 _KEY_STATS_CACHE: dict[tuple[int, str, float, int], float] = {}
 
 
@@ -164,7 +163,6 @@ def sessionize_auto(
     max_rows_per_task: int = 500_000,
     sample_fraction: float = 0.05,
     seed: int = 42,
-    use_cached_stats: bool = True,
 ) -> DataFrame:
     """Statistics-driven sessionize plan selection (VERDICT r9 ask #8):
     the chunked/plain regime split documented on sessionize_chunked, as
@@ -190,8 +188,7 @@ def sessionize_auto(
     The probe result is cached per (plan, key, fraction, seed) — see
     ``_KEY_STATS_CACHE`` above — so repeated calls over the same table pay
     it once (VERDICT r10 ask #3: the ~0.25 s probe constant made auto
-    second-best on both skew fixtures). ``use_cached_stats=False`` forces
-    a re-probe (and refreshes the cache entry)."""
+    second-best on both skew fixtures)."""
     if not (0.0 < sample_fraction <= 1.0):
         # validated up front (ADVICE r10): 0 would div-by-zero at est_max
         # and a negative value fails opaquely inside Spark's sample()
@@ -214,11 +211,7 @@ def sessionize_auto(
         )
     except Exception:
         pass  # semanticHash unavailable (exotic plan): probe uncached
-    est_max = (
-        _KEY_STATS_CACHE.get(cache_key)
-        if (use_cached_stats and cache_key is not None)
-        else None
-    )
+    est_max = _KEY_STATS_CACHE.get(cache_key) if cache_key is not None else None
     if est_max is None:
         probe = ev.select(user_col)
         if sample_fraction < 1.0:

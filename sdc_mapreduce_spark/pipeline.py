@@ -3,14 +3,14 @@
 The composition a 100 TB corpus actually runs, as one operator:
 
     ingest → quality score → language ID → exact dedup (fingerprint,
-    keep lowest id) → [optionally near-dup clustering] → curated table
+    keep lowest id) → curated table
 
-Each stage is one of this engine's tested operators (functions.text,
-functions.dedup); the composition stays fully declarative, so Catalyst
-plans the whole pipeline as one DAG: the three per-document feature stages
-are narrow projections fused into ONE pass over the scan (chained via
-``carry=``, never re-joined on doc_id), and the only shuffle before the
-near-dup stage is the fingerprint window rank, keyed on a 32-byte hash.
+Each stage is one of this engine's tested operators (functions.text); the
+composition stays fully declarative, so Catalyst plans the whole pipeline
+as one DAG: the per-document feature stages are narrow projections fused
+into ONE pass over the scan (chained via ``carry=``, never re-joined on
+doc_id), and the only shuffle is the fingerprint window rank, keyed on a
+32-byte hash.
 
 The reference framework's analog is a chain of separate MapReduce jobs with
 blob round-trips between them (SURVEY.md §3.2 — one job per stage); here
@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from sdc_mapreduce_spark.cache import pin
-from sdc_mapreduce_spark.functions.dedup import near_dup_clusters
 from sdc_mapreduce_spark.functions.text import (
     contamination_check,
     language_id,
@@ -35,20 +34,13 @@ from sdc_mapreduce_spark.functions.text import (
 )
 
 
-def curate(
-    docs: DataFrame,
-    min_quality: float = 0.58,
-    langs: tuple[str, ...] | None = None,
-    near_dedup: bool = False,
-    jaccard_threshold: float = 0.8,
-) -> DataFrame:
-    """Curated corpus: per-doc quality + language features, thresholded,
-    exact-deduped (lowest doc id survives per fingerprint), optionally
-    near-deduped (cluster representative survives per LSH component).
+def curate(docs: DataFrame, min_quality: float = 0.58) -> DataFrame:
+    """Curated corpus: per-doc quality + language features, thresholded on
+    quality and exact-deduped (lowest doc id survives per fingerprint).
 
     Returns (doc_id, lang_pred, quality_score, n_tokens) of kept docs.
     """
-    # All three per-doc feature stages are narrow projections — chain them
+    # The per-doc feature stages are narrow projections — chain them
     # on ONE pass over the corpus (carry= threads the text column through)
     # instead of computing each separately and re-joining on doc_id: zero
     # shuffles until the dedup.
@@ -63,8 +55,6 @@ def curate(
     featured = pin(feats.drop("text")).filter(
         F.col("quality_score") >= min_quality
     )
-    if langs:
-        featured = featured.filter(F.col("lang_pred").isin(*langs))
     # prune to the output columns BEFORE the shuffle: the per-language score
     # and ratio columns would otherwise ride the fingerprint exchange
     featured = featured.select(
@@ -74,25 +64,10 @@ def curate(
     # exact dedup among survivors: keep the lowest doc id per fingerprint —
     # a window rank on the fingerprint shuffle, no join back
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    curated = (
+    return (
         featured.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-    if near_dedup:
-        # near-dup clustering over the surviving docs only; keep each
-        # cluster's representative
-        survivors = docs.join(curated.select("doc_id"), "doc_id")
-        clusters = near_dup_clusters(survivors, threshold=jaccard_threshold)
-        reps = clusters.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id")
-        curated = curated.join(reps, "doc_id")
-
-    return curated.select(
-        "doc_id",
-        "lang_pred",
-        "quality_score",
-        "n_tokens",
+        .select("doc_id", "lang_pred", "quality_score", "n_tokens")
     )
 
 

@@ -244,7 +244,7 @@ def kvtext_streaming_restart_certified(spark: SparkSession, sf_dir: str) -> Data
             # DEFAULT shard_size on purpose (VERDICT r9 ask #1): the
             # partition-count guard now lives in the SOURCE —
             # KVTextStreamReader coalesces its shard plan to at most
-            # max_batch_shards partitions per micro-batch — so this cert
+            # MAX_BATCH_SHARDS partitions per micro-batch — so this cert
             # exercises the default path every caller gets, at any corpus
             # size, instead of working around the old cliff query-side.
             # max_batch_files=1 + available_now=true: each blob becomes

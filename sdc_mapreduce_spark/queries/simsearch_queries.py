@@ -328,17 +328,11 @@ def simsearch_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is |corpus| * n_probe / n_cells instead of |corpus|. Uses the
     deterministic ``seeded_centroids`` coarse quantizer so the full
     pipeline (cell assignment → probe selection → in-cell exact ranking)
-    replays in the DuckDB oracle; the fitted-KMeans quantizer stays
-    exercised via tests/test_simsearch.py recall floors."""
+    replays in the DuckDB oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = S.seeded_centroids(emb, n_cells=IVF_CELLS)
     return S.cosine_topk_ivf(
-        emb,
-        QUERY_IDS,
-        k=TOP_K,
-        n_cells=IVF_CELLS,
-        n_probe=IVF_PROBE,
-        centroids=cents,
+        emb, QUERY_IDS, cents, k=TOP_K, n_probe=IVF_PROBE
     ).orderBy("query_id", "rank")
 
 
@@ -389,14 +383,10 @@ def simsearch_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``seeded_centroids`` (unit vectors of the first n_cells corpus ids), so
     DuckDB replays the whole pipeline — cell assignment (argmax cosine,
     ties to lowest cell), probe selection (top n_probe cells per query),
-    in-cell exact cosine ranking, and the recall arithmetic. The fitted
-    KMeans variant stays exercised via simsearch_ann_ivf + its unit-test
-    recall floor."""
+    in-cell exact cosine ranking, and the recall arithmetic."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = S.seeded_centroids(emb, n_cells=IVF_CELLS)
-    ann = S.cosine_topk_ivf(
-        emb, QUERY_IDS, k=TOP_K, n_cells=IVF_CELLS, n_probe=IVF_PROBE, centroids=cents
-    )
+    ann = S.cosine_topk_ivf(emb, QUERY_IDS, cents, k=TOP_K, n_probe=IVF_PROBE)
     exact = S.cosine_topk_bruteforce(emb, QUERY_IDS, k=TOP_K)
     return _recall_vs_exact(ann, exact)
 
@@ -608,12 +598,11 @@ def simsearch_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = S.cosine_topk_ivfpq(
         emb,
         QUERY_IDS,
+        cents,
         k=TOP_K,
-        n_cells=IVF_CELLS,
         n_probe=IVF_PROBE,
         m_sub=PQ_SUB,
         n_codes=PQ_CODES,
-        centroids=cents,
     )
     exact = S.cosine_topk_bruteforce(emb, QUERY_IDS, k=TOP_K)
     return _recall_vs_exact(ann, exact)

@@ -743,11 +743,9 @@ def split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_assignment_sql() -> str:
-    from sdc_mapreduce_spark.functions.splits import split_sql_case
+    from sdc_mapreduce_spark.functions.splits import SPLIT_FRACTIONS, split_sql_case
 
-    case = split_sql_case(
-        "doc_id", {"train": 0.9, "val": 0.05, "test": 0.05}
-    )
+    case = split_sql_case("doc_id", SPLIT_FRACTIONS)
     return f"""
 SELECT {case} AS split, lang, COUNT(*) AS n_docs
 FROM documents

@@ -610,7 +610,7 @@ def pipeline_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sdc_mapreduce_spark.pipeline import curate
 
     docs = load_table(spark, sf_dir, "documents")
-    kept = curate(docs, min_quality=0.58, near_dedup=False)
+    kept = curate(docs, min_quality=0.58)
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     norms = emb.select(F.col("vec_id").alias("doc_id"), F.sqrt(dot(v, v)).alias("__norm"))
@@ -1014,14 +1014,13 @@ ORDER BY id_a, id_b
 
 def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end curation pipeline (pipeline.curate): quality
-    threshold + exact dedup, returning kept docs with features. The
-    near-dup stage is exercised separately (dedup_clusters) to keep this
-    oracle's SQL tractable."""
+    threshold + exact dedup, returning kept docs with features. Near-dup
+    clustering is its own query (dedup_clusters)."""
     from sdc_mapreduce_spark.pipeline import curate
 
-    return curate(
-        load_table(spark, sf_dir, "documents"), min_quality=0.58, near_dedup=False
-    ).orderBy("doc_id")
+    return curate(load_table(spark, sf_dir, "documents"), min_quality=0.58).orderBy(
+        "doc_id"
+    )
 
 
 # grams: each document's token 2-grams (functions.text.repetition_features).

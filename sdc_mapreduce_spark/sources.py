@@ -10,7 +10,7 @@ across jobs:
 
 - ``write_bucketed_table`` — sorted-bucketed parquet tables (shuffle-free
   joins on the bucket key for repeat consumers);
-- ``compact_parquet`` — small-file compaction, optionally range-clustered.
+- ``compact_parquet`` — small-file compaction, range-clustered.
 """
 
 from __future__ import annotations
@@ -22,39 +22,38 @@ def write_bucketed_table(
     df: DataFrame,
     table_name: str,
     bucket_cols: list[str],
+    sort_cols: list[str],
     num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
 ) -> None:
     """Sorted-bucketed parquet table (saved through the catalog — bucketing
     metadata lives in the metastore). Joins/aggregations on the bucket key
     across two tables bucketed the same way run with ZERO shuffle — the
     persisted-data analog of the reference's hash-partitioned intermediate
     files (SURVEY.md O10), kept across jobs instead of per-job."""
-    w = (
+    (
         df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(num_buckets, *bucket_cols)
+        .sortBy(*sort_cols)
+        .saveAsTable(table_name)
     )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)
 
 
 def compact_parquet(
     spark,
     src_path: str,
     dst_path: str,
+    order_cols: list[str],
     target_file_bytes: int = 128 * 1024 * 1024,
-    order_cols: list[str] | None = None,
 ) -> int:
     """Small-file compaction — the table-maintenance pass every long-lived
     100 TB dataset needs (streaming sinks and per-batch ingests accrete
     thousands of tiny files; each costs a task + an open at read time).
-    Bin-packs the directory into ceil(total_bytes / target) output files;
-    with ``order_cols`` the rewrite also range-clusters (an OPTIMIZE +
-    sort, so min/max pruning improves too). Sizing reads only filesystem
-    metadata (no data pass); the rewrite is one exchange. Returns the
-    output file count chosen.
+    Bin-packs the directory into ceil(total_bytes / target) output files,
+    range-clustered on ``order_cols`` (an OPTIMIZE + sort, so min/max
+    pruning improves too). Sizing reads only filesystem metadata (no data
+    pass); the rewrite is one exchange. Returns the output file count
+    chosen.
     """
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -62,12 +61,11 @@ def compact_parquet(
     fs = p.getFileSystem(conf)
     total = fs.getContentSummary(p).getLength()
     n_files = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(src_path)
-    if order_cols:
-        out = df.repartitionByRange(n_files, *order_cols).sortWithinPartitions(
-            *order_cols
-        )
-    else:
-        out = df.repartition(n_files)
-    out.write.mode("overwrite").parquet(dst_path)
+    (
+        spark.read.parquet(src_path)
+        .repartitionByRange(n_files, *order_cols)
+        .sortWithinPartitions(*order_cols)
+        .write.mode("overwrite")
+        .parquet(dst_path)
+    )
     return n_files

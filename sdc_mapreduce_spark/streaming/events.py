@@ -209,14 +209,13 @@ def stateful_user_totals(
 
 def streaming_dedup(
     events: DataFrame,
-    keys: list[str] | None = None,
+    keys: list[str],
     watermark: str | None = "10 minutes",
 ) -> DataFrame:
-    """Streaming exact dedup on ``keys`` (default event id). With a
-    watermark, ``dropDuplicatesWithinWatermark`` keeps state only for the
-    watermark window, the bounded-state form; ``watermark=None`` is
-    ``dropDuplicates`` over the whole stream (exact, unbounded state)."""
-    keys = keys or ["event_id"]
+    """Streaming exact dedup on ``keys``. With a watermark,
+    ``dropDuplicatesWithinWatermark`` keeps state only for the watermark
+    window, the bounded-state form; ``watermark=None`` is ``dropDuplicates``
+    over the whole stream (exact, unbounded state)."""
     if watermark is None:
         return events.dropDuplicates(keys)
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)

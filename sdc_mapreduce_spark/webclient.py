@@ -142,6 +142,13 @@ class _Handler(BaseHTTPRequestHandler):
             return self._reply(
                 400, {"error": "reducer_count and shard_size must be integers"}
             )
+        # a negative maxPartitionBytes plans an empty scan (the job would
+        # complete over no rows) and 0 fails at run time; the sink needs at
+        # least one reduce partition
+        if reducer_count < 1 or shard_size < 1:
+            return self._reply(
+                400, {"error": "reducer_count and shard_size must be positive"}
+            )
         output_path = body.get("output_path")
 
         sink = _kv_sink(output_path, reducer_count) if output_path else None
@@ -204,6 +211,8 @@ class _Handler(BaseHTTPRequestHandler):
             shard_size = int(form["shard_size"])
         except ValueError:
             return self._reply(400, {"error": "shard_size must be an integer"})
+        if shard_size < 1:
+            return self._reply(400, {"error": "shard_size must be positive"})
         self.server.queue.submit(
             _wordcount_plan([form["file"]]),
             name="legacy-mapreduce",

@@ -72,8 +72,3 @@ def test_registry_callables_drain_previous_pins(spark, tmp_path):
     fn(spark, "/root/testdata/sf0.001")
     assert leaked not in pinned_frames(spark)
     drain_pins(spark, clear_cache=True)
-
-
-def test_drain_without_session_is_safe():
-    drain_pins(None)
-    drain_pins(None, gc_nudge=True)

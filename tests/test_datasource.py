@@ -109,10 +109,23 @@ def test_kvtext_packed_shard_spans_two_files(tmp_path):
     assert spanning.segments[1][1:] == (0, 8)
 
 
-def test_kvtext_packing_preserves_rows_and_matches_unpacked(spark, tmp_path):
-    """Packed and pack=false shard plans must yield the identical multiset of
-    rows for every shard size — the line-boundary protocol holds across the
-    intra-shard file segments too."""
+def test_read_shard_line_at_boundary_belongs_to_left_shard(tmp_path):
+    """A line that starts exactly at a shard's end offset is read by that
+    shard; the shard starting there skips it as its first line."""
+    from sdc_mapreduce_spark.datasource import KVShard, read_shard
+
+    f = tmp_path / "abc.txt"
+    f.write_text("a 1\nb 2\nc 3\n")  # "b 2" starts at byte 4
+    left = list(read_shard(KVShard([(str(f), 0, 4)])))
+    right = list(read_shard(KVShard([(str(f), 4, 12)])))
+    assert left == [("a", 1), ("b", 2)]
+    assert right == [("c", 3)]
+
+
+def test_kvtext_packing_preserves_rows(spark, tmp_path):
+    """Packed shard plans must yield every row exactly once for every shard
+    size — the line-boundary protocol holds across the intra-shard file
+    segments too."""
     d = tmp_path / "packrows"
     d.mkdir()
     rng = random.Random(7)
@@ -126,17 +139,15 @@ def test_kvtext_packing_preserves_rows_and_matches_unpacked(spark, tmp_path):
         (d / f"part{f}.txt").write_text("\n".join(lines) + "\n")
     register_kvtext(spark)
     for shard_size in (23, 128, 997, 10**6):
-        for pack in ("true", "false"):
-            rows = (
-                spark.read.format("kvtext")
-                .option("path", str(d))
-                .option("shard_size", shard_size)
-                .option("pack", pack)
-                .load()
-                .collect()
-            )
-            assert len(rows) == len(expected), f"shard_size={shard_size} pack={pack}"
-            assert {r["key"]: r["value"] for r in rows} == expected
+        rows = (
+            spark.read.format("kvtext")
+            .option("path", str(d))
+            .option("shard_size", shard_size)
+            .load()
+            .collect()
+        )
+        assert len(rows) == len(expected), f"shard_size={shard_size}"
+        assert {r["key"]: r["value"] for r in rows} == expected
 
 
 def test_kvtext_typed_value_column(spark, kv_file):
@@ -213,12 +224,12 @@ def test_coalesce_shards_caps_and_preserves_segments():
 
 
 def test_coalesce_shards_balances_bytes_not_counts():
-    """ADVICE r10: with pack=false each file's tail shard is short, so a
-    COUNT-balanced grouping is byte-skewed. The coalesce must minimize the
-    largest group's bytes over contiguous splits (the straggler task)."""
+    """ADVICE r10: over shards of unequal size a COUNT-balanced grouping is
+    byte-skewed. The coalesce must minimize the largest group's bytes over
+    contiguous splits (the straggler task)."""
     from sdc_mapreduce_spark.datasource import KVShard, coalesce_shards
 
-    # 6 files x (one 50 B body shard + one 1 B tail shard), pack=false shape
+    # 6 files x (one 50 B body shard + one 1 B tail shard)
     shards = []
     for i in range(6):
         shards.append(KVShard([(f"f{i}", 0, 50)]))
@@ -249,41 +260,39 @@ def test_coalesce_shards_balances_bytes_not_counts():
 
 def test_kvtext_batch_reader_warns_on_wide_plans(tmp_path):
     """VERDICT r10 ask #7: the batch reader stays uncapped, but a plan
-    wider than warn_partitions must emit an advisory warning (and stay
-    silent below it)."""
+    wider than WARN_BATCH_PARTITIONS must emit an advisory warning (and
+    stay silent below it)."""
     import warnings
 
-    from sdc_mapreduce_spark.datasource import KVTextReader
+    from sdc_mapreduce_spark.datasource import WARN_BATCH_PARTITIONS, KVTextReader
 
     f = tmp_path / "data.txt"
-    f.write_bytes(b"k 1\n" * 200)  # 800 bytes
-    # shard_size=8 -> 100 shards > warn bound 10
+    n_bytes = 4 * (WARN_BATCH_PARTITIONS // 4 + 1)
+    f.write_bytes(b"k 1\n" * (n_bytes // 4))
+    # shard_size=1 -> one shard per byte, just over the warn bound
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        reader = KVTextReader(
-            {"path": str(f), "shard_size": "8", "warn_partitions": "10"}
-        )
-        parts = reader.partitions()
-        assert len(parts) == 100
-    assert any("kvtext: planned 100 batch partitions" in str(x.message) for x in w)
-    # below the bound: silent
+        parts = KVTextReader({"path": str(f), "shard_size": "1"}).partitions()
+        assert len(parts) == n_bytes > WARN_BATCH_PARTITIONS
+    assert any(
+        f"kvtext: planned {n_bytes} batch partitions" in str(x.message) for x in w
+    )
+    # below the bound (shard_size=2 -> half as many shards): silent
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        reader = KVTextReader(
-            {"path": str(f), "shard_size": "8", "warn_partitions": "1000"}
-        )
-        reader.partitions()
+        KVTextReader({"path": str(f), "shard_size": "2"}).partitions()
     assert not w
 
 
 def test_kvtext_streaming_partition_guard(spark, tmp_path):
     """Regression for the r9 10x-corpus crash ("Python worker failed to
     connect back"): a micro-batch over a corpus that plans thousands of
-    default-size shards must coalesce to <= max_batch_shards partitions AT
+    default-size shards must coalesce to <= MAX_BATCH_SHARDS partitions AT
     THE SOURCE — and still read every row exactly once."""
     from sdc_mapreduce_spark.datasource import (
-        DEFAULT_MAX_BATCH_SHARDS,
+        MAX_BATCH_SHARDS,
         KVTextStreamReader,
+        plan_shards,
     )
 
     d = tmp_path / "guard"
@@ -300,13 +309,9 @@ def test_kvtext_streaming_partition_guard(spark, tmp_path):
     # tiny shards -> way more planned shards than the cap
     reader = KVTextStreamReader({"path": str(d), "shard_size": "64"})
     end = reader.latestOffset()
+    assert len(plan_shards(sorted(end["files"]), 64)) > MAX_BATCH_SHARDS
     parts = reader.partitions({"files": []}, end)
-    assert 1 <= len(parts) <= DEFAULT_MAX_BATCH_SHARDS
-    # an explicit tighter cap is honored too
-    reader8 = KVTextStreamReader(
-        {"path": str(d), "shard_size": "64", "max_batch_shards": "8"}
-    )
-    assert len(reader8.partitions({"files": []}, end)) == 8
+    assert 1 <= len(parts) <= MAX_BATCH_SHARDS
 
     # end-to-end: the coalesced batch still yields every line exactly once
     register_kvtext(spark)
@@ -315,7 +320,6 @@ def test_kvtext_streaming_partition_guard(spark, tmp_path):
         spark.readStream.format("kvtext")
         .option("path", str(d))
         .option("shard_size", 64)
-        .option("max_batch_shards", 8)
         .load()
         .writeStream.format("parquet")
         .option("path", out)

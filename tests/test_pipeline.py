@@ -1,5 +1,5 @@
 """End-to-end curation pipeline: stage composition, threshold behavior,
-near-dedup representative selection."""
+exact-duplicate collapse."""
 
 from __future__ import annotations
 
@@ -14,29 +14,6 @@ def test_quality_threshold_filters(spark, sf_dir):
     total = docs.count()
     kept = curate(docs, min_quality=0.58).count()
     assert 0 < kept < total
-
-
-def test_language_filter(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    out = curate(docs, min_quality=0.0, langs=("en",))
-    langs = {r["lang_pred"] for r in out.select("lang_pred").distinct().collect()}
-    assert langs == {"en"}
-
-
-def test_near_dedup_keeps_one_representative_per_cluster(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    # no quality/lang filtering — isolate the near-dedup stage
-    kept = curate(docs, min_quality=0.0, near_dedup=True)
-    kept_ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
-
-    from sdc_mapreduce_spark.functions.dedup import near_dup_clusters
-
-    clusters = near_dup_clusters(docs).collect()
-    reps = {r["rep_id"] for r in clusters}
-    non_reps = {r["doc_id"] for r in clusters if r["doc_id"] != r["rep_id"]}
-    assert non_reps, "fixture should contain near-dup clusters"
-    assert kept_ids == reps
-    assert not (kept_ids & non_reps)
 
 
 def test_exact_dup_collapses_to_lowest_id(spark):
@@ -66,7 +43,7 @@ def test_curate_pack_write_roundtrip(spark, sf_dir, tmp_path):
     from sdc_mapreduce_spark.pipeline import curate
 
     docs = load_table(spark, sf_dir, "documents")
-    kept = curate(docs, min_quality=0.58, near_dedup=False)
+    kept = curate(docs, min_quality=0.58)
     enriched = kept.join(docs.select("doc_id", "n_chars"), "doc_id")
 
     budget = 20_000

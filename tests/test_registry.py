@@ -43,7 +43,24 @@ def test_import_quarantine_is_empty():
 
 # Operators whose code changed since their consumers were last certified;
 # every query whose query function reaches one of them must sit in CERT_HEAD.
-_CHANGED_OPERATORS = frozenset({"min_label_propagation"})
+_CHANGED_OPERATORS = frozenset(
+    {
+        "plan_shards",
+        "KVTextReader",
+        "KVTextStreamReader",
+        "compact_parquet",
+        "write_bucketed_table",
+        "cosine_topk_ivf",
+        "cosine_topk_ivfpq",
+        "curate",
+        "fuzzy_name_pairs",
+        "hash_split",
+        "sessionize_auto",
+        "streaming_dedup",
+        "word_count",
+        "write_kv_text",
+    }
+)
 
 
 _REPO = pathlib.Path(__file__).resolve().parents[1]
@@ -91,16 +108,16 @@ def _units(tree: ast.Module):
             yield "", stmt
 
 
-def _call_graph() -> dict[str, set[str]]:
-    """Node ``module:name`` -> the nodes it references, over the production
-    files (``module:`` is the module's loose top-level code). A bare name
-    resolves through its module's own units and ``from ... import``s, as
-    Python scoping does; an attribute ``x.name`` resolves to every package
-    unit called ``name``, so method calls and module-attribute calls
-    over-approximate. Text inside string constants is not a reference."""
-    trees = {_module_name(p): ast.parse(p.read_text()) for p in _production_files()}
-    units = {mod: list(_units(tree)) for mod, tree in trees.items()}
-    nodes = {f"{mod}:{name}" for mod, us in units.items() for name, _ in us}
+def _parsed_production_files() -> dict[str, ast.Module]:
+    return {_module_name(p): ast.parse(p.read_text()) for p in _production_files()}
+
+
+def _name_resolution(trees: dict[str, ast.Module], nodes: set[str]):
+    """(resolve, by_name) over ``nodes``: ``resolve(mod, name)`` is the node
+    a bare name in module ``mod`` denotes, through the module's own units
+    and ``from ... import``s as Python scoping does; ``by_name[name]`` is
+    every package node called ``name``, which an attribute ``x.name``
+    matches (so method and module-attribute calls over-approximate)."""
     imports = {
         mod: {
             alias.asname or alias.name: (sub.module, alias.name)
@@ -122,6 +139,18 @@ def _call_graph() -> dict[str, set[str]]:
             return resolve(*imports[mod][name])
         return set()
 
+    return resolve, by_name
+
+
+def _call_graph() -> dict[str, set[str]]:
+    """Node ``module:name`` -> the nodes it references, over the production
+    files (``module:`` is the module's loose top-level code); names resolve
+    as in _name_resolution. Text inside string constants is not a
+    reference."""
+    trees = _parsed_production_files()
+    units = {mod: list(_units(tree)) for mod, tree in trees.items()}
+    nodes = {f"{mod}:{name}" for mod, us in units.items() for name, _ in us}
+    resolve, by_name = _name_resolution(trees, nodes)
     graph: dict[str, set[str]] = {node: set() for node in nodes}
     for mod, us in units.items():
         for name, stmt in us:
@@ -197,9 +226,9 @@ def test_every_public_package_function_has_a_production_caller():
 
     graph = _call_graph()
     defs: dict[str, ast.stmt] = {
-        f"{_module_name(path)}:{stmt.name}": stmt
-        for path in _production_files()
-        for stmt in ast.parse(path.read_text()).body
+        f"{mod}:{stmt.name}": stmt
+        for mod, tree in _parsed_production_files().items()
+        for stmt in tree.body
         if isinstance(stmt, _DEFS)
     }
     # Module-level code runs on import; outside the package, all code is
@@ -222,6 +251,107 @@ def test_every_public_package_function_has_a_production_caller():
     assert not stale, f"allow-listed but reached or gone: {sorted(stale)}"
     unreached = public - reached - set(_NO_PRODUCTION_CALLER)
     assert not unreached, "no production caller:\n" + "\n".join(sorted(unreached))
+
+
+# Optional parameters that production calls leave at one value, each with
+# the reason the other value stays.
+_ONE_VALUE_OPTIONS = {
+    "sdc_mapreduce_spark.mapreduce:map_reduce_pipe.reference_quirks": (
+        "reproduces reference quirk Q1; test_reference_golden.py checks it"
+    ),
+    "sdc_mapreduce_spark.queries.base:unit_vectors_sql.materialized": (
+        "False reaches it through srp_buckets_sql's own parameter, which "
+        "this guard does not follow"
+    ),
+}
+_FLAGS = (None, True, False)
+
+
+def _flag_params(fn: ast.FunctionDef) -> dict[str, tuple[int | None, object]]:
+    """Parameter name -> (positional index or None, default) for each
+    parameter whose default is None, True or False."""
+    a = fn.args
+    positional = [*a.posonlyargs, *a.args]
+    first = len(positional) - len(a.defaults)
+    found = [
+        (p, i, d)
+        for i, (p, d) in enumerate(zip(positional[first:], a.defaults), start=first)
+    ]
+    found += [(p, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+    return {
+        p.arg: (i, d.value)
+        for p, i, d in found
+        if isinstance(d, ast.Constant) and any(d.value is f for f in _FLAGS)
+    }
+
+
+def _argument_sides(call: ast.Call, index: int | None, name: str, default) -> set[bool]:
+    """Which sides one call takes for one parameter: True when it omits the
+    argument or passes the default literal, False when it passes anything
+    else; *args and **kwargs take both."""
+    for kw in call.keywords:
+        if kw.arg == name:
+            return {isinstance(kw.value, ast.Constant) and kw.value.value is default}
+    if index is not None:
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                return {True, False}
+            if i == index:
+                return {isinstance(arg, ast.Constant) and arg.value is default}
+    if any(kw.arg is None for kw in call.keywords):
+        return {True, False}
+    return {True}
+
+
+def test_every_optional_parameter_takes_both_values_in_production():
+    """Each None/True/False parameter of a public package function takes
+    its default in some production call and another value in another, or
+    is allow-listed with a reason, so no option hides a branch that no
+    production call runs. Calls match by name as in _call_graph."""
+    trees = _parsed_production_files()
+    units = {
+        f"{mod}:{name}": stmt for mod, tree in trees.items() for name, stmt in _units(tree)
+    }
+    resolve, by_name = _name_resolution(trees, set(units))
+    funcs = {
+        node: stmt
+        for node, stmt in units.items()
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and _in_package(node)
+        and not stmt.name.startswith("_")
+        and node not in _NO_PRODUCTION_CALLER
+    }
+    sides: dict[str, set[bool]] = {}
+    for mod, tree in trees.items():
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            if isinstance(call.func, ast.Name):
+                targets = resolve(mod, call.func.id)
+            elif isinstance(call.func, ast.Attribute):
+                targets = by_name.get(call.func.attr, set())
+            else:
+                continue
+            for target in targets & funcs.keys():
+                for name, (index, default) in _flag_params(funcs[target]).items():
+                    sides.setdefault(f"{target}.{name}", set()).update(
+                        _argument_sides(call, index, name, default)
+                    )
+    options = {
+        f"{node}.{name}"
+        for node, fn in funcs.items()
+        for name in _flag_params(fn)
+    }
+    one_value = {opt for opt in options if sides.get(opt, set()) != {True, False}}
+    assert all(_ONE_VALUE_OPTIONS.values())
+    stale = set(_ONE_VALUE_OPTIONS) - one_value
+    assert not stale, f"allow-listed but used both ways or gone: {sorted(stale)}"
+    unused = one_value - set(_ONE_VALUE_OPTIONS)
+    labels = {frozenset({True}): "default only", frozenset({False}): "never the default"}
+    assert not unused, "optional parameters production calls leave at one value:\n" + "\n".join(
+        f"{opt} ({labels.get(frozenset(sides.get(opt, ())), 'no production call')})"
+        for opt in sorted(unused)
+    )
 
 
 def test_every_registered_query_is_prioritized():

@@ -207,8 +207,8 @@ def test_sessionize_auto_key_stats_cache(spark, sf_dir):
     """VERDICT r10 ask #3: the probe result is cached per (plan, key,
     fraction, seed) — a second call over the same table must reuse it (no
     new cache entry, same plan choice), the threshold stays per-call (a
-    cached est_max still flips the plan), and use_cached_stats=False
-    re-probes without error."""
+    cached est_max still flips the plan), and dropping the entry makes the
+    next call re-probe to the same answer."""
     from sdc_mapreduce_spark.catalog import load_table
     from sdc_mapreduce_spark.operators.skew import _KEY_STATS_CACHE, sessionize_auto
 
@@ -224,9 +224,11 @@ def test_sessionize_auto_key_stats_cache(spark, sf_dir):
     assert len(_KEY_STATS_CACHE) == 1
     assert "__chunk" in forced_chunk._jdf.queryExecution().analyzed().toString()
     assert "__chunk" not in forced_plain._jdf.queryExecution().analyzed().toString()
-    # a re-probe refreshes the same entry with the same exact-count answer
-    sessionize_auto(ev, sample_fraction=1.0, use_cached_stats=False)
-    assert len(_KEY_STATS_CACHE) == 1
+    # a re-probe after the entry is dropped lands the same exact-count answer
+    key = next(iter(_KEY_STATS_CACHE))
+    _KEY_STATS_CACHE.pop(key)
+    sessionize_auto(ev, sample_fraction=1.0)
+    assert list(_KEY_STATS_CACHE) == [key]
     assert next(iter(_KEY_STATS_CACHE.values())) == est
     # different fraction = different key statistics -> separate entry
     sessionize_auto(ev, sample_fraction=0.5)

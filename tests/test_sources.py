@@ -88,7 +88,7 @@ def test_compact_parquet_bin_packs_small_files(spark, tmp_path):
     df.repartition(64).write.mode("overwrite").parquet(src)
     assert len(glob.glob(f"{src}/part-*.parquet")) == 64
 
-    n = io.compact_parquet(spark, src, dst, target_file_bytes=256 * 1024)
+    n = io.compact_parquet(spark, src, dst, ["k"], target_file_bytes=256 * 1024)
     out_files = glob.glob(f"{dst}/part-*.parquet")
     assert len(out_files) == n
     assert len(out_files) < 16  # an order of magnitude fewer files

@@ -5,7 +5,12 @@ from __future__ import annotations
 
 import pytest
 
-from sdc_mapreduce_spark.functions.splits import hash_split, split_sql_case
+from sdc_mapreduce_spark.functions.splits import (
+    SPLIT_FRACTIONS,
+    hash_split,
+    split_column,
+    split_sql_case,
+)
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +58,7 @@ def test_sql_case_matches_spark_assignment(spark, keyed):
     con = duckdb.connect()
     con.execute("CREATE TABLE t (doc_id BIGINT)")
     con.executemany("INSERT INTO t VALUES (?)", [(k,) for k, _ in rows[:2000]])
-    case = split_sql_case("doc_id", {"train": 0.9, "val": 0.05, "test": 0.05})
+    case = split_sql_case("doc_id", SPLIT_FRACTIONS)
     duck = dict(con.execute(f"SELECT doc_id, {case} FROM t").fetchall())
     for k, s in rows[:2000]:
         assert duck[k] == s
@@ -61,16 +66,14 @@ def test_sql_case_matches_spark_assignment(spark, keyed):
 
 def test_fraction_validation(spark, keyed):
     with pytest.raises(ValueError):
-        hash_split(keyed, "doc_id", fractions={"a": 0.5, "b": 0.2}).collect()
+        keyed.withColumn("split", split_column("doc_id", {"a": 0.5, "b": 0.2})).collect()
 
 
 def test_single_split_and_many_splits(spark, keyed):
-    one = hash_split(keyed, "doc_id", fractions={"all": 1.0})
+    one = keyed.withColumn("split", split_column("doc_id", {"all": 1.0}))
     assert one.filter(one["split"] != "all").count() == 0
     many = dict(
-        hash_split(
-            keyed, "doc_id", fractions={f"s{i}": 0.1 for i in range(10)}
-        )
+        keyed.withColumn("split", split_column("doc_id", {f"s{i}": 0.1 for i in range(10)}))
         .groupBy("split")
         .count()
         .collect()

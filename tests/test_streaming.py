@@ -84,7 +84,7 @@ def test_streaming_dedup_drops_duplicates(spark, sf_dir, tmp_path):
     replay_events(ev, dup_dir, *_EVENT_COLUMNS, event_time="zoned")
     stream = replay_events(ev, dup_dir, *_EVENT_COLUMNS, event_time="zoned")
     with scratch(spark) as s:
-        rows = _drain(s, streaming_dedup(stream))
+        rows = _drain(s, streaming_dedup(stream, ["event_id"]))
     counts = {}
     for r in rows:
         counts[r["event_id"]] = counts.get(r["event_id"], 0) + 1

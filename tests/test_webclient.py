@@ -82,13 +82,19 @@ def test_submit_wordcount_over_http_end_to_end(server, tmp_path):
 
 def test_submit_validation_messages(server, tmp_path):
     """Field-by-field 400s with the reference's exact messages
-    (webclient.cpp:23-28)."""
+    (webclient.cpp:23-28), and 400 for a non-positive shard size or
+    reducer count."""
     inp = str(tmp_path / "x.txt")
+    not_positive = "reducer_count and shard_size must be positive"
     cases = [
         ({"shard_size": 1, "files": [inp]}, "Reducer count missing"),
         ({"reducer_count": 1, "files": [inp]}, "Shard size missing"),
         ({"reducer_count": 1, "shard_size": 1}, "Input file paths missing"),
         ({"reducer_count": 1, "shard_size": 1, "files": []}, "Input file paths missing"),
+        ({"reducer_count": 1, "shard_size": 0, "files": [inp]}, not_positive),
+        ({"reducer_count": 1, "shard_size": -1, "files": [inp]}, not_positive),
+        ({"reducer_count": 0, "shard_size": 1, "files": [inp]}, not_positive),
+        ({"reducer_count": -3, "shard_size": 1, "files": [inp]}, not_positive),
     ]
     for payload, msg in cases:
         code, body = _post(server.port, payload)
@@ -243,7 +249,7 @@ def test_completed_query_job_releases_its_pins(server, sf_dir, tmp_path):
     every submitted query's caches alive."""
     from sdc_mapreduce_spark import cache
 
-    before = {id(df) for df in cache.pinned_frames()}
+    before = {id(df) for frames in cache._PINNED.values() for df in frames}
     code, body = _post_path(
         server.port,
         "/queries",
@@ -255,7 +261,9 @@ def test_completed_query_job_releases_its_pins(server, sf_dir, tmp_path):
     )
     assert code == 200
     assert server.queue.wait_for(body["job_id"]) == "COMPLETED"
-    leaked = [df for df in cache.pinned_frames() if id(df) not in before]
+    leaked = [
+        df for frames in cache._PINNED.values() for df in frames if id(df) not in before
+    ]
     assert leaked == []
 
 
@@ -465,19 +473,27 @@ def test_legacy_flask_submitter_contract(server, tmp_path):
     assert server.queue.wait_for(job.job_id, timeout=60.0) == "COMPLETED"
     assert server.queue.job(job.job_id).result_rows == 2
 
-    # Flask's request.form[...] 400s on a missing field — same here
-    req = urllib.request.Request(
-        f"http://127.0.0.1:{server.port}/mapreduce",
-        data=urllib.parse.urlencode({"file": str(inp)}).encode(),
-        headers={"Content-Type": "application/x-www-form-urlencoded"},
-        method="POST",
-    )
-    try:
-        with urllib.request.urlopen(req, timeout=30) as resp:
-            code = resp.status
-    except urllib.error.HTTPError as err:
-        code = err.code
-    assert code == 400
+    # Flask's request.form[...] 400s on a missing field — same here; a
+    # non-positive shard size is a 400 too
+    n_jobs = len(server.queue.all())
+    for form in (
+        {"file": str(inp)},
+        {"shard_size": 0, "file": str(inp)},
+        {"shard_size": -1, "file": str(inp)},
+    ):
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{server.port}/mapreduce",
+            data=urllib.parse.urlencode(form).encode(),
+            headers={"Content-Type": "application/x-www-form-urlencoded"},
+            method="POST",
+        )
+        try:
+            with urllib.request.urlopen(req, timeout=30) as resp:
+                code = resp.status
+        except urllib.error.HTTPError as err:
+            code = err.code
+        assert code == 400, form
+    assert len(server.queue.all()) == n_jobs
 
 
 def test_wait_for_wakes_on_cancel_over_http(server):
