@@ -315,12 +315,9 @@ def _skew_suite(spark, path: str, fixture_desc: str) -> dict:
         "skew_sessionize_plain": lambda: sessionize_plain(ev),
         "skew_sessionize_chunked": lambda: sessionize_chunked(ev),
         # auto = key-stats probe + whichever plan the stats dictate
-        # (operators/skew.py::sessionize_auto, VERDICT r9 ask #8). The
-        # probe result is cached per table plan (r10 ask #3), so the
-        # untimed warm-up below pays the one probe job and the timed
-        # repeats measure the amortized shape — auto should land within
-        # noise of whichever plan it picked. The cold first-call cost is
-        # the probe job itself, visible in the warm-up, not the median.
+        # (operators/skew.py::sessionize_auto). Every build runs its own
+        # sampled probe job, so each timed run includes the probe: auto
+        # lands about one small job behind whichever plan it picked.
         "skew_sessionize_auto": lambda: sessionize_auto(ev),
     }
     runs: dict[str, list[float]] = {}

@@ -82,7 +82,7 @@ class MapReduceClient:
         self.staging_dir = Path(staging_dir or tempfile.mkdtemp(prefix="mr-staging-"))
         self.staging_dir.mkdir(parents=True, exist_ok=True)
 
-    def upload(self, local_path: str, name: str | None = None) -> str:
+    def upload(self, local_path: str) -> str:
         """The blob-container upload step (reference
         submit_map_reduce.py:22-28): copy the input into the staging area the
         engine reads from; returns the staged path to pass to ``submit``.
@@ -90,7 +90,7 @@ class MapReduceClient:
         overwriting each other (a/words.txt + b/words.txt must not collapse
         to one staged blob counted twice)."""
         src = Path(local_path)
-        dest = self.staging_dir / (name or src.name)
+        dest = self.staging_dir / src.name
         i = 1
         while dest.exists():
             dest = self.staging_dir / f"{dest.stem.split('__')[0]}__{i}{dest.suffix}"

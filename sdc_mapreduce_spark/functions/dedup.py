@@ -33,7 +33,7 @@ these operators compose.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.cache import pin
@@ -609,33 +609,12 @@ def near_dup_clusters(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_iterations: int = 20,
-    check_every: int = 2,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph → one
     representative (min id) per cluster: the step that turns pairwise
     near-dup detection into an actual dedup decision (keep rep, drop rest).
     Returns (id, rep_id) for EVERY document (singletons map to themselves).
-
-    Min-label propagation: each node repeatedly takes the min label among
-    itself and its neighbors; converges in O(component diameter) rounds —
-    near-dup clusters are shallow (dupes of a common source), so this is
-    2-4 distributed joins in practice, each shuffling only (node, label)
-    pairs. Lineage is truncated per round with an eager localCheckpoint so
-    the plan does not grow with iterations. For adversarial long-chain
-    graphs swap in the large-star/small-star variant (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — same
-    per-round shuffle shape.
-
-    The convergence test (a ``count()`` job) runs every ``check_every``
-    rounds rather than every round: labels are monotonically non-increasing
-    per node, so "no change since the labels at the LAST CHECK" implies no
-    change in any intermediate round either — the batched check is exact,
-    and at cluster scale it halves the per-iteration job-launch overhead.
-    An extra propagation round after quiescence is a no-op join.
-    """
-    if check_every < 1:
-        raise ValueError(f"check_every must be >= 1, got {check_every}")
+    The LSH pairs feed :func:`min_label_propagation`."""
     pairs = minhash_lsh_pairs(
         df,
         num_hashes=num_hashes,
@@ -645,126 +624,103 @@ def near_dup_clusters(
         text_col=text_col,
         id_col=id_col,
     ).select("id_a", "id_b")
-    return min_label_propagation(
-        df.select(id_col),
-        pairs,
-        id_col=id_col,
-        max_iterations=max_iterations,
-        check_every=check_every,
-    )
+    return min_label_propagation(df.select(id_col), pairs, id_col=id_col)
+
+
+# Large-star/small-star needs O(log^2 n) rounds for any id order; shuffled
+# 1,000- and 3,000-node chains converge in 8 and 10 rounds.
+MAX_ROUNDS = 40
 
 
 class LabelPropagationNotConverged(RuntimeError):
-    """min_label_propagation reached max_iterations with labels still
-    changing."""
+    """min_label_propagation reached MAX_ROUNDS before every component
+    was a star."""
+
+
+def _ends(edges: DataFrame) -> DataFrame:
+    """Both ends of every edge: (node, nbr) once per direction."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("node"), F.col("b").alias("nbr")),
+                F.struct(F.col("b").alias("node"), F.col("a").alias("nbr")),
+            )
+        ).alias("e")
+    ).select("e.node", "e.nbr")
+
+
+def _large_star(edges: DataFrame) -> DataFrame:
+    """Link every neighbour larger than u to m(u) = min(N(u) ∪ {u}): one
+    shuffle by node."""
+    w = Window.partitionBy("node")
+    return (
+        _ends(edges)
+        .select("node", "nbr", F.least("node", F.min("nbr").over(w)).alias("m"))
+        .filter(F.col("nbr") > F.col("node"))
+        .select(F.col("nbr").alias("a"), F.col("m").alias("b"))
+    )
+
+
+def _small_star(edges: DataFrame) -> DataFrame:
+    """Link u and each of its smaller neighbours to the smallest of them:
+    one shuffle by u, then one distinct that keeps the edge set a set."""
+    w = Window.partitionBy("a")
+    linked = edges.select(
+        F.explode(F.array("a", "b")).alias("a"), F.min("b").over(w).alias("b")
+    )
+    return linked.filter(F.col("a") != F.col("b")).distinct()
 
 
 def min_label_propagation(
     nodes: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iterations: int = 20,
-    check_every: int = 2,
 ) -> DataFrame:
     """Connected components over an undirected pair graph → (id, rep_id)
     with rep = min id per component; singletons map to themselves. The
-    propagation engine behind :func:`near_dup_clusters`, reusable over ANY
-    near-dup pair source (token LSH, SimHash blocks, embedding ANN
-    buckets). ``pairs`` must have columns (id_a, id_b); ``nodes`` a single
-    ``id_col`` column covering every node (isolated ones included).
+    engine behind :func:`near_dup_clusters`, reusable over ANY near-dup
+    pair source (token LSH, SimHash blocks, embedding ANN buckets).
+    ``pairs`` must have columns (id_a, id_b); ``nodes`` a single ``id_col``
+    column covering every node (isolated ones included).
 
-    Rounds combine neighbor propagation with LABEL-CHAIN SHORTCUTTING
-    (pointer jumping — the Shiloach-Vishkin shortcut step, the same move
-    hash-to-min [Rastogi et al., ICDE'13] relies on): new label =
-    min(label, neighbors' labels, label-of-label). Shortcutting collapses
-    convergence from O(component diameter) rounds to O(log diameter) —
-    on a giant sparse component (the shape the r12 scale fixture's
-    0.4-threshold random pair graph produces at 10x: 20k nodes, 29k
-    edges, one ~19k-node component) plain min-label needed ~25 rounds
-    (359 s); with shortcutting it converges in ~6. Each round shuffles
-    only (node, label) pairs — two joins, no corpus payloads; lineage
-    truncated per round; batched convergence check. The O(log diameter)
-    bound holds when ids rise or fall along paths; shuffled ids on a long
-    chain can need many more rounds, so a final round that still changes
-    labels raises :class:`LabelPropagationNotConverged` instead of
-    returning partial components.
+    Alternating large-star/small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14) over a canonical edge
+    set: each edge is stored once as (a, b) with a > b. Both steps keep
+    every component connected and shrink its ids toward its minimum, and
+    they reach a fixed point where each component is a star centred on
+    its minimum id, in O(log^2 n) rounds whatever the id order. A round
+    shuffles only (node, id) pairs, three times; it never joins the
+    labels with themselves, so the planner's size estimate does not
+    multiply from round to round. Each round is cut from its lineage
+    with one localCheckpoint and checked with one job: a star forest is
+    one where every node with a smaller neighbour has degree 1. A node
+    that breaks that rule still has a label to change; after
+    ``MAX_ROUNDS`` such nodes raise :class:`LabelPropagationNotConverged`
+    instead of returning partial components.
     """
-    if check_every < 1:
-        raise ValueError(f"check_every must be >= 1, got {check_every}")
-    # Materialize the pair source ONCE before symmetrizing: the union
-    # references `pairs` twice, and for an expensive pair producer (the
-    # SRP bucket-verify behind dedup_embedding_clusters costs ~70 s at the
-    # 10x corpus) an unmaterialized plan would run the whole verify per
-    # branch. O(pairs) rows on executor disk, same per-round
-    # localCheckpoint discipline as the label frames below.
-    src = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-    # pin + explicit local release at the end of the loop: the pin makes a
-    # harness drain the backstop if an exception skips the unpersist below
-    edges = pin(
-        src.union(src.select(F.col("id_b"), F.col("id_a"))).toDF("src", "dst")
+    edges = pairs.select(
+        F.greatest("id_a", "id_b").alias("a"), F.least("id_a", "id_b").alias("b")
+    ).filter(F.col("a") != F.col("b"))
+    for _ in range(MAX_ROUNDS):
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        # a star forest: every node with a smaller neighbour has degree 1
+        unsettled = (
+            _ends(edges)
+            .groupBy("node")
+            .agg(F.min("nbr").alias("m"), F.count(F.lit(1)).alias("deg"))
+            .filter((F.col("m") < F.col("node")) & (F.col("deg") > 1))
+            .count()
+        )
+        if unsettled == 0:
+            break
+    else:
+        raise LabelPropagationNotConverged(
+            f"min_label_propagation did not converge in {MAX_ROUNDS} "
+            f"rounds: {unsettled} labels still changing"
+        )
+    return nodes.join(edges.toDF(id_col, "__rep"), id_col, "left").select(
+        id_col, F.coalesce("__rep", id_col).alias("rep_id")
     )
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("label")
-    ).localCheckpoint(eager=True)
-
-    last_checked = labels
-    for i in range(1, max_iterations + 1):
-        prev = labels
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        jump = (
-            labels.alias("__mlp_a")
-            .join(
-                labels.alias("__mlp_b"),
-                F.col("__mlp_a.label") == F.col("__mlp_b.node"),
-            )
-            .select(
-                F.col("__mlp_a.node").alias("node"),
-                F.col("__mlp_b.label").alias("jmp_label"),
-            )
-        )
-        labels = (
-            labels.join(neighbor_min, "node", "left")
-            .join(jump, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"),
-                    F.coalesce("nbr_label", "label"),
-                    F.coalesce("jmp_label", "label"),
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        final = i == max_iterations
-        if final or i % check_every == 0:
-            # the final round compares with the round before it: converged
-            # means one round that changes nothing
-            changed = (
-                labels.withColumnRenamed("label", "new_label")
-                .join(
-                    (prev if final else last_checked).withColumnRenamed(
-                        "label", "old_label"
-                    ),
-                    "node",
-                )
-                .filter(F.col("new_label") != F.col("old_label"))
-                .count()
-            )
-            if changed == 0:
-                break
-            if final:
-                edges.unpersist()
-                raise LabelPropagationNotConverged(
-                    f"min_label_propagation did not converge in {max_iterations} "
-                    f"rounds: {changed} labels still changing"
-                )
-            last_checked = labels
-    edges.unpersist()
-    return labels.select(F.col("node").alias(id_col), F.col("label").alias("rep_id"))
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -959,8 +915,6 @@ def exact_substring_dedup(
     )
     # Globally-first occurrence per duplicated fingerprint: min (doc, chunk)
     # over the duplicated occurrences only.
-    from pyspark.sql import Window
-
     w_fp = Window.partitionBy("chunk_fp")
     drops = (
         chunks.join(dup, "chunk_fp")
@@ -1171,7 +1125,6 @@ def jaccard_prefix_pairs(
     natural corpora, but nothing bounds it on adversarial ones.
     """
     from pyspark import StorageLevel
-    from pyspark.sql import Window
 
     eps = 1e-9
     sets = shingle_sets(df, n=n, text_col=text_col, id_col=id_col)

@@ -149,7 +149,7 @@ def pagerank_integer(
     # consumer — without truncation the upstream lineage (e.g. a Jaccard
     # inverted-index self-join) re-executes per iteration and the unrolled
     # plan grows multiplicatively (observed: OOM at sf0.1 from 3 iterations
-    # x edge recompute). Same discipline as near_dup_clusters.
+    # x edge recompute).
     und = (
         edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))

@@ -1668,7 +1668,7 @@ def unigram_lm(
     if em_iters < 1:
         # ADVICE r12: em_iters=0 would leave counts=None and crash at the
         # final counts.agg with an opaque AttributeError — fail loudly at
-        # entry like the sibling learners (min_label_propagation).
+        # entry.
         raise ValueError(f"em_iters must be >= 1, got {em_iters}")
 
     spark = df.sparkSession

@@ -142,18 +142,6 @@ def sessionize_chunked(
     )
 
 
-# Per-plan key-stats cache (VERDICT r10 ask #3): the sessionize_auto probe
-# is one sampled aggregation job whose answer — the estimated max rows per
-# key — depends only on (source plan, key column, fraction, seed), NOT on
-# the caller's threshold. Caching it makes repeated auto calls over the
-# same table pay the probe once; the threshold comparison stays per-call.
-# Keyed by the PARENT frame's semanticHash (logical-plan identity) plus
-# the key-column name, so two textually different but semantically equal
-# reads share an entry. The cache assumes the data behind a plan is stable
-# within a process.
-_KEY_STATS_CACHE: dict[tuple[int, str, float, int], float] = {}
-
-
 def sessionize_auto(
     ev: DataFrame,
     gap_minutes: int = 30,
@@ -185,41 +173,20 @@ def sessionize_auto(
     wide rows or small executors. ``sample_fraction=1.0`` probes exactly
     (still just (key, count) rows through the shuffle).
 
-    The probe result is cached per (plan, key, fraction, seed) — see
-    ``_KEY_STATS_CACHE`` above — so repeated calls over the same table pay
-    it once (VERDICT r10 ask #3: the ~0.25 s probe constant made auto
-    second-best on both skew fixtures)."""
+    Every call runs its own probe: caching the answer per plan would be
+    process-global state that silently goes stale when the data behind a
+    plan changes."""
     if not (0.0 < sample_fraction <= 1.0):
         # validated up front (ADVICE r10): 0 would div-by-zero at est_max
         # and a negative value fails opaquely inside Spark's sample()
         raise ValueError(
             f"sample_fraction must be in (0, 1], got {sample_fraction}"
         )
-    cache_key = None
-    try:
-        # hash the PARENT frame, not ev.select(user_col): (parent plan,
-        # key column) determines the probe answer just as well, and the
-        # parent's analyzed plan is cached JVM-side so repeat calls cost
-        # ~1 ms — building a fresh select() per call re-analyzed it every
-        # time (~0.1-0.2 s, the residual constant that kept auto 0.2 s
-        # behind the winning plan on the r10 hot-user bench fixture)
-        cache_key = (
-            ev.semanticHash(),
-            user_col,
-            sample_fraction,
-            seed,
-        )
-    except Exception:
-        pass  # semanticHash unavailable (exotic plan): probe uncached
-    est_max = _KEY_STATS_CACHE.get(cache_key) if cache_key is not None else None
-    if est_max is None:
-        probe = ev.select(user_col)
-        if sample_fraction < 1.0:
-            probe = probe.sample(fraction=sample_fraction, seed=seed)
-        row = probe.groupBy(user_col).count().agg(F.max("count").alias("mx")).first()
-        est_max = (row["mx"] or 0) / sample_fraction
-        if cache_key is not None:
-            _KEY_STATS_CACHE[cache_key] = est_max
+    probe = ev.select(user_col)
+    if sample_fraction < 1.0:
+        probe = probe.sample(fraction=sample_fraction, seed=seed)
+    row = probe.groupBy(user_col).count().agg(F.max("count").alias("mx")).first()
+    est_max = (row["mx"] or 0) / sample_fraction
     plan = sessionize_chunked if est_max > max_rows_per_task else sessionize_plain
     return plan(
         ev,

@@ -57,23 +57,15 @@ for _name in _MODULE_ORDER:
 # CERT_HEAD with the queries whose query functions reach it
 # (tests/test_registry.py computes that set from the call graph).
 CERT_HEAD: tuple[str, ...] = (
-    # each reaches an operator that lost an option no production call set,
-    # or whose option every production call sets became required
-    "kvtext_scan_certified",
-    "kvtext_streaming_restart_certified",
-    "compact_parquet_certified",
-    "simsearch_ann_ivf",
-    "simsearch_ann_ivf_recall",
-    "simsearch_ann_ivfpq_recall",
-    "pipeline_curation",
-    "pipeline_embedding_stats",
-    "join_fuzzy_names",
-    "split_assignment",
+    # connected components by large-star/small-star
+    "dedup_clusters",
+    "dedup_cluster_sizes",
+    "dedup_keep_best",
+    "dedup_cluster_labels",
+    "dedup_cluster_safe_split",
+    "dedup_embedding_clusters",
+    # sessionize_auto probes on every build (no per-plan cache)
     "events_sessionize_auto",
-    "events_streaming_dedup_certified",
-    "wordcount",
-    "bucketed_join_certified",
-    "kv_sink_certified",
 )
 if not IMPORT_QUARANTINE:
     # Only enforce completeness on a healthy import — with a module

@@ -903,7 +903,7 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_label_propagation) → one representative (min vec_id) per cluster,
     every vector mapped (singletons to themselves). The embedding-space
     twin of dedup_clusters' token-LSH components; the keep-list a curation
-    pass anti-joins against. Oracle: recursive-CTE reachability over the
+    pass anti-joins against. Oracle: unrolled min-label rounds over the
     same plan-literal SRP pair graph."""
     from sdc_mapreduce_spark.functions.dedup import min_label_propagation
     from sdc_mapreduce_spark.functions.simsearch import embedding_near_pairs_blocked
@@ -924,7 +924,9 @@ def _min_label_rounds_sql(n_rounds: int, nodes: str, edges: str) -> str:
 
     Round update: l'(v) = min(l(v), l(l(v)), min over in-neighbors' l) —
     neighbor propagation plus label-chain shortcutting, O(nodes + edges)
-    rows per round, converging in O(log diameter) rounds. Non-convergence
+    rows per round, converging in O(log diameter) rounds when ids rise or
+    fall along paths (a long shuffled-id chain needs far more; the Spark
+    side uses large-star/small-star for that reason). Non-convergence
     is IMPOSSIBLE to pass silently: a poison row (-1, -1) is emitted if
     one more round would still change any label, which breaks the row
     count against the Spark side — raise ``n_rounds`` if that ever fires.
@@ -1166,7 +1168,7 @@ def dedup_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the safe assignment (structurally 0) and under the naive
     per-document hash with the same salt (>0 on any corpus with near-dups:
     the bug being prevented, quantified). Scale shape: clustering is the
-    already hot-capped LSH + O(diameter) label propagation; the split tag
+    already hot-capped LSH + large-star/small-star components; the split tag
     and audits are O(docs) + O(pairs) joins, broadcast or shuffled as the
     planner and AQE decide from byte sizes."""
     from sdc_mapreduce_spark.functions.dedup import min_label_propagation

@@ -3,6 +3,8 @@ against exhaustive, SimHash properties, rolling fingerprint fold."""
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.catalog import load_table
@@ -123,46 +125,87 @@ def test_near_dup_clusters_match_union_find(spark, sf_dir):
     assert any(rep != i for i, rep in got.items()), "no non-trivial clusters found"
 
 
-def test_near_dup_clusters_check_every_invariant(spark, sf_dir):
-    """Batching the convergence count() every k rounds must not change the
-    components (labels are monotone, so the batched check is exact) — and a
-    long chain still converges under batching."""
-    docs = load_table(spark, sf_dir, "documents")
-    per_round = {
-        r["doc_id"]: r["rep_id"]
-        for r in D.near_dup_clusters(
-            docs, num_hashes=64, bands=16, check_every=1
-        ).collect()
-    }
-    batched = {
-        r["doc_id"]: r["rep_id"]
-        for r in D.near_dup_clusters(
-            docs, num_hashes=64, bands=16, check_every=3
-        ).collect()
-    }
-    assert per_round == batched
-
-    import pytest
-
-    with pytest.raises(ValueError, match="check_every"):
-        D.near_dup_clusters(docs, check_every=0)
+def _shuffled_chain(n: int):
+    """One path over ``n`` nodes whose ids are in random order along it."""
+    ids = random.Random(0).sample(range(n), n)
+    return ids, list(zip(ids, ids[1:]))
 
 
-def test_label_propagation_raises_at_its_round_cap(spark):
-    """A 100-node chain with shuffled ids needs more than 6 rounds; at the
-    cap the operator fails by name (round count, labels still changing)
-    instead of returning several rep_ids for the one component."""
-    import random
-
-    import pytest
-
-    ids = random.Random(0).sample(range(100), 100)
+def _components(spark, ids, edges):
     nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    pairs = spark.createDataFrame(list(zip(ids, ids[1:])), "id_a long, id_b long")
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    return D.min_label_propagation(nodes, pairs)
+
+
+def test_label_propagation_matches_union_find(spark):
+    """A shuffled-id chain, a star and two disjoint cliques: every
+    component gets exactly one rep_id, its minimum id, as a union-find
+    built from the same edges says."""
+    chain_ids, chain = _shuffled_chain(1000)
+    star = [(500, i) for i in range(501, 540)] + [(i, 520) for i in range(540, 560)]
+    cliques = [
+        (a, b) for lo in (700, 800) for a in range(lo, lo + 12) for b in range(a + 1, lo + 12)
+    ]
+    cases = {
+        "chain": (chain_ids, chain),
+        "star": (list(range(500, 560)) + [999], star),
+        "cliques": (list(range(700, 712)) + list(range(800, 812)), cliques),
+    }
+    for case, (ids, edges) in cases.items():
+        parent = {i: i for i in ids}
+
+        def find(x: int) -> int:
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        expected = {i: find(i) for i in ids}
+        got = {r["doc_id"]: r["rep_id"] for r in _components(spark, ids, edges).collect()}
+        assert got == expected, case
+        members: dict[int, list[int]] = {}
+        for i, rep in got.items():
+            members.setdefault(rep, []).append(i)
+        assert all(rep == min(m) for rep, m in members.items()), case
+    assert len(set(expected.values())) == 2  # the two cliques stay apart
+
+
+def test_label_propagation_raises_at_its_round_cap(spark, monkeypatch):
+    """A 1,000-node chain with shuffled ids needs more than 6 rounds; at
+    the cap the operator fails by name (round count, labels still
+    changing) instead of returning several rep_ids for the one
+    component."""
+    import pytest
+
+    monkeypatch.setattr(D, "MAX_ROUNDS", 6)
+    ids, edges = _shuffled_chain(1000)
     with pytest.raises(
         D.LabelPropagationNotConverged, match=r"in 6 rounds: [1-9]\d* labels still changing"
     ):
-        D.min_label_propagation(nodes, pairs, max_iterations=6)
+        _components(spark, ids, edges)
+
+
+def test_label_propagation_size_estimate_stays_bounded(spark, sf_dir):
+    """The planner's sizeInBytes estimate of the result must not multiply
+    with the round count: below 10^40 on the shuffled 1,000-node chain and
+    on dedup_clusters."""
+    from sdc_mapreduce_spark.queries.dedup_queries import dedup_clusters
+
+    frames = {
+        "chain": _components(spark, *_shuffled_chain(1000)),
+        "dedup_clusters": dedup_clusters(spark, sf_dir),
+    }
+    units = ["B", "KiB", "MiB", "GiB", "TiB", "PiB", "EiB"]
+    for name, df in frames.items():
+        # Spark's own rendering ("sizeInBytes=4.8E+37 B", "6.0 EiB"): a
+        # runaway estimate has millions of digits, too many to convert
+        stats = df._jdf.queryExecution().optimizedPlan().stats().simpleString()
+        value, unit = stats.split(",")[0].split("=")[1].split()
+        assert float(value) * 1024 ** units.index(unit) < 1e40, (name, stats)
 
 
 def test_minhash_lsh_equals_exhaustive(spark, sf_dir):

@@ -44,22 +44,7 @@ def test_import_quarantine_is_empty():
 # Operators whose code changed since their consumers were last certified;
 # every query whose query function reaches one of them must sit in CERT_HEAD.
 _CHANGED_OPERATORS = frozenset(
-    {
-        "plan_shards",
-        "KVTextReader",
-        "KVTextStreamReader",
-        "compact_parquet",
-        "write_bucketed_table",
-        "cosine_topk_ivf",
-        "cosine_topk_ivfpq",
-        "curate",
-        "fuzzy_name_pairs",
-        "hash_split",
-        "sessionize_auto",
-        "streaming_dedup",
-        "word_count",
-        "write_kv_text",
-    }
+    {"min_label_propagation", "near_dup_clusters", "sessionize_auto"}
 )
 
 

@@ -203,39 +203,6 @@ def test_sessionize_auto_validates_sample_fraction(spark, sf_dir):
             sessionize_auto(ev, sample_fraction=bad)
 
 
-def test_sessionize_auto_key_stats_cache(spark, sf_dir):
-    """VERDICT r10 ask #3: the probe result is cached per (plan, key,
-    fraction, seed) — a second call over the same table must reuse it (no
-    new cache entry, same plan choice), the threshold stays per-call (a
-    cached est_max still flips the plan), and dropping the entry makes the
-    next call re-probe to the same answer."""
-    from sdc_mapreduce_spark.catalog import load_table
-    from sdc_mapreduce_spark.operators.skew import _KEY_STATS_CACHE, sessionize_auto
-
-    _KEY_STATS_CACHE.clear()
-    ev = load_table(spark, sf_dir, "events")
-    sessionize_auto(ev, sample_fraction=1.0)
-    assert len(_KEY_STATS_CACHE) == 1
-    est = next(iter(_KEY_STATS_CACHE.values()))
-    # same probe parameters -> cache hit, no second entry; plan choice
-    # still honors the caller's threshold against the CACHED est_max
-    forced_chunk = sessionize_auto(ev, max_rows_per_task=0, sample_fraction=1.0)
-    forced_plain = sessionize_auto(ev, max_rows_per_task=10**12, sample_fraction=1.0)
-    assert len(_KEY_STATS_CACHE) == 1
-    assert "__chunk" in forced_chunk._jdf.queryExecution().analyzed().toString()
-    assert "__chunk" not in forced_plain._jdf.queryExecution().analyzed().toString()
-    # a re-probe after the entry is dropped lands the same exact-count answer
-    key = next(iter(_KEY_STATS_CACHE))
-    _KEY_STATS_CACHE.pop(key)
-    sessionize_auto(ev, sample_fraction=1.0)
-    assert list(_KEY_STATS_CACHE) == [key]
-    assert next(iter(_KEY_STATS_CACHE.values())) == est
-    # different fraction = different key statistics -> separate entry
-    sessionize_auto(ev, sample_fraction=0.5)
-    assert len(_KEY_STATS_CACHE) == 2
-    _KEY_STATS_CACHE.clear()
-
-
 def test_sessionize_chunked_merges_cross_boundary_sessions(spark):
     """A stream straddling midnight with gaps < timeout must come out as
     ONE session (the local day-chunk split is invisible), while a > timeout

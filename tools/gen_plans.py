@@ -94,7 +94,7 @@ EXTRA_SHAPES = [
     "simsearch_mmr",
     "table_psi_drift",
     # round-12 additions: indexed MMR pool, unigram-LM learner, and the
-    # pointer-jumping connected-components consumers (VERDICT r12 ask #6)
+    # connected-components consumers (VERDICT r12 ask #6)
     "simsearch_mmr_indexed",
     "text_unigram_lm",
     "dedup_clusters",
