@@ -40,6 +40,20 @@ from sdc_mapreduce_spark.cache import pin
 from sdc_mapreduce_spark.functions.text import normalized_text, token_hash60, tokens
 
 RNG_SEED_MINHASH = 7
+# Hot-key caps: the largest group each quadratic candidate step may pair
+# up. A group of d members emits d² candidate pairs, so one templated
+# shingle, bucket or block would otherwise dominate the whole join.
+# Shingles in more than MAX_DF documents leave the Jaccard/containment
+# universe.
+MAX_DF = 1000
+# LSH buckets with more than MAX_BUCKET members emit no pairs.
+MAX_BUCKET = 1000
+# SimHash (chunk, value) blocks and fuzzy-name blocks above MAX_BLOCK
+# members are not compared.
+MAX_BLOCK = 10_000
+# incremental_minhash_dedup broadcasts its candidate pairs into the verify
+# joins only up to this many.
+BROADCAST_MAX_CANDIDATES = 10_000_000
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -253,7 +267,6 @@ def jaccard_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_df: int | None = 1000,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index self-join.
 
@@ -262,41 +275,31 @@ def jaccard_pairs(
     (id_a, id_b, jaccard) with id_a < id_b. Jaccard is an exact int/int
     division — deterministic, oracle-hashable.
 
-    ``max_df`` caps shingle document frequency: a shingle in d documents
-    contributes d² candidate pairs to the equi-join, so one boilerplate
-    3-gram shared by 1% of a 100 TB corpus is a quadratic blowup. Shingles
-    with df > max_df are removed from the UNIVERSE (both the intersection
-    count and the per-doc sizes), i.e. Jaccard is computed over the
-    df-filtered shingle set — the standard stop-shingle treatment: such
-    shingles carry ~no discriminative signal, but pairs whose overlap is
-    ONLY boilerplate will score lower than their unfiltered Jaccard
+    The shingle document frequency is capped at ``MAX_DF``: a shingle in d
+    documents contributes d² candidate pairs to the equi-join, so one
+    boilerplate 3-gram shared by 1% of a 100 TB corpus is a quadratic
+    blowup. Shingles with df > MAX_DF are removed from the UNIVERSE (both
+    the intersection count and the per-doc sizes), i.e. Jaccard is computed
+    over the df-filtered shingle set — the standard stop-shingle treatment:
+    such shingles carry ~no discriminative signal, but pairs whose overlap
+    is ONLY boilerplate will score lower than their unfiltered Jaccard
     (deliberate precision bias). Docs whose every shingle is hot drop out.
     When no shingle exceeds the cap (any reasonably-sized corpus sample),
-    results are bit-identical to the uncapped form — property-tested.
-    ``max_df=None`` disables the cap.
+    results are bit-identical to the unfiltered Jaccard — property-tested.
     """
     from pyspark import StorageLevel
 
-    # One tokenize+gram pass for both consumers (sizes + inverted index);
-    # the index joins on the 8-byte xxhash64 of each shingle, not the
+    # The index joins on the 8-byte xxhash64 of each shingle, not the
     # shingle string — same join cardinality, a fraction of the shuffle
     # bytes and comparison cost (64-bit collisions are ~1e-7 at billions of
-    # distinct shingles — far below any other error source).
+    # distinct shingles — far below any other error source). Sizes come
+    # from the filtered index, so the shingle arrays are read once.
     sets = shingle_sets(df, n=n, text_col=text_col, id_col=id_col)
-    if max_df is None:
-        # only the uncapped path reads `sets` twice (inverted index AND
-        # sizes); the capped path derives sizes from the filtered index, so
-        # persisting the wide shingle arrays there would be dead weight
-        sets = pin(sets, StorageLevel.MEMORY_AND_DISK)
-    inv = _inverted_index(sets, id_col)
-    if max_df is not None:
-        inv = pin(_drop_hot_shingles(inv, max_df), StorageLevel.MEMORY_AND_DISK)
-        sizes = _index_sizes(inv)
-    else:
-        sizes = sets.select(
-            F.col(id_col).alias("__id"), F.size("shingles").alias("__sz")
-        )
-    with_sizes = _common_with_sizes(inv, sizes)
+    inv = pin(
+        _drop_hot_shingles(_inverted_index(sets, id_col), MAX_DF),
+        StorageLevel.MEMORY_AND_DISK,
+    )
+    with_sizes = _common_with_sizes(inv, _index_sizes(inv))
     jac = F.col("__common") / (F.col("__sz_a") + F.col("__sz_b") - F.col("__common"))
     return with_sizes.select(
         "id_a", "id_b", jac.alias("jaccard")
@@ -418,7 +421,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_bucket: int | None = 1000,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup candidates, verified with exact
     Jaccard. Signatures and band hashes come from one vectorized numpy
@@ -433,11 +435,11 @@ def minhash_lsh_pairs(
     Skew guards (the LSH twins of jaccard/simhash's hot-key caps): a
     (band, bhash) bucket holding d docs yields d² candidate pairs, so an
     adversarial/templated corpus where one bucket goes quadratic would
-    dominate candidate generation. ``max_bucket`` drops whole over-cap
+    dominate candidate generation. ``MAX_BUCKET`` drops whole over-cap
     buckets as a size filter on the aggregated bucket list (no pairs from
     that bucket, but members still collide in their other bands; recall
     only degrades for pairs whose every matching band is corpus-hot, the
-    same trade-off as ``jaccard_pairs(max_df=...)``). The verify joins
+    same trade-off as jaccard_pairs' ``MAX_DF``). The verify joins
     carry no hint: the planner broadcasts a side its size estimate puts
     under the session's byte threshold, AQE converts a shuffle join whose
     materialized side is small at runtime, and anything larger stays a
@@ -473,9 +475,8 @@ def minhash_lsh_pairs(
     buckets = band_rows.groupBy("band", "bhash").agg(
         F.sort_array(F.collect_list("__id")).alias("__ids")
     )
-    cap = F.size("__ids") <= max_bucket if max_bucket is not None else F.lit(True)
     cand = (
-        buckets.filter((F.size("__ids") >= 2) & cap)
+        buckets.filter((F.size("__ids") >= 2) & (F.size("__ids") <= MAX_BUCKET))
         .select(F.posexplode("__ids").alias("__i", "id_a"), "__ids")
         .select(
             "id_a",
@@ -514,7 +515,6 @@ def incremental_minhash_dedup(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_max_candidates: int = 10_000_000,
 ) -> DataFrame:
     """Ingestion-shape NEAR-dup screening: the corpus's LSH band rows act
     as the bucket index (at 100 TB persisted once, bucketed by
@@ -534,7 +534,7 @@ def incremental_minhash_dedup(
     and broadcast into the shingle-verify joins (so the corpus shingle
     table never shuffles). This is the one dedup operator that still
     probes before it hints: a bounded ``limit(N+1).count()`` over the
-    pinned candidates, and past ``broadcast_max_candidates`` (a templated
+    pinned candidates, and past ``BROADCAST_MAX_CANDIDATES`` (a templated
     batch colliding with a templated corpus region goes quadratic) the
     verify falls back to plain shuffle joins instead of an unbounded
     driver broadcast."""
@@ -564,7 +564,7 @@ def incremental_minhash_dedup(
     # of its sides, so unhinted it is never the broadcast side; once the
     # corpus shingle table passes the byte threshold, the verify then
     # shuffles that table. The probe's partitions land in cand's persist.
-    if cand.limit(broadcast_max_candidates + 1).count() <= broadcast_max_candidates:
+    if cand.limit(BROADCAST_MAX_CANDIDATES + 1).count() <= BROADCAST_MAX_CANDIDATES:
         cand = F.broadcast(cand)
     sa = sets_new.select(
         F.col(id_col).alias("__new_id"), F.col("shingles").alias("__sh_a")
@@ -765,7 +765,6 @@ def simhash_near_pairs(
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_block: int | None = 10000,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
 
@@ -773,7 +772,7 @@ def simhash_near_pairs(
     chunks; any pair within distance d must agree on ≥1 chunk, so candidates
     are an equi-join on (chunk_index, chunk_value) — never all-pairs.
 
-    ``max_block`` caps the (chunk, cval) block size: a block of b docs
+    ``MAX_BLOCK`` caps the (chunk, cval) block size: a block of b docs
     contributes b² candidates, so one degenerate chunk value (e.g. the
     all-zeros chunk produced by short or templated documents) shared by a
     large corpus slice is a quadratic blowup. Blocks above the cap are
@@ -781,7 +780,7 @@ def simhash_near_pairs(
     blocks is missed (bounded recall trade-off; Hamming verification means
     precision is unaffected). With 16-bit chunks a uniform corpus needs
     >655M docs before an average block reaches 10k, so the cap only fires
-    on pathological value skew. ``max_block=None`` disables.
+    on pathological value skew.
     """
     chunks = max_hamming + 1
     width = 64 // chunks
@@ -809,14 +808,13 @@ def simhash_near_pairs(
             )
         ).alias("p"),
     ).select("__id", "simhash", "p.chunk", "p.cval")
-    if max_block is not None:
-        hot = (
-            pieces.groupBy("chunk", "cval")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_block)
-            .select("chunk", "cval")
-        )
-        pieces = pieces.join(F.broadcast(hot), ["chunk", "cval"], "left_anti")
+    hot = (
+        pieces.groupBy("chunk", "cval")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > MAX_BLOCK)
+        .select("chunk", "cval")
+    )
+    pieces = pieces.join(F.broadcast(hot), ["chunk", "cval"], "left_anti")
 
     cand = (
         pieces.alias("x")
@@ -954,7 +952,6 @@ def containment_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_df: int | None = 1000,
 ) -> DataFrame:
     """Near-SUBSET detection: n-gram containment pairs, the asymmetric
     companion to Jaccard. Containment of the smaller shingle set in the
@@ -963,15 +960,14 @@ def containment_pairs(
     a 1000-line page has Jaccard ≈ 0.01 but containment ≈ 1.0) — the
     standard second screen of a substring-aware dedup pass.
 
-    Same inverted-index plan and hot-shingle ``max_df`` cap as
+    Same inverted-index plan and hot-shingle ``MAX_DF`` cap as
     :func:`jaccard_pairs` (a shingle in d docs is d² candidate pairs);
     containment is an exact int/int division — oracle-hashable. Returns
     (id_a, id_b, containment) with id_a < id_b."""
     sets = shingle_sets(df, n=n, text_col=text_col, id_col=id_col)
-    inv = _inverted_index(sets, id_col)
-    if max_df is not None:
-        inv = _drop_hot_shingles(inv, max_df)
-    inv = inv.localCheckpoint(eager=True)
+    inv = _drop_hot_shingles(_inverted_index(sets, id_col), MAX_DF).localCheckpoint(
+        eager=True
+    )
     with_sizes = _common_with_sizes(inv, _index_sizes(inv))
     cont = F.col("__common") / F.least(F.col("__sz_a"), F.col("__sz_b"))
     return with_sizes.select("id_a", "id_b", cont.alias("containment")).filter(
@@ -983,7 +979,6 @@ def fuzzy_name_pairs(
     df: DataFrame,
     name_col: str,
     max_dist: int = 4,
-    max_block: int | None = 10_000,
 ) -> DataFrame:
     """Entity-resolution fuzzy self-join: distinct-name blocking +
     Levenshtein verify — the classic record-linkage plan (Fellegi-Sunter
@@ -996,18 +991,18 @@ def fuzzy_name_pairs(
     2. blocking: equi-join names on a cheap deterministic key (the first
        lowercase whitespace token) — the ER analogue of LSH banding.
        Pairs in different blocks are never compared (documented recall
-       trade-off, same contract as ``jaccard_pairs(max_df=...)``);
+       trade-off, same contract as jaccard_pairs' ``MAX_DF``);
     3. length prefilter ``abs(len(a)-len(b)) <= max_dist`` inside the join
        condition — a free edit-distance lower bound that prunes before the
        O(len*len) levenshtein;
     4. verify ``levenshtein(a, b) <= max_dist`` — JVM built-in, whole-stage
        codegen, never Python.
 
-    ``max_block`` caps block membership (distinct names per block), the
-    twin of ``jaccard_pairs``' ``max_df``: one degenerate block (every name
+    ``MAX_BLOCK`` caps block membership (distinct names per block), the
+    twin of jaccard_pairs' ``MAX_DF``: one degenerate block (every name
     starting "the") is a quadratic blowup, so blocks above the cap are
     dropped from the comparison universe via a broadcast anti-join. When no
-    block exceeds the cap the output is bit-identical to the uncapped form.
+    block exceeds the cap the output is every pair within ``max_dist``.
 
     Returns (name_a, name_b, dist, rows_a, rows_b) with name_a < name_b.
     """
@@ -1021,14 +1016,13 @@ def fuzzy_name_pairs(
     from pyspark import StorageLevel
 
     names = pin(names.withColumn("__blk", blk), StorageLevel.MEMORY_AND_DISK)
-    if max_block is not None:
-        hot = (
-            names.groupBy("__blk")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_block)
-            .select("__blk")
-        )
-        names = names.join(F.broadcast(hot), "__blk", "left_anti")
+    hot = (
+        names.groupBy("__blk")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > MAX_BLOCK)
+        .select("__blk")
+    )
+    names = names.join(F.broadcast(hot), "__blk", "left_anti")
     a = names.select(
         F.col("__nm").alias("name_a"), F.col("__rows").alias("rows_a"), "__blk"
     )
@@ -1078,9 +1072,9 @@ def jaccard_prefix_pairs(
     ordering puts each doc's most selective shingles in its prefix, and hot
     boilerplate shingles sort LAST — they essentially never enter a prefix,
     which yields the skew protection jaccard_pairs needs an explicit
-    ``max_df`` stop-shingle cap for, WITHOUT changing the similarity
+    ``MAX_DF`` stop-shingle cap for, WITHOUT changing the similarity
     universe. Results are therefore exactly the unfiltered threshold pairs
-    (same oracle as jaccard_pairs with max_df=None), and the filter is
+    (jaccard_pairs' when no shingle passes ``MAX_DF``), and the filter is
     complete by construction — property-tested against jaccard_pairs.
 
     Stages (all linear except the prefix self-join):
@@ -1117,7 +1111,7 @@ def jaccard_prefix_pairs(
 
     Memory shape: stage 4 collects each prefix token's whole posting list
     into ONE ``collect_list`` aggregation buffer, with no cap — losslessness
-    forbids dropping a hot token the way ``minhash_lsh_pairs(max_bucket=)``
+    forbids dropping a hot token the way minhash_lsh_pairs' ``MAX_BUCKET``
     drops a hot bucket. A token in the prefix of d documents therefore
     costs one O(d) struct array in a single task's executor memory (e.g.
     thousands of identical documents all share their prefix tokens),

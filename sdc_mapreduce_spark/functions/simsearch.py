@@ -735,20 +735,19 @@ def embedding_near_pairs_blocked(
     corpus: DataFrame,
     threshold: float = 0.4,
     n_planes: int = 4,
-    multi_probe_bits: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
     chunk: int = 2048,
 ) -> DataFrame:
     """SRP-blocked approximate near-pair detection — the scale path that
-    replaces the exact O(n²) self-join: vectors pair only
-    within the same (or, with multi-probe, 1-bit-adjacent) SRP bucket, then
-    exact cosine filters the candidates. Expected candidate volume is
+    replaces the exact O(n²) self-join: vectors pair only within the same
+    or a 1-bit-adjacent SRP bucket (multi-probe), then exact cosine filters
+    the candidates. Expected candidate volume is
     n²·(collision probability) ≈ n²·(1 - θ/π)^planes — tune n_planes so
     per-bucket populations fit a shuffle partition. Approximate by nature
-    (pairs crossing > multi_probe_bits sign flips are missed); the result
-    is exactly the exhaustive operator's pairs restricted to that probe
+    (pairs crossing more than one sign flip are missed); the result is
+    exactly the exhaustive operator's pairs restricted to that probe
     radius, asserted in unit tests.
 
     The exact-cosine verify runs INSIDE each SRP bucket group
@@ -765,11 +764,11 @@ def embedding_near_pairs_blocked(
       (left-fold sum of squares from 0.0, correctly-rounded sqrt,
       elementwise divide), so every downstream double is bit-identical.
     - **Up-probes only, triangle in-kernel**: a vector's shuffled rows are
-      its home row plus — with multi-probe — one visitor row per flip
-      ABOVE its bucket (``probe > bucket``; expected planes/2), so a
-      cross-bucket pair is scored once (id order normalized after
-      extraction), and same-bucket pairs come from the home block scored
-      against itself with the ascending-id half kept.
+      its home row plus one visitor row per flip ABOVE its bucket
+      (``probe > bucket``; expected planes/2), so a cross-bucket pair is
+      scored once (id order normalized after extraction), and same-bucket
+      pairs come from the home block scored against itself with the
+      ascending-id half kept.
     - **float32 prefilter, float64 left-fold decision**: each block is
       scored by one SGEMM; only pairs with ``S32 >= threshold - _F32_EPS``
       are extracted, and every extracted pair is re-scored with the exact
@@ -832,25 +831,20 @@ def embedding_near_pairs_blocked(
         h_salt.alias("__salt"),
         F.lit(True).alias("__home"),
     )
-    if multi_probe_bits >= 1:
-        flips = F.array(
-            *[
-                F.col("__bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                for i in range(n_planes)
-            ]
-        )
-        visitors = prepared.select(
-            "__id",
-            "__e",
-            F.explode(F.filter(flips, lambda p: p > F.col("__bucket"))).alias(
-                "__g"
-            ),
-            v_salt.alias("__salt"),
-            F.lit(False).alias("__home"),
-        )
-        rows = homes.unionByName(visitors)
-    else:
-        rows = homes
+    flips = F.array(
+        *[
+            F.col("__bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
+            for i in range(n_planes)
+        ]
+    )
+    visitors = prepared.select(
+        "__id",
+        "__e",
+        F.explode(F.filter(flips, lambda p: p > F.col("__bucket"))).alias("__g"),
+        v_salt.alias("__salt"),
+        F.lit(False).alias("__home"),
+    )
+    rows = homes.unionByName(visitors)
     f32_cut = np.float32(threshold - _F32_EPS)
 
     def _unitize(raw_objs) -> "np.ndarray":

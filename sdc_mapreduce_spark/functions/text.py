@@ -37,6 +37,15 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 STOPWORDS = tuple(sorted({w for ws in LANG_MARKERS.values() for w in ws}))
 
+# tfidf_cosine_pairs drops terms in more than TFIDF_MAX_DF documents: a
+# term in d documents is d² candidate pairs (jaccard_pairs' MAX_DF twin).
+TFIDF_MAX_DF = 1000
+# encode_with_vocab's id for an out-of-vocabulary token; vocabulary ids
+# start at 1.
+OOV_ID = 0
+# unigram_lm's hard-EM rounds.
+EM_ITERS = 2
+
 
 def tokens(text_col: str | Column = "text") -> Column:
     col = F.col(text_col) if isinstance(text_col, str) else text_col
@@ -1015,11 +1024,10 @@ def encode_with_vocab(
     vocab: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    oov_id: int = 0,
     max_vocab: int = 50_000_000,
 ) -> DataFrame:
     """Tokenizer ENCODE step — the apply-side of :func:`vocab_ids`: map every
-    token of every document to its dense vocabulary id (``oov_id`` for
+    token of every document to its dense vocabulary id (``OOV_ID`` for
     out-of-vocabulary), preserving order. Emits per document:
     (doc_id, n_tokens, n_oov, ids_fp) where ids_fp is the md5 of the
     space-joined id sequence — the byte-exact witness of the encoded stream
@@ -1091,9 +1099,9 @@ def encode_with_vocab(
             ids_fp, n_tokens, n_oov = [], [], []
             for text in pdf["__text"].astype(str):
                 toks = splitter.split(text.strip(" "))
-                ids = [m.get(t, oov_id) for t in toks]
+                ids = [m.get(t, OOV_ID) for t in toks]
                 n_tokens.append(len(ids))
-                n_oov.append(sum(1 for i in ids if i == oov_id))
+                n_oov.append(sum(1 for i in ids if i == OOV_ID))
                 ids_fp.append(
                     hashlib.md5(" ".join(map(str, ids)).encode()).hexdigest()
                 )
@@ -1117,7 +1125,6 @@ def encode_with_vocab(
 def tfidf_cosine_pairs(
     df: DataFrame,
     threshold: float = 0.3,
-    max_df: int | None = 1000,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -1131,7 +1138,7 @@ def tfidf_cosine_pairs(
     division: hash-replayable cross-engine.
 
     Plan: inverted-index equi-join on term (never all-pairs) with the same
-    hot-term ``max_df`` cap as jaccard_pairs (a term in d docs is d² pair
+    hot-term cap as jaccard_pairs, ``TFIDF_MAX_DF`` (a term in d docs is d² pair
     candidates; stop-words carry no signal); norms join back broadcast-side
     from a doc-keyed aggregate. Cost tracks term co-occurrence — the sparse
     analog of the LSH bucket join. Returns (id_a, id_b, cosine) ≥ threshold
@@ -1141,9 +1148,11 @@ def tfidf_cosine_pairs(
         .groupBy("__id", "t")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfreq = pairs_tf.groupBy("t").agg(F.count(F.lit(1)).alias("df_t"))
-    if max_df is not None:
-        dfreq = dfreq.filter(F.col("df_t") <= max_df)
+    dfreq = (
+        pairs_tf.groupBy("t")
+        .agg(F.count(F.lit(1)).alias("df_t"))
+        .filter(F.col("df_t") <= TFIDF_MAX_DF)
+    )
     n_docs = df.select(F.col(id_col)).distinct().agg(
         F.count(F.lit(1)).alias("__n")
     )
@@ -1621,7 +1630,6 @@ def unigram_lm(
     max_piece_len: int = 4,
     max_word_len: int = 12,
     seed_multi: int = 128,
-    em_iters: int = 2,
     top_out: int = 60,
 ) -> DataFrame:
     """Unigram-LM tokenizer learner (Kudo, ACL'18 — the SentencePiece
@@ -1643,7 +1651,7 @@ def unigram_lm(
        highest-weight substrings of length 2..``max_piece_len`` (weight =
        sum of freq over words containing the substring at each position;
        ties piece ASC). Seed probability = weight / total seed weight;
-    3. per EM round: Viterbi-segment each distinct word (maximize summed
+    3. per EM round (``EM_ITERS`` of them): Viterbi-segment each distinct word (maximize summed
        micro-nat log-probs, integer arithmetic, ties to the smaller
        boundary), count pieces on the 1-best paths weighted by word freq,
        re-normalize to new log-probs. Unused pieces drop out (standard
@@ -1664,12 +1672,6 @@ def unigram_lm(
     build, rounds stay identical — only seed_multi grows.
     """
     import pandas as pd
-
-    if em_iters < 1:
-        # ADVICE r12: em_iters=0 would leave counts=None and crash at the
-        # final counts.agg with an opaque AttributeError — fail loudly at
-        # entry.
-        raise ValueError(f"em_iters must be >= 1, got {em_iters}")
 
     spark = df.sparkSession
     words = (
@@ -1716,7 +1718,7 @@ def unigram_lm(
 
     vocab = {r["piece"]: int(r["lp"]) for r in _lp_rows(seed)}
     counts = None
-    for t in range(em_iters):
+    for t in range(EM_ITERS):
         bc = spark.sparkContext.broadcast(vocab)
 
         def kernel(batches, _lpmap=bc, _m=int(max_piece_len)):
@@ -1737,7 +1739,7 @@ def unigram_lm(
             .localCheckpoint(eager=True)  # O(vocab) rows; truncates the
             # Arrow-kernel lineage so later consumers don't re-segment
         )
-        if t < em_iters - 1:
+        if t < EM_ITERS - 1:
             vocab = {r["piece"]: int(r["lp"]) for r in _lp_rows(counts)}
 
     total = counts.agg(F.sum("c").alias("__t"))

@@ -9,8 +9,9 @@ executes the fixed map→reduce DAG, then marks the znode COMPLETED
 (reference src/master/master.cpp:374-381).
 
 Here a job is a named DataFrame plan + sink; the queue is an in-process
-FIFO (sequence-numbered like ZK sequential znodes) whose runner executes
-one job at a time — the single-leader semantics of the reference master.
+FIFO (sequence-numbered like ZK sequential znodes) backed by one JSON state
+file per job, and its runner executes one job at a time — the
+single-leader semantics of the reference master.
 Spark's DAGScheduler replaces the task-level scheduling entirely
 (SURVEY.md O18: FIFO × first-idle-worker becomes locality-aware task
 slots); what this module keeps is the *durable job-spec + status
@@ -44,6 +45,10 @@ FAILED = "FAILED"
 # before it starts, and a running one is interrupted via Spark job-group
 # cancellation (JobRunner.cancel).
 CANCELLED = "CANCELLED"
+# The CREATED backlog a queue accepts; a submit past it raises
+# QueueFullError (HTTP 429 from webclient.JobServer). The reference has no
+# such bound — its queue is ZooKeeper-limited only.
+MAX_PENDING = 1000
 
 
 @dataclass
@@ -104,19 +109,15 @@ class JobQueue:
     for it.
     """
 
-    def __init__(
-        self, state_dir: str | None = None, max_pending: int | None = None
-    ) -> None:
+    def __init__(self, state_dir: str) -> None:
         self._jobs: dict[int, Job] = {}
         self._seq = 0
         self._cond = threading.Condition()
         self._closed = False
-        self._max_pending = max_pending
-        self._state_dir = Path(state_dir) if state_dir else None
-        if self._state_dir:
-            self._state_dir.mkdir(parents=True, exist_ok=True)
-            with self._cond:
-                self._recover()
+        self._state_dir = Path(state_dir)
+        self._state_dir.mkdir(parents=True, exist_ok=True)
+        with self._cond:
+            self._recover()
 
     def _recover(self) -> None:
         """Reload persisted job records on construction — the restart
@@ -169,10 +170,8 @@ class JobQueue:
             # the pending bound is enforced HERE, under the queue lock, so
             # two concurrent submits can never both take the last slot
             pending = len(self._created())
-            if self._max_pending is not None and pending >= self._max_pending:
-                raise QueueFullError(
-                    f"job queue full ({pending} pending >= {self._max_pending})"
-                )
+            if pending >= MAX_PENDING:
+                raise QueueFullError(f"job queue full ({pending} pending >= {MAX_PENDING})")
             self._seq += 1
             job = Job(
                 job_id=self._seq, plan=plan, sink=sink, name=name, conf=conf or {}
@@ -181,19 +180,17 @@ class JobQueue:
             self._publish(job)
             return job.job_id
 
-    def claim_next(self, wait: bool = False) -> Job | None:
+    def claim_next(self) -> Job | None:
         """Atomically claim the lowest-sequence CREATED job: flips it to
         RUNNING under the lock so concurrent runner workers never execute
         the same job twice (the multi-worker analog of the reference
-        master's single-leader scan). With ``wait``, block until a job
-        arrives; None once the queue is closed."""
+        master's single-leader scan). Blocks until a job arrives; None once
+        the queue is closed."""
         with self._cond:
-            if wait:
-                self._cond.wait_for(lambda: self._closed or self._created())
-            created = [] if self._closed else self._created()
-            if not created:
+            self._cond.wait_for(lambda: self._closed or self._created())
+            if self._closed:
                 return None
-            job = created[0]
+            job = self._created()[0]
             job.status = RUNNING
             job.started_at = time.time()
             self._publish(job)
@@ -203,8 +200,8 @@ class JobQueue:
         self,
         job: Job,
         status: str,
-        error: str | None = None,
-        result_rows: int | None = None,
+        error: str | None,
+        result_rows: int | None,
     ) -> None:
         """Publish a claimed job's outcome: every terminal field lands in
         the same step, so no reader sees COMPLETED without ``finished_at``
@@ -230,10 +227,6 @@ class JobQueue:
             ):
                 raise TimeoutError(f"job {job_id} still {job.status} after {timeout}s")
             return job.status
-
-    def pending_count(self) -> int:
-        with self._cond:
-            return len(self._created())
 
     def _created(self) -> list[Job]:
         return [j for _, j in sorted(self._jobs.items()) if j.status == CREATED]
@@ -280,11 +273,10 @@ class JobQueue:
         # woken reader and the disk agree. Written atomically (tmp + rename)
         # so a crash mid-write — the exact scenario recovery exists for —
         # can never leave a truncated record that poisons the next _recover.
-        if self._state_dir:
-            final = self._state_dir / f"job_{job.job_id}.json"
-            tmp = final.with_suffix(".json.tmp")
-            tmp.write_text(json.dumps(job.record()))
-            os.replace(tmp, final)
+        final = self._state_dir / f"job_{job.job_id}.json"
+        tmp = final.with_suffix(".json.tmp")
+        tmp.write_text(json.dumps(job.record()))
+        os.replace(tmp, final)
         self._cond.notify_all()
 
 
@@ -307,17 +299,13 @@ class JobRunner:
         self.spark = spark
         self.queue = queue
 
-    def run_pending(self, wait: bool = False) -> int:
-        """Run every CREATED job in sequence order; return count executed.
-        With ``wait``, keep taking jobs as they arrive until the queue is
-        closed. Claims are atomic (JobQueue.claim_next), so any number of
-        worker threads can call this concurrently without double-running a
-        job."""
-        n = 0
-        while (job := self.queue.claim_next(wait)) is not None:
+    def run_pending(self) -> None:
+        """Run jobs in sequence order as they arrive until the queue is
+        closed: a runner thread's loop. Claims are atomic
+        (JobQueue.claim_next), so any number of worker threads can run this
+        concurrently without double-running a job."""
+        while (job := self.queue.claim_next()) is not None:
             self._run(job)
-            n += 1
-        return n
 
     def cancel(self, job_id: int) -> str:
         """Cancel a job wherever it is in the lifecycle; returns the job's

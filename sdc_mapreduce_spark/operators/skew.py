@@ -22,6 +22,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
+# sessionize_auto picks the chunked plan when its probe estimates more
+# than MAX_ROWS_PER_TASK rows for one key (~a comfortable single-task
+# window sort at ~100 B/row); the probe samples SAMPLE_FRACTION of the
+# key column.
+MAX_ROWS_PER_TASK = 500_000
+SAMPLE_FRACTION = 0.05
 
 
 def sessionize_plain(
@@ -59,7 +65,6 @@ def sessionize_chunked(
     user_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    chunk: str = "day",
 ) -> DataFrame:
     """Skew-resistant sessionization, result-identical to the plain
     single-window plan (queries/events_queries.py::events_sessionize).
@@ -68,10 +73,10 @@ def sessionize_chunked(
     depends on the gap to the *previous* event, so a user's stream must stay
     ordered. The scalable decomposition is time-chunking:
 
-    1. per-(user, chunk) local sessionize — the per-EVENT window work, the
-       expensive pass, now split across ``chunk`` units (default: day), so a
-       hot user holding 50% of all events occupies as many partitions as
-       they have active days instead of one;
+    1. per-(user, day) local sessionize — the per-EVENT window work, the
+       expensive pass, now split across days, so a hot user holding 50% of
+       all events occupies as many partitions as they have active days
+       instead of one;
     2. collapse each local session to one span row (start, end, n_events) —
        a partial aggregation that shrinks the data by the mean session size
        before anything is re-keyed by bare user;
@@ -99,13 +104,10 @@ def sessionize_chunked(
     is known-bounded.
     """
     gap = F.expr(f"INTERVAL '{gap_minutes}' MINUTE")
-    # day chunks use to_date (a 4-byte DATE key): measurably cheaper than a
-    # date_trunc TIMESTAMP key through the window's exchange+sort at bench
-    # scale, identical chunk boundaries
-    chunk_key = (
-        F.to_date(F.col(ts_col)) if chunk == "day" else F.date_trunc(chunk, F.col(ts_col))
-    )
-    chunked = ev.withColumn("__chunk", chunk_key)
+    # day chunks keyed by to_date (a 4-byte DATE key): measurably cheaper
+    # than a date_trunc TIMESTAMP key through the window's exchange+sort at
+    # bench scale, identical chunk boundaries
+    chunked = ev.withColumn("__chunk", F.to_date(F.col(ts_col)))
     w_local = Window.partitionBy(user_col, "__chunk").orderBy(
         F.col(ts_col).asc(), F.col(id_col).asc()
     )
@@ -148,17 +150,15 @@ def sessionize_auto(
     user_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    max_rows_per_task: int = 500_000,
-    sample_fraction: float = 0.05,
     seed: int = 42,
 ) -> DataFrame:
     """Statistics-driven sessionize plan selection (VERDICT r9 ask #8):
     the chunked/plain regime split documented on sessionize_chunked, as
-    code instead of advice. One cheap probe — sample ``sample_fraction``
+    code instead of advice. One cheap probe — sample ``SAMPLE_FRACTION``
     of the KEY COLUMN ONLY (column-pruned scan, no other columns move),
     count rows per key, scale the max back up — then:
 
-    - estimated max-key rows > ``max_rows_per_task``: some key would
+    - estimated max-key rows > ``MAX_ROWS_PER_TASK``: some key would
       overflow a single window task's sort at materialization time →
       ``sessionize_chunked`` (the hot key spreads over its active days);
     - otherwise: ``sessionize_plain`` — one shuffle, no second pipeline,
@@ -168,26 +168,15 @@ def sessionize_auto(
     shuffle rows, independent of fact width. The two candidate plans are
     result-identical (shared oracle; tests/test_skew.py), so a sampling
     misestimate near the threshold costs only the plans' measured
-    ~0.3-0.4 s constant, never correctness. Default threshold 500k rows
-    ≈ a comfortable single-task window sort at ~100 B/row; tune DOWN for
-    wide rows or small executors. ``sample_fraction=1.0`` probes exactly
-    (still just (key, count) rows through the shuffle).
+    ~0.3-0.4 s constant, never correctness.
 
     Every call runs its own probe: caching the answer per plan would be
     process-global state that silently goes stale when the data behind a
     plan changes."""
-    if not (0.0 < sample_fraction <= 1.0):
-        # validated up front (ADVICE r10): 0 would div-by-zero at est_max
-        # and a negative value fails opaquely inside Spark's sample()
-        raise ValueError(
-            f"sample_fraction must be in (0, 1], got {sample_fraction}"
-        )
-    probe = ev.select(user_col)
-    if sample_fraction < 1.0:
-        probe = probe.sample(fraction=sample_fraction, seed=seed)
+    probe = ev.select(user_col).sample(fraction=SAMPLE_FRACTION, seed=seed)
     row = probe.groupBy(user_col).count().agg(F.max("count").alias("mx")).first()
-    est_max = (row["mx"] or 0) / sample_fraction
-    plan = sessionize_chunked if est_max > max_rows_per_task else sessionize_plain
+    est_max = (row["mx"] or 0) / SAMPLE_FRACTION
+    plan = sessionize_chunked if est_max > MAX_ROWS_PER_TASK else sessionize_plain
     return plan(
         ev,
         gap_minutes=gap_minutes,

@@ -601,10 +601,10 @@ DEDUP_CONTAINMENT_SQL = f"""
 WITH {_shingles_sql()}, inv0 AS (
   SELECT doc_id, UNNEST(shingles) AS s FROM sh
 ), keep AS (
-  -- hot-shingle cap: mirror the Spark side's max_df=1000 (same pattern as
+  -- hot-shingle cap: mirror the Spark side's max_df={D.MAX_DF} (same pattern as
   -- TEXT_TFIDF_COSINE_SQL's HAVING df <= 1000); set sizes are derived from
   -- the CAPPED shingle set, matching containment_pairs exactly
-  SELECT s FROM inv0 GROUP BY s HAVING COUNT(*) <= 1000
+  SELECT s FROM inv0 GROUP BY s HAVING COUNT(*) <= {D.MAX_DF}
 ), inv AS (
   SELECT doc_id, s FROM inv0 JOIN keep USING (s)
 ), sz AS (
@@ -752,7 +752,6 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings"),
         threshold=0.4,
         n_planes=6,
-        multi_probe_bits=1,
     )
     # persist BEFORE the output sort: the verify stage has no shuffle
     # barrier, so the range-sort's boundary-sampling job would otherwise

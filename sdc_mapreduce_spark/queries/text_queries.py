@@ -1327,14 +1327,14 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-TEXT_TFIDF_COSINE_SQL = """
+TEXT_TFIDF_COSINE_SQL = f"""
 WITH tf AS (
   SELECT doc_id, t, COUNT(*) AS tf FROM (
     SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS t
     FROM documents
   ) GROUP BY doc_id, t
 ), dfreq AS (
-  SELECT t, COUNT(*) AS df_t FROM tf GROUP BY t HAVING COUNT(*) <= 1000
+  SELECT t, COUNT(*) AS df_t FROM tf GROUP BY t HAVING COUNT(*) <= {T.TFIDF_MAX_DF}
 ), n AS (
   SELECT COUNT(DISTINCT doc_id) AS nd FROM documents
 ), w AS (
@@ -2260,7 +2260,6 @@ def _unigram_lm_sql(
     max_piece: int = 4,
     max_word: int = 12,
     seed_multi: int = 128,
-    em_iters: int = 2,
     top_out: int = 60,
 ) -> str:
     """Oracle twin of text_unigram_lm. The Viterbi dp is unrolled: for EM
@@ -2300,7 +2299,7 @@ WITH w0 AS MATERIALIZED (
   FROM seed
 )"""
     ]
-    for t in range(1, em_iters + 1):
+    for t in range(1, T.EM_ITERS + 1):
         parts.append(
             f""", dpall{t}_0 AS (
   SELECT w, 0 AS pos, CAST(0 AS BIGINT) AS score, 0 AS bj FROM w0
@@ -2356,7 +2355,7 @@ WITH w0 AS MATERIALIZED (
     parts.append(
         f"""
 SELECT piece, c AS cnt, lp AS logprob_micro
-FROM vocab{em_iters + 1}
+FROM vocab{T.EM_ITERS + 1}
 ORDER BY cnt DESC, piece ASC LIMIT {top_out}
 """
     )

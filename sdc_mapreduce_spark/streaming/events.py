@@ -11,9 +11,10 @@ event-time = ``ts``; late rows older than the watermark delay are dropped;
 windowed aggregates emit in append mode once the watermark passes window
 end. State stores stay bounded because every stateful operator below is
 keyed by (window | user) x watermark — the requirement for unbounded-input
-deployments. ``watermark=None`` runs a windowed, dedup or per-user
-operator without one, as the certifications do for finite replays in
-complete or update mode.
+deployments. The windowed, dedup and per-user operators take the
+watermark delay as a required argument; None runs one without a
+watermark, as the certifications do for finite replays in complete or
+update mode.
 """
 
 from __future__ import annotations
@@ -100,7 +101,8 @@ def sliding_counts(
     events: DataFrame,
     window: str = "10 minutes",
     slide: str = "5 minutes",
-    watermark: str | None = "10 minutes",
+    *,
+    watermark: str | None,
 ) -> DataFrame:
     """Sliding event-time window (overlapping assignment): each event
     counts in window/slide windows."""
@@ -113,7 +115,7 @@ def sliding_counts(
 
 
 def session_aggregate(
-    events: DataFrame, gap: str = "30 minutes", watermark: str | None = "30 minutes"
+    events: DataFrame, gap: str = "30 minutes", *, watermark: str | None
 ) -> DataFrame:
     """Session windows: dynamic-length windows that close after ``gap`` of
     per-user inactivity (``F.session_window``, merging across
@@ -162,9 +164,7 @@ def stream_stream_error_purchase_join(
     ).select("error_event_id", "purchase_event_id", "user_id")
 
 
-def stateful_user_totals(
-    events: DataFrame, watermark: str | None = "10 minutes"
-) -> DataFrame:
+def stateful_user_totals(events: DataFrame, *, watermark: str | None) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: per-user
     lifetime totals (event count + value sum), re-emitted on every update.
 
@@ -210,12 +210,13 @@ def stateful_user_totals(
 def streaming_dedup(
     events: DataFrame,
     keys: list[str],
-    watermark: str | None = "10 minutes",
+    *,
+    watermark: str | None,
 ) -> DataFrame:
-    """Streaming exact dedup on ``keys``. With a watermark,
+    """Streaming exact dedup on ``keys``. With a watermark delay,
     ``dropDuplicatesWithinWatermark`` keeps state only for the watermark
-    window, the bounded-state form; ``watermark=None`` is ``dropDuplicates``
-    over the whole stream (exact, unbounded state)."""
+    window, the bounded-state form; without one (None) it is
+    ``dropDuplicates`` over the whole stream (exact, unbounded state)."""
     if watermark is None:
         return events.dropDuplicates(keys)
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)

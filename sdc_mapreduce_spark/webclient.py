@@ -1,4 +1,4 @@
-"""HTTP job-submission facade over the in-process JobQueue.
+"""HTTP job-submission facade over the JobQueue.
 
 The reference exposes job submission as a tiny REST endpoint (reference
 src/webclient/webclient.cpp:17-55): ``POST /`` with JSON
@@ -27,7 +27,7 @@ sharder implements by hand (src/master/sharding.h:28-83).
 
 Usage::
 
-    server = JobServer(spark, port=0)   # port=0 -> ephemeral
+    server = JobServer(spark, state_dir)   # port 0 (the default) -> ephemeral
     server.start()
     requests.post(f"http://localhost:{server.port}/", json={...})
     server.stop()
@@ -278,24 +278,23 @@ class JobServer(ThreadingHTTPServer):
     semantics) caps how many jobs execute at once inside the shared Spark
     session — Spark's FAIR/FIFO scheduler multiplexes their stages across
     the same executors, so the bound is about driver-side plan/action
-    concurrency, not cluster slots. ``max_pending`` bounds the CREATED
-    backlog: submissions past it get HTTP 429 instead of unbounded queue
-    growth (the reference has no such guard — its queue is ZK-limited
-    only)."""
+    concurrency, not cluster slots. The queue's CREATED backlog is bounded
+    by ``jobs.MAX_PENDING``: submissions past it get HTTP 429 instead of
+    unbounded queue growth. Job records persist under ``state_dir``, and a
+    server started on the same directory recovers them."""
 
     daemon_threads = True
 
     def __init__(
         self,
         spark: SparkSession,
+        state_dir: str,
         host: str = "127.0.0.1",
         port: int = 0,
-        state_dir: str | None = None,
         max_concurrent: int = 1,
-        max_pending: int | None = None,
     ) -> None:
         super().__init__((host, port), _Handler)
-        self.queue = JobQueue(state_dir=state_dir, max_pending=max_pending)
+        self.queue = JobQueue(state_dir)
         self.runner = JobRunner(spark, self.queue)
         self.max_concurrent = max(1, int(max_concurrent))
         self._workers: list[threading.Thread] = []
@@ -311,7 +310,6 @@ class JobServer(ThreadingHTTPServer):
         self._workers += [
             threading.Thread(
                 target=self.runner.run_pending,
-                args=(True,),
                 daemon=True,
                 name=f"sdc-runner-{i}",
             )

@@ -293,24 +293,29 @@ def test_rolling_fingerprint_fold(spark):
     assert rolling_fingerprint(df2).collect()[0]["rolling_fp"] != acc
 
 
-def test_jaccard_max_df_cap_identity_below_cap(spark, sf_dir):
+# A cap above any fixture group's size: with it, no hot-key cap fires.
+_NO_CAP = 10**9
+
+
+def test_jaccard_max_df_cap_identity_below_cap(spark, sf_dir, monkeypatch):
     """When no shingle's document frequency exceeds the cap, the capped
     operator must be bit-identical to the uncapped one (pairs AND values)."""
     docs = load_table(spark, sf_dir, "documents").limit(120).cache()
     capped = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.jaccard_pairs(docs, n=3, threshold=0.5, max_df=1000).collect()
+        for r in D.jaccard_pairs(docs, n=3, threshold=0.5).collect()
     }
+    monkeypatch.setattr(D, "MAX_DF", _NO_CAP)
     uncapped = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.jaccard_pairs(docs, n=3, threshold=0.5, max_df=None).collect()
+        for r in D.jaccard_pairs(docs, n=3, threshold=0.5).collect()
     }
     assert capped == uncapped
 
 
-def test_jaccard_max_df_cap_drops_boilerplate(spark):
+def test_jaccard_max_df_cap_drops_boilerplate(spark, monkeypatch):
     """A shingle shared by every doc (boilerplate header) is excluded from
-    the universe when df > max_df: pairs whose ONLY overlap is boilerplate
+    the universe when df > MAX_DF: pairs whose ONLY overlap is boilerplate
     vanish, while genuinely-duplicated pairs survive."""
     header = "terms of service apply here"
     rows = [
@@ -319,42 +324,43 @@ def test_jaccard_max_df_cap_drops_boilerplate(spark):
         (3, f"{header} alpha beta gamma delta epsilon"),  # true dup of 1
     ]
     docs = spark.createDataFrame(rows, "doc_id int, text string")
-    # df(header shingles)=3 > max_df=2 -> header universe removed.
+    # df(header shingles)=3 > MAX_DF=2 -> header universe removed.
+    monkeypatch.setattr(D, "MAX_DF", 2)
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.jaccard_pairs(docs, n=3, threshold=0.2, max_df=2).collect()
+        for r in D.jaccard_pairs(docs, n=3, threshold=0.2).collect()
     }
     assert (1, 3) in got and got[(1, 3)] == 1.0
     assert (1, 2) not in got and (2, 3) not in got
     # Uncapped, the boilerplate overlap (3 of 13 union shingles = 0.23)
     # lifts (1,2)/(2,3) above 0.2.
+    monkeypatch.setattr(D, "MAX_DF", _NO_CAP)
     uncapped = {
         (r["id_a"], r["id_b"])
-        for r in D.jaccard_pairs(docs, n=3, threshold=0.2, max_df=None).collect()
+        for r in D.jaccard_pairs(docs, n=3, threshold=0.2).collect()
     }
     assert {(1, 2), (1, 3), (2, 3)} <= uncapped
 
 
-def test_simhash_max_block_cap(spark, sf_dir):
+def test_simhash_max_block_cap(spark, sf_dir, monkeypatch):
     """Fixture blocks are all far below the default cap -> identical pair
     sets; a degenerate corpus of identical docs (every block hot) yields no
     candidates when the cap fires."""
     docs = load_table(spark, sf_dir, "documents").limit(150).cache()
-    capped = {
-        (r["id_a"], r["id_b"])
-        for r in D.simhash_near_pairs(docs, max_hamming=3, max_block=10000).collect()
-    }
-    uncapped = {
-        (r["id_a"], r["id_b"])
-        for r in D.simhash_near_pairs(docs, max_hamming=3, max_block=None).collect()
-    }
-    assert capped == uncapped
     clones = spark.createDataFrame(
         [(i, "same exact text for every document") for i in range(20)],
         "doc_id int, text string",
     )
-    assert D.simhash_near_pairs(clones, max_hamming=3, max_block=10).count() == 0
-    assert D.simhash_near_pairs(clones, max_hamming=3, max_block=None).count() == 190
+
+    def pairs(df):
+        return {(r["id_a"], r["id_b"]) for r in D.simhash_near_pairs(df, max_hamming=3).collect()}
+
+    capped = pairs(docs)
+    monkeypatch.setattr(D, "MAX_BLOCK", _NO_CAP)
+    assert pairs(docs) == capped
+    assert len(pairs(clones)) == 190
+    monkeypatch.setattr(D, "MAX_BLOCK", 10)
+    assert pairs(clones) == set()
 
 
 def test_incremental_dedup_semantics(spark):
@@ -601,23 +607,24 @@ def test_exact_substring_shuffle_fallback_identical(spark):
     assert dropped[2] >= 1 and dropped[1] == 0
 
 
-def test_minhash_lsh_max_bucket_identity_below_cap(spark, sf_dir):
+def test_minhash_lsh_max_bucket_identity_below_cap(spark, sf_dir, monkeypatch):
     """On the fixture corpus no (band, bhash) bucket approaches the default
-    cap, so max_bucket=1000 and the uncapped run are identical (the LSH
-    twin of test_jaccard_max_df_cap_identity_below_cap)."""
+    cap, so MAX_BUCKET and the uncapped run are identical (the LSH twin of
+    test_jaccard_max_df_cap_identity_below_cap)."""
     docs = load_table(spark, sf_dir, "documents")
     capped = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_pairs(docs, threshold=0.8, max_bucket=1000).collect()
+        for r in D.minhash_lsh_pairs(docs, threshold=0.8).collect()
     }
+    monkeypatch.setattr(D, "MAX_BUCKET", _NO_CAP)
     uncapped = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_pairs(docs, threshold=0.8, max_bucket=None).collect()
+        for r in D.minhash_lsh_pairs(docs, threshold=0.8).collect()
     }
     assert capped == uncapped and len(capped) > 0
 
 
-def test_minhash_lsh_max_bucket_prunes_templated_corpus(spark):
+def test_minhash_lsh_max_bucket_prunes_templated_corpus(spark, monkeypatch):
     """An adversarial/templated corpus where every doc lands in one hot
     (band, bhash) bucket: a tiny cap drops those band rows, so the
     quadratic bucket never reaches the self-join (recall trade-off is the
@@ -626,9 +633,11 @@ def test_minhash_lsh_max_bucket_prunes_templated_corpus(spark):
     candidates survive."""
     text = " ".join(f"w{i}" for i in range(30))
     df = spark.createDataFrame([(i, text) for i in range(12)], ["doc_id", "text"])
-    uncapped = D.minhash_lsh_pairs(df, threshold=0.8, max_bucket=None).collect()
+    monkeypatch.setattr(D, "MAX_BUCKET", _NO_CAP)
+    uncapped = D.minhash_lsh_pairs(df, threshold=0.8).collect()
     assert len(uncapped) == 12 * 11 // 2  # identical docs: all pairs
-    capped = D.minhash_lsh_pairs(df, threshold=0.8, max_bucket=5).collect()
+    monkeypatch.setattr(D, "MAX_BUCKET", 5)
+    capped = D.minhash_lsh_pairs(df, threshold=0.8).collect()
     assert capped == []
 
 
@@ -650,21 +659,15 @@ def test_minhash_lsh_verify_gate_fallback_identical(spark, sf_dir):
     assert base == fallback
 
 
-def test_incremental_minhash_verify_gate_fallback_identical(spark, sf_dir):
+def test_incremental_minhash_verify_gate_fallback_identical(spark, sf_dir, monkeypatch):
     """Forcing the candidate-broadcast probe past its threshold must take
     the shuffle-join verify path with identical screening output."""
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     existing = docs.filter(F.col("doc_id") % 5 != 0)
     base = sorted(map(tuple, D.incremental_minhash_dedup(batch, existing).collect()))
-    fallback = sorted(
-        map(
-            tuple,
-            D.incremental_minhash_dedup(
-                batch, existing, broadcast_max_candidates=0
-            ).collect(),
-        )
-    )
+    monkeypatch.setattr(D, "BROADCAST_MAX_CANDIDATES", 0)
+    fallback = sorted(map(tuple, D.incremental_minhash_dedup(batch, existing).collect()))
     assert base == fallback and len(base) > 0
 
 
@@ -685,18 +688,18 @@ def test_fuzzy_name_pairs_blocking_and_verify(spark):
     assert rows == {("red bold", "red bolt"): (1, 1, 2)}
 
 
-def test_fuzzy_name_pairs_max_block_identity_and_prune(spark):
+def test_fuzzy_name_pairs_max_block_identity_and_prune(spark, monkeypatch):
     """Below the cap output is bit-identical to uncapped; a cap smaller
     than a block's membership removes that block from the universe."""
     df = spark.createDataFrame(
         [(1, "red bolt"), (2, "red bold"), (3, "red boat")], ["id", "nm"]
     )
     capped = sorted(map(tuple, D.fuzzy_name_pairs(df, "nm").collect()))
-    uncapped = sorted(
-        map(tuple, D.fuzzy_name_pairs(df, "nm", max_block=None).collect())
-    )
+    monkeypatch.setattr(D, "MAX_BLOCK", _NO_CAP)
+    uncapped = sorted(map(tuple, D.fuzzy_name_pairs(df, "nm").collect()))
     assert capped == uncapped and len(capped) == 3
-    assert D.fuzzy_name_pairs(df, "nm", max_block=2).count() == 0
+    monkeypatch.setattr(D, "MAX_BLOCK", 2)
+    assert D.fuzzy_name_pairs(df, "nm").count() == 0
 
 
 def test_fuzzy_name_pairs_matches_bruteforce(spark, sf_dir):
@@ -852,14 +855,15 @@ def test_dedup_keep_best_prefers_quality_over_min_id(spark, tmp_path):
 # --- AllPairs/PPJoin prefix filtering (r11) -------------------------------
 
 
-def test_jaccard_prefix_parity_with_inverted_index(spark, sf_dir):
+def test_jaccard_prefix_parity_with_inverted_index(spark, sf_dir, monkeypatch):
     """Prefix filtering is LOSSLESS: the candidate reduction must return
     exactly the unfiltered inverted-index result — ids AND jaccard values
     — at the registered threshold."""
     docs = load_table(spark, sf_dir, "documents")
+    monkeypatch.setattr(D, "MAX_DF", _NO_CAP)
     full = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.jaccard_pairs(docs, n=3, threshold=0.8, max_df=None).collect()
+        for r in D.jaccard_pairs(docs, n=3, threshold=0.8).collect()
     }
     pref = {
         (r["id_a"], r["id_b"]): r["jaccard"]

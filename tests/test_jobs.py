@@ -4,14 +4,37 @@
 from __future__ import annotations
 
 import json
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark import jobs as J
 
 
+@contextmanager
+def _runner(spark, q):
+    """One runner thread over ``q``, started the way JobServer.start starts
+    its runners; on exit the queue is closed and the thread joined."""
+    t = threading.Thread(target=J.JobRunner(spark, q).run_pending, daemon=True)
+    t.start()
+    try:
+        yield
+    finally:
+        q.close()
+        t.join(timeout=5)
+    assert not t.is_alive()
+
+
+def _run_all(spark, q) -> None:
+    """Run every job submitted to ``q`` so far to a terminal status."""
+    with _runner(spark, q):
+        for job in q.all():
+            q.wait_for(job.job_id)
+
+
 def test_fifo_order_and_lifecycle(spark, tmp_path):
-    q = J.JobQueue(state_dir=str(tmp_path / "state"))
+    q = J.JobQueue(str(tmp_path / "state"))
     ran: list[int] = []
 
     def plan(tag):
@@ -24,10 +47,8 @@ def test_fifo_order_and_lifecycle(spark, tmp_path):
     j1 = q.submit(plan(1), name="first")
     j2 = q.submit(plan(2), name="second")
     assert q.status(j1) == J.CREATED and q.status(j2) == J.CREATED
-    assert q.pending_count() == 2
 
-    n = J.JobRunner(spark, q).run_pending()
-    assert n == 2
+    _run_all(spark, q)
     # the runner claims in sequence order — the reference master's
     # lowest-znode-first poll.
     assert ran == [1, 2]
@@ -62,7 +83,7 @@ def test_concurrent_queries_share_one_session(spark, sf_dir):
 
 
 def test_sink_and_failure(spark, tmp_path):
-    q = J.JobQueue()
+    q = J.JobQueue(str(tmp_path / "state"))
     out = tmp_path / "out"
 
     def ok_plan(s):
@@ -75,7 +96,7 @@ def test_sink_and_failure(spark, tmp_path):
 
     j_bad = q.submit(bad_plan, name="bad")
 
-    J.JobRunner(spark, q).run_pending()
+    _run_all(spark, q)
     assert q.status(j_ok) == J.COMPLETED
     assert spark.read.parquet(str(out)).count() == 5
     # The reference stalls forever on failure (quirk Q7); we record FAILED.
@@ -91,12 +112,12 @@ def test_queue_recovers_state_and_fails_orphans(spark, tmp_path):
     stalls forever on a lost task, quirk Q7)."""
     import json as _json
 
-    from sdc_mapreduce_spark.jobs import JobQueue, JobRunner
+    from sdc_mapreduce_spark.jobs import JobQueue
 
     state = tmp_path / "state"
-    q1 = JobQueue(state_dir=str(state))
+    q1 = JobQueue(str(state))
     done_id = q1.submit(lambda s: s.range(3), name="done")
-    JobRunner(spark, q1).run_pending()
+    _run_all(spark, q1)
     assert q1.status(done_id) == "COMPLETED"
     # simulate a crash mid-job: persist a RUNNING record by hand
     (state / "job_99.json").write_text(
@@ -114,13 +135,13 @@ def test_queue_recovers_state_and_fails_orphans(spark, tmp_path):
         )
     )
 
-    q2 = JobQueue(state_dir=str(state))
+    q2 = JobQueue(str(state))
     assert q2.status(done_id) == "COMPLETED"
     assert q2.job(done_id).result_rows == 3
     assert q2.status(99) == "FAILED"
     assert "orphaned" in q2.job(99).error
     # recovered orphans are terminal: nothing pending to re-run
-    assert q2.pending_count() == 0 and q2.claim_next() is None
+    assert all(j.status not in (J.CREATED, J.RUNNING) for j in q2.all())
     # sequence continues past the recovered max id
     new_id = q2.submit(lambda s: s.range(1), name="after-restart")
     assert new_id == 100
@@ -129,26 +150,27 @@ def test_queue_recovers_state_and_fails_orphans(spark, tmp_path):
 def test_recover_skips_corrupt_record(spark, tmp_path):
     """A truncated/garbage job file (external corruption; _publish itself is
     atomic) must not poison recovery of the healthy records."""
-    from sdc_mapreduce_spark.jobs import JobQueue, JobRunner
+    from sdc_mapreduce_spark.jobs import JobQueue
 
     state = tmp_path / "state"
-    q1 = JobQueue(state_dir=str(state))
+    q1 = JobQueue(str(state))
     ok = q1.submit(lambda s: s.range(2), name="ok")
-    JobRunner(spark, q1).run_pending()
+    _run_all(spark, q1)
     (state / "job_50.json").write_text('{"job_id": 50, "status": "RUNN')  # truncated
 
-    q2 = JobQueue(state_dir=str(state))
+    q2 = JobQueue(str(state))
     assert q2.status(ok) == "COMPLETED"
     assert 50 not in {j.job_id for j in q2.all()}
 
 
-def test_submit_enforces_pending_bound_atomically():
+def test_submit_enforces_pending_bound_atomically(tmp_path, monkeypatch):
     """The CREATED-backlog bound lives in submit, under the queue lock —
     the (N+1)th pending submit raises QueueFullError even with no HTTP
     pre-check in front of it."""
     import pytest
 
-    q = J.JobQueue(max_pending=2)
+    monkeypatch.setattr(J, "MAX_PENDING", 2)
+    q = J.JobQueue(str(tmp_path / "state"))
     q.submit(lambda s: None, name="a")
     q.submit(lambda s: None, name="b")
     with pytest.raises(J.QueueFullError):
@@ -158,12 +180,11 @@ def test_submit_enforces_pending_bound_atomically():
     assert q.submit(lambda s: None, name="c") == 3
 
 
-def test_genuine_failure_during_cancel_stays_failed(spark):
+def test_genuine_failure_during_cancel_stays_failed(spark, tmp_path):
     """A plan that raises an unrelated error while cancel_requested happens
     to be set must record FAILED with the real traceback — only the
     cancellation interrupt itself maps to CANCELLED."""
-    q = J.JobQueue()
-    runner = J.JobRunner(spark, q)
+    q = J.JobQueue(str(tmp_path / "state"))
 
     def bad_plan(s):
         # simulate a cancel racing in just before the genuine failure
@@ -171,13 +192,13 @@ def test_genuine_failure_during_cancel_stays_failed(spark):
         raise ValueError("plan bug, not a cancellation")
 
     jid = q.submit(bad_plan, name="bad")
-    runner.run_pending()
+    _run_all(spark, q)
     job = q.job(jid)
     assert job.status == J.FAILED
     assert "plan bug" in job.error
 
 
-def test_job_conf_isolated_per_job_session(spark):
+def test_job_conf_isolated_per_job_session(spark, tmp_path):
     """Job-scoped confs run on a child session: the shared session's value
     is untouched during and after a job that overrides it."""
     key = "spark.sql.files.maxPartitionBytes"
@@ -189,23 +210,22 @@ def test_job_conf_isolated_per_job_session(spark):
         seen["shared_during"] = spark.conf.get(key)
         return s.range(1)
 
-    q = J.JobQueue()
-    runner = J.JobRunner(spark, q)
+    q = J.JobQueue(str(tmp_path / "state"))
     jid = q.submit(plan, name="conf", conf={key: "12345678"})
-    runner.run_pending()
+    _run_all(spark, q)
     assert q.job(jid).status == J.COMPLETED
     assert seen["in_job"] == "12345678"
     assert seen["shared_during"] == before
     assert spark.conf.get(key) == before
 
 
-def test_wait_for_raises_timeout_while_running():
+def test_wait_for_raises_timeout_while_running(tmp_path):
     """``wait_for`` has one timeout behaviour, the client SDK's: a job still
     RUNNING at the deadline raises TimeoutError instead of returning its
     non-terminal status."""
     import pytest
 
-    q = J.JobQueue()
+    q = J.JobQueue(str(tmp_path / "state"))
     jid = q.submit(lambda s: None, name="held")
     assert q.claim_next().job_id == jid
     with pytest.raises(TimeoutError, match="RUNNING"):
@@ -223,7 +243,7 @@ def test_wait_for_returns_recovered_orphan_failed_at_once(tmp_path):
         json.dumps({"job_id": 7, "name": "inflight", "status": "RUNNING",
                     "submitted_at": 1.0, "started_at": 2.0})
     )
-    q = J.JobQueue(state_dir=str(state))
+    q = J.JobQueue(str(state))
     t0 = time.monotonic()
     assert q.wait_for(7, timeout=30) == J.FAILED
     assert time.monotonic() - t0 < 1.0
@@ -233,21 +253,11 @@ def test_completed_record_is_published_whole(spark, tmp_path):
     """The waiter wakes on a record that is complete everywhere at once:
     ``finished_at`` set in memory, and the state file equal to the record
     (a restart at that moment recovers COMPLETED, not an orphan)."""
-    import threading
-
     state = tmp_path / "state"
-    q = J.JobQueue(state_dir=str(state))
-    runner = threading.Thread(
-        target=J.JobRunner(spark, q).run_pending, args=(True,), daemon=True
-    )
-    runner.start()
-    try:
+    q = J.JobQueue(str(state))
+    with _runner(spark, q):
         jid = q.submit(lambda s: s.range(4), name="whole")
         assert q.wait_for(jid, timeout=60) == J.COMPLETED
         rec = q.record(jid)
         assert rec["finished_at"] is not None and rec["result_rows"] == 4
         assert json.loads((state / f"job_{jid}.json").read_text()) == rec
-    finally:
-        q.close()
-        runner.join(timeout=5)
-    assert not runner.is_alive()

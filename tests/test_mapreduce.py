@@ -67,6 +67,51 @@ def test_wordcount_pipe_mode(spark):
     assert as_dict(out, "key", "value") == EXPECTED
 
 
+def test_quirk_q1_value_discard_on_synthetic_text(spark, tmp_path):
+    """Quirk Q1 (SURVEY.md §6): the reference worker rewrites every mapped
+    record to its key plus the literal value 1 before the shuffle
+    (worker.cpp:229,247). With ``reference_quirks=True`` a mapper that emits
+    word LENGTHS still yields word counts, in the subprocess and the
+    callable modes; without it the lengths are summed."""
+    import sys
+
+    inp = tmp_path / "input.txt"
+    inp.write_text("\n".join(LINES) + "\n")
+    df = mr.read_text(spark, str(inp))
+    honest_want = {w: c * len(w) for w, c in EXPECTED.items()}
+
+    mapper_py = tmp_path / "len_mapper.py"
+    mapper_py.write_text(
+        "import sys\n"
+        "for line in sys.stdin:\n"
+        "    for tok in line.split():\n"
+        "        if tok.isalnum():\n"
+        "            print(f'{tok} {len(tok)}')\n"
+    )
+    mapper_cmd = [sys.executable, str(mapper_py)]
+    reducer_cmd = [
+        sys.executable,
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "sdc_mapreduce_spark",
+            "usercode",
+            "wc_reducer.py",
+        ),
+    ]
+    piped = mr.map_reduce_pipe(df, mapper_cmd, reducer_cmd, reference_quirks=True)
+    assert as_dict(piped, "key", "value") == EXPECTED
+    honest = mr.map_reduce_pipe(df, mapper_cmd, reducer_cmd)
+    assert as_dict(honest, "key", "value") == honest_want
+
+    def len_mapper(row):
+        return [(t, len(t)) for t in (row[0] or "").split() if t.isalnum()]
+
+    called = mr.map_reduce(df, len_mapper, mr.python_sum_reducer, reference_quirks=True)
+    assert as_dict(called, "key", "value") == EXPECTED
+    honest_called = mr.map_reduce(df, len_mapper, mr.python_sum_reducer)
+    assert as_dict(honest_called, "key", "value") == honest_want
+
+
 def test_parse_kv_drops_malformed(spark):
     df = spark.createDataFrame(
         [("a 1",), ("b 2",), ("only_key",), ("a b c",), ("c notanint",), ("a 3",)],

@@ -75,9 +75,9 @@ def _in_package(node: str) -> bool:
 
 
 def _units(tree: ast.Module):
-    """(name, statement) per top-level unit: each function, each class (one
-    unit holding all of its methods) and each name bound by a plain
-    assignment; every other module-level statement is the unit ''."""
+    """(name, statement) per top-level unit: each function, each class and
+    each name bound by a plain assignment; every other module-level
+    statement is the unit ''."""
     for stmt in tree.body:
         targets = (
             stmt.targets if isinstance(stmt, ast.Assign)
@@ -93,6 +93,38 @@ def _units(tree: ast.Module):
             yield "", stmt
 
 
+def _methods(cls: ast.ClassDef):
+    return [s for s in cls.body if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef))]
+
+
+def _all_units(tree: ast.Module):
+    """_units plus one unit ``Cls.name`` per method of each top-level class."""
+    for name, stmt in _units(tree):
+        yield name, stmt
+        if isinstance(stmt, ast.ClassDef):
+            for m in _methods(stmt):
+                yield f"{name}.{m.name}", m
+
+
+def _framework_methods(mod: str, cls: ast.ClassDef) -> set[str]:
+    """The methods of a package class that code outside the package calls
+    by name: dunders, overrides of an attribute of an external base (the
+    PySpark DataSource API, socketserver) and the ``do_<COMMAND>`` handlers
+    BaseHTTPRequestHandler dispatches to."""
+    import importlib
+    from http.server import BaseHTTPRequestHandler
+
+    live = getattr(importlib.import_module(mod), cls.name)
+    external = [b for b in live.__mro__[1:] if not b.__module__.startswith(_PACKAGE)]
+    return {
+        m.name
+        for m in _methods(cls)
+        if m.name.startswith("__")
+        or any(hasattr(b, m.name) for b in external)
+        or (m.name.startswith("do_") and issubclass(live, BaseHTTPRequestHandler))
+    }
+
+
 def _parsed_production_files() -> dict[str, ast.Module]:
     return {_module_name(p): ast.parse(p.read_text()) for p in _production_files()}
 
@@ -101,8 +133,9 @@ def _name_resolution(trees: dict[str, ast.Module], nodes: set[str]):
     """(resolve, by_name) over ``nodes``: ``resolve(mod, name)`` is the node
     a bare name in module ``mod`` denotes, through the module's own units
     and ``from ... import``s as Python scoping does; ``by_name[name]`` is
-    every package node called ``name``, which an attribute ``x.name``
-    matches (so method and module-attribute calls over-approximate)."""
+    every package node, function or method, called ``name``, which an
+    attribute ``x.name`` matches (so method and module-attribute calls
+    over-approximate)."""
     imports = {
         mod: {
             alias.asname or alias.name: (sub.module, alias.name)
@@ -115,7 +148,7 @@ def _name_resolution(trees: dict[str, ast.Module], nodes: set[str]):
     by_name: dict[str, set[str]] = {}
     for node in nodes:
         if _in_package(node):
-            by_name.setdefault(node.partition(":")[2], set()).add(node)
+            by_name.setdefault(node.partition(":")[2].rpartition(".")[2], set()).add(node)
 
     def resolve(mod: str, name: str) -> set[str]:
         if f"{mod}:{name}" in nodes:
@@ -128,23 +161,32 @@ def _name_resolution(trees: dict[str, ast.Module], nodes: set[str]):
 
 
 def _call_graph() -> dict[str, set[str]]:
-    """Node ``module:name`` -> the nodes it references, over the production
-    files (``module:`` is the module's loose top-level code); names resolve
-    as in _name_resolution. Text inside string constants is not a
+    """Node ``module:name`` (``module:Cls.name`` for a method) -> the nodes
+    it references, over the production files (``module:`` is the module's
+    loose top-level code); names resolve as in _name_resolution. A class
+    references its own body outside its methods and the methods
+    _framework_methods names. Text inside string constants is not a
     reference."""
     trees = _parsed_production_files()
-    units = {mod: list(_units(tree)) for mod, tree in trees.items()}
+    units = {mod: list(_all_units(tree)) for mod, tree in trees.items()}
     nodes = {f"{mod}:{name}" for mod, us in units.items() for name, _ in us}
     resolve, by_name = _name_resolution(trees, nodes)
     graph: dict[str, set[str]] = {node: set() for node in nodes}
     for mod, us in units.items():
         for name, stmt in us:
-            refs = graph[f"{mod}:{name}"]
-            for sub in ast.walk(stmt):
+            node = f"{mod}:{name}"
+            body = [stmt]
+            if isinstance(stmt, ast.ClassDef):
+                methods = _methods(stmt)
+                body = [*stmt.bases, *stmt.keywords, *stmt.decorator_list]
+                body += [s for s in stmt.body if s not in methods]
+                if _in_package(node):
+                    graph[node] |= {f"{node}.{m}" for m in _framework_methods(mod, stmt)}
+            for sub in (n for part in body for n in ast.walk(part)):
                 if isinstance(sub, ast.Name):
-                    refs |= resolve(mod, sub.id)
+                    graph[node] |= resolve(mod, sub.id)
                 elif isinstance(sub, ast.Attribute):
-                    refs |= by_name.get(sub.attr, set())
+                    graph[node] |= by_name.get(sub.attr, set())
     return graph
 
 
@@ -202,18 +244,44 @@ _NO_PRODUCTION_CALLER = {
 }
 
 
+def _public_callables(trees: dict[str, ast.Module]) -> dict[str, ast.FunctionDef]:
+    """Node -> definition for each public function and public method of the
+    package (``__init__`` counts as public), less the methods code outside
+    the package calls by name (_framework_methods)."""
+    out = {}
+    for mod, tree in trees.items():
+        if not _in_package(mod):
+            continue
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out[f"{mod}:{stmt.name}"] = stmt
+            elif isinstance(stmt, ast.ClassDef):
+                framework = _framework_methods(mod, stmt) - {"__init__"}
+                for m in _methods(stmt):
+                    if m.name not in framework:
+                        out[f"{mod}:{stmt.name}.{m.name}"] = m
+    return {
+        node: fn
+        for node, fn in out.items()
+        if fn.name == "__init__" or not fn.name.startswith("_")
+    }
+
+
 def test_every_public_package_function_has_a_production_caller():
-    """Each public top-level function of the package is reached from a
-    production root (a registered query, module-level code, bench.py,
-    perfbench, tools, __spark_entry__) or is allow-listed with a reason,
-    so no operator keeps an alternate implementation only tests call."""
+    """Each public function and public method of the package is reached
+    from a production root (a registered query, module-level code,
+    bench.py, perfbench, tools, __spark_entry__) or is allow-listed with a
+    reason, so no operator keeps an alternate implementation only tests
+    call. Methods that override an external base class are called by that
+    framework and are not checked."""
     import sdc_mapreduce_spark.queries as q
 
     graph = _call_graph()
-    defs: dict[str, ast.stmt] = {
-        f"{mod}:{stmt.name}": stmt
-        for mod, tree in _parsed_production_files().items()
-        for stmt in tree.body
+    trees = _parsed_production_files()
+    defs = {
+        f"{mod}:{name}"
+        for mod, tree in trees.items()
+        for name, stmt in _all_units(tree)
         if isinstance(stmt, _DEFS)
     }
     # Module-level code runs on import; outside the package, all code is
@@ -224,13 +292,7 @@ def test_every_public_package_function_has_a_production_caller():
         if node not in defs or not _in_package(node)
     } | {_query_node(spec) for spec in q.REGISTRY.values()}
     reached = _reached(graph, roots)
-    public = {
-        node
-        for node, stmt in defs.items()
-        if _in_package(node)
-        and not isinstance(stmt, ast.ClassDef)
-        and not stmt.name.startswith("_")
-    }
+    public = {node for node, fn in _public_callables(trees).items() if fn.name != "__init__"}
     assert all(_NO_PRODUCTION_CALLER.values())
     stale = set(_NO_PRODUCTION_CALLER) - (public - reached)
     assert not stale, f"allow-listed but reached or gone: {sorted(stale)}"
@@ -238,23 +300,46 @@ def test_every_public_package_function_has_a_production_caller():
     assert not unreached, "no production caller:\n" + "\n".join(sorted(unreached))
 
 
-# Optional parameters that production calls leave at one value, each with
-# the reason the other value stays.
+# Options that production calls leave at one value, each with the reason
+# the other value stays.
 _ONE_VALUE_OPTIONS = {
     "sdc_mapreduce_spark.mapreduce:map_reduce_pipe.reference_quirks": (
-        "reproduces reference quirk Q1; test_reference_golden.py checks it"
+        "reproduces reference quirk Q1; "
+        "test_mapreduce.py::test_quirk_q1_value_discard_on_synthetic_text checks it"
     ),
     "sdc_mapreduce_spark.queries.base:unit_vectors_sql.materialized": (
         "False reaches it through srp_buckets_sql's own parameter, which "
         "this guard does not follow"
     ),
+    "sdc_mapreduce_spark.functions.text:heavy_hitters_twopass.k": (
+        "compared with the recount's row count (len(top) == k), not a path "
+        "selector: every k runs the same plan"
+    ),
 }
 _FLAGS = (None, True, False)
 
 
-def _flag_params(fn: ast.FunctionDef) -> dict[str, tuple[int | None, object]]:
+def _branch_names(fn: ast.FunctionDef) -> set[str]:
+    """The names ``fn`` reads in a branch condition: an ``if`` or ``while``
+    test, a conditional expression's test or a comprehension filter. An
+    ``if`` whose whole body is a ``raise`` is an argument check, not a
+    branch."""
+    tests = []
+    for node in ast.walk(fn):
+        if isinstance(node, ast.If):
+            if not (len(node.body) == 1 and isinstance(node.body[0], ast.Raise)):
+                tests.append(node.test)
+        elif isinstance(node, (ast.While, ast.IfExp)):
+            tests.append(node.test)
+        elif isinstance(node, ast.comprehension):
+            tests += node.ifs
+    return {n.id for t in tests for n in ast.walk(t) if isinstance(n, ast.Name)}
+
+
+def _literal_params(fn: ast.FunctionDef) -> dict[str, tuple[int | None, object]]:
     """Parameter name -> (positional index or None, default) for each
-    parameter whose default is None, True or False."""
+    parameter with a literal default, kept when the default is None, True
+    or False or when ``fn`` reads the parameter in a branch condition."""
     a = fn.args
     positional = [*a.posonlyargs, *a.args]
     first = len(positional) - len(a.defaults)
@@ -263,49 +348,81 @@ def _flag_params(fn: ast.FunctionDef) -> dict[str, tuple[int | None, object]]:
         for i, (p, d) in enumerate(zip(positional[first:], a.defaults), start=first)
     ]
     found += [(p, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+    branches = _branch_names(fn)
     return {
         p.arg: (i, d.value)
         for p, i, d in found
-        if isinstance(d, ast.Constant) and any(d.value is f for f in _FLAGS)
+        if isinstance(d, ast.Constant)
+        and (any(d.value is f for f in _FLAGS) or p.arg in branches)
     }
+
+
+def _is_default(arg: ast.expr, default) -> bool:
+    return (
+        isinstance(arg, ast.Constant)
+        and type(arg.value) is type(default)
+        and arg.value == default
+    )
 
 
 def _argument_sides(call: ast.Call, index: int | None, name: str, default) -> set[bool]:
     """Which sides one call takes for one parameter: True when it omits the
     argument or passes the default literal, False when it passes anything
-    else; *args and **kwargs take both."""
+    else; *args and **kwargs take both. ``index`` counts the call's own
+    positional arguments."""
     for kw in call.keywords:
         if kw.arg == name:
-            return {isinstance(kw.value, ast.Constant) and kw.value.value is default}
+            return {_is_default(kw.value, default)}
     if index is not None:
         for i, arg in enumerate(call.args):
             if isinstance(arg, ast.Starred):
                 return {True, False}
             if i == index:
-                return {isinstance(arg, ast.Constant) and arg.value is default}
+                return {_is_default(arg, default)}
     if any(kw.arg is None for kw in call.keywords):
         return {True, False}
     return {True}
 
 
+def _calls_super(expr: ast.expr) -> bool:
+    """Whether ``expr`` is ``super()``: package classes derive only from
+    external classes, so ``super().m(...)`` calls no package method."""
+    return (
+        isinstance(expr, ast.Call)
+        and isinstance(expr.func, ast.Name)
+        and expr.func.id == "super"
+    )
+
+
 def test_every_optional_parameter_takes_both_values_in_production():
-    """Each None/True/False parameter of a public package function takes
-    its default in some production call and another value in another, or
-    is allow-listed with a reason, so no option hides a branch that no
-    production call runs. Calls match by name as in _call_graph."""
+    """Each option of a public package function or method takes its default
+    in some production call and another value in another, or is
+    allow-listed with a reason, so no option hides a branch that no
+    production call runs. An option is a parameter whose default is None,
+    True or False, or another literal that the function reads in a branch
+    condition. Calls match by name as in _call_graph: ``Cls(...)`` calls
+    ``Cls.__init__`` and ``x.m(...)`` every method named ``m``."""
     trees = _parsed_production_files()
     units = {
-        f"{mod}:{name}": stmt for mod, tree in trees.items() for name, stmt in _units(tree)
+        f"{mod}:{name}": stmt for mod, tree in trees.items() for name, stmt in _all_units(tree)
     }
     resolve, by_name = _name_resolution(trees, set(units))
     funcs = {
-        node: stmt
-        for node, stmt in units.items()
-        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef))
-        and _in_package(node)
-        and not stmt.name.startswith("_")
-        and node not in _NO_PRODUCTION_CALLER
+        node: fn
+        for node, fn in _public_callables(trees).items()
+        if node not in _NO_PRODUCTION_CALLER
     }
+
+    def callee(node: str) -> tuple[str, int]:
+        """(function node, count of leading parameters the call does not
+        pass: the bound ``self`` or ``cls``) for a call of ``node``."""
+        if isinstance(units[node], ast.ClassDef):
+            return f"{node}.__init__", 1
+        static = any(
+            isinstance(d, ast.Name) and d.id == "staticmethod" for d in units[node].decorator_list
+        )
+        return node, int("." in node.partition(":")[2] and not static)
+
     sides: dict[str, set[bool]] = {}
     for mod, tree in trees.items():
         for call in ast.walk(tree):
@@ -313,19 +430,22 @@ def test_every_optional_parameter_takes_both_values_in_production():
                 continue
             if isinstance(call.func, ast.Name):
                 targets = resolve(mod, call.func.id)
-            elif isinstance(call.func, ast.Attribute):
+            elif isinstance(call.func, ast.Attribute) and not _calls_super(call.func.value):
                 targets = by_name.get(call.func.attr, set())
             else:
                 continue
-            for target in targets & funcs.keys():
-                for name, (index, default) in _flag_params(funcs[target]).items():
+            for target, bound in map(callee, targets):
+                if target not in funcs:
+                    continue
+                for name, (index, default) in _literal_params(funcs[target]).items():
+                    at = None if index is None else index - bound
                     sides.setdefault(f"{target}.{name}", set()).update(
-                        _argument_sides(call, index, name, default)
+                        _argument_sides(call, at, name, default)
                     )
     options = {
         f"{node}.{name}"
         for node, fn in funcs.items()
-        for name in _flag_params(fn)
+        for name in _literal_params(fn)
     }
     one_value = {opt for opt in options if sides.get(opt, set()) != {True, False}}
     assert all(_ONE_VALUE_OPTIONS.values())

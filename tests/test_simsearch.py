@@ -405,10 +405,10 @@ _BLOCKED_PLANES = 6
 
 @pytest.fixture(scope="module")
 def blocked_case(spark, sf_dir):
-    """(embeddings, {multi_probe_bits: expected pairs}). The blocked
-    operator decides every pair with the same left-fold ``dot()`` as the
-    exhaustive JVM one, so its result must be EXACTLY the exhaustive pairs
-    whose SRP buckets differ in at most min(multi_probe_bits, 1) bits."""
+    """(embeddings, expected pairs). The blocked operator decides every
+    pair with the same left-fold ``dot()`` as the exhaustive JVM one, so
+    its result must be EXACTLY the exhaustive pairs whose SRP buckets
+    differ in at most one bit."""
     from sdc_mapreduce_spark.functions.simsearch import _hyperplanes, _srp_prep
 
     emb = load_table(spark, sf_dir, "embeddings").cache()
@@ -424,43 +424,37 @@ def blocked_case(spark, sf_dir):
         (r["id_a"], r["id_b"])
         for r in _embedding_near_pairs(emb, threshold=0.4).collect()
     ]
-    expected = {}
-    for mpb in (0, 1):
-        radius = min(mpb, 1)
-        expected[mpb] = {
-            (a, b) for a, b in exact if bin(bucket[a] ^ bucket[b]).count("1") <= radius
-        }
-        assert expected[mpb], f"multi_probe_bits={mpb}: empty expectation"
+    expected = {(a, b) for a, b in exact if bin(bucket[a] ^ bucket[b]).count("1") <= 1}
+    # some expected pairs sit in different buckets, so the visitor rows
+    # are exercised, and some share one, so the home triangle is too
+    assert {bucket[a] == bucket[b] for a, b in expected} == {True, False}
     return emb, expected
 
 
-def _blocked_pairs(emb, mpb, **kw):
+def _blocked_pairs(emb, **kw):
     got = [
         (r["id_a"], r["id_b"])
         for r in S.embedding_near_pairs_blocked(
-            emb, threshold=0.4, n_planes=_BLOCKED_PLANES, multi_probe_bits=mpb, **kw
+            emb, threshold=0.4, n_planes=_BLOCKED_PLANES, **kw
         ).collect()
     ]
-    assert len(got) == len(set(got)), (mpb, kw)
+    assert len(got) == len(set(got)), kw
     return set(got)
 
 
 def test_blocked_pairs_arrow_verify_bitwise_equals_jvm(blocked_case):
     """The Arrow per-bucket verify kernel reproduces the JVM fold's pairs
     EXACTLY (threshold-boundary ones included) inside the probe radius —
-    no pair lost, none gained outside it, none emitted twice — with and
-    without multi-probe."""
+    no pair lost, none gained outside it, none emitted twice."""
     emb, expected = blocked_case
-    for mpb, want in expected.items():
-        assert _blocked_pairs(emb, mpb) == want, mpb
+    assert _blocked_pairs(emb) == expected
 
 
 def test_blocked_pairs_bucket_verify_bitwise_equals_jvm(blocked_case):
     """Same exact equality with a chunk small enough to force the
     visitor-blocking loop inside each bucket group."""
     emb, expected = blocked_case
-    for mpb, want in expected.items():
-        assert _blocked_pairs(emb, mpb, chunk=7) == want, mpb
+    assert _blocked_pairs(emb, chunk=7) == expected
 
 
 def test_label_silhouette_separable_clusters(spark):

@@ -164,21 +164,23 @@ def test_sessionize_chunked_equals_plain_hot_user(spark, sf_dir):
         ev.unpersist()
 
 
-def test_sessionize_auto_selects_by_key_stats_and_matches_oracle(spark, sf_dir):
+def test_sessionize_auto_selects_by_key_stats_and_matches_oracle(spark, sf_dir, monkeypatch):
     """sessionize_auto must (a) return the shared-oracle result whatever
     plan it picks, and (b) pick the plan the key statistics dictate: a
     tiny per-task threshold forces the chunked decomposition (visible as
     the __chunk key in the analyzed plan), a huge one forces plain."""
+    from sdc_mapreduce_spark.operators import skew
     from sdc_mapreduce_spark.operators.skew import sessionize_auto
 
     ev = _hot_user_events(spark, sf_dir).cache()
     try:
         # default probe on the hot fixture — whatever it picks must match
         assert _rows(sessionize_auto(ev)) == _rows(_plain_sessionize(ev))
-        forced_chunk = sessionize_auto(ev, max_rows_per_task=1, sample_fraction=1.0)
-        forced_plain = sessionize_auto(
-            ev, max_rows_per_task=10**12, sample_fraction=1.0
-        )
+        monkeypatch.setattr(skew, "SAMPLE_FRACTION", 1.0)
+        monkeypatch.setattr(skew, "MAX_ROWS_PER_TASK", 1)
+        forced_chunk = sessionize_auto(ev)
+        monkeypatch.setattr(skew, "MAX_ROWS_PER_TASK", 10**12)
+        forced_plain = sessionize_auto(ev)
         assert "__chunk" in forced_chunk._jdf.queryExecution().analyzed().toString()
         assert (
             "__chunk" not in forced_plain._jdf.queryExecution().analyzed().toString()
@@ -186,21 +188,6 @@ def test_sessionize_auto_selects_by_key_stats_and_matches_oracle(spark, sf_dir):
         assert _rows(forced_chunk) == _rows(forced_plain)
     finally:
         ev.unpersist()
-
-
-def test_sessionize_auto_validates_sample_fraction(spark, sf_dir):
-    """ADVICE r10: 0 used to ZeroDivisionError at est_max and a negative
-    value failed opaquely inside Spark's sample() — both must be a clear
-    ValueError before any job runs."""
-    import pytest
-
-    from sdc_mapreduce_spark.catalog import load_table
-    from sdc_mapreduce_spark.operators.skew import sessionize_auto
-
-    ev = load_table(spark, sf_dir, "events")
-    for bad in (0.0, -0.5, 1.5):
-        with pytest.raises(ValueError, match="sample_fraction"):
-            sessionize_auto(ev, sample_fraction=bad)
 
 
 def test_sessionize_chunked_merges_cross_boundary_sessions(spark):

@@ -84,7 +84,7 @@ def test_streaming_dedup_drops_duplicates(spark, sf_dir, tmp_path):
     replay_events(ev, dup_dir, *_EVENT_COLUMNS, event_time="zoned")
     stream = replay_events(ev, dup_dir, *_EVENT_COLUMNS, event_time="zoned")
     with scratch(spark) as s:
-        rows = _drain(s, streaming_dedup(stream, ["event_id"]))
+        rows = _drain(s, streaming_dedup(stream, ["event_id"], watermark="10 minutes"))
     counts = {}
     for r in rows:
         counts[r["event_id"]] = counts.get(r["event_id"], 0) + 1
@@ -94,7 +94,7 @@ def test_streaming_dedup_drops_duplicates(spark, sf_dir, tmp_path):
 
 def test_session_aggregate_runs(spark, events_stream):
     with scratch(spark) as s:
-        rows = _drain(s, session_aggregate(events_stream))
+        rows = _drain(s, session_aggregate(events_stream, watermark="30 minutes"))
     assert rows
     assert all(r["session_end"] >= r["session_start"] for r in rows)
     assert all(r["n_events"] >= 1 for r in rows)
@@ -105,7 +105,7 @@ def test_stateful_user_totals_match_batch(spark, sf_dir, events_stream):
     equal the batch groupBy — state survives across micro-batches. Totals
     are exact micro-unit longs, so they compare exactly."""
     with scratch(spark) as s:
-        rows = _drain(s, stateful_user_totals(events_stream), "update")
+        rows = _drain(s, stateful_user_totals(events_stream, watermark="10 minutes"), "update")
     # update mode re-emits a row per state change; the accumulator is
     # monotone, so the row with the largest n_events is the lifetime total
     got: dict[int, tuple[int, int]] = {}

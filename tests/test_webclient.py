@@ -15,8 +15,8 @@ from sdc_mapreduce_spark.webclient import JobServer
 
 
 @pytest.fixture()
-def server(spark):
-    srv = JobServer(spark, port=0)
+def server(spark, tmp_path):
+    srv = JobServer(spark, str(tmp_path / "state"))
     srv.start()
     yield srv
     srv.stop()
@@ -381,10 +381,10 @@ def test_cancel_queued_job_and_terminal_conflict(server):
     assert code == 404
 
 
-def test_bounded_concurrency_two_workers(spark):
+def test_bounded_concurrency_two_workers(spark, tmp_path):
     """max_concurrent=2: a fast job overtakes a slow one instead of
     queueing behind it (the single-leader bottleneck the bound lifts)."""
-    srv = JobServer(spark, port=0, max_concurrent=2)
+    srv = JobServer(spark, str(tmp_path / "state"), max_concurrent=2)
     srv.start()
     try:
         slow = srv.queue.submit(_slow_plan(), name="slow")
@@ -402,10 +402,13 @@ def test_bounded_concurrency_two_workers(spark):
         srv.stop()
 
 
-def test_max_pending_backlog_replies_429(spark, tmp_path):
+def test_max_pending_backlog_replies_429(spark, tmp_path, monkeypatch):
     """Submissions past the CREATED backlog bound get 429 on both submit
     endpoints instead of growing the queue without limit."""
-    srv = JobServer(spark, port=0, max_pending=1)
+    from sdc_mapreduce_spark import jobs
+
+    monkeypatch.setattr(jobs, "MAX_PENDING", 1)
+    srv = JobServer(spark, str(tmp_path / "state"))
     srv.start()
     try:
         slow = srv.queue.submit(_slow_plan(), name="slow")
@@ -516,14 +519,14 @@ def test_wait_for_wakes_on_cancel_over_http(server):
     assert got == ["CANCELLED"]
 
 
-def test_idle_server_does_not_poll_and_stops_its_runners(spark):
+def test_idle_server_does_not_poll_and_stops_its_runners(spark, tmp_path):
     """Idle runner threads block on the queue's condition: each makes one
     claim attempt and then no more until work arrives (no periodic tick),
     and ``stop()`` wakes them so every runner thread has exited when it
     returns."""
     import time
 
-    srv = JobServer(spark, port=0, max_concurrent=2)
+    srv = JobServer(spark, str(tmp_path / "state"), max_concurrent=2)
     claims = []
     claim_next = srv.queue.claim_next
 
