@@ -1651,9 +1651,10 @@ def unigram_lm(
        highest-weight substrings of length 2..``max_piece_len`` (weight =
        sum of freq over words containing the substring at each position;
        ties piece ASC). Seed probability = weight / total seed weight;
-    3. per EM round (``EM_ITERS`` of them): Viterbi-segment each distinct word (maximize summed
-       micro-nat log-probs, integer arithmetic, ties to the smaller
-       boundary), count pieces on the 1-best paths weighted by word freq,
+    3. per EM round (``EM_ITERS`` of them): Viterbi-segment each distinct
+       word (maximize summed micro-nat log-probs, integer arithmetic, ties
+       to the smaller boundary), count pieces on the 1-best paths weighted
+       by word freq,
        re-normalize to new log-probs. Unused pieces drop out (standard
        hard-EM pruning); every word stays segmentable because its own
        previous path's pieces survive by construction;
