@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.cache import pin
+from sdc_mapreduce_spark.functions.simsearch import best_corpus_match
 from sdc_mapreduce_spark.functions.text import normalized_text, token_hash60, tokens
 
 RNG_SEED_MINHASH = 7
@@ -488,14 +489,29 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    sa = sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("__sh_a"))
-    sb = sets.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("__sh_b"))
-    verified = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
+    return _jaccard_verified(cand, sets, sets, "id_a", "id_b", id_col, threshold)
+
+
+def _jaccard_verified(
+    cand: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    a: str,
+    b: str,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """(a, b, jaccard) for each candidate pair (ids in ``cand``'s columns
+    ``a`` and ``b``) whose exact shingle-set Jaccard, from ``sets_a`` and
+    ``sets_b``, reaches ``threshold``."""
+    sa = sets_a.select(F.col(id_col).alias(a), F.col("shingles").alias("__sh_a"))
+    sb = sets_b.select(F.col(id_col).alias(b), F.col("shingles").alias("__sh_b"))
+    return (
+        cand.join(sa, a)
+        .join(sb, b)
         .select(
-            "id_a",
-            "id_b",
+            a,
+            b,
             (
                 F.size(F.array_intersect("__sh_a", "__sh_b"))
                 / F.size(F.array_union("__sh_a", "__sh_b"))
@@ -503,7 +519,6 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    return verified
 
 
 def incremental_minhash_dedup(
@@ -566,38 +581,15 @@ def incremental_minhash_dedup(
     # shuffles that table. The probe's partitions land in cand's persist.
     if cand.limit(BROADCAST_MAX_CANDIDATES + 1).count() <= BROADCAST_MAX_CANDIDATES:
         cand = F.broadcast(cand)
-    sa = sets_new.select(
-        F.col(id_col).alias("__new_id"), F.col("shingles").alias("__sh_a")
+    verified = _jaccard_verified(
+        cand, sets_new, sets_ex, "__new_id", "__ex_id", id_col, threshold
     )
-    sb = sets_ex.select(
-        F.col(id_col).alias("__ex_id"), F.col("shingles").alias("__sh_b")
-    )
-    verified = (
-        cand.join(sa, "__new_id")
-        .join(sb, "__ex_id")
-        .select(
-            "__new_id",
-            "__ex_id",
-            (
-                F.size(F.array_intersect("__sh_a", "__sh_b"))
-                / F.size(F.array_union("__sh_a", "__sh_b"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    best = F.max(F.struct(F.col("jaccard"), (-F.col("__ex_id")).alias("__neg")))
-    return (
-        verified.groupBy("__new_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_corpus_matches"),
-            best.alias("__best"),
-        )
-        .select(
-            F.col("__new_id").alias(id_col),
-            "n_corpus_matches",
-            (-F.col("__best.__neg")).cast("long").alias("best_match_id"),
-            F.col("__best.jaccard").alias("best_jaccard"),
-        )
+    return best_corpus_match(
+        verified,
+        id_col,
+        "jaccard",
+        "__best",
+        F.col("__best.jaccard").alias("best_jaccard"),
     )
 
 

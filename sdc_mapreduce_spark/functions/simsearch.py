@@ -23,7 +23,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.cache import pin
@@ -226,25 +226,23 @@ def cosine_topk_srp(
     query_ids: list[int],
     k: int = 5,
     n_planes: int = 8,
-    multi_probe_bits: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: restrict the search to the query's SRP bucket
-    (plus, with multi-probe, every bucket within ``multi_probe_bits`` bit
-    flips — near-boundary neighbors land one sign flip away), then exact
-    cosine within the probed buckets. Candidates per query ≈
-    corpus * (1 + planes) / 2^planes — equi-joins on the bucket id, so the
-    plan is shuffle-bounded, never all-pairs. Recall tunes via n_planes
-    (fewer planes = bigger buckets) and multi_probe_bits. Candidates are
-    ranked by exact cosine descending, ties to the lowest neighbor id."""
+    plus every bucket one bit flip away (near-boundary neighbors land one
+    sign flip away), then exact cosine within the probed buckets.
+    Candidates per query ≈ corpus * (1 + planes) / 2^planes — equi-joins
+    on the bucket id, so the plan is shuffle-bounded, never all-pairs.
+    Recall tunes via n_planes (fewer planes = bigger buckets). Candidates
+    are ranked by exact cosine descending, ties to the lowest neighbor id."""
     prepared = _srp_prep(corpus, _hyperplanes(dim, n_planes), id_col, vec_col)
     queries = _query_slice(
         prepared,
         query_ids,
         id_col,
-        F.explode(_probe_buckets(n_planes, multi_probe_bits)).alias("__bucket"),
+        F.explode(_probe_buckets(n_planes)).alias("__bucket"),
     )
     cands = (
         prepared.join(F.broadcast(queries), "__bucket")
@@ -931,7 +929,6 @@ def incremental_embedding_dedup(
     existing: DataFrame,
     threshold: float = 0.4,
     n_planes: int = 6,
-    multi_probe_bits: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
@@ -959,14 +956,14 @@ def incremental_embedding_dedup(
     planes = _hyperplanes(dim, n_planes)
     newp = _srp_prep(new_batch, planes, id_col, vec_col)
     exp = _srp_prep(existing, planes, id_col, vec_col)
-    newe = _srp_probe_rows(newp, n_planes, multi_probe_bits, id_col)
+    newe = _srp_probe_rows(newp, n_planes, id_col)
     # No (new, existing) dedup needed: a batch vector's probe buckets are
     # all distinct values, so a corpus row (one fixed bucket) matches at
     # most one probe row per batch vector. Skipping the dropDuplicates
     # keeps the pipeline shuffle-FREE until the final groupBy — at 100 TB
     # the corpus-side join output never re-shuffles for a no-op dedup.
     cand = exp.join(F.broadcast(newe), "__bucket")
-    return _best_corpus_match(cand, id_col, threshold)
+    return _best_cosine_match(cand, id_col, threshold)
 
 
 def _srp_prep(df: DataFrame, planes, id_col: str, vec_col: str) -> DataFrame:
@@ -976,50 +973,65 @@ def _srp_prep(df: DataFrame, planes, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _probe_buckets(n_planes: int, multi_probe_bits: int) -> "F.Column":
+def _probe_buckets(n_planes: int) -> "F.Column":
     """The buckets a vector probes: its home ``__bucket`` plus every 1-bit
-    flip when multi-probe is on."""
-    probes = [F.col("__bucket")]
-    if multi_probe_bits >= 1:
-        probes += [
+    flip."""
+    return F.array(
+        F.col("__bucket"),
+        *[
             F.col("__bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
             for i in range(n_planes)
-        ]
-    return F.array(*probes)
+        ],
+    )
 
 
-def _srp_probe_rows(
-    newp: DataFrame, n_planes: int, multi_probe_bits: int, id_col: str
-) -> DataFrame:
+def _srp_probe_rows(newp: DataFrame, n_planes: int, id_col: str) -> DataFrame:
     """Explode a prepared batch into its probe rows."""
     return newp.select(
         F.col(id_col).alias("__new_id"),
         F.col("__unit").alias("__un"),
-        F.explode(_probe_buckets(n_planes, multi_probe_bits)).alias("__bucket"),
+        F.explode(_probe_buckets(n_planes)).alias("__bucket"),
     )
 
 
-def _best_corpus_match(cand: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    """Shared verify+screen tail of the incremental embedding dedup family:
-    exact cosine on candidates, then per-batch-vector match count and best
-    match (highest cosine, ties to lowest corpus id, nano-unit report)."""
+def best_corpus_match(
+    scored: DataFrame, id_col: str, score: str, best: str, report: Column
+) -> DataFrame:
+    """The screen tail of the incremental dedup family: over verified
+    (``__new_id``, ``__ex_id``, ``score``) matches, each batch row's match
+    count and best match (highest ``score``, ties to the lowest corpus id)
+    as (id, n_corpus_matches, best_match_id, report). ``best`` names the
+    winning max-struct, whose ``score`` field ``report`` reads."""
+    top = F.max(F.struct(F.col(score), (-F.col("__ex_id")).alias("__neg")))
+    return (
+        scored.groupBy("__new_id")
+        .agg(F.count(F.lit(1)).alias("n_corpus_matches"), top.alias(best))
+        .select(
+            F.col("__new_id").alias(id_col),
+            "n_corpus_matches",
+            (-F.col(f"{best}.__neg")).cast("long").alias("best_match_id"),
+            report,
+        )
+    )
+
+
+def _best_cosine_match(cand: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """Verify+screen tail of the incremental embedding dedup: exact cosine
+    on candidates, then ``best_corpus_match`` with the cosine reported in
+    half-up-rounded nano-units."""
     scored = cand.select(
         "__new_id",
         F.col(id_col).alias("__ex_id"),
         dot("__un", "__unit").alias("__cos"),
     ).filter(F.col("__cos") >= threshold)
-    best = F.max(F.struct(F.col("__cos"), (-F.col("__ex_id")).alias("__neg")))
-    return (
-        scored.groupBy("__new_id")
-        .agg(F.count(F.lit(1)).alias("n_corpus_matches"), best.alias("__b"))
-        .select(
-            F.col("__new_id").alias(id_col),
-            "n_corpus_matches",
-            (-F.col("__b.__neg")).cast("long").alias("best_match_id"),
-            F.floor(F.col("__b.__cos") * F.lit(1e9) + F.lit(0.5))
-            .cast("long")
-            .alias("best_cosine_nano"),
-        )
+    return best_corpus_match(
+        scored,
+        id_col,
+        "__cos",
+        "__b",
+        F.floor(F.col("__b.__cos") * F.lit(1e9) + F.lit(0.5))
+        .cast("long")
+        .alias("best_cosine_nano"),
     )
 
 
@@ -1050,7 +1062,6 @@ def incremental_embedding_dedup_from_index(
     new_batch: DataFrame,
     threshold: float = 0.4,
     n_planes: int = 6,
-    multi_probe_bits: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
@@ -1069,10 +1080,7 @@ def incremental_embedding_dedup_from_index(
     exactly as in the in-memory path."""
     planes = _hyperplanes(dim, n_planes)
     newe = _srp_probe_rows(
-        _srp_prep(new_batch, planes, id_col, vec_col),
-        n_planes,
-        multi_probe_bits,
-        id_col,
+        _srp_prep(new_batch, planes, id_col, vec_col), n_planes, id_col
     )
     # bounded driver set: distinct probe buckets, NOT candidates or vectors
     cells = sorted(
@@ -1085,7 +1093,7 @@ def incremental_embedding_dedup_from_index(
         "__bucket", F.col("__bucket").cast("long")
     )
     cand = ex.join(F.broadcast(newe), "__bucket")
-    return _best_corpus_match(cand, id_col, threshold)
+    return _best_cosine_match(cand, id_col, threshold)
 
 
 def embedding_near_pairs_arrow(

@@ -26,6 +26,22 @@ _SPACE = 16**4  # 4 hex chars
 SPLIT_FRACTIONS = {"train": 0.9, "val": 0.05, "test": 0.05}
 
 
+def _content_hash(key_col: Column, salt: str) -> Column:
+    """md5(salt || key) as 32 lowercase hex chars: the row-content hash
+    every routing decision here derives from."""
+    return F.md5(F.concat(F.lit(salt), key_col.cast("string")))
+
+
+def _hex_bucket(key_col: Column, salt: str) -> Column:
+    """The first 4 hex chars of ``_content_hash``: the 1/65536 bucket."""
+    return F.substring(_content_hash(key_col, salt), 1, 4)
+
+
+def _hex_bucket_sql(key_sql: str, salt: str) -> str:
+    """``_hex_bucket`` as ANSI SQL (DuckDB-ready)."""
+    return f"SUBSTRING(md5('{salt}' || CAST({key_sql} AS VARCHAR)), 1, 4)"
+
+
 def _boundaries(fractions: dict[str, float]) -> tuple[list[tuple[str, str]], str]:
     """((name, upper_bound_hex) for all but the last split, last_name).
 
@@ -49,8 +65,7 @@ def split_column(
     key: Column | str, fractions: dict[str, float], salt: str = "split-v1"
 ) -> Column:
     """The split-name column for a given key column (content-hash routing)."""
-    key_col = F.col(key) if isinstance(key, str) else key
-    bucket = F.substring(F.md5(F.concat(F.lit(salt), key_col.cast("string"))), 1, 4)
+    bucket = _hex_bucket(F.col(key) if isinstance(key, str) else key, salt)
     bounds, last = _boundaries(fractions)
     expr = None
     for name, bound in bounds:
@@ -63,7 +78,7 @@ def split_column(
 
 def split_sql_case(key_sql: str, fractions: dict[str, float], salt: str = "split-v1") -> str:
     """The same assignment as ANSI SQL (DuckDB-ready) for auditing/oracles."""
-    bucket = f"SUBSTRING(md5('{salt}' || CAST({key_sql} AS VARCHAR)), 1, 4)"
+    bucket = _hex_bucket_sql(key_sql, salt)
     bounds, last = _boundaries(fractions)
     whens = " ".join(
         f"WHEN {bucket} < '{bound}' THEN '{name}'" for name, bound in bounds
@@ -96,9 +111,7 @@ def stratified_sample(
     semantics, minus its seeded-per-partition irreproducibility. A
     scan-local filter: no shuffle, and the predicate pushes toward the
     scan."""
-    bucket = F.substring(
-        F.md5(F.concat(F.lit(salt), F.col(key).cast("string"))), 1, 4
-    )
+    bucket = _hex_bucket(F.col(key), salt)
     keep = F.lit(False)
     for group, frac in sorted(fractions.items()):
         if not 0.0 <= frac <= 1.0:
@@ -193,7 +206,7 @@ def corpus_shuffle(
     reducer-sized unit (thousands at 100 TB) — the per-shard hash-rank sort
     IS the shard file's write order, exactly how shuffled training shards
     are laid down. No global window, no driver state."""
-    h = F.md5(F.concat(F.lit(salt), F.col(key).cast("string")))
+    h = _content_hash(F.col(key), salt)
     from pyspark.sql import Window
 
     shard = F.pmod(
@@ -243,7 +256,7 @@ def stratified_sample_sql_predicate(
     key_sql: str, group_sql: str, fractions: dict[str, float], salt: str = "strat-v1"
 ) -> str:
     """The same keep-predicate as ANSI SQL for auditing/oracles."""
-    bucket = f"SUBSTRING(md5('{salt}' || CAST({key_sql} AS VARCHAR)), 1, 4)"
+    bucket = _hex_bucket_sql(key_sql, salt)
     whens = []
     for group, frac in sorted(fractions.items()):
         if frac >= 1.0:
@@ -371,7 +384,7 @@ def quota_sample(
             .alias("quota"),
         )
     )
-    h = F.md5(F.concat(F.lit(salt), F.col(key).cast("string")))
+    h = _content_hash(F.col(key), salt)
     pw = Window.partitionBy(group_col).orderBy(h.asc(), F.col(key).asc())
     picked = df.select(F.col(key), F.col(group_col)).withColumn(
         "pick_rank", F.row_number().over(pw)
@@ -380,6 +393,37 @@ def quota_sample(
         picked.join(F.broadcast(quota), group_col)
         .filter(F.col("pick_rank") <= F.col("quota"))
         .select(key, group_col, "pick_rank", "quota")
+    )
+
+
+def _group_counts(df: DataFrame, group_col: str) -> DataFrame:
+    """(group, n_docs, __N): each group's row count beside the corpus
+    total, a broadcast scalar."""
+    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_docs"))
+    total = counts.agg(F.sum("n_docs").alias("__N"))
+    return counts.crossJoin(F.broadcast(total))
+
+
+def _with_kept(
+    df: DataFrame, plan: DataFrame, group_col: str, key: str, salt: str, *cols: str
+) -> DataFrame:
+    """(group, *cols, n_kept) over a per-group ``keep_frac`` plan: n_kept
+    counts the rows of ``df`` whose 16-bit content-hash bucket falls under
+    keep_frac × 65536 (keep_frac ≥ 1 keeps all). The plan broadcasts into
+    a scan-local predicate, so the corpus never shuffles."""
+    bucket = F.conv(_hex_bucket(F.col(key), salt), 16, 10).cast("long")
+    bound = F.floor(F.col("keep_frac") * F.lit(65536.0)).cast("long")
+    kept = (
+        df.select(F.col(group_col), bucket.alias("__bucket"))
+        .join(F.broadcast(plan), group_col)
+        .filter((F.col("keep_frac") >= 1.0) | (F.col("__bucket") < bound))
+        .groupBy(group_col)
+        .agg(F.count(F.lit(1)).alias("n_kept"))
+    )
+    return plan.join(kept, group_col, "left").select(
+        group_col,
+        *cols,
+        F.coalesce(F.col("n_kept"), F.lit(0)).cast("long").alias("n_kept"),
     )
 
 
@@ -410,9 +454,7 @@ def temperature_mix(
     Scale shape: the plan is a group-cardinality aggregate plus two scalar
     broadcasts; applying it is one broadcast join and a scan-local
     predicate — no shuffle touches the corpus."""
-    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_docs"))
-    total = counts.agg(F.sum("n_docs").alias("__N"))
-    wc = counts.crossJoin(F.broadcast(total)).withColumn(
+    wc = _group_counts(df, group_col).withColumn(
         "weight_micro",
         F.round(
             F.lit(1e6)
@@ -433,28 +475,8 @@ def temperature_mix(
             / (F.col("__SW").cast("double") * F.col("n_docs")),
         ),
     )
-    bucket = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), F.col(key).cast("string"))), 1, 4),
-        16,
-        10,
-    ).cast("long")
-    bound = F.floor(F.col("keep_frac") * F.lit(65536.0)).cast("long")
-    kept = (
-        df.select(F.col(group_col), bucket.alias("__bucket"))
-        .join(F.broadcast(plan), group_col)
-        .filter((F.col("keep_frac") >= 1.0) | (F.col("__bucket") < bound))
-        .groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-    )
-    return (
-        plan.join(kept, group_col, "left")
-        .select(
-            group_col,
-            "n_docs",
-            "weight_micro",
-            "keep_frac",
-            F.coalesce(F.col("n_kept"), F.lit(0)).cast("long").alias("n_kept"),
-        )
+    return _with_kept(
+        df, plan, group_col, key, salt, "n_docs", "weight_micro", "keep_frac"
     )
 
 
@@ -482,34 +504,14 @@ def source_cap_mix(
     Scale shape: one group-cardinality aggregate, one scalar broadcast,
     then a broadcast join + scan-local predicate — the corpus never
     shuffles."""
-    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_docs"))
-    total = counts.agg(F.sum("n_docs").alias("__N"))
-    plan = counts.crossJoin(F.broadcast(total)).withColumn(
+    plan = _group_counts(df, group_col).withColumn(
         "keep_frac",
         F.least(
             F.lit(1.0),
             (F.lit(cap_frac) * F.col("__N")) / F.col("n_docs"),
         ),
     )
-    bucket = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), F.col(key).cast("string"))), 1, 4),
-        16,
-        10,
-    ).cast("long")
-    bound = F.floor(F.col("keep_frac") * F.lit(65536.0)).cast("long")
-    kept = (
-        df.select(F.col(group_col), bucket.alias("__bucket"))
-        .join(F.broadcast(plan), group_col)
-        .filter((F.col("keep_frac") >= 1.0) | (F.col("__bucket") < bound))
-        .groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-    )
-    return plan.join(kept, group_col, "left").select(
-        group_col,
-        "n_docs",
-        "keep_frac",
-        F.coalesce(F.col("n_kept"), F.lit(0)).cast("long").alias("n_kept"),
-    )
+    return _with_kept(df, plan, group_col, key, salt, "n_docs", "keep_frac")
 
 
 def weighted_sample(
@@ -540,9 +542,7 @@ def weighted_sample(
         raise ValueError("k must be >= 1")
     u = (
         F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col(key).cast("string"))), 1, 15
-            ),
+            F.substring(_content_hash(F.col(key), salt), 1, 15),
             16,
             10,
         ).cast("double")

@@ -184,6 +184,17 @@ def rolling_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _term_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, term, tf): each document's non-empty tokens with their counts,
+    one (doc, term) shuffle."""
+    return (
+        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
+        .filter(F.col("term") != "")
+        .groupBy(id_col, "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
 def tfidf_top_terms(
     df: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -199,12 +210,7 @@ def tfidf_top_terms(
     engines' ln implementations (last-ulp differences vanish)."""
     from sdc_mapreduce_spark.operators.relational import top_k_per_group
 
-    pairs = (
-        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    pairs = _term_counts(df, text_col, id_col)
     doc_freq = pairs.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
     n_docs = df.select(F.countDistinct(id_col).alias("n_docs"))
     scored = (
@@ -349,6 +355,21 @@ def pii_redact(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _ngrams(t: Column, n: int) -> Column:
+    """The ``n``-grams of token array ``t``, each its tokens ' '-joined.
+    One slice per gram: n element_at lookups per gram would n-uple the
+    interpreted-lambda work (higher-order transforms don't codegen). A
+    token array shorter than ``n`` has none: sequence(0, size-n) would run
+    descending and hit invalid indexes under ANSI mode."""
+    return F.when(
+        F.size(t) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(t) - n),
+            lambda i: F.array_join(F.slice(t, i + 1, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def contamination_check(
     df: DataFrame,
     benchmark: DataFrame,
@@ -366,17 +387,7 @@ def contamination_check(
     per-doc membership test is a broadcast semi-join on the gram string —
     no corpus shuffle at all; the only aggregation is per-doc counts over
     the exploded distinct grams."""
-    t = tokens(text_col)
-    # one slice + one join per gram — n element_at lookups per gram would
-    # n-uple the interpreted-lambda work (higher-order transforms don't
-    # codegen)
-    grams = F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - n),
-            lambda i: F.array_join(F.slice(t, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = _ngrams(tokens(text_col), n)
     doc_grams = df.select(
         F.col(id_col), F.explode(F.array_distinct(grams)).alias("gram")
     )
@@ -643,6 +654,22 @@ def vocab_ids(
     return ranked.select("token", "freq", F.col("vocab_id").alias("vocab_id"))
 
 
+def _cm_cells(depth: int, width: int) -> Column:
+    """(d, pos): one row per count-min hash row ``d`` with the counter
+    ``pos`` it maps column ``tok`` to (md5-derived, engine-portable)."""
+    return F.posexplode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(depth - 1)),
+            lambda d: F.pmod(
+                token_hash60(
+                    F.concat(F.lit("cm"), d.cast("string"), F.lit("#"), F.col("tok"))
+                ),
+                F.lit(width),
+            ),
+        )
+    ).alias("d", "pos")
+
+
 def countmin_token_freq(
     df: DataFrame,
     probe_k: int = 20,
@@ -665,20 +692,7 @@ def countmin_token_freq(
     to a full token groupBy when only heavy hitters matter. The probe join
     broadcasts the d·w counters."""
     toks = df.select(F.explode(tokens(text_col)).alias("tok"))
-    rows = toks.select(
-        "tok",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(depth - 1)),
-                lambda d: F.pmod(
-                    token_hash60(
-                        F.concat(F.lit("cm"), d.cast("string"), F.lit("#"), F.col("tok"))
-                    ),
-                    F.lit(width),
-                ),
-            )
-        ).alias("d", "pos"),
-    )
+    rows = toks.select("tok", _cm_cells(depth, width))
     sketch = rows.groupBy("d", "pos").agg(F.count(F.lit(1)).alias("cnt"))
     exact = (
         toks.groupBy("tok")
@@ -686,21 +700,7 @@ def countmin_token_freq(
         .orderBy(F.col("exact_cnt").desc(), F.col("tok").asc())
         .limit(probe_k)
     )
-    probe = exact.select(
-        "tok",
-        "exact_cnt",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(depth - 1)),
-                lambda d: F.pmod(
-                    token_hash60(
-                        F.concat(F.lit("cm"), d.cast("string"), F.lit("#"), F.col("tok"))
-                    ),
-                    F.lit(width),
-                ),
-            )
-        ).alias("d", "pos"),
-    )
+    probe = exact.select("tok", "exact_cnt", _cm_cells(depth, width))
     est = (
         probe.join(F.broadcast(sketch), ["d", "pos"])
         .groupBy("tok", "exact_cnt")
@@ -873,14 +873,11 @@ def term_cooccurrence_lift(
     corpus-size scalar broadcasts."""
     from sdc_mapreduce_spark.operators.relational import top_k_per_group
 
-    tc = (
-        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
     kept = top_k_per_group(
-        tc, [id_col], [F.col("tf").desc(), F.col("term").asc()], top_m
+        _term_counts(df, text_col, id_col),
+        [id_col],
+        [F.col("tf").desc(), F.col("term").asc()],
+        top_m,
     ).select(id_col, "term")
     arrs = kept.groupBy(id_col).agg(
         F.array_sort(F.collect_list("term")).alias("__ts")
@@ -919,18 +916,8 @@ def top_ngrams(df: DataFrame, n: int = 2, k: int = 20, text_col: str = "text") -
     """Global top-k token n-grams by frequency: build per-doc n-gram arrays
     with a transform over token positions (no Python), explode, count, top-k.
     Partial aggregation keeps the shuffle at distinct-n-gram cardinality."""
-    t = tokens(text_col)
-    # Guard short docs: sequence(0, size-n) runs *descending* when size < n,
-    # which would hit invalid element_at indexes under ANSI mode.
-    grams = F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - n),
-            lambda i: F.array_join(F.slice(t, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
-        df.select(F.explode(grams).alias("ngram"))
+        df.select(F.explode(_ngrams(tokens(text_col), n)).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("ngram").asc())
@@ -1019,6 +1006,19 @@ def bigram_lm_scores(
     )
 
 
+def _vocab_rows(vocab: DataFrame, value_col: str, max_vocab: int) -> list:
+    """(token, ``value_col``) rows of ``vocab`` in one bounded collect of
+    at most ``max_vocab + 1`` rows; an oversized vocabulary is refused
+    after the one sentinel row more."""
+    rows = vocab.select("token", value_col).limit(max_vocab + 1).collect()
+    if len(rows) > max_vocab:
+        raise ValueError(
+            f"vocabulary exceeds max_vocab={max_vocab}; raise min_count "
+            "(or max_vocab), or use the declarative explode/join encode"
+        )
+    return rows
+
+
 def encode_with_vocab(
     df: DataFrame,
     vocab: DataFrame,
@@ -1062,12 +1062,7 @@ def encode_with_vocab(
     # extra job before the collect.)
     if "vocab_id" in vocab.columns:
         # pre-ranked vocabulary (vocab_ids output): use its ids verbatim
-        rows = vocab.select("token", "vocab_id").limit(max_vocab + 1).collect()
-        if len(rows) > max_vocab:
-            raise ValueError(
-                f"vocabulary exceeds max_vocab={max_vocab}; raise min_count "
-                "(or max_vocab), or use the declarative explode/join encode"
-            )
+        rows = _vocab_rows(vocab, "vocab_id", max_vocab)
         mapping = {r["token"]: r["vocab_id"] for r in rows}
     else:
         # raw (token, freq) counts (vocab_counts output): rank driver-side
@@ -1077,12 +1072,7 @@ def encode_with_vocab(
         # code-point order. Skips the range-shuffle ranking entirely: the
         # encode path holds the full dict on the driver anyway, so the
         # O(V log V) sort adds no new memory class.
-        rows = vocab.select("token", "freq").limit(max_vocab + 1).collect()
-        if len(rows) > max_vocab:
-            raise ValueError(
-                f"vocabulary exceeds max_vocab={max_vocab}; raise min_count "
-                "(or max_vocab), or use the declarative explode/join encode"
-            )
+        rows = _vocab_rows(vocab, "freq", max_vocab)
         rows.sort(key=lambda r: (-r["freq"], r["token"]))
         mapping = {r["token"]: i + 1 for i, r in enumerate(rows)}
     b = df.sparkSession.sparkContext.broadcast(mapping)
@@ -1248,12 +1238,7 @@ def bm25_topk(
     # by the harness's drain_pins after materialization.
     from sdc_mapreduce_spark.cache import pin
 
-    pairs = pin(
-        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    pairs = pin(_term_counts(df, text_col, id_col))
     dl = pairs.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     stats = df.select(F.countDistinct(id_col).alias("n_docs")).join(
         dl.select(F.sum("dl").alias("__total_dl"))
@@ -1624,6 +1609,18 @@ def _viterbi_pieces(w: str, lp: dict[str, int], max_piece_len: int) -> list[str]
     return pieces[::-1]
 
 
+def _log_probs(counts: DataFrame, name: str, *cols: Column) -> DataFrame:
+    """(piece, *cols, name) over (piece, c) counts: ``name`` is the
+    piece's log-probability in integer micro-units, computed JVM-side for
+    ln parity with the oracle; the total is a broadcast scalar."""
+    total = counts.agg(F.sum("c").alias("__t"))
+    return counts.crossJoin(F.broadcast(total)).select(
+        "piece",
+        *cols,
+        F.round(F.log(F.col("c") / F.col("__t")) * 1e6).cast("bigint").alias(name),
+    )
+
+
 def unigram_lm(
     df: DataFrame,
     text_col: str = "text",
@@ -1701,23 +1698,12 @@ def unigram_lm(
     )
     seed = chars.unionByName(multi)
 
-    def _lp_rows(counts: DataFrame) -> list:
-        """(piece, lp_micro) with lp computed JVM-side (ln parity with the
-        oracle); bounded collect — O(chars + seed_multi) rows by
-        construction (counts only ever shrinks from the seed)."""
-        total = counts.agg(F.sum("c").alias("__t"))
-        return (
-            counts.crossJoin(F.broadcast(total))
-            .select(
-                "piece",
-                F.round(F.log(F.col("c") / F.col("__t")) * 1e6)
-                .cast("bigint")
-                .alias("lp"),
-            )
-            .collect()
-        )
+    def _lp_map(counts: DataFrame) -> dict[str, int]:
+        """piece -> lp_micro; bounded collect — O(chars + seed_multi) rows
+        by construction (counts only ever shrinks from the seed)."""
+        return {r["piece"]: int(r["lp"]) for r in _log_probs(counts, "lp").collect()}
 
-    vocab = {r["piece"]: int(r["lp"]) for r in _lp_rows(seed)}
+    vocab = _lp_map(seed)
     counts = None
     for t in range(EM_ITERS):
         bc = spark.sparkContext.broadcast(vocab)
@@ -1741,18 +1727,10 @@ def unigram_lm(
             # Arrow-kernel lineage so later consumers don't re-segment
         )
         if t < EM_ITERS - 1:
-            vocab = {r["piece"]: int(r["lp"]) for r in _lp_rows(counts)}
+            vocab = _lp_map(counts)
 
-    total = counts.agg(F.sum("c").alias("__t"))
     return (
-        counts.crossJoin(F.broadcast(total))
-        .select(
-            "piece",
-            F.col("c").cast("bigint").alias("cnt"),
-            F.round(F.log(F.col("c") / F.col("__t")) * 1e6)
-            .cast("bigint")
-            .alias("logprob_micro"),
-        )
+        _log_probs(counts, "logprob_micro", F.col("c").cast("bigint").alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("piece").asc())
         .limit(top_out)
     )

@@ -33,6 +33,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sdc_mapreduce_spark.catalog import load_table
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -79,6 +81,15 @@ def sql_davg(expr: str, alias: str, scale: int = 2) -> str:
 
 
 # --- DuckDB oracle fragments shared by more than one query module --------
+
+
+def region_nations(spark: SparkSession, sf_dir: str, r_name: str) -> DataFrame:
+    """nation ⋈ broadcast(region ``r_name``): the nations of one region, a
+    dimension small enough to broadcast at any SF."""
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == r_name)
+    return load_table(spark, sf_dir, "nation").join(
+        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
+    )
 
 
 def unit_vectors_sql(materialized: bool = False) -> str:

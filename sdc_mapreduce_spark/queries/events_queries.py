@@ -10,8 +10,9 @@ query; the batch forms are the rest of the oracle-checkable surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.operators.relational import (
@@ -20,12 +21,15 @@ from sdc_mapreduce_spark.operators.relational import (
     scd2_history,
 )
 from sdc_mapreduce_spark.queries.base import QuerySpec, dsum, sql_dsum
-from sdc_mapreduce_spark.queries.scratch import scratch
+from sdc_mapreduce_spark.queries.scratch import Scratch, scratch
 from sdc_mapreduce_spark.streaming.events import (
     cdc_upsert_stream,
+    fold_changes,
+    live_rows,
     read_cdc_snapshot,
     replay_events,
     session_aggregate,
+    session_stats,
     sliding_counts,
     stateful_user_totals,
     stream_stream_error_purchase_join,
@@ -68,6 +72,25 @@ _ERRORS_PURCHASES = """errors AS (
 )"""
 
 
+def _first_purchase_sql(cmp: str, order: str, note: str = "") -> str:
+    """The as-of oracle: each error with the first purchase of the same
+    user whose ``p.ts {cmp} e.ts``, first in ``order`` (ROW_NUMBER over the
+    ``_ERRORS_PURCHASES`` join); ``note`` is SQL comment text opening the
+    ranking CTE."""
+    return f"""
+WITH {_ERRORS_PURCHASES}, cand AS ({note}
+  SELECT e.event_id, e.user_id, p.purchase_event_id, p.purchase_value,
+         ROW_NUMBER() OVER (PARTITION BY e.event_id
+                            ORDER BY {order}) AS rn
+  FROM errors e JOIN purchases p
+    ON e.user_id = p.user_id AND p.ts {cmp} e.ts
+)
+SELECT event_id, user_id, purchase_event_id, purchase_value
+FROM cand WHERE rn = 1
+ORDER BY event_id
+"""
+
+
 def _islands_sql(ts: str) -> str:
     """CTEs ``o`` and ``i(user_id, event_type, ts, island)``: each user's
     runs of a constant event_type (gaps and islands); ``ts`` is the
@@ -99,6 +122,96 @@ _CHANGES = """ordered AS (
   SELECT user_id, event_type, ts AS valid_from, event_id
   FROM ordered WHERE prev_type IS NULL OR prev_type <> event_type
 )"""
+
+
+# --- Spark fragments -------------------------------------------------------
+
+
+def _user_order() -> WindowSpec:
+    """Each user's events in (ts, event_id) order: the event_id tie-break
+    keeps every per-user window deterministic when timestamps repeat."""
+    return Window.partitionBy("user_id").orderBy("ts", "event_id")
+
+
+def _user_running() -> WindowSpec:
+    """``_user_order`` framed from the user's first event to the current
+    one, for running aggregates."""
+    return _user_order().rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+
+def _errors_purchases(ev: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """errors(event_id, user_id, ts) and purchases(user_id, ts,
+    purchase_event_id, purchase_value): the Spark twin of
+    ``_ERRORS_PURCHASES``."""
+    errors = ev.filter(F.col("event_type") == "error").select(
+        "event_id", "user_id", "ts"
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        "ts",
+        F.col("event_id").alias("purchase_event_id"),
+        F.col("value").alias("purchase_value"),
+    )
+    return errors, purchases
+
+
+def _purchase_asof(ev: DataFrame, direction: str) -> DataFrame:
+    """Each error with the same user's as-of purchase in ``direction``
+    (operators.relational.asof_join); errors with no such purchase are
+    dropped."""
+    errors, purchases = _errors_purchases(ev)
+    joined = asof_join(
+        errors,
+        purchases,
+        on="user_id",
+        left_time="ts",
+        right_time="ts",
+        right_value_cols=["purchase_event_id", "purchase_value"],
+        direction=direction,
+    )
+    return joined.filter(F.col("purchase_event_id").isNotNull()).select(
+        "event_id", "user_id", "purchase_event_id", "purchase_value"
+    )
+
+
+def _islands(ev: DataFrame, **extra: Column) -> DataFrame:
+    """(user_id, interval_id, event_type, valid_from, valid_to, *extra):
+    each user's maximal runs of one event_type (gaps and islands). The
+    change flag is a lag over ``_user_order`` and the island id its
+    running sum, so both windows share one (user_id) exchange and sort,
+    and the run aggregate groups on the same key. ``extra`` names further
+    aggregates per run."""
+    prev = F.lag("event_type").over(_user_order())
+    chg = F.when(prev.isNull() | (prev != F.col("event_type")), 1).otherwise(0)
+    return (
+        ev.withColumn("__chg", chg)
+        .withColumn("__island", F.sum("__chg").over(_user_running()))
+        .groupBy("user_id", "__island")
+        .agg(
+            F.min("event_type").alias("event_type"),
+            F.min("ts").alias("valid_from"),
+            F.max("ts").alias("valid_to"),
+            *(c.alias(name) for name, c in extra.items()),
+        )
+        .select(
+            "user_id",
+            F.col("__island").cast("int").alias("interval_id"),
+            "event_type",
+            "valid_from",
+            "valid_to",
+            *extra,
+        )
+    )
+
+
+def _drained(s: Scratch, stream: DataFrame, mode: str) -> DataFrame:
+    """Run ``stream`` to completion (availableNow) in output ``mode`` into
+    a memory sink of ``s`` and return the sink's rows."""
+    return s.memory(
+        stream.writeStream.outputMode(mode)
+        .option("checkpointLocation", s.dir())
+        .trigger(availableNow=True)
+    )
 
 
 def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,14 +318,9 @@ def events_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     divergence between the native operator's merge semantics and the
     composition turns this row red."""
     ev = load_table(spark, sf_dir, "events")
-    sessions = (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-    )
+    sessions = ev.groupBy(
+        "user_id", F.session_window("ts", "30 minutes").alias("w")
+    ).agg(*session_stats())
     w = Window.partitionBy("user_id").orderBy(F.col("w.start").asc())
     return sessions.select(
         "user_id",
@@ -231,9 +339,8 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the ordering window, one tiny pair aggregate — the sequence-mining
     shape behind next-action prediction features."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
-        ev.withColumn("prev_type", F.lag("event_type").over(w))
+        ev.withColumn("prev_type", F.lag("event_type").over(_user_order()))
         .filter(F.col("prev_type").isNotNull())
         .groupBy("prev_type", F.col("event_type").alias("next_type"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -275,41 +382,12 @@ def events_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamps resolve to the minimum purchase id (deterministic window
     tie-break), which the oracle ranks with the same total order."""
     ev = load_table(spark, sf_dir, "events")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"),
-        F.col("ts"),
-        F.col("event_id").alias("purchase_event_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    joined = asof_join(
-        errors,
-        purchases,
-        on="user_id",
-        left_time="ts",
-        right_time="ts",
-        right_value_cols=["purchase_event_id", "purchase_value"],
-        direction="forward",
-    )
-    return joined.filter(F.col("purchase_event_id").isNotNull()).select(
-        "event_id", "user_id", "purchase_event_id", "purchase_value"
-    ).orderBy("event_id")
+    return _purchase_asof(ev, "forward").orderBy("event_id")
 
 
-EVENTS_ASOF_FORWARD_SQL = f"""
-WITH {_ERRORS_PURCHASES}, cand AS (
-  SELECT e.event_id, e.user_id, p.purchase_event_id, p.purchase_value,
-         ROW_NUMBER() OVER (PARTITION BY e.event_id
-                            ORDER BY p.ts ASC, p.purchase_event_id ASC) AS rn
-  FROM errors e JOIN purchases p
-    ON e.user_id = p.user_id AND p.ts >= e.ts
+EVENTS_ASOF_FORWARD_SQL = _first_purchase_sql(
+    ">=", "p.ts ASC, p.purchase_event_id ASC"
 )
-SELECT event_id, user_id, purchase_event_id, purchase_value
-FROM cand WHERE rn = 1
-ORDER BY event_id
-"""
 
 
 def events_rfm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,12 +502,7 @@ def events_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value")
         ).alias("value_holed"),
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = F.last("value_holed", ignorenulls=True).over(w)
+    filled = F.last("value_holed", ignorenulls=True).over(_user_running())
     return (
         holed.select(
             "event_id",
@@ -613,47 +686,18 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each error event matched to the same user's most recent
     purchase at or before it (union+window composition — see
     operators.relational.asof_join; DuckDB oracle uses native ASOF JOIN)."""
-    ev = load_table(spark, sf_dir, "events")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"),
-        F.col("ts"),
-        F.col("event_id").alias("purchase_event_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    joined = asof_join(
-        errors,
-        purchases,
-        on="user_id",
-        left_time="ts",
-        right_time="ts",
-        right_value_cols=["purchase_event_id", "purchase_value"],
-        direction="backward",
-    )
-    return joined.filter(F.col("purchase_event_id").isNotNull()).select(
-        "event_id", "user_id", "purchase_event_id", "purchase_value"
-    )
+    return _purchase_asof(load_table(spark, sf_dir, "events"), "backward")
 
 
-EVENTS_ASOF_SQL = f"""
-WITH {_ERRORS_PURCHASES}, cand AS (
+EVENTS_ASOF_SQL = _first_purchase_sql(
+    "<=",
+    "p.ts DESC, p.purchase_event_id DESC, p.purchase_value DESC",
+    """
   -- explicit window instead of native ASOF JOIN: among purchases sharing
   -- the winning timestamp, ASOF picks an unspecified row, while the Spark
   -- operator deterministically carries the max (purchase_event_id,
-  -- purchase_value) tuple — replay that exact total order here
-  SELECT e.event_id, e.user_id, p.purchase_event_id, p.purchase_value,
-         ROW_NUMBER() OVER (PARTITION BY e.event_id
-                            ORDER BY p.ts DESC, p.purchase_event_id DESC,
-                                     p.purchase_value DESC) AS rn
-  FROM errors e JOIN purchases p
-    ON e.user_id = p.user_id AND p.ts <= e.ts
+  -- purchase_value) tuple — replay that exact total order here""",
 )
-SELECT event_id, user_id, purchase_event_id, purchase_value
-FROM cand WHERE rn = 1
-ORDER BY event_id
-"""
 
 
 def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -833,16 +877,12 @@ def events_streaming_tumbling_certified(spark: SparkSession, sf_dir: str) -> Dat
     timezone we don't control, and a zoned parse would shift window
     boundaries relative to the naive-timestamp DuckDB oracle."""
     with scratch(spark) as s:
-        src, ckpt = s.dir(), s.dir()
         stream = replay_events(
-            load_table(spark, sf_dir, "events"), src, "ts", "event_type", "value"
+            load_table(spark, sf_dir, "events"), s.dir(), "ts", "event_type", "value"
         )
         agg = tumbling_counts(stream, watermark=None)
-        result = s.memory(
-            agg.select("window_start", "event_type", "cnt")
-            .writeStream.outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
+        result = _drained(
+            s, agg.select("window_start", "event_type", "cnt"), "complete"
         )
         return result.orderBy("window_start", "event_type")
 
@@ -870,16 +910,10 @@ def events_streaming_sliding_certified(
     alone does not exercise it. The oracle replays the expansion: window
     starts for event t are bucket5(t) and bucket5(t) − 5 minutes."""
     with scratch(spark) as s:
-        src, ckpt = s.dir(), s.dir()
         stream = replay_events(
-            load_table(spark, sf_dir, "events"), src, "ts", "event_type"
+            load_table(spark, sf_dir, "events"), s.dir(), "ts", "event_type"
         )
-        result = s.memory(
-            sliding_counts(stream, watermark=None)
-            .writeStream.outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
+        result = _drained(s, sliding_counts(stream, watermark=None), "complete")
         return result.orderBy("window_start", "event_type")
 
 
@@ -934,22 +968,16 @@ def events_streaming_watermark_certified(
     5 minutes, so the collected naive datetimes match the naive oracle
     (the --tz Asia/Kolkata audit exercises exactly this)."""
     with scratch(spark) as s:
-        src, ckpt = s.dir(), s.dir()
         stream = replay_events(
             load_table(spark, sf_dir, "events"),
-            src,
+            s.dir(),
             "ts",
             "event_type",
             "value",
             event_time="zoned",
             max_files_per_trigger=2,
         )
-        result = s.memory(
-            _closed_windows(stream)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
+        result = _drained(s, _closed_windows(stream), "append")
         return result.orderBy("window_start", "event_type")
 
 
@@ -986,10 +1014,10 @@ def events_streaming_update_certified(
     state finite only because the replay is (availableNow; an unbounded
     deployment would keep the watermark, as incremental_rollup does)."""
     with scratch(spark) as s:
-        src, ckpt, sink = s.dir(), s.dir(), s.dir()
+        ckpt, sink = s.dir(), s.dir()
         stream = replay_events(
             load_table(spark, sf_dir, "events"),
-            src,
+            s.dir(),
             "ts",
             "event_type",
             "value",
@@ -1153,35 +1181,8 @@ def events_change_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionize; the chunk-merge decomposition (operators.skew) applies
     identically."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("event_type").over(w)
-    chg = F.when(prev.isNull() | (prev != F.col("event_type")), 1).otherwise(0)
-    islands = (
-        ev.withColumn("__chg", chg)
-        .withColumn(
-            "__island",
-            F.sum("__chg").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-    )
-    return (
-        islands.groupBy("user_id", "__island")
-        .agg(
-            F.min("event_type").alias("event_type"),
-            F.min("ts").alias("valid_from"),
-            F.max("ts").alias("valid_to"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            "user_id",
-            F.col("__island").cast("int").alias("interval_id"),
-            "event_type",
-            "valid_from",
-            "valid_to",
-            "n_events",
-        )
-        .orderBy("user_id", "interval_id")
+    return _islands(ev, n_events=F.count(F.lit(1))).orderBy(
+        "user_id", "interval_id"
     )
 
 
@@ -1258,22 +1259,20 @@ def events_streaming_dedup_certified(spark: SparkSession, sf_dir: str) -> DataFr
     certification run deterministic; the watermark-TTL form is covered in
     tests/test_streaming.py."""
     with scratch(spark) as s:
-        src, ckpt = s.dir(), s.dir()
         stream = replay_events(
-            load_table(spark, sf_dir, "events"), src, "ts", "user_id", "event_type"
+            load_table(spark, sf_dir, "events"), s.dir(), "ts", "user_id", "event_type"
         )
         keys = stream.select(
             "user_id",
             "event_type",
             F.window("ts", "10 minutes")["start"].alias("bucket_start"),
         )
-        result = s.memory(
+        result = _drained(
+            s,
             streaming_dedup(
                 keys, ["user_id", "event_type", "bucket_start"], watermark=None
-            )
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
+            ),
+            "append",
         )
         return result.orderBy("bucket_start", "user_id", "event_type")
 
@@ -1291,16 +1290,10 @@ def events_streaming_stateful_certified(spark: SparkSession, sf_dir: str) -> Dat
     (lost/duplicated state between batches) changes the totals and turns
     the row red. No watermark: NoTimeout state needs none."""
     with scratch(spark) as s:
-        src, ckpt = s.dir(), s.dir()
         stream = replay_events(
-            load_table(spark, sf_dir, "events"), src, "user_id", "value"
+            load_table(spark, sf_dir, "events"), s.dir(), "user_id", "value"
         )
-        emitted = s.memory(
-            stateful_user_totals(stream, watermark=None)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
+        emitted = _drained(s, stateful_user_totals(stream, watermark=None), "update")
         return (
             emitted.groupBy("user_id")
             .agg(F.max(F.struct("n_events", "value_micro_sum")).alias("__f"))
@@ -1336,22 +1329,16 @@ def events_streaming_join_certified(spark: SparkSession, sf_dir: str) -> DataFra
     pair set — are identical in any session zone, and the output is ids
     only. Oracle = the batch interval predicate."""
     with scratch(spark) as s:
-        src, ckpt = s.dir(), s.dir()
         stream = replay_events(
             load_table(spark, sf_dir, "events"),
-            src,
+            s.dir(),
             "event_id",
             "ts",
             "user_id",
             "event_type",
             event_time="utc",
         )
-        result = s.memory(
-            stream_stream_error_purchase_join(stream)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
+        result = _drained(s, stream_stream_error_purchase_join(stream), "append")
         return result.orderBy("error_event_id", "purchase_event_id")
 
 
@@ -1393,16 +1380,7 @@ def events_cogroup_asof_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cogroup API contract."""
     import pandas as pd
 
-    ev = load_table(spark, sf_dir, "events")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ts",
-        F.col("event_id").alias("purchase_event_id"),
-        F.col("value").alias("purchase_value"),
-    )
+    errors, purchases = _errors_purchases(load_table(spark, sf_dir, "events"))
 
     def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty:
@@ -1438,18 +1416,9 @@ def events_cogroup_asof_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("event_id")
 
 
-EVENTS_COGROUP_ASOF_SQL = f"""
-WITH {_ERRORS_PURCHASES}, cand AS (
-  SELECT e.event_id, e.user_id, p.purchase_event_id, p.purchase_value,
-         ROW_NUMBER() OVER (PARTITION BY e.event_id
-                            ORDER BY p.ts DESC, p.purchase_event_id DESC) AS rn
-  FROM errors e JOIN purchases p
-    ON e.user_id = p.user_id AND p.ts <= e.ts
+EVENTS_COGROUP_ASOF_SQL = _first_purchase_sql(
+    "<=", "p.ts DESC, p.purchase_event_id DESC"
 )
-SELECT event_id, user_id, purchase_event_id, purchase_value
-FROM cand WHERE rn = 1
-ORDER BY event_id
-"""
 
 
 def events_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1466,36 +1435,11 @@ def events_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = sessionize_plain(ev).select(
         "user_id", "session_id", "session_start", "session_end"
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("event_type").over(w)
-    chg = F.when(prev.isNull() | (prev != F.col("event_type")), 1).otherwise(0)
-    islands = (
-        ev.withColumn("__chg", chg)
-        .withColumn(
-            "__island",
-            F.sum("__chg").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        .groupBy("user_id", "__island")
-        .agg(
-            F.min("event_type").alias("event_type"),
-            F.min("ts").alias("valid_from"),
-            F.max("ts").alias("valid_to"),
-        )
-        .select(
-            "user_id",
-            F.col("__island").cast("int").alias("interval_id"),
-            "event_type",
-            "valid_from",
-            "valid_to",
-        )
-    )
     from sdc_mapreduce_spark.operators.relational import interval_overlap_join
 
     pairs = interval_overlap_join(
         sessions,
-        islands,
+        _islands(ev),
         on="user_id",
         left_start="session_start",
         left_end="session_end",
@@ -1562,21 +1506,7 @@ def events_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Tombstoned keys are absent from the output; n_changes counts the key's
     full change history."""
     ev = load_table(spark, sf_dir, "events")
-    agg = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_changes"),
-        F.max(F.struct("ts", "event_id", "event_type", "value")).alias("__last"),
-    )
-    return (
-        agg.filter(F.col("__last.event_type") != "error")
-        .select(
-            "user_id",
-            F.col("__last.event_id").alias("last_event_id"),
-            F.col("__last.event_type").alias("last_event_type"),
-            F.col("__last.value").alias("last_value"),
-            "n_changes",
-        )
-        .orderBy("user_id")
-    )
+    return live_rows(fold_changes(ev)).orderBy("user_id")
 
 
 EVENTS_CDC_APPLY_SQL = """
@@ -1923,13 +1853,8 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     # (ts, event_id) ordering, not ts alone: duplicate (user_id, ts) rows
     # would otherwise make the carried touch partition-order luck — the
     # same tie-break discipline as sessionize / scd2_history / asof_join.
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     return (
-        ev.withColumn("__touch", F.last(touch, ignorenulls=True).over(w))
+        ev.withColumn("__touch", F.last(touch, ignorenulls=True).over(_user_running()))
         .filter(F.col("event_type") == "purchase")
         .select(
             "event_id",
@@ -2101,10 +2026,10 @@ def events_streaming_cdc_certified(spark: SparkSession, sf_dir: str) -> DataFram
     earlier version, tombstone mishandling, double-counted replays) turns
     this row red in a way no batch plan can."""
     with scratch(spark) as s:
-        src, snap, ckpt = s.dir(), s.dir(), s.dir()
+        snap, ckpt = s.dir(), s.dir()
         stream = replay_events(
             load_table(spark, sf_dir, "events"),
-            src,
+            s.dir(),
             "event_id",
             "ts",
             "user_id",
@@ -2222,20 +2147,14 @@ def events_streaming_session_certified(
     discipline); a production deployment bounds state with the watermark
     + append mode instead — the trade is documented, not hidden."""
     with scratch(spark) as s:
-        src, ckpt = s.dir(), s.dir()
         stream = replay_events(
             load_table(spark, sf_dir, "events"),
-            src,
+            s.dir(),
             "ts",
             "user_id",
             max_files_per_trigger=1,
         )
-        result = s.memory(
-            session_aggregate(stream, watermark=None)
-            .writeStream.outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
+        result = _drained(s, session_aggregate(stream, watermark=None), "complete")
         return result.orderBy("user_id", "session_start")
 
 

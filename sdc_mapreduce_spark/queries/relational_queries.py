@@ -16,7 +16,14 @@ from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.operators.relational import top_k, top_k_per_group
-from sdc_mapreduce_spark.queries.base import QuerySpec, davg, dsum, sql_davg, sql_dsum
+from sdc_mapreduce_spark.queries.base import (
+    QuerySpec,
+    davg,
+    dsum,
+    region_nations,
+    sql_davg,
+    sql_dsum,
+)
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,8 +117,6 @@ LIMIT 10
 def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: five-way star join, all dimensions broadcast, one
     fact shuffle for the final aggregation."""
-    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = load_table(spark, sf_dir, "nation")
     cust = load_table(spark, sf_dir, "customer")
     supp = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -122,11 +127,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dims = (
         cust.join(
-            F.broadcast(
-                nation.join(
-                    F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
-                )
-            ),
+            F.broadcast(region_nations(spark, sf_dir, "ASIA")),
             F.col("c_nationkey") == F.col("n_nationkey"),
         ).select("c_custkey", "c_nationkey", "n_name")
     )

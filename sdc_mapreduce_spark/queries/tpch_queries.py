@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from sdc_mapreduce_spark.catalog import load_table
 from sdc_mapreduce_spark.operators.relational import top_k
-from sdc_mapreduce_spark.queries.base import QuerySpec, dsum, sql_dsum
+from sdc_mapreduce_spark.queries.base import QuerySpec, dsum, region_nations, sql_dsum
 
 
 def _supply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -32,6 +32,17 @@ def _supply(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct keeps the exchange small."""
     li = load_table(spark, sf_dir, "lineitem")
     return li.select("l_partkey", "l_suppkey").distinct()
+
+
+def _nation_suppliers(spark: SparkSession, sf_dir: str, n_name: str) -> DataFrame:
+    """supplier ⋈ broadcast(nation ``n_name``): the suppliers of one
+    nation."""
+    return load_table(spark, sf_dir, "supplier").join(
+        F.broadcast(
+            load_table(spark, sf_dir, "nation").filter(F.col("n_name") == n_name)
+        ),
+        F.col("s_nationkey") == F.col("n_nationkey"),
+    )
 
 
 def q2_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -46,16 +57,10 @@ def q2_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("p_type") == "LARGE")
         .select("p_partkey", "p_name")
     )
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eur = (
         load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(
-                nation.join(
-                    F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
-                )
-            ),
+            F.broadcast(region_nations(spark, sf_dir, "EUROPE")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey", "s_acctbal", "s_name", "n_name")
@@ -113,14 +118,11 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey")
     )
     nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     cust_am = (
         load_table(spark, sf_dir, "customer")
         .join(
             F.broadcast(
-                nation.join(
-                    F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
-                ).select("n_nationkey")
+                region_nations(spark, sf_dir, "AMERICA").select("n_nationkey")
             ),
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
@@ -442,17 +444,8 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("l_returnflag") == "R", F.col("l_suppkey"))
         ).alias("n_supp_r"),
     )
-    supp_nation = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "nation").filter(
-                    F.col("n_name") == "NATION_3"
-                )
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "s_name")
+    supp_nation = _nation_suppliers(spark, sf_dir, "NATION_3").select(
+        "s_suppkey", "s_name"
     )
     l1 = (
         li.filter(F.col("l_returnflag") == "R")
@@ -552,18 +545,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold is one division + one multiply in fixed order, so the >
     comparison is engine-stable."""
     li = load_table(spark, sf_dir, "lineitem")
-    nat_supp = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "nation").filter(
-                    F.col("n_name") == "NATION_7"
-                )
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey")
-    )
+    nat_supp = _nation_suppliers(spark, sf_dir, "NATION_7").select("s_suppkey")
     joined = li.join(F.broadcast(nat_supp), F.col("l_suppkey") == F.col("s_suppkey"))
     vals = joined.groupBy("l_partkey").agg(dsum("l_extendedprice", "value", 2))
     total = joined.agg(
@@ -632,20 +614,10 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    sup = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "nation").filter(
-                    F.col("n_name") == "NATION_3"
-                )
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "s_name")
-    )
     return (
-        sup.join(qualified, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
+        _nation_suppliers(spark, sf_dir, "NATION_3")
+        .select("s_suppkey", "s_name")
+        .join(qualified, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select("s_suppkey", "s_name")
         .orderBy("s_name")
     )

@@ -19,7 +19,7 @@ update mode.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
@@ -114,6 +114,16 @@ def sliding_counts(
     )
 
 
+def session_stats() -> list[Column]:
+    """The aggregates of one session: n_events, session_start and
+    session_end (its first and last event time)."""
+    return [
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
+    ]
+
+
 def session_aggregate(
     events: DataFrame, gap: str = "30 minutes", *, watermark: str | None
 ) -> DataFrame:
@@ -123,11 +133,7 @@ def session_aggregate(
     return (
         _watermarked(events, "ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
+        .agg(*session_stats())
         .select("user_id", "session_start", "session_end", "n_events")
     )
 
@@ -222,6 +228,30 @@ def streaming_dedup(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
+def fold_changes(changes: DataFrame) -> DataFrame:
+    """Per-key (user_id, n_changes, __last): the key's change count and
+    its latest version as one max-struct over (ts, event_id, ...), which
+    event_id uniqueness makes a total order. Both aggregates combine
+    map-side, so a change log folds in one shuffle of (key, last-row)
+    pairs."""
+    return changes.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_changes"),
+        F.max(F.struct("ts", "event_id", "event_type", "value")).alias("__last"),
+    )
+
+
+def live_rows(folded: DataFrame) -> DataFrame:
+    """The applied table from per-key (n_changes, __last) folds: one row
+    per key whose latest change is not an 'error' delete tombstone."""
+    return folded.filter(F.col("__last.event_type") != "error").select(
+        "user_id",
+        F.col("__last.event_id").alias("last_event_id"),
+        F.col("__last.event_type").alias("last_event_type"),
+        F.col("__last.value").alias("last_value"),
+        "n_changes",
+    )
+
+
 def cdc_upsert_stream(
     changes: DataFrame,
     snapshot_dir: str,
@@ -252,16 +282,7 @@ def cdc_upsert_stream(
     """
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        delta = (
-            batch_df.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_changes"),
-                F.max(
-                    F.struct("ts", "event_id", "event_type", "value")
-                ).alias("__last"),
-            )
-            .withColumn("__batch", F.lit(batch_id))
-        )
+        delta = fold_changes(batch_df).withColumn("__batch", F.lit(batch_id))
         (
             # dynamic overwrite scoped to THIS write (DataFrameWriter
             # option, not session conf): a session-wide conf.set here
@@ -288,14 +309,9 @@ def read_cdc_snapshot(spark, snapshot_dir: str) -> DataFrame:
     (counts add; the max-version struct is associative), then tombstoned
     keys are hidden."""
     deltas = spark.read.parquet(snapshot_dir)
-    agg = deltas.groupBy("user_id").agg(
-        F.sum("n_changes").alias("n_changes"),
-        F.max("__last").alias("__last"),
-    )
-    return agg.filter(F.col("__last.event_type") != "error").select(
-        "user_id",
-        F.col("__last.event_id").alias("last_event_id"),
-        F.col("__last.event_type").alias("last_event_type"),
-        F.col("__last.value").alias("last_value"),
-        "n_changes",
+    return live_rows(
+        deltas.groupBy("user_id").agg(
+            F.sum("n_changes").alias("n_changes"),
+            F.max("__last").alias("__last"),
+        )
     )

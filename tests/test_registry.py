@@ -319,11 +319,15 @@ _ONE_VALUE_OPTIONS = {
 _FLAGS = (None, True, False)
 
 
-def _branch_names(fn: ast.FunctionDef) -> set[str]:
-    """The names ``fn`` reads in a branch condition: an ``if`` or ``while``
-    test, a conditional expression's test or a comprehension filter. An
-    ``if`` whose whole body is a ``raise`` is an argument check, not a
-    branch."""
+def _branch_names(
+    fn: ast.FunctionDef, mod: str, units, resolve, seen=frozenset()
+) -> set[str]:
+    """The names ``fn`` (in module ``mod``) reads in a branch condition: an
+    ``if`` or ``while`` test, a conditional expression's test or a
+    comprehension filter. An ``if`` whose whole body is a ``raise`` is an
+    argument check, not a branch. A name passed unchanged (a bare name) to
+    a module-private helper counts when the helper reads the receiving
+    parameter in a branch condition, followed through further helpers."""
     tests = []
     for node in ast.walk(fn):
         if isinstance(node, ast.If):
@@ -333,13 +337,40 @@ def _branch_names(fn: ast.FunctionDef) -> set[str]:
             tests.append(node.test)
         elif isinstance(node, ast.comprehension):
             tests += node.ifs
-    return {n.id for t in tests for n in ast.walk(t) if isinstance(n, ast.Name)}
+    names = {n.id for t in tests for n in ast.walk(t) if isinstance(n, ast.Name)}
+    for call in ast.walk(fn):
+        if not (
+            isinstance(call, ast.Call)
+            and isinstance(call.func, ast.Name)
+            and call.func.id.startswith("_")
+        ):
+            continue
+        for target in resolve(mod, call.func.id) - seen:
+            helper = units[target]
+            if not isinstance(helper, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            params = [p.arg for p in (*helper.args.posonlyargs, *helper.args.args)]
+            passed = []
+            for param, arg in zip(params, call.args):
+                if isinstance(arg, ast.Starred):
+                    break
+                passed.append((param, arg))
+            passed += [(kw.arg, kw.value) for kw in call.keywords if kw.arg]
+            passed = [(p, arg.id) for p, arg in passed if isinstance(arg, ast.Name)]
+            if passed:
+                inner = _branch_names(
+                    helper, target.partition(":")[0], units, resolve, seen | {target}
+                )
+                names |= {name for param, name in passed if param in inner}
+    return names
 
 
-def _literal_params(fn: ast.FunctionDef) -> dict[str, tuple[int | None, object]]:
+def _literal_params(
+    fn: ast.FunctionDef, branches: set[str]
+) -> dict[str, tuple[int | None, object]]:
     """Parameter name -> (positional index or None, default) for each
     parameter with a literal default, kept when the default is None, True
-    or False or when ``fn`` reads the parameter in a branch condition."""
+    or False or when the parameter is in ``branches`` (_branch_names)."""
     a = fn.args
     positional = [*a.posonlyargs, *a.args]
     first = len(positional) - len(a.defaults)
@@ -348,7 +379,6 @@ def _literal_params(fn: ast.FunctionDef) -> dict[str, tuple[int | None, object]]
         for i, (p, d) in enumerate(zip(positional[first:], a.defaults), start=first)
     ]
     found += [(p, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
-    branches = _branch_names(fn)
     return {
         p.arg: (i, d.value)
         for p, i, d in found
@@ -400,8 +430,9 @@ def test_every_optional_parameter_takes_both_values_in_production():
     allow-listed with a reason, so no option hides a branch that no
     production call runs. An option is a parameter whose default is None,
     True or False, or another literal that the function reads in a branch
-    condition. Calls match by name as in _call_graph: ``Cls(...)`` calls
-    ``Cls.__init__`` and ``x.m(...)`` every method named ``m``."""
+    condition or passes unchanged to a private helper that does. Calls
+    match by name as in _call_graph: ``Cls(...)`` calls ``Cls.__init__``
+    and ``x.m(...)`` every method named ``m``."""
     trees = _parsed_production_files()
     units = {
         f"{mod}:{name}": stmt for mod, tree in trees.items() for name, stmt in _all_units(tree)
@@ -411,6 +442,12 @@ def test_every_optional_parameter_takes_both_values_in_production():
         node: fn
         for node, fn in _public_callables(trees).items()
         if node not in _NO_PRODUCTION_CALLER
+    }
+    params = {
+        node: _literal_params(
+            fn, _branch_names(fn, node.partition(":")[0], units, resolve)
+        )
+        for node, fn in funcs.items()
     }
 
     def callee(node: str) -> tuple[str, int]:
@@ -437,16 +474,12 @@ def test_every_optional_parameter_takes_both_values_in_production():
             for target, bound in map(callee, targets):
                 if target not in funcs:
                     continue
-                for name, (index, default) in _literal_params(funcs[target]).items():
+                for name, (index, default) in params[target].items():
                     at = None if index is None else index - bound
                     sides.setdefault(f"{target}.{name}", set()).update(
                         _argument_sides(call, at, name, default)
                     )
-    options = {
-        f"{node}.{name}"
-        for node, fn in funcs.items()
-        for name in _literal_params(fn)
-    }
+    options = {f"{node}.{name}" for node, names in params.items() for name in names}
     one_value = {opt for opt in options if sides.get(opt, set()) != {True, False}}
     assert all(_ONE_VALUE_OPTIONS.values())
     stale = set(_ONE_VALUE_OPTIONS) - one_value

@@ -11,10 +11,15 @@ Plans are normalized with plans.normalized_plan (expression ids, plan ids,
 scratch-dir names and RDD ids masked), so two runs of the same code give
 the same .sha256 file and `diff before.sha256 after.sha256` lists the
 queries whose plans changed. Dump both sides with the same names in the
-same order. Two queries are unstable even so: table_profile and
+same order. Three queries are unstable even so. table_profile and
 q21_waiting_suppliers aggregate several DISTINCT columns, and Spark's
 RewriteDistinctAggregates orders their Expand columns in hash order, which
-can differ between processes.
+can differ between processes. dedup_cluster_safe_split prints the executed
+adaptive plan of its pinned LSH pair set: AQE numbers query stages (and the
+codegen stages inside them) in the order it creates them, a stage is
+created when its inputs finish, and the three cache stages over the one
+pinned shingle-set table finish in a racy order, so the MapInPandas shuffle
+stage and the id_b broadcast stage swap stage ids 3/4 and codegen ids 1/2.
 """
 
 from __future__ import annotations
